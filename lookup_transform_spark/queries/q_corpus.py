@@ -10,6 +10,7 @@ lookup surface.
 from __future__ import annotations
 
 import os  # noqa: F401
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
@@ -47,12 +48,26 @@ from lookup_transform_spark.registry import (  # noqa: F401
 # packing
 # ---------------------------------------------------------------------------
 
+_TRIGRAM_RE = re.compile(r"^[a-z]+( [a-z]+){2}$")
+
+
+def _check_trigrams(grams: tuple[str, ...]) -> tuple[str, ...]:
+    """Refuse any blocklist entry that is not three lowercase words
+    joined by single spaces: ``q_decontaminate`` splices the entries raw
+    into a regex inside a SQL string literal, so a metachar or a quote
+    would change the filter (or break the SQL) instead of matching."""
+    bad = [g for g in grams if not _TRIGRAM_RE.match(g)]
+    if bad:
+        raise ValueError(f"blocklist entries must be [a-z]+ trigrams: {bad}")
+    return grams
+
+
 #: stand-in for a benchmark-suite n-gram blocklist (eval contamination)
-DECONTAM_TRIGRAMS = (
+DECONTAM_TRIGRAMS = _check_trigrams((
     "big order scan", "window fast query", "table key filter",
     "stream table hash", "sort table scan", "part filter scan",
     "row value spark", "group slow spark",
-)
+))
 
 @_q(
     "decontaminate",
@@ -90,8 +105,9 @@ def q_decontaminate(spark, sf):
     split, so joining 3 consecutive tokens with ' ' reconstructs the
     raw substring between token boundaries — a blocklisted trigram
     exists IFF the text matches ``(^| )gram( |$)``. Blocklist entries
-    are [a-z ]-only plan literals (no regex metachars). NULL text has
-    no grams → kept, as before (the IS NULL arm)."""
+    are [a-z ]-only plan literals (no regex metachars), checked at
+    import by ``_check_trigrams``. NULL text has no grams → kept, as
+    before (the IS NULL arm)."""
     docs = _t(spark, sf, "documents")
     pat = "(^| )(" + "|".join(DECONTAM_TRIGRAMS) + ")( |$)"
     return docs.filter(f"text IS NULL OR NOT (text RLIKE '{pat}')").select(

@@ -35,6 +35,7 @@ from lookup_transform_spark.operators.similarity import (
 )
 from lookup_transform_spark.plans.lookup import LookupSpec
 from lookup_transform_spark.scale_profile import apply_scale_profile
+from lookup_transform_spark.session import NANOS_AS_LONG, set_confs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -102,9 +103,10 @@ def _q(name: str, oracle: str | None = None):
             # size-gated conf profile (scale_profile.py): sub-64MB
             # inputs run the measured small-input regime (AQE off,
             # 8 shuffle partitions), at-scale dirs keep AQE + the
-            # CPU-matched shuffle width. Applied at the registry
-            # boundary so EVERY harness (driver correctness, bench,
-            # parity, probes) measures the same regime.
+            # CPU-matched shuffle width. Written on every call at the
+            # registry boundary so EVERY harness (driver correctness,
+            # bench, parity, probes) measures the same regime, whatever
+            # the session's conf held before.
             apply_scale_profile(spark, sf_dir)
             return fn(spark, sf_dir)
 
@@ -161,7 +163,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
       epoch-preserving and ``unix_micros`` applies)."""
     from lookup_transform_spark.sources.readers import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    set_confs(spark, NANOS_AS_LONG)
     return normalize_events_ts(_t(spark, sf_dir, "events"))
 
 

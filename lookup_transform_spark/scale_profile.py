@@ -21,16 +21,21 @@ bench scale from every scaling probe) the session gets the small-input
 profile, above it the standard one. On a real cluster no input ever
 sits under the gate and this module is a no-op.
 
-Runtime-settable confs only (``spark.conf.set``), so the profile works
-on ANY session — including the driver's plain correctness session —
-and flips back when the same session later touches an at-scale dir.
-
-``SPARK_GRAFT_SCALE_PROFILE=0`` disables the gate entirely (A/B runs).
+Runtime-settable confs only, written through ``session.set_confs`` on
+EVERY registry query, so the profile works on ANY session — including
+the driver's plain correctness session — flips back when the same
+session later touches an at-scale dir, and re-asserts itself after any
+direct conf write in between. The write is sticky, not scoped: a query
+function returns a lazy DataFrame, and the regime must still be live
+when the caller drains it. The write is two py4j calls per query, far
+below the smallest query's wall.
 """
 
 from __future__ import annotations
 
 import os
+
+from lookup_transform_spark.session import set_confs
 
 SMALL_INPUT_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_SMALL_INPUT_MAX_BYTES", str(64 << 20))
@@ -41,10 +46,17 @@ SMALL_INPUT_MAX_BYTES = int(
 # mtime, which doesn't change a dir's size class) — cache the walk
 _dir_bytes: dict[str, int] = {}
 
-# applicationId -> profile name last applied, so the per-query fast path
-# is two dict lookups; keyed by app id (not session object) so a
-# stopped-and-recreated session re-applies
-_applied: dict[str, str] = {}
+# the measured floor winner: one wave of 8 shuffle tasks, no adaptive
+# re-planning stage boundaries
+SMALL = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.adaptive.enabled": "false",
+}
+# AQE plus a CPU-matched shuffle width: the scale regime
+FULL = {
+    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.adaptive.enabled": "true",
+}
 
 
 def fixture_bytes(sf_dir: str) -> int:
@@ -69,25 +81,7 @@ def profile_for(sf_dir: str) -> str:
     )
 
 
-def apply_scale_profile(spark, sf_dir: str) -> str:
-    """Apply the size-matched conf profile to ``spark`` for queries over
-    ``sf_dir``; returns the profile name. Idempotent and cheap when the
-    session is already on the right profile."""
-    if os.environ.get("SPARK_GRAFT_SCALE_PROFILE", "1") == "0":
-        return "disabled"
-    prof = profile_for(sf_dir)
-    app = spark.sparkContext.applicationId
-    if _applied.get(app) == prof:
-        return prof
-    if prof == "small":
-        # the measured floor winner: one wave of 8 shuffle tasks, no
-        # adaptive re-planning stage boundaries
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    else:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", cpus)
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    _applied[app] = prof
-    return prof
+def apply_scale_profile(spark, sf_dir: str) -> None:
+    """Write the size-matched regime for queries over ``sf_dir`` into
+    ``spark`` (sticky; see the module docstring)."""
+    set_confs(spark, SMALL if profile_for(sf_dir) == "small" else FULL)

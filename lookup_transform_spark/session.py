@@ -10,8 +10,17 @@ scale story for every operator here.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+#: read ns-precision parquet timestamps (the events fixture) as longs;
+#: Spark 4 refuses them otherwise. Preset by ``get_spark`` and
+#: re-asserted by the events readers, which may be handed a session
+#: this module did not build (the driver contract's plain session).
+NANOS_AS_LONG = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
 
 def get_spark(
@@ -49,7 +58,7 @@ def get_spark(
             (pp + os.pathsep if pp else "") + repo
         )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+    shuffle = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -78,7 +87,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=NANOS_AS_LONG)
         # PySpark 4 wraps EVERY DataFrame/Column API call to capture the
         # Python call site and push it to the JVM (PySparkCurrentOrigin)
         # for error enrichment — one extra py4j round-trip per call.
@@ -95,6 +104,42 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def set_confs(spark: SparkSession, confs: Mapping[str, str]) -> None:
+    """Write ``confs`` into the session and leave them there. The ONE
+    library function that calls ``spark.conf.set``: every query-time
+    conf change (the scale regime, CBO, scoped streaming overrides)
+    goes through here or through ``scoped_confs``."""
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+
+
+@contextmanager
+def scoped_confs(
+    spark: SparkSession, confs: Mapping[str, str]
+) -> Iterator[None]:
+    """Apply ``confs`` for the body only. Each key's prior value is
+    restored on exit, even when the body raises; a key that was unset
+    before is unset again (so it falls back to Spark's default, not to
+    a value pinned at entry).
+
+    CAVEAT: conf is per SESSION, not per thread. For the whole body, a
+    query planned concurrently on another thread of the same session
+    compiles under these confs, and two overlapping scopes on the same
+    keys race the save/restore. A streaming drain plans micro-batches
+    throughout ``start()``→``awaitTermination()``, so the scope is live
+    for the whole drain. Single-threaded use (the harness shape) is
+    safe; concurrent callers need a session per regime."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    set_confs(spark, confs)
+    try:
+        yield
+    finally:
+        set_confs(spark, {k: v for k, v in saved.items() if v is not None})
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

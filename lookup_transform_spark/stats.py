@@ -51,6 +51,8 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from lookup_transform_spark.session import set_confs
+
 # tables worth cataloguing: the relational tier the CBO acts on, plus
 # documents/embeddings at TABLE level only (rowCount + sizeInBytes, no
 # per-column histograms): their queries are single-table text/ANN
@@ -200,16 +202,16 @@ def enable_cbo(
     executor memory: routine for the 4GB+ executors this targets, and
     only reachable when statistics EXIST (no stats → Spark's default
     conservative path). Pass None to leave the session default."""
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    confs = {
+        "spark.sql.cbo.enabled": "true",
+        "spark.sql.cbo.joinReorder.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    }
     if broadcast_threshold is not None:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", broadcast_threshold
-        )
+        confs["spark.sql.autoBroadcastJoinThreshold"] = broadcast_threshold
     if application_side_threshold is not None:
-        spark.conf.set(
+        confs[
             "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            application_side_threshold,
-        )
+            "applicationSideScanSizeThreshold"
+        ] = application_side_threshold
+    set_confs(spark, confs)

@@ -37,7 +37,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lookup_transform_spark import scale_profile
 from lookup_transform_spark.operators.text import content_fingerprint
+from lookup_transform_spark.session import scoped_confs
 
 #: Strict name patterns (ADVICE r7): a stray entry like ``batch_tmp``
 #: must not crash the listing, and ``batch_00001_old`` must not
@@ -694,17 +696,8 @@ def stream_ingest_neardedup(
     # sub-64MB fixtures, which is right for one-shot scheduling-bound
     # queries but measured 28 → 53 s on THIS loop (r11 A/B: every
     # probe join ran as an unconverted sort-merge join per trigger).
-    # Scope the full adaptive regime to the stream and restore after.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        ),
-    )
-    try:
+    # Scope the full adaptive regime to the stream.
+    with scoped_confs(spark, scale_profile.FULL):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -715,9 +708,6 @@ def stream_ingest_neardedup(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
     out = _read_batches(spark, corpus)
     assert out is not None, "ingest produced no committed batches"
     return out

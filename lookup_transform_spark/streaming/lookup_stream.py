@@ -15,6 +15,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from lookup_transform_spark.plans.lookup import LookupSpec
+from lookup_transform_spark.session import (
+    NANOS_AS_LONG,
+    scoped_confs,
+    set_confs,
+)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,7 +31,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lookup_transform_spark.sources.readers import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    set_confs(spark, NANOS_AS_LONG)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -81,23 +86,17 @@ def run_to_memory(
     stateful streaming query is FIXED at its first run by the
     checkpoint, so this is a per-query deployment decision, not a
     session conf — size it to expected state volume, not batch width.
-    Pass ``None`` to inherit the session default.
-
-    CAVEAT: shuffle-partitions is session-scoped conf, and micro-batch
-    planning happens throughout the drain, so the override is live for
-    the whole ``start()``→``awaitTermination()`` window — a batch query
-    planned CONCURRENTLY on another thread of the same session compiles
-    with the override, and two overlapping run_to_memory calls race the
-    save/restore. Single-threaded drains (the harness shape) are safe;
-    concurrent use should pass ``None`` and size the session conf.
+    Pass ``None`` to inherit the session default. The override is
+    scoped to the drain (see ``session.scoped_confs`` for what that
+    means under concurrent use of one session).
     """
     spark = df.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
     table = name or f"mem_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get(conf_key)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
-    try:
+    confs = (
+        {} if state_partitions is None
+        else {"spark.sql.shuffle.partitions": str(state_partitions)}
+    )
+    with scoped_confs(spark, confs):
         q = (
             df.writeStream.format("memory")
             .queryName(table)
@@ -106,7 +105,4 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set(conf_key, prev)
     return spark.table(table)

@@ -11,8 +11,11 @@ import io
 from contextlib import redirect_stdout
 
 from lookup_transform_spark import registry
+from lookup_transform_spark.session import scoped_confs
 
 SF = "/root/testdata/sf0.01"
+# broadcast off, so a small test index can't sidestep a shuffle assertion
+NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 def explain_str(df, mode: str = "formatted") -> str:
@@ -198,21 +201,23 @@ def test_incremental_probe_standing_side_not_reshuffled(spark, tmp_path):
     write_fingerprint_index(
         spark, docs.filter("doc_id % 10 < 8"), table, str(tmp_path / "fpidx")
     )
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = incremental_probe(spark, docs.filter("doc_id % 10 >= 8"), table)
-        plan = explain_str(out, "simple")
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        # and the indexed probe returns exactly the in-plan result
-        got = sorted(r["doc_id"] for r in out.collect())
-        want = sorted(
-            r["doc_id"]
-            for r in registry.QUERIES["dedup_incremental"](spark, SF).collect()
-        )
-        assert got == want and got
+        with scoped_confs(spark, NO_BROADCAST):
+            out = incremental_probe(
+                spark, docs.filter("doc_id % 10 >= 8"), table
+            )
+            plan = explain_str(out, "simple")
+            assert plan.count("Exchange hashpartitioning") == 1, plan
+            # and the indexed probe returns exactly the in-plan result
+            got = sorted(r["doc_id"] for r in out.collect())
+            want = sorted(
+                r["doc_id"]
+                for r in registry.QUERIES["dedup_incremental"](
+                    spark, SF
+                ).collect()
+            )
+            assert got == want and got
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
@@ -302,8 +307,8 @@ def test_zorder_write_files_have_disjoint_z_ranges(spark, tmp_path):
 
 
 def test_decontaminate_never_shuffles_corpus(spark):
-    # r11: the blocklist is a plan literal inside a short-circuiting
-    # exists() — the whole query is one scan + filter projection: no
+    # r11: the blocklist is one boundary-guarded regex (RLIKE) over the
+    # raw text — the whole query is one scan + filter projection: no
     # joins, no explode, and ZERO exchanges (the r7-r10 explode +
     # broadcast-semi + distinct + broadcast-anti form paid one hash
     # exchange and a second corpus scan)
@@ -312,6 +317,22 @@ def test_decontaminate_never_shuffles_corpus(spark):
     assert "Join" not in plan
     assert "Generate" not in plan  # no explode
     assert "Exchange" not in plan
+
+
+def test_decontaminate_blocklist_refuses_non_trigram_entries():
+    # entries are spliced raw into a regex inside a SQL literal
+    import pytest
+
+    from lookup_transform_spark.queries.q_corpus import (
+        DECONTAM_TRIGRAMS,
+        _check_trigrams,
+    )
+
+    assert _check_trigrams(DECONTAM_TRIGRAMS) == DECONTAM_TRIGRAMS
+    for bad in ("big order", "big order.* scan", "it's a scan",
+                "big  order scan", "Big order scan"):
+        with pytest.raises(ValueError, match="trigrams"):
+            _check_trigrams(("big order scan", bad))
 
 
 def test_dedup_repartition_gated_on_input_width(spark):
@@ -498,22 +519,20 @@ def test_incremental_minhash_standing_tables_read_bucketed(spark, tmp_path):
     write_lsh_index(
         spark, docs.filter("doc_id % 10 < 8"), "lshplan", str(tmp_path / "lsh")
     )
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = incremental_minhash_probe(
-            spark, docs.filter("doc_id % 10 >= 8"), "lshplan"
-        )
-        plan = explain_str(out)
-        scans = [
-            ln for ln in plan.splitlines()
-            if "Location" in ln and "lsh" in ln
-        ]
-        buck = plan.count("Bucketed: true")
-        assert buck >= 2, plan[:2000]  # both standing tables bucketed
-        assert out.count() > 0
+        with scoped_confs(spark, NO_BROADCAST):
+            out = incremental_minhash_probe(
+                spark, docs.filter("doc_id % 10 >= 8"), "lshplan"
+            )
+            plan = explain_str(out)
+            scans = [
+                ln for ln in plan.splitlines()
+                if "Location" in ln and "lsh" in ln
+            ]
+            buck = plan.count("Bucketed: true")
+            assert buck >= 2, plan[:2000]  # both standing tables bucketed
+            assert out.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP TABLE IF EXISTS lshplan_bands")
         spark.sql("DROP TABLE IF EXISTS lshplan_docs")
 
@@ -532,59 +551,53 @@ def test_stats_cbo_runtime_bloom_filters_fact_scan(spark):
     from lookup_transform_spark import stats
 
     db = stats.register_stats_tables(spark, SF)
-    # save EVERY conf this test (via enable_cbo) mutates — the spark
-    # fixture is session-scoped, so a missed restore leaks runtime
-    # bloom-filter injection into every later plan-shape test
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.cbo.enabled",
-            "spark.sql.cbo.joinReorder.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-        )
-    }
-    stats.enable_cbo(spark, application_side_threshold="0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "65536")
+    # scope EVERY conf this test (via enable_cbo) mutates, entered at
+    # its current value — the spark fixture is session-scoped, so a
+    # missed restore leaks runtime bloom-filter injection into every
+    # later plan-shape test
+    keys = (
+        "spark.sql.cbo.enabled",
+        "spark.sql.cbo.joinReorder.enabled",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled",
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold",
+    )
     try:
-        # stats-backed catalog tables actually serve the queries
-        assert "default.lineitem" not in db
-        for q in ("tpch_q7_volume", "tpch_q8_market_share",
-                  "tpch_q21_waiting"):
-            df = registry.QUERIES[q](spark, SF)
-            opt = df._jdf.queryExecution().optimizedPlan().toString()
-            n = len(re.findall("might_contain", opt))
-            assert n >= 1, f"{q}: no runtime bloom filter injected"
-        # on q8 and q21 a probe must guard the FACT scan itself — a
-        # might_contain over a lineitem key column (q7's probes land on
-        # the supplier/customer inputs instead, which shrinks the join
-        # but not the fact scan — also useful, not asserted)
-        for q in ("tpch_q8_market_share", "tpch_q21_waiting"):
-            df = registry.QUERIES[q](spark, SF)
-            opt = df._jdf.queryExecution().optimizedPlan().toString()
-            assert re.search(
-                r"might_contain\(scalar-subquery#\d+ \[\], xxhash64\(l_", opt
-            ), f"{q}: no bloom probe on a lineitem key"
-        # CBO join reorder: q5's innermost join must be the dimension
-        # chain (nation x region), not the authored customer x orders
-        df5 = registry.QUERIES["tpch_q5_local_supplier"](spark, SF)
-        opt5 = df5._jdf.queryExecution().optimizedPlan().toString()
-        join_lines = [
-            ln for ln in opt5.splitlines() if re.search(r"\bJoin Inner", ln)
-        ]
-        innermost = join_lines[-1]
-        assert "n_regionkey" in innermost and "r_regionkey" in innermost, (
-            "CBO reorder did not move the region/nation dimension chain "
-            f"innermost: {innermost}"
-        )
+        with scoped_confs(spark, {k: spark.conf.get(k) for k in keys}):
+            stats.enable_cbo(spark, application_side_threshold="0")
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "65536")
+            # stats-backed catalog tables actually serve the queries
+            assert "default.lineitem" not in db
+            for q in ("tpch_q7_volume", "tpch_q8_market_share",
+                      "tpch_q21_waiting"):
+                df = registry.QUERIES[q](spark, SF)
+                opt = df._jdf.queryExecution().optimizedPlan().toString()
+                n = len(re.findall("might_contain", opt))
+                assert n >= 1, f"{q}: no runtime bloom filter injected"
+            # on q8 and q21 a probe must guard the FACT scan itself — a
+            # might_contain over a lineitem key column (q7's probes land on
+            # the supplier/customer inputs instead, which shrinks the join
+            # but not the fact scan — also useful, not asserted)
+            for q in ("tpch_q8_market_share", "tpch_q21_waiting"):
+                df = registry.QUERIES[q](spark, SF)
+                opt = df._jdf.queryExecution().optimizedPlan().toString()
+                assert re.search(
+                    r"might_contain\(scalar-subquery#\d+ \[\], xxhash64\(l_", opt
+                ), f"{q}: no bloom probe on a lineitem key"
+            # CBO join reorder: q5's innermost join must be the dimension
+            # chain (nation x region), not the authored customer x orders
+            df5 = registry.QUERIES["tpch_q5_local_supplier"](spark, SF)
+            opt5 = df5._jdf.queryExecution().optimizedPlan().toString()
+            join_lines = [
+                ln for ln in opt5.splitlines() if re.search(r"\bJoin Inner", ln)
+            ]
+            innermost = join_lines[-1]
+            assert "n_regionkey" in innermost and "r_regionkey" in innermost, (
+                "CBO reorder did not move the region/nation dimension chain "
+                f"innermost: {innermost}"
+            )
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         stats.unregister(spark, SF)
 
 
