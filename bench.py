@@ -435,27 +435,6 @@ def main() -> None:
         ]
         compact["within_2x_count"] = detail["within_2x_count"]
         compact["comparable_count"] = detail["comparable_count"]
-        # same tail metric at 32x derived scale, read from the latest
-        # scaling-probe artifact when present (scripts/scaling_probe.py
-        # writes it; 32x amortizes the per-query scheduling floor)
-        s32_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "SCALING32.json"
-        )
-        if os.path.exists(s32_path):
-            with open(s32_path) as fh:
-                s32 = json.load(fh)
-            w2x = n2x = 0
-            for k, e in s32.get("queries", {}).items():
-                if k in RATIO_EXCLUDE:
-                    continue
-                sp = e.get("spark_32x", {}).get("sec")
-                du = e.get("duck_32x", {}).get("sec")
-                if sp is None or du is None:
-                    continue
-                n2x += 1
-                w2x += sp <= 2 * du
-            compact["within_2x_count_32x"] = w2x
-            compact["comparable_count_32x"] = n2x
     sys.stdout.flush()
     print(json.dumps(compact, separators=(",", ":")))
     sys.stdout.flush()

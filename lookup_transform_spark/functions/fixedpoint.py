@@ -57,6 +57,11 @@ def scaled_long(col: str | Column, dp: int = 2) -> Column:
     The multiply+round is deterministic IEEE arithmetic, so DuckDB's
     ``ROUND(x * 10^dp)`` mirrors it bit-for-bit.
 
+    A ``str`` ``col`` is spliced into the SQL as an expression, not
+    looked up as a column name: backtick-quote a column whose name is
+    not a plain identifier (``"`unit price`"``), doubling any backtick
+    inside it. Pass ``F.col(name)`` to skip the quoting.
+
     Implementation (r11): Spark's ``round`` on DOUBLE allocates a
     ``BigDecimal`` per row even inside whole-stage codegen — measured
     as the dominant per-row cost of the whole fixed-point tier (five
@@ -110,6 +115,10 @@ def fp_sum(col: str | Column, dp: int = 2) -> Column:
     wrapping — see ``fp_sum_stable`` for the beyond-2^63 formulation.
 
     Oracle mirror: ``SUM(CAST(ROUND(x * 10^dp) AS BIGINT)) / 10^dp.0``.
+
+    A ``str`` ``col`` is spliced into the SQL as an expression, as in
+    ``scaled_long``: backtick-quote a column name that is not a plain
+    identifier.
     """
     if isinstance(col, str):
         # one py4j round-trip for the whole aggregate (see _scaled_sql)

@@ -55,6 +55,24 @@ def _orderable(dt: T.DataType) -> bool:
     return True
 
 
+def _ddl(dt: T.DataType) -> str:
+    """SQL type string for ``dt`` with every struct field name
+    backtick-quoted (a backtick inside a name doubled):
+    ``simpleString`` splices names raw, so ``struct<my val:double>``
+    fails to parse."""
+    if isinstance(dt, T.StructType):
+        fields = ",".join(
+            "`{}`:{}".format(f.name.replace("`", "``"), _ddl(f.dataType))
+            for f in dt.fields
+        )
+        return f"struct<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_ddl(dt.keyType)},{_ddl(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -146,7 +164,7 @@ def asof_join(
         [T.StructField(o, right.schema[v].dataType, True)
          for v, o in zip(value_fields, out_names)]
     )
-    packed_ddl = packed_type.simpleString()
+    packed_ddl = _ddl(packed_type)
     lcols = [f"`{c}`" for c in left.columns]
     left_tagged = left.selectExpr(
         *lcols,
@@ -175,7 +193,7 @@ def asof_join(
         *[
             f"`{c}`"
             if c in keys
-            else f"CAST(NULL AS {left_schema[c].dataType.simpleString()}) AS `{c}`"
+            else f"CAST(NULL AS {_ddl(left_schema[c].dataType)}) AS `{c}`"
             for c in left.columns
         ],
         f"`{right_ts}` AS __ts__",

@@ -228,33 +228,9 @@ def _ragged_chunks(lens: np.ndarray, max_elems: int, max_rows: int):
         lo = hi
 
 
-def minhash_signature(
-    text_col: str, num_hashes: int = 32, shingle_n: int = 3, seed: int = 42
-) -> F.Column:
-    """MinHash signature as array<long>: element i = min over shingles of
-    (a_i * xxhash64(shingle) + b_i) mod PRIME. All codegen'd — but the
-    k-permutation min is interpreted per element; prefer
-    ``minhash_signature_pandas`` on wide corpora (same math, Arrow
-    batch + numpy)."""
-    sh = shingles(text_col, shingle_n)
-    # pmod, not abs+%: abs(Long.MIN_VALUE) overflows under ANSI mode
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_PRIME)))
-    sig_parts = []
-    for a, b in _perm_params(num_hashes, seed):
-        sig_parts.append(
-            F.array_min(
-                F.transform(
-                    base,
-                    lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_PRIME),
-                )
-            )
-        )
-    return F.array(*sig_parts)
-
-
 def _make_perm_min(num_hashes: int, seed: int):
-    """Build the k-permutation-min pandas UDF shared by the string-
-    shingle and hash-array signature entry points."""
+    """Build the k-permutation-min pandas UDF behind
+    ``minhash_signature_from_hashes``."""
     params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
     a_vec, b_vec = params[:, 0], params[:, 1]
 
@@ -268,9 +244,8 @@ def _make_perm_min(num_hashes: int, seed: int):
         # bounded at ~num_hashes × 100k int64 ≈ 25 MB even when every doc
         # in the batch is long.
         out = np.empty(len(hashes), dtype=object)
-        # NULL text ⇒ NULL shingle array: treat as empty, mirroring the
-        # JVM path where the whole signature expression nulls out —
-        # a crash here would kill the job on one bad row
+        # NULL text ⇒ NULL shingle array: treat as empty — a crash
+        # here would kill the job on one bad row
         arrs = [
             np.asarray(h, dtype=np.int64) if h is not None
             else np.empty(0, dtype=np.int64)
@@ -298,25 +273,13 @@ def _make_perm_min(num_hashes: int, seed: int):
     return _perm_min
 
 
-def minhash_signature_pandas(
-    text_col: str, num_hashes: int = 32, shingle_n: int = 3, seed: int = 42
-) -> F.Column:
-    """Same signature as ``minhash_signature`` (bit-identical math), with
-    shingle hashing JVM-side (xxhash64, codegen) and the k-permutation
-    min vectorized in numpy over Arrow batches — the sanctioned slow
-    path for work Spark's built-ins can't express efficiently."""
-    sh = shingles(text_col, shingle_n)
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_PRIME)))
-    return _make_perm_min(num_hashes, seed)(base)
-
-
 def minhash_signature_from_hashes(
     arr_col: str | F.Column, num_hashes: int = 32, seed: int = 42
 ) -> F.Column:
     """Minhash signature over a precomputed shingle-hash array column
-    (``with_shingle_hashes``). Same permutation math as
-    ``minhash_signature_pandas``, different (equally valid) shingle-hash
-    family — the pipeline entry point that lets the signature and the
+    (``with_shingle_hashes``): element i = min over shingles of
+    (a_i * h + b_i) mod PRIME, vectorized in numpy over Arrow batches.
+    The pipeline entry point that lets the signature and the
     Jaccard-verify stage share ONE shingle computation."""
     c = F.col(arr_col) if isinstance(arr_col, str) else arr_col
     base = F.transform(c, lambda h: F.pmod(h, F.lit(_PRIME)))
@@ -739,44 +702,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_signature_text(
-    text_col: str, bits: int = 64
-) -> F.Column:
-    """SimHash over word tokens: bit j of the signature is the sign of
-    Σ_tokens (±1 depending on bit j of xxhash64(token)).
-
-    Expressed as one ``aggregate`` over the token array with an
-    array<int> accumulator — stays in codegen, no UDF.
-    """
-    tokens = F.array_distinct(_tokens(text_col))
-    zero = F.array_repeat(F.lit(0), bits)
-
-    # bit positions must be Python ints (shiftright takes no Column), so
-    # the per-bit structure is unrolled at plan-build time
-    def step(acc, tok):
-        h = F.xxhash64(tok)
-        bit_votes = F.array(
-            *[
-                F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                .otherwise(F.lit(-1))
-                for j in range(bits)
-            ]
-        )
-        return F.zip_with(acc, bit_votes, lambda x, y: x + y)
-
-    counters = F.aggregate(tokens, zero, step)
-    # pack sign bits into a long; 1<<63 is Long.MIN_VALUE, kept exact
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        weight = (1 << j) if j < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.element_at(counters, j + 1) >= 0,
-                   F.lit(weight).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 def _md5_token_hash(tok: F.Column) -> F.Column:
     """First 64 bits of md5(token) as a signed long, all JVM-side.
 
@@ -799,8 +724,9 @@ def _md5_token_hash(tok: F.Column) -> F.Column:
 def simhash_signature_text_pandas(
     text_col: str, bits: int = 64, hash_family: str = "xxhash64"
 ) -> F.Column:
-    """Bit-identical to ``simhash_signature_text`` with token hashing
-    JVM-side and the bit-vote accumulation vectorized in numpy.
+    """SimHash over distinct word tokens: bit j of the signature is set
+    when Σ_tokens (±1 by bit j of the token hash) >= 0. Token hashing
+    runs JVM-side; the bit-vote accumulation is vectorized in numpy.
 
     ``hash_family``: ``"xxhash64"`` (default — fastest, engine-native)
     or ``"md5"`` (first 64 md5 bits via ``_md5_token_hash`` — portable

@@ -332,6 +332,9 @@ def topk_merge(leaves: DataFrame, group_cols: list[str], k: int = 10) -> DataFra
     whose cnt_lo exceeds every other key's cnt_hi is PROVABLY the
     heavy hitter; the [lo, hi] columns make that check a query.
 
+    A NULL group key is a group of its own, as in SQL ``GROUP BY``:
+    its top-``k`` is returned like any other group's.
+
     The group drop total rides a WINDOW over the summary rows (one row
     per (group, shard)) instead of a second aggregate branch + join:
     the r9-r10 form ``localCheckpoint``-ed the summary so its two
@@ -427,7 +430,6 @@ def topk_at_rest(
 from lookup_transform_spark.operators.sketches_oracle import (  # noqa: E402
     HLL_ALPHA as _HLL_ALPHA,
     HLL_M as _HLL_M,
-    HLL_P as _HLL_P,
     HLL_WBITS as _HLL_WBITS,
 )
 

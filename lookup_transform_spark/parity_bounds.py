@@ -42,7 +42,6 @@ import math
 import numpy as np
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 _GAP_US = 1800 * 1_000_000
 
@@ -106,11 +105,12 @@ def _check_hll_rollup(spark, con, sf_dir):
 def _recall(spark, sf_dir, query_name, floor):
     from lookup_transform_spark import registry
     from lookup_transform_spark.operators.similarity import cosine_topk
+    from lookup_transform_spark.queries.q_curation import ann_query_set
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # the SAME sampling helper the simsearch_* queries use — the bound
     # must never compare a drifted query set against stale ground truth
-    queries = registry.ann_query_set(emb)
+    queries = ann_query_set(emb)
     truth = set(_rows(cosine_topk(emb, queries, k=10),
                       ["query_id", "neighbor_id"]))
     got = set(_rows(registry.QUERIES[query_name](spark, sf_dir),

@@ -28,7 +28,7 @@ from __future__ import annotations
 import json
 import re
 import threading
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, Window

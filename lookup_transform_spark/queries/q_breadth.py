@@ -3,35 +3,20 @@
 Split from the monolithic registry (r11, VERDICT r10 #7). Queries here
 register into ``lookup_transform_spark.registry.QUERIES``/``ORACLES``
 via the shared ``_q`` decorator at import time; ``registry`` imports
-every tier module at its tail, so the registry remains the single
-lookup surface.
+every tier module at its tail, so importing the registry registers
+every query. Import a helper defined here from this module.
 """
 
 from __future__ import annotations
 
-import os  # noqa: F401
+import os
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from lookup_transform_spark.functions.fixedpoint import (  # noqa: F401
-    fp_sum,
-    scaled_long,
-)
-from lookup_transform_spark.operators import dedup as DD  # noqa: F401
-from lookup_transform_spark.operators import text as TX  # noqa: F401
-from lookup_transform_spark.operators.asof import (  # noqa: F401
-    asof_join,
-    range_join,
-)
-from lookup_transform_spark.operators.sessionize import sessionize  # noqa: F401
-from lookup_transform_spark.operators.similarity import (  # noqa: F401
-    cosine_topk,
-    ivf_topk,
-    lsh_bucket_topk,
-)
-from lookup_transform_spark.plans.lookup import LookupSpec  # noqa: F401
-from lookup_transform_spark.registry import (  # noqa: F401
+from lookup_transform_spark.functions.fixedpoint import fp_sum, scaled_long
+from lookup_transform_spark.operators import dedup as DD
+from lookup_transform_spark.registry import (
     SCRATCH,
     _events,
     _fsum,
@@ -39,7 +24,6 @@ from lookup_transform_spark.registry import (  # noqa: F401
     _stale_guard,
     _t,
     _vtag,
-    scratch_path,
 )
 
 # ---------------------------------------------------------------------------
@@ -655,11 +639,8 @@ def q_stream_sessionize_stateful(spark, sf):
 
 @_q("stream_lifetime_stats")
 def q_stream_lifetime_stats(spark, sf):
-    """B63: per-key running lifetime aggregates, O(1) state per key.
-    impl='auto' uses transformWithStateInPandas (Spark 4 arbitrary
-    state) where the protobuf runtime exists, else the equivalent
-    applyInPandasWithState degraded path — equality of the two forms is
-    pinned in tests/test_streaming.py. Rows-only BY SEMANTICS: the
+    """B63: per-key running lifetime aggregates, O(1) state per key,
+    on applyInPandasWithState. Rows-only BY SEMANTICS: the
     operator emits one row per (key, batch-with-data) — the output
     cardinality is a function of the trigger decomposition (the r9
     streaming promotions took only decomposition-INDEPENDENT queries),

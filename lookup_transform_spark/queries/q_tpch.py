@@ -3,44 +3,17 @@
 Split from the monolithic registry (r11, VERDICT r10 #7). Queries here
 register into ``lookup_transform_spark.registry.QUERIES``/``ORACLES``
 via the shared ``_q`` decorator at import time; ``registry`` imports
-every tier module at its tail, so the registry remains the single
-lookup surface.
+every tier module at its tail, so importing the registry registers
+every query. Import a helper defined here from this module.
 """
 
 from __future__ import annotations
 
-import os  # noqa: F401
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-
-from lookup_transform_spark.functions.fixedpoint import (  # noqa: F401
-    fp_sum,
-    scaled_long,
-)
-from lookup_transform_spark.operators import dedup as DD  # noqa: F401
-from lookup_transform_spark.operators import text as TX  # noqa: F401
-from lookup_transform_spark.operators.asof import (  # noqa: F401
-    asof_join,
-    range_join,
-)
-from lookup_transform_spark.operators.sessionize import sessionize  # noqa: F401
-from lookup_transform_spark.operators.similarity import (  # noqa: F401
-    cosine_topk,
-    ivf_topk,
-    lsh_bucket_topk,
-)
-from lookup_transform_spark.plans.lookup import LookupSpec  # noqa: F401
-from lookup_transform_spark.registry import (  # noqa: F401
-    SCRATCH,
-    _events,
-    _fsum,
-    _q,
-    _stale_guard,
-    _t,
-    _vtag,
-    scratch_path,
-)
+from lookup_transform_spark.functions.fixedpoint import fp_sum, scaled_long
+from lookup_transform_spark.registry import _fsum, _q, _t
 
 # ---------------------------------------------------------------------------
 # TPC-H breadth II (adapted to fixture schema: no partsupp, no

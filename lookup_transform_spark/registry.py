@@ -20,20 +20,9 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from lookup_transform_spark.functions.fixedpoint import fp_sum, scaled_long
-from lookup_transform_spark.operators import dedup as DD
-from lookup_transform_spark.operators import text as TX
-from lookup_transform_spark.operators.asof import asof_join, range_join
-from lookup_transform_spark.operators.sessionize import sessionize
-from lookup_transform_spark.operators.similarity import (
-    cosine_topk,
-    ivf_topk,
-    lsh_bucket_topk,
-)
-from lookup_transform_spark.plans.lookup import LookupSpec
+from lookup_transform_spark.functions.fixedpoint import fp_sum
 from lookup_transform_spark.scale_profile import apply_scale_profile
 from lookup_transform_spark.session import NANOS_AS_LONG, set_confs
 
@@ -177,31 +166,19 @@ def _fsum(col, alias: str, dp: int = 2):
     return fp_sum(col, dp).alias(alias)
 
 
-
 # ---------------------------------------------------------------------------
-# Tier modules (r11 split, VERDICT r10 #7): importing each module runs
-# its @_q registrations into QUERIES/ORACLES above. Source order is the
-# pre-split file order. Public names each tier declares (q_* functions
-# and shared helpers like bm25_per_doc / ann_query_set) are hoisted
-# back onto this module so `registry.<name>` keeps working for every
-# existing consumer (tests, probes, parity bounds).
+# Tier modules (r11, VERDICT r10 #7): importing each one runs its @_q
+# registrations into QUERIES/ORACLES above, in this order. The registry
+# exposes only what it defines; import a tier's helper from its module.
 # ---------------------------------------------------------------------------
 
 def _load_tiers() -> None:
     import importlib
-    import sys
 
     from lookup_transform_spark.queries import TIER_MODULES
 
-    self = sys.modules[__name__]
     for mod_name in TIER_MODULES:
-        mod = importlib.import_module(
-            f"lookup_transform_spark.queries.{mod_name}"
-        )
-        for attr, val in vars(mod).items():
-            if attr.startswith("_") or hasattr(self, attr):
-                continue
-            setattr(self, attr, val)
+        importlib.import_module(f"lookup_transform_spark.queries.{mod_name}")
 
 
 _load_tiers()

@@ -141,14 +141,3 @@ def scoped_confs(
             if v is None:
                 spark.conf.unset(k)
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read testdata parquet tables; returns a dict name → DataFrame.
-    Defaults to the canonical fixture set (``parity.TABLES``) — one
-    shared constant, so the Spark loader and the DuckDB view
-    registration can't drift apart."""
-    if not names:
-        from lookup_transform_spark.parity import TABLES
-
-        names = tuple(TABLES)
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

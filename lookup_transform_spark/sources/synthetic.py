@@ -30,12 +30,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 # word/lang tables live in the dependency-free oracle module so the
 # generator and its DuckDB transpilation can never drift apart
-# (generator_oracle_sql is re-exported from there for back-compat)
-from lookup_transform_spark.sources.synthetic_oracle import (  # noqa: E402
-    LANGS,
-    WORDS as _WORDS,
-    generator_oracle_sql,
-)
+from lookup_transform_spark.sources.synthetic_oracle import LANGS, WORDS as _WORDS
 
 SCHEMA = "doc_id long, lang string, source string, text string, n_chars int"
 

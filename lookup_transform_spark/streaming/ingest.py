@@ -77,30 +77,6 @@ def _batch_dirs(path: str, before: int | None = None) -> list[str]:
     return out
 
 
-def _newest_base(path: str, before: int | None = None) -> tuple[int, str] | None:
-    """LEGACY reader: newest committed ``base_M`` dir (the pre-r8
-    single-lineage layout, where one base held the fold of ALL batches
-    < M). The segment reader treats such a dir as ``seg_0_M``; this
-    helper remains only for layout-compat tests. ``_SUCCESS`` gates out
-    a crashed fold."""
-    if not os.path.isdir(path):
-        return None
-    best = None
-    for d in os.listdir(path):
-        m = _BASE_RE.match(d)
-        full = os.path.join(path, d)
-        if not m or not os.path.isdir(full):
-            continue
-        if not os.path.exists(os.path.join(full, "_SUCCESS")):
-            continue
-        gen = int(m.group(1))
-        if before is not None and gen > before:
-            continue
-        if best is None or gen > best[0]:
-            best = (gen, full)
-    return best
-
-
 def _segments(
     path: str, before: int | None = None
 ) -> list[tuple[int, int, str]]:

@@ -73,94 +73,16 @@ def _track_sessions_factory(gap_us: int):
     return track
 
 
-def have_tws_runtime() -> bool:
-    """True when ``transformWithStateInPandas`` can actually run: its
-    Python state-server client speaks protobuf
-    (``pyspark/sql/streaming/proto/StateMessage_pb2``), which needs the
-    ``google.protobuf`` runtime — an optional dependency in some
-    deployments (absent in this container)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_lifetime_stats(stream_df: DataFrame, impl: str = "auto") -> DataFrame:
+def stream_lifetime_stats(stream_df: DataFrame) -> DataFrame:
     """Per-user running lifetime aggregates with O(1) state per key;
     each batch-with-data emits the key's updated totals.
 
     Input: streaming frame with (user_id, value). Output: one row per
     (key, batch-with-data): user_id, n_events, sum_value (decimal-6
-    rounded for determinism).
-
-    ``impl``:
-    - ``"tws"`` — ``transformWithStateInPandas`` (Spark 4's
-      arbitrary-state API: typed ValueState on a
-      StatefulProcessorHandle, successor to applyInPandasWithState).
-      Requires the ``google.protobuf`` runtime (the state server's wire
-      protocol); raises ``RuntimeError`` without it.
-    - ``"apws"`` — the documented DEGRADED PATH: identical semantics on
-      ``applyInPandasWithState`` (GroupState tuple), which has no
-      protobuf dependency. Loses TWS-only capabilities this operator
-      doesn't use (multiple typed state variables, timers, TTL), so the
-      results are exactly equal — pinned by ``tests/test_streaming.py``.
-    - ``"auto"`` (default) — tws when the runtime supports it, apws
-      otherwise.
-    """
-    if impl == "auto":
-        impl = "tws" if have_tws_runtime() else "apws"
-    if impl == "apws":
-        return _lifetime_stats_apws(stream_df)
-    if impl != "tws":
-        raise ValueError(f"impl must be 'auto', 'tws', or 'apws'; got {impl!r}")
-    if not have_tws_runtime():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "runtime; use impl='apws' (equivalent degraded path) here"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LifetimeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, sv double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._agg.exists():
-                n, sv = self._agg.get()
-            else:
-                n, sv = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                sv += float(pdf["value"].sum())
-            self._agg.update((n, sv))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(sv, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream_df.groupBy("user_id").transformWithStateInPandas(
-        LifetimeStats(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _lifetime_stats_apws(stream_df: DataFrame) -> DataFrame:
-    """``stream_lifetime_stats`` degraded path: same running (n, sum)
-    accumulator held as a GroupState tuple under
-    ``applyInPandasWithState`` — bit-identical output to the TWS form."""
+    rounded for determinism). The running (n, sum) accumulator is a
+    GroupState tuple under ``applyInPandasWithState``, which needs no
+    ``google.protobuf`` runtime. Equality with a batch aggregate is
+    pinned by ``tests/test_streaming.py``."""
 
     def update(key, pdfs, state: GroupState):
         n, sv = state.get if state.exists else (0, 0.0)

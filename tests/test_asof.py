@@ -105,6 +105,21 @@ def test_suffix_renames_packed_fields(spark):
     assert _rows(out) == [(1, 10, 1.0)]
 
 
+def test_spaced_value_field_name_parses(spark):
+    # the packed struct's type is spliced into a CAST(NULL AS struct<...>)
+    # string: a raw `my val` field name is a ParseException
+    left = spark.createDataFrame([(1, 10), (1, 3)], "k long, ts long")
+    right = spark.createDataFrame(
+        [(1, 5, 1.0)], "k long, ts long, `my val` double"
+    )
+    out = asof_join(
+        left, right, on="k", left_ts="ts", right_ts="ts",
+        value_fields=["my val"],
+    )
+    assert out.columns == ["k", "ts", "my val"]
+    assert _rows(out) == [(1, 10, 1.0), (1, 3, None)]
+
+
 def test_asof_directions_match_brute_force(spark):
     """backward/forward/nearest against a per-row brute-force pick on a
     toy fixture with both-side candidates, ties, and misses."""

@@ -367,27 +367,6 @@ def test_simhash_pigeonhole_is_complete_vs_brute_force(spark):
     )
 
 
-def test_minhash_signature_jvm_and_pandas_bit_identical(spark):
-    """The two string-shingle signature entry points claim bit-identical
-    math (JVM expression chain vs Arrow permutation-min) — pin it, since
-    the pipeline itself now runs on the shared-hash-array fast path and
-    no longer exercises them."""
-    from lookup_transform_spark.operators.dedup import (
-        minhash_signature,
-        minhash_signature_pandas,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    both = docs.select(
-        "doc_id",
-        minhash_signature("text", 16, 3, 7).alias("jvm"),
-        minhash_signature_pandas("text", 16, 3, 7).alias("arrow"),
-    ).collect()
-    assert both
-    for r in both:
-        assert list(r["jvm"]) == list(r["arrow"]), r["doc_id"]
-
-
 def test_incremental_minhash_matches_in_plan(spark):
     """The at-rest LSH probe must accept exactly the new docs the
     in-plan batch-vs-standing near-dup computation would accept: the

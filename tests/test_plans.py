@@ -11,6 +11,7 @@ import io
 from contextlib import redirect_stdout
 
 from lookup_transform_spark import registry
+from lookup_transform_spark.queries.q_analytic import bm25_per_doc
 from lookup_transform_spark.session import scoped_confs
 
 SF = "/root/testdata/sf0.01"
@@ -121,7 +122,7 @@ def test_bm25_topk_no_global_sort_and_pruned_scan(spark):
     compiles to TakeOrderedAndProject (O(k) per partition — never a
     global sort of scored docs)."""
     terms = ["join", "window", "hash", "stream"]
-    per_doc = registry.bm25_per_doc(spark, SF, terms)
+    per_doc = bm25_per_doc(spark, SF, terms)
     pd_plan = explain_str(per_doc)
     assert pd_plan.count("documents.parquet") == 1
     schema_lines = [

@@ -356,6 +356,28 @@ def test_topk_sketch_null_keys_never_displace_real_keys(spark):
     ]
 
 
+def test_topk_merge_keeps_null_group(spark):
+    """A NULL group key is a group of its own, as in SQL GROUP BY: the
+    rollup returns its top-k next to the named groups'."""
+    from lookup_transform_spark.operators.sketches import (
+        topk_merge,
+        topk_sketch,
+    )
+
+    rows = (
+        [("en", 0, "a")] * 2 + [(None, 0, "x")] * 3
+        + [(None, 1, "y")] * 2 + [(None, 1, "x")]
+    )
+    df = spark.createDataFrame(rows, "lang string, shard int, key string")
+    got = topk_merge(
+        topk_sketch(df, ["lang"], "key", "shard", m=5), ["lang"], k=2
+    ).collect()
+    assert sorted(
+        (r["lang"] or "", r["rank"], r["key"], r["cnt_lo"], r["cnt_hi"])
+        for r in got
+    ) == [("", 1, "x", 4, 4), ("", 2, "y", 2, 2), ("en", 1, "a", 2, 2)]
+
+
 def test_hll_portable_merge_equals_rebuild(spark, sf_dir):
     """r9 portable HLL: merging per-(source, lang) leaves by per-bucket
     MAX must equal sketching the raw union directly — the mergeability

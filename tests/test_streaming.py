@@ -338,30 +338,11 @@ def test_foreach_batch_gold_table(spark, tmp_path):
     assert len(parts) == want.count()
 
 
-def _lifetime_want(spark):
-    return {
-        r["user_id"]: (r["n"], r["sv"])
-        for r in registry._events(spark, SF)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
-        .collect()
-    }
-
-
-def _assert_lifetime_matches(got, want):
+def test_lifetime_stats_equals_batch(spark):
+    """The applyInPandasWithState running totals equal a batch
+    aggregate over the same events."""
     import pytest
 
-    assert set(got) == set(want)
-    for uid, (n, sv) in want.items():
-        assert got[uid][0] == n
-        assert got[uid][1] == pytest.approx(sv, rel=1e-9)
-
-
-def test_lifetime_stats_equals_batch(spark):
-    """Runs in EVERY environment: impl='auto' picks
-    transformWithStateInPandas when the protobuf runtime exists, else
-    the applyInPandasWithState degraded path — results are equal either
-    way (that equality is the degraded path's contract)."""
     from lookup_transform_spark.streaming.stateful import stream_lifetime_stats
 
     ev = read_events_stream(spark, SF).select("user_id", "value")
@@ -369,32 +350,17 @@ def test_lifetime_stats_equals_batch(spark):
         r["user_id"]: (r["n_events"], r["sum_value"])
         for r in run_to_memory(stream_lifetime_stats(ev), "t_lt").collect()
     }
-    _assert_lifetime_matches(got, _lifetime_want(spark))
-
-
-def test_lifetime_stats_tws_impl(spark):
-    """The TWS form specifically (typed ValueState on a
-    StatefulProcessorHandle) — gated on the protobuf runtime its state
-    server requires; without it the explicit impl must raise, not hang."""
-    import pytest
-
-    from lookup_transform_spark.streaming.stateful import (
-        have_tws_runtime,
-        stream_lifetime_stats,
-    )
-
-    ev = read_events_stream(spark, SF).select("user_id", "value")
-    if not have_tws_runtime():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            stream_lifetime_stats(ev, impl="tws")
-        return
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in run_to_memory(
-            stream_lifetime_stats(ev, impl="tws"), "t_lt_tws"
-        ).collect()
+    want = {
+        r["user_id"]: (r["n"], r["sv"])
+        for r in registry._events(spark, SF)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
+        .collect()
     }
-    _assert_lifetime_matches(got, _lifetime_want(spark))
+    assert set(got) == set(want)
+    for uid, (n, sv) in want.items():
+        assert got[uid][0] == n
+        assert got[uid][1] == pytest.approx(sv, rel=1e-9)
 
 
 def test_stream_ingest_dedup_matches_batch_replay(spark, sf_dir, tmp_path):
@@ -721,7 +687,6 @@ def test_batch_dirs_ignore_stray_entries(tmp_path):
 
     from lookup_transform_spark.streaming.ingest import (
         _batch_dirs,
-        _newest_base,
         _state_dirs,
     )
 
@@ -737,7 +702,10 @@ def test_batch_dirs_ignore_stray_entries(tmp_path):
     got = [os.path.basename(d) for d in _batch_dirs(root)]
     assert got == ["batch_00001", "batch_00003"]
     assert _batch_dirs(root, before=3) == [os.path.join(root, "batch_00001")]
-    assert _newest_base(root) is None
+    assert [os.path.basename(d) for d in _state_dirs(root)] == [
+        "batch_00001",
+        "batch_00003",
+    ]
     # committed fold shadows older batches
     open(os.path.join(root, "base_00003", "_SUCCESS"), "w").write("")
     assert [os.path.basename(d) for d in _state_dirs(root)] == [
