@@ -1,11 +1,11 @@
 """UDF/UDAF/UDTF surface (SURVEY.md §2.2 B39) — the sanctioned Python
 extension points, all Arrow-batched (never row-at-a-time Python in a
-hot path):
+hot path), one per shape, each run by a registered query:
 
-- scalar pandas UDF (vectorized per batch)
-- grouped-aggregate via applyInPandas (exact median — order-independent,
-  so it stays oracle-checkable)
-- table function via mapInPandas
+- scalar pandas UDF, vectorized per batch (``sigmoid``)
+- grouped aggregate via mapInPandas over key-partitioned data (exact
+  median — order-independent, so it stays oracle-checkable)
+- table function via mapInPandas (``explode_tokens``)
 """
 
 from __future__ import annotations
@@ -26,102 +26,6 @@ def sigmoid(v: pd.Series) -> pd.Series:
     return 1.0 / (1.0 + np.exp(-v))
 
 
-@pandas_udf(DoubleType())  # literal type: usable before a session exists
-def cosine_pairs(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized pairwise cosine over two array columns: one einsum per
-    (uniform-length) group per Arrow batch — the fast path for candidate
-    re-scoring when the pair list is already materialized (interpreted
-    higher-order-function cosine is ~100× slower per pair).
-
-    Degenerate rows return NULL instead of crashing the task (the JVM
-    higher-order-function form's behavior): NULL arrays, a/b length
-    mismatch, and zero-length arrays all yield NaN — which Arrow maps
-    to SQL NULL, the same sentinel the zero-norm division produces.
-    Rows are grouped by vector length before np.array, so a batch
-    mixing dimensionalities (or one ragged row) computes every valid
-    row instead of raising 'inhomogeneous shape'; an empty Arrow batch
-    returns empty instead of tripping einsum on a 1-D empty array."""
-    la, lb = list(a), list(b)
-    n = len(la)
-    if n == 0:
-        return pd.Series([], dtype=np.float64)
-    len_a = np.array(
-        [len(x) if x is not None else -1 for x in la], dtype=np.int64
-    )
-    len_b = np.array(
-        [len(y) if y is not None else -1 for y in lb], dtype=np.int64
-    )
-    valid = (len_a > 0) & (len_a == len_b)
-    out = np.full(n, np.nan, dtype=np.float64)
-    for length in np.unique(len_a[valid]):
-        idx = np.flatnonzero(valid & (len_a == length))
-        ma = np.array([la[i] for i in idx], dtype=np.float64)
-        mb = np.array([lb[i] for i in idx], dtype=np.float64)
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            out[idx] = num / den
-    # ±Inf (norm product underflows to 0 while the dot product stays
-    # finite nonzero, or non-finite inputs) must fold to the same NULL
-    # sentinel: Arrow maps NaN→NULL but ships Inf as a real double,
-    # which would outrank every genuine similarity in any top-k
-    # re-scoring — and the JVM try_divide twin returns NULL there
-    out[~np.isfinite(out)] = np.nan
-    return pd.Series(out)
-
-
-def grouped_median(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    out_col: str = "median_value",
-    pre_partitions: int | str | None = "auto",
-) -> DataFrame:
-    """Grouped-aggregate UDAF via applyInPandas: exact median per group.
-
-    Median is selection-based, hence independent of row order within
-    the group — deterministic across partitionings and engines (the
-    property that makes a Python UDAF oracle-checkable at all).
-
-    ``pre_partitions``: repartition on the group key first; the groupBy
-    reuses that exchange, fixing the number of Python workers. The
-    right width is scale-dependent: on a small input, full-width
-    shuffle just multiplies Python worker startup (measured ~4× on the
-    1× events fixture), while capping a big input serializes the Arrow
-    transfer (measured 3× slower at 32×). ``"auto"`` (default) keys the
-    choice on input partition count, the same gate `_ensure_parallel`
-    uses for the dedup signature stages: narrow inputs get a few
-    workers, inputs at-or-above half the cluster parallelism get full
-    width. Pass an int to pin the width, None to keep the planner's
-    shuffle width.
-    """
-    if isinstance(pre_partitions, str):
-        # only "auto" is a valid string; anything else would fall through
-        # to df.repartition(<str>, ...) where Spark reads it as a COLUMN
-        # name — a confusing AnalysisException or a silent mis-partition
-        if pre_partitions != "auto":
-            raise ValueError(
-                f"pre_partitions must be an int, None, or 'auto'; "
-                f"got {pre_partitions!r}"
-            )
-        n = df.sparkSession.sparkContext.defaultParallelism
-        wide = df.rdd.getNumPartitions() >= max(2, n // 2)
-        pre_partitions = n if wide else min(8, n)
-    if pre_partitions:
-        df = df.repartition(pre_partitions, *group_cols)
-    group_schema = ", ".join(
-        f"{c} {t}" for c, t in df.select(*group_cols).dtypes
-    )
-    schema = f"{group_schema}, {out_col} double"
-
-    def _median(pdf: pd.DataFrame) -> pd.DataFrame:
-        head = pdf[group_cols].iloc[:1].copy()
-        head[out_col] = float(pdf[value_col].median())
-        return head
-
-    return df.groupBy(*group_cols).applyInPandas(_median, schema)
-
-
 def grouped_median_vectorized(
     df: DataFrame,
     group_cols: list[str],
@@ -132,10 +36,10 @@ def grouped_median_vectorized(
     """Partition-vectorized grouped-median UDAF: the production shape
     for a custom Python aggregate Spark lacks.
 
-    ``grouped_median`` (above) is the applyInPandas *surface demo*; its
-    cost is one Python/pandas dispatch PER GROUP, which at high group
-    cardinality dwarfs the actual math (~30× the built-in at 32× scale,
-    SCALING32.json). This formulation repartitions on the group key —
+    The naive per-group ``applyInPandas`` form costs one Python/pandas
+    dispatch PER GROUP, which at high group cardinality dwarfs the
+    actual math (~30× the built-in at 32× scale, SCALING32.json). This
+    formulation repartitions on the group key —
     so every group lands wholly in one partition — then runs ONE
     C-level ``pandas.groupby().median()`` over each partition inside
     ``mapInPandas``. Per-group dispatch disappears; what remains is the

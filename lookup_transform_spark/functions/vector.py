@@ -37,6 +37,5 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     plain Divide raises DIVIDE_BY_ZERO the moment one all-zeros vector
     appears (empty/failed embedding rows are routine in a real corpus)
     — ``try_divide`` returns NULL for that undefined similarity
-    instead of killing the job, matching cosine_pairs' NaN→NULL
-    convention."""
+    instead of killing the job."""
     return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))

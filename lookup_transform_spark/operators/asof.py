@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lookup_transform_spark.sqltext import ddl, sql_string
+
 
 def _ts_numeric(col, dt: T.DataType, what: str):
     """Microsecond (or column-unit) numeric form of a ts column for the
@@ -53,24 +55,6 @@ def _orderable(dt: T.DataType) -> bool:
     if isinstance(dt, T.StructType):
         return all(_orderable(f.dataType) for f in dt.fields)
     return True
-
-
-def _ddl(dt: T.DataType) -> str:
-    """SQL type string for ``dt`` with every struct field name
-    backtick-quoted (a backtick inside a name doubled):
-    ``simpleString`` splices names raw, so ``struct<my val:double>``
-    fails to parse."""
-    if isinstance(dt, T.StructType):
-        fields = ",".join(
-            "`{}`:{}".format(f.name.replace("`", "``"), _ddl(f.dataType))
-            for f in dt.fields
-        )
-        return f"struct<{fields}>"
-    if isinstance(dt, T.ArrayType):
-        return f"array<{_ddl(dt.elementType)}>"
-    if isinstance(dt, T.MapType):
-        return f"map<{_ddl(dt.keyType)},{_ddl(dt.valueType)}>"
-    return dt.simpleString()
 
 
 def asof_join(
@@ -164,7 +148,7 @@ def asof_join(
         [T.StructField(o, right.schema[v].dataType, True)
          for v, o in zip(value_fields, out_names)]
     )
-    packed_ddl = _ddl(packed_type)
+    packed_ddl = ddl(packed_type)
     lcols = [f"`{c}`" for c in left.columns]
     left_tagged = left.selectExpr(
         *lcols,
@@ -185,7 +169,7 @@ def asof_join(
     keys_ok_sql = " AND ".join(f"`{k}` IS NOT NULL" for k in keys)
     left_schema = left.schema
     packed_fields = ", ".join(
-        f"'{o}', `{v}`" for v, o in zip(value_fields, out_names)
+        f"{sql_string(o)}, `{v}`" for v, o in zip(value_fields, out_names)
     )
     right_tagged = right.filter(
         f"`{right_ts}` IS NOT NULL AND {keys_ok_sql}"
@@ -193,7 +177,7 @@ def asof_join(
         *[
             f"`{c}`"
             if c in keys
-            else f"CAST(NULL AS {_ddl(left_schema[c].dataType)}) AS `{c}`"
+            else f"CAST(NULL AS {ddl(left_schema[c].dataType)}) AS `{c}`"
             for c in left.columns
         ],
         f"`{right_ts}` AS __ts__",

@@ -14,6 +14,8 @@ import json
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
+from lookup_transform_spark.sqltext import ddl, quote_ident, sql_string
+
 #: Sidecar naming the layout a bucketed directory was WRITTEN with.
 #: The catalog trusts whatever CLUSTERED BY spec an attach declares and
 #: silently joins bucket i against bucket i — a re-attach under a
@@ -209,12 +211,12 @@ def attach_external_bucketed(
             "a mismatched attach silently drops join rows — re-attach "
             "with the written spec or rewrite the layout"
         )
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+    cols = ", ".join(f"{quote_ident(f.name)} {ddl(f.dataType)}"
                      for f in schema.fields)
     spark.sql(
         f"CREATE TABLE {table} ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{bucket_col}`) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
+        f"CLUSTERED BY ({quote_ident(bucket_col)}) INTO {n_buckets} BUCKETS "
+        f"LOCATION {sql_string(path)}"
     )
 
 

@@ -376,20 +376,3 @@ def semantic_dedup_pairs(
     )
 
 
-def kmeans_numpy(
-    ids: np.ndarray, vecs: np.ndarray, k: int, iters: int
-) -> np.ndarray:
-    """Single-node reference replica (ground truth for the pinned
-    test): identical init, assignment rule, and mean update."""
-    order = np.argsort(ids)
-    cent = vecs[order[:k]].astype(np.float64)
-    v = vecs.astype(np.float64)
-    lab = None
-    for _ in range(iters):
-        d2 = (cent * cent).sum(axis=1)[None, :] - 2.0 * (v @ cent.T)
-        lab = np.argmin(d2, axis=1)
-        for c in range(k):
-            if (lab == c).any():
-                cent[c] = v[lab == c].mean(axis=0)
-    d2 = (cent * cent).sum(axis=1)[None, :] - 2.0 * (v @ cent.T)
-    return np.argmin(d2, axis=1)

@@ -2,66 +2,15 @@
 
 High-frequency ingestion leaves thousands of KB-sized files per
 partition; scan cost becomes per-file overhead instead of bytes. The
-compactor rewrites a dataset to a target file count (or target records
-per file), preserving partition columns. At scale this runs per
-partition-predicate so only hot partitions rewrite.
+compactor rewrites a dataset to a target file count, preserving
+partition columns. The streaming ingest (``streaming/ingest.py``) runs
+it to fold committed micro-batch directories into segments; the caller
+picks the file count.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def compact_parquet_to_size(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_mb: int = 128,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """Size-targeted compaction: derive the file count from the actual
-    on-disk bytes of ``src`` (the policy a table-maintenance job uses —
-    "files of ~128 MB", not "N files"), then delegate to
-    ``compact_parquet``."""
-    total = sum(
-        os.path.getsize(f)
-        for f in glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-    )
-    if total == 0:
-        # the size probe is a LOCAL-filesystem glob; an src Spark can
-        # read but glob cannot (s3a://, hdfs://, glob metachars) comes
-        # back empty and would silently size the rewrite to ONE file —
-        # a single-task rewrite of the whole dataset. Fail loud instead.
-        raise ValueError(
-            f"compact_parquet_to_size: found no *.parquet bytes under "
-            f"{src!r} with a local-filesystem glob; for non-local "
-            "storage size the file count yourself and call "
-            "compact_parquet(target_files=...)"
-        )
-    n_files = max(1, round(total / (target_mb * 1024 * 1024)))
-    max_records = None
-    if partition_by:
-        # Partitioned rewrites put each partition VALUE wholly in one
-        # task, so target_files alone bounds only shuffle width — a
-        # 10 GB partition value would still come out as one 10 GB file
-        # (r8 review: the '~target_mb files' policy the function's name
-        # promises was silently ignored). Derive records-per-file from
-        # the measured on-disk bytes/row so the writer re-splits
-        # oversized values; a parquet count() is footer-metadata only,
-        # not a data scan.
-        rows = spark.read.parquet(
-            *( [src] if isinstance(src, str) else list(src) )
-        ).count()
-        if rows:
-            avg_row = max(1, total // rows)
-            max_records = max(1, (target_mb * 1024 * 1024) // avg_row)
-    return compact_parquet(
-        spark, src, dst, target_files=n_files,
-        max_records_per_file=max_records, partition_by=partition_by,
-    )
 
 
 def compact_parquet(
@@ -69,7 +18,6 @@ def compact_parquet(
     src: str | list[str],
     dst: str,
     target_files: int | None = None,
-    max_records_per_file: int | None = None,
     partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Read ``src`` (one path or a list — e.g. an ingest's committed
@@ -82,8 +30,8 @@ def compact_parquet(
     into EVERY partition directory it holds rows for (N × |values|
     files) — so the rewrite hash-repartitions on the partition columns:
     one shuffle, each value lands wholly in one task, ≈ one file per
-    partition directory (``max_records_per_file`` re-splits oversized
-    values). Returns the compacted DataFrame (row-count verification).
+    partition directory. Returns the compacted DataFrame (row-count
+    verification).
     """
     srcs = [src] if isinstance(src, str) else list(src)
     df = spark.read.parquet(*srcs)
@@ -102,8 +50,6 @@ def compact_parquet(
     else:
         out = df
     w = out.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(dst)

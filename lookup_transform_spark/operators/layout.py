@@ -6,14 +6,15 @@ filter keys give every parquet file a tight min/max envelope on BOTH
 keys, so row-group statistics prune multi-dimensional predicates —
 the effect `ORDER BY a` gives for one column, extended to several.
 
-Everything is JVM-side bit arithmetic (shift/and/or on longs): the
-z-code is a deterministic pure function of the keys, so it is also
-oracle-checkable in any SQL engine with bit operators.
+This module computes the clustering key: a writer range-partitions
+and sorts by it. Everything is JVM-side bit arithmetic (shift/and/or
+on longs): the z-code is a deterministic pure function of the keys, so
+it is also oracle-checkable in any SQL engine with bit operators.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -46,32 +47,3 @@ def zorder_code_sql(expr_a: str, expr_b: str, bits: int = 8) -> str:
     return " | ".join(terms)
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    bucket_a: Column,
-    bucket_b: Column,
-    num_files: int = 8,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` clustered on the Morton curve of two key buckets:
-    range-partition by z-code (one total ordering, one shuffle), sort
-    within partitions, drop the helper column. Each output file covers
-    a contiguous z-range — a tight 2-D min/max envelope for statistics
-    pruning on either key."""
-    code = zorder_code(bucket_a, bucket_b, bits)
-    # helper name must not collide with a user column: withColumn would
-    # silently REPLACE it and the trailing drop would delete it from
-    # the written data
-    z = "__z__"
-    while z in df.columns:
-        z += "_"
-    (
-        df.withColumn(z, code)
-        .repartitionByRange(num_files, F.col(z))
-        .sortWithinPartitions(z)
-        .drop(z)
-        .write.mode(mode)
-        .parquet(path)
-    )

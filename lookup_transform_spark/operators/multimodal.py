@@ -54,14 +54,6 @@ def _soundfile():
         return None
 
 
-def have_image_codec() -> bool:
-    return _pillow() is not None
-
-
-def have_audio_codec() -> bool:
-    return _soundfile() is not None
-
-
 # ---------------------------------------------------------------------------
 # Built-in pure-numpy codecs (uncompressed containers) — the tier that
 # keeps the real decode path executable without Pillow/soundfile.
@@ -105,25 +97,6 @@ def _decode_ppm(payload: bytes) -> np.ndarray:
     )
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    """24-bit uncompressed BMP (BITMAPINFOHEADER, bottom-up rows, 4-byte
-    row padding) from an HxWx3 uint8 RGB array."""
-    import struct  # noqa: PLC0415
-
-    img = np.ascontiguousarray(img, dtype=np.uint8)
-    h, w = img.shape[:2]
-    row = w * 3
-    pad = (-row) % 4
-    body = bytearray()
-    for r in range(h - 1, -1, -1):  # bottom-up
-        body += img[r, :, ::-1].tobytes()  # RGB → BGR
-        body += b"\x00" * pad
-    header = struct.pack(
-        "<2sIHHI", b"BM", 54 + len(body), 0, 0, 54
-    ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-    return bytes(header) + bytes(body)
-
-
 def _decode_bmp(payload: bytes) -> np.ndarray:
     """24-bit uncompressed BMP → HxWx3 uint8 RGB (top-down output)."""
     import struct  # noqa: PLC0415
@@ -158,41 +131,12 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     return rows[:, :, ::-1].copy()  # BGR → RGB
 
 
-def encode_png(img: np.ndarray) -> bytes:
-    """Minimal RGB8 PNG (color type 2, bit depth 8, filter 0, one IDAT)
-    on stdlib ``zlib`` — a real COMPRESSED image container with no
-    library dependency, so the compressed-decode path is CI-executable
-    (VERDICT r5 #7)."""
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    img = np.ascontiguousarray(img, dtype=np.uint8)
-    if img.ndim != 3 or img.shape[2] != 3:
-        raise ValueError("encode_png expects an HxWx3 uint8 array")
-    h, w, _ = img.shape
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 9))
-        + chunk(b"IEND", b"")
-    )
-
-
 def _decode_png(payload: bytes) -> np.ndarray:
     """Pure-stdlib PNG decode → HxWx3 uint8 RGB: zlib-inflates the IDAT
     stream and unfilters scanlines (all five PNG filter types). Supports
     bit depth 8, color types 0 (gray), 2 (RGB), 6 (RGBA → alpha
-    dropped), no interlace — the shapes ``encode_png`` and common
-    writers emit. Byte-exact (PNG is lossless): round-trip pinned in
+    dropped), no interlace — the shapes common writers emit.
+    Byte-exact (PNG is lossless): round-trip pinned in
     tests/test_multimodal.py. Unfiltering for Sub/Average/Paeth is an
     inherently sequential per-byte recurrence — this built-in path is
     correctness-first; when Pillow is installed its C decoder is

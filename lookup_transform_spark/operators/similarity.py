@@ -262,7 +262,7 @@ def lsh_bucket_topk(
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     """Global top-k over candidate scores. Non-finite sims (a zero-norm
-    vector makes ``cosine_pairs`` divide 0/0 → NaN, and NaN sorts ABOVE
+    vector makes the cosine divide 0/0 → NaN, and NaN sorts ABOVE
     every real value under ``desc()``) are filtered BEFORE the ranking
     window — one degenerate vector must not poison every top-k list it
     collides with (mirrors the ``isfinite`` guard in ``cosine_topk``)."""

@@ -202,42 +202,6 @@ def qsketch_quantiles(
     return cum.groupBy(*group_cols, "n_rows").agg(*aggs)
 
 
-def write_qsketch_leaves(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    path: str,
-    base: float = 1.04,
-    lo: float = 0.01,
-) -> None:
-    """Materialize leaf sketches at rest: one pass over the raw data,
-    one tiny parquet table of (group, sketch, n_rows) rows. In steady
-    state this is maintained per ingest partition (append a leaf row
-    per batch — sketches for the same group simply merge downstream),
-    and every later percentile query reads ONLY this table."""
-    qsketch(df, group_cols, value_col, base, lo).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def qsketch_quantiles_at_rest(
-    spark,
-    path: str,
-    group_cols: list[str],
-    probs: list[float],
-    base: float = 1.04,
-    lo: float = 0.01,
-) -> DataFrame:
-    """Percentiles from the at-rest leaf table: merge + quantile read
-    over sketch rows only — the raw corpus is never rescanned (the
-    query's only file scan is the sketch table; equality with the
-    raw-data sketch is pinned in tests/test_sketches.py)."""
-    leaves = spark.read.parquet(path)
-    return qsketch_quantiles(
-        qsketch_merge(leaves, group_cols), group_cols, probs, base, lo
-    )
-
-
 # ---------------------------------------------------------------------------
 # Mergeable top-k (heavy hitters) — the frequent-items member of the
 # sketch family (HLL = distinct counts, qsketch = quantiles, this =
@@ -377,30 +341,6 @@ def topk_merge(leaves: DataFrame, group_cols: list[str], k: int = 10) -> DataFra
     )
 
 
-def write_topk_leaves(
-    df: DataFrame,
-    group_cols: list[str],
-    key_col: str,
-    shard_col: str | Column,
-    path: str,
-    m: int = 200,
-) -> None:
-    """Materialize shard summaries at rest (the qsketch leaf pattern):
-    per ingest partition this is an append of O(groups·m) rows; every
-    later heavy-hitter query reads ONLY this table."""
-    topk_sketch(df, group_cols, key_col, shard_col, m).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def topk_at_rest(
-    spark, path: str, group_cols: list[str], k: int = 10
-) -> DataFrame:
-    """Heavy hitters from the at-rest summary table — the raw corpus is
-    never rescanned."""
-    return topk_merge(spark.read.parquet(path), group_cols, k)
-
-
 # ---------------------------------------------------------------------------
 # Portable HLL (r9): the distinct-count member of the sketch family in
 # an ORACLE-EXACT form. Spark's built-in hll_sketch_agg is the
@@ -428,8 +368,6 @@ def topk_at_rest(
 # parameters owned by the dependency-free oracle module so engine and
 # oracle can never drift (the synthetic.py convention)
 from lookup_transform_spark.operators.sketches_oracle import (  # noqa: E402
-    HLL_ALPHA as _HLL_ALPHA,
-    HLL_M as _HLL_M,
     HLL_WBITS as _HLL_WBITS,
 )
 
@@ -448,42 +386,6 @@ def _hll_bucket_rank(key: Column) -> tuple[Column, Column]:
     return bucket, rank
 
 
-def hll_portable_sketch(
-    df: DataFrame, group_cols: list[str], key_col: str
-) -> DataFrame:
-    """One sketch row per group: ``sketch map<int,int>`` (bucket → max
-    rank over the group's keys) + ``n_rows``. NULL keys reach no
-    register and don't count, but the group survives (the family's
-    shared null contract)."""
-    bucket, rank = _hll_bucket_rank(F.col(key_col))
-    per_bucket = (
-        df.select(
-            *group_cols,
-            F.when(F.col(key_col).isNotNull(), bucket).alias("__b__"),
-            F.when(F.col(key_col).isNotNull(), rank).alias("__r__"),
-            F.col(key_col).isNotNull().alias("__k__"),
-        )
-        .groupBy(*group_cols, "__b__")
-        .agg(
-            F.max("__r__").alias("__r__"),
-            F.sum(F.col("__k__").cast("long")).alias("__n__"),
-        )
-    )
-    return per_bucket.groupBy(*group_cols).agg(
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("__b__").isNotNull(),
-                        F.struct("__b__", "__r__"),
-                    )
-                )
-            )
-        ).alias("sketch"),
-        F.sum("__n__").alias("n_rows"),
-    )
-
-
 def fused_hll_qsketch_leaves(
     df: DataFrame,
     group_cols: list[str],
@@ -493,10 +395,12 @@ def fused_hll_qsketch_leaves(
     lo: float = 0.01,
 ) -> DataFrame:
     """BOTH families' leaf rows from ONE pass over ``df``: per (group,
-    family) one sketch row, family ``'hll'`` = ``hll_portable_sketch``
-    of ``key_col``, family ``'q'`` = ``qsketch`` of ``value_col`` —
+    family) one sketch row, family ``'hll'`` = the portable HLL
+    registers of ``key_col`` (bucket → max rank, ``n_rows`` = non-null
+    keys), family ``'q'`` = ``qsketch`` of ``value_col`` —
     value-identical to running the two builders separately (pinned in
-    tests/test_sketches.py), with the HLL register map widened to the
+    tests/test_sketches.py against its layered HLL reference builder
+    and ``qsketch``), with the HLL register map widened to the
     histogram's ``map<int,bigint>`` (registers ≤ 53, so narrowing back
     is lossless).
 
@@ -564,74 +468,6 @@ def fused_hll_qsketch_leaves(
     )
 
 
-def hll_portable_merge(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Roll leaf sketches up by per-bucket MAX — sketch rows only, and
-    exactly what ``hll_portable_sketch`` would emit on the raw union
-    (max is associative; pinned in tests).
-
-    Leaves are ``localCheckpoint``-ed first — the same two-consumer
-    shape as ``topk_merge`` (register rollup + n_rows totals), which
-    would otherwise re-evaluate the whole leaf lineage twice; summary
-    rows are O(groups·m) bounded at any input scale."""
-    df = df.localCheckpoint()
-    exploded = df.select(
-        *group_cols, "n_rows",
-        F.explode_outer("sketch").alias("__b__", "__r__"),
-    )
-    # n_rows repeats once per exploded entry of its leaf row — divide
-    # back out by each leaf's entry count? No: aggregate n_rows from
-    # the LEAF rows (one per leaf) separately to stay exact.
-    totals = df.groupBy(*group_cols).agg(F.sum("n_rows").alias("n_rows"))
-    per_bucket = (
-        exploded.filter(F.col("__b__").isNotNull())
-        .groupBy(*group_cols, "__b__")
-        .agg(F.max("__r__").alias("__r__"))
-    )
-    rebuilt = per_bucket.groupBy(*group_cols).agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("__b__", "__r__")))
-        ).alias("sketch")
-    )
-    # left join FROM totals (which holds every group) keeps
-    # all-empty-sketch groups alive with an empty map
-    return totals.join(rebuilt, group_cols, "left").select(
-        *group_cols,
-        F.coalesce(
-            "sketch", F.map_from_entries(F.array().cast("array<struct<__b__:int,__r__:int>>"))
-        ).alias("sketch"),
-        "n_rows",
-    )
-
-
-def hll_portable_estimate(
-    df: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Distinct-count estimate per sketch row: classic HLL harmonic
-    mean with the linear-counting small-range correction, 3-dp rounded
-    (the cross-engine comparability trick — see module section
-    comment). An EMPTY sketch estimates 0.0 via linear counting
-    (V0 = m → m·ln(1) = 0)."""
-    m = float(_HLL_M)
-    s_present = F.aggregate(
-        F.map_values("sketch"),
-        F.lit(0.0),
-        lambda acc, r: acc + F.pow(F.lit(0.5), r.cast("double")),
-    )
-    present = F.size("sketch")
-    s = s_present + (F.lit(m) - present.cast("double"))
-    e_raw = F.lit(_HLL_ALPHA * m * m) / s
-    v0 = (F.lit(_HLL_M) - present).cast("double")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
-        F.lit(m) * F.log(F.lit(m) / v0),
-    ).otherwise(e_raw)
-    return df.select(
-        *group_cols,
-        F.round(est, 3).alias("approx_distinct"),
-        "n_rows",
-    )
-
-
 def hll_portable_estimate_from_leaves(
     leaves: DataFrame, group_cols: list[str]
 ) -> DataFrame:
@@ -639,10 +475,8 @@ def hll_portable_estimate_from_leaves(
     registers directly, so rebuilding the intermediate map column
     (a whole extra aggregation stage) is pure presentation — this path
     explodes the leaves once, MAXes per (group, bucket), and reads the
-    harmonic mean off those rows. Equal to
-    ``hll_portable_estimate(hll_portable_merge(...))`` by construction
-    (pinned in tests); use the layered pair when the MERGED sketch
-    itself must persist."""
+    harmonic mean off those rows. Equal to the layered merge-then-
+    estimate reference in tests/test_sketches.py (pinned there)."""
     from lookup_transform_spark.operators.sketches_oracle import (
         HLL_ALPHA,
         HLL_M,
@@ -691,11 +525,11 @@ def hll_portable_distinct(
     TWO partial-aggregated shuffles, no map packaging, no checkpoint.
     Inside one query the leaf→merge layering is physically meaningless
     (per-bucket MAX collapses across grains), so the registered query
-    uses this; the layered sketch/merge/estimate API is the AT-REST
-    surface — persist ``hll_portable_sketch`` rows per ingest
-    partition, read them back through
-    ``hll_portable_estimate_from_leaves`` — and layered ≡ direct is
-    pinned in tests."""
+    uses this; the AT-REST surface is leaf register rows (the ``'hll'``
+    family of ``fused_hll_qsketch_leaves``) read back through
+    ``hll_portable_estimate_from_leaves``. Direct ≡ leaves ≡ the
+    layered sketch/merge/estimate reference is pinned in
+    tests/test_sketches.py."""
     from lookup_transform_spark.operators.sketches_oracle import (
         HLL_ALPHA,
         HLL_M,

@@ -158,8 +158,9 @@ def _zorder_oracle() -> str:
 def q_zorder_layout(spark, sf):
     """Data layout for scan locality: Morton (Z-order) code over the two
     common filter keys — the clustering key a 100 TB writer sorts by so
-    parquet min/max statistics prune BOTH dimensions (zorder_write is
-    the writer; this query pins the code itself cross-engine)."""
+    parquet min/max statistics prune BOTH dimensions (a writer
+    range-partitions and sorts on it; this query pins the code itself
+    cross-engine)."""
     from lookup_transform_spark.operators.layout import zorder_code
 
     o = _t(spark, sf, "orders")

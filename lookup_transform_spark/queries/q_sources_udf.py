@@ -256,10 +256,9 @@ def q_udaf_median(spark, sf):
     selection-based (order-independent), hence oracle-checkable.
 
     This is the production shape for an aggregate Spark lacks: the
-    naive per-group ``applyInPandas`` formulation (``grouped_median``,
-    kept as the surface demo and pinned equal in
-    ``tests/test_property.py``) pays a Python dispatch per group —
-    ~30× the built-in ``F.median`` at 32× (4.05 s, SCALING32.json r5);
+    naive per-group ``applyInPandas`` formulation pays a Python
+    dispatch per group — ~30× the built-in ``F.median`` at 32×
+    (4.05 s, SCALING32.json r5);
     vectorizing per partition leaves only the Arrow transfer, the
     irreducible toll of any Python-side aggregate. For median itself
     the built-in twin ``agg_median`` above remains the plan to run."""

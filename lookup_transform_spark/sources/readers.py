@@ -77,16 +77,6 @@ def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -
     return _pruned(spark.read.orc(path), columns)
 
 
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan with schema merging across files — the read mode for
-    long-lived tables whose schema grew over time (columns added by
-    later ingest batches). Files written before a column existed yield
-    null for it. mergeSchema costs a footer read per file at planning
-    time, so production tables should pin the merged schema in a
-    catalog; this reader is the discovery path."""
-    return spark.read.option("mergeSchema", True).parquet(path)
-
-
 def read_binary_files(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:

@@ -17,9 +17,9 @@ API's Arrow protocol) built from vectorized numpy hashing — one batch
 per ~64k rows instead of one pickled tuple per row, ~10× less
 serialization overhead. This file is the template users copy for custom
 sources, so it deliberately models the batch shape, not the per-row
-``yield`` a minimal example would use. ``make_doc`` is the scalar
-specification of the row function; the vectorized path is pinned
-bit-identical to it by test_sources.py.
+``yield`` a minimal example would use. The scalar specification of
+the row function lives in test_sources.py, which pins the vectorized
+path bit-identical to it.
 """
 
 from __future__ import annotations
@@ -49,31 +49,10 @@ _ARROW_SCHEMA = pa.schema(
 _BATCH_ROWS = 65_536
 
 
-def _mix(x: int) -> int:
-    """splitmix64 finalizer — a deterministic, well-distributed int hash."""
-    x = (x + 0x9E3779B97F4A7C15) & (1 << 64) - 1
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & (1 << 64) - 1
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & (1 << 64) - 1
-    return x ^ (x >> 31)
-
-
-def make_doc(seed: int, doc_id: int) -> tuple[int, str, str, str, int]:
-    """Scalar row function — the SPEC the vectorized batch path must
-    reproduce bit-for-bit (and does; pinned by test_sources.py)."""
-    h = _mix(seed * 1_000_003 + doc_id)
-    lang = LANGS[h % len(LANGS)]
-    source = f"src{(h >> 8) % 20}"
-    n_words = 5 + (h >> 16) % 40
-    words = [
-        _WORDS[_mix(h + i) % len(_WORDS)] for i in range(n_words)
-    ]
-    text = " ".join(words)
-    return doc_id, lang, source, text, len(text)
-
-
 def _mix_vec(x: np.ndarray) -> np.ndarray:
-    """``_mix`` over a uint64 array (numpy uint64 arithmetic wraps mod
-    2^64, matching the scalar masking)."""
+    """splitmix64 finalizer — a deterministic, well-distributed hash —
+    over a uint64 array (numpy uint64 arithmetic wraps mod 2^64, the
+    scalar spec's masking)."""
     x = x + np.uint64(0x9E3779B97F4A7C15)
     x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
@@ -81,7 +60,7 @@ def _mix_vec(x: np.ndarray) -> np.ndarray:
 
 
 def _make_batch(seed: int, doc_ids: np.ndarray) -> pa.RecordBatch:
-    """Vectorized ``make_doc`` over a uint64 id array → one RecordBatch."""
+    """The row function over a uint64 id array → one RecordBatch."""
     base = np.uint64((seed * 1_000_003) % (1 << 64))
     with np.errstate(over="ignore"):
         h = _mix_vec(base + doc_ids)

@@ -19,8 +19,8 @@ multiply is split into 32-bit halves so no partial product exceeds
     = (xl·cl + ((xl·ch + xh·cl) mod 2^32)·2^32) mod 2^64.
 xor/shift route through UBIGINT (DuckDB's xor() is exact there; a
 right shift of a non-negative value is integer division by 2^s).
-Validated bit-for-bit against ``_mix`` and the scalar ``make_doc``
-aggregate (tests/test_sources.py).
+Validated bit-for-bit against the scalar splitmix64 and row-function
+spec in tests/test_sources.py.
 """
 
 from __future__ import annotations
@@ -53,7 +53,8 @@ def _sql_xorshift(e: str, s: int) -> str:
 
 
 def _sql_mix(e: str) -> str:
-    """``synthetic._mix`` as a (large, nested) SQL expression over HUGEINT."""
+    """The splitmix64 finalizer (``synthetic._mix_vec``) as a (large,
+    nested) SQL expression over HUGEINT."""
     x1 = _sql_mod64(f"({e}) + 11400714819323198485::HUGEINT")
     x2 = _sql_mulmod64(_sql_xorshift(x1, 30), 0xBF58476D1CE4E5B9)
     x3 = _sql_mulmod64(_sql_xorshift(x2, 27), 0x94D049BB133111EB)

@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -9,7 +9,6 @@ the copies already differed in job-group name and error handling).
 
 from __future__ import annotations
 
-import threading
 import time
 
 

@@ -41,8 +41,6 @@ import json
 import os
 import shutil
 import sys
-import threading
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

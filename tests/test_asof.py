@@ -120,6 +120,22 @@ def test_spaced_value_field_name_parses(spark):
     assert _rows(out) == [(1, 10, 1.0), (1, 3, None)]
 
 
+def test_quoted_value_field_name_parses(spark):
+    # the packed struct's field names are spliced into
+    # named_struct('<name>', ...) as string literals: a raw quote or
+    # backslash in a name is a ParseException
+    left = spark.createDataFrame([(1, 10), (1, 3)], "k long, ts long")
+    right = spark.createDataFrame(
+        [(1, 5, 1.0)], "k long, ts long, `o'v\\al` double"
+    )
+    out = asof_join(
+        left, right, on="k", left_ts="ts", right_ts="ts",
+        value_fields=["o'v\\al"],
+    )
+    assert out.columns == ["k", "ts", "o'v\\al"]
+    assert _rows(out) == [(1, 10, 1.0), (1, 3, None)]
+
+
 def test_asof_directions_match_brute_force(spark):
     """backward/forward/nearest against a per-row brute-force pick on a
     toy fixture with both-side candidates, ties, and misses."""

@@ -6,12 +6,28 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from lookup_transform_spark.operators.clustering import (
-    kmeans_assign,
-    kmeans_numpy,
-)
+from lookup_transform_spark.operators.clustering import kmeans_assign
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def kmeans_numpy(
+    ids: np.ndarray, vecs: np.ndarray, k: int, iters: int
+) -> np.ndarray:
+    """Single-node reference replica (ground truth for the pinned
+    test): identical init, assignment rule, and mean update."""
+    order = np.argsort(ids)
+    cent = vecs[order[:k]].astype(np.float64)
+    v = vecs.astype(np.float64)
+    lab = None
+    for _ in range(iters):
+        d2 = (cent * cent).sum(axis=1)[None, :] - 2.0 * (v @ cent.T)
+        lab = np.argmin(d2, axis=1)
+        for c in range(k):
+            if (lab == c).any():
+                cent[c] = v[lab == c].mean(axis=0)
+    d2 = (cent * cent).sum(axis=1)[None, :] - 2.0 * (v @ cent.T)
+    return np.argmin(d2, axis=1)
 
 
 @pytest.fixture(scope="module")
@@ -51,8 +67,6 @@ def test_kmeans_excludes_dirty_vectors_without_corruption(spark, fixture_vectors
     fixed-point sum — results silently corrupted by one dirty row. Dirty
     rows (NULL vector, NULL/NaN/±Inf element) must be EXCLUDED and the
     clean rows' assignments unchanged."""
-    import math
-
     from pyspark.sql import functions as F
 
     ids, vecs = fixture_vectors

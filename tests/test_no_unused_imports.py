@@ -1,9 +1,14 @@
-"""Every name a library module imports is used in that module.
+"""Dead-code guards over the repository's Python. Pure AST, no Spark.
 
-Pure AST, no Spark. Package ``__init__.py`` files are exempt: they
-re-export by design. Anything else a module imports but never reads is
-dead weight (and, for the query tiers, hides which operator a query
-really runs).
+1. Every name a module imports is used in that module. This covers the
+   library, ``scripts/``, ``bench.py``, ``__spark_entry__.py`` and
+   ``tests/``; ``perfbench/`` is the fixed benchmark and is left out.
+   Package ``__init__.py`` files are exempt: they re-export by design.
+   Anything else a module imports but never reads is dead weight (and,
+   for the query tiers, hides which operator a query really runs).
+2. Every top-level ``def`` / ``class`` in the library has a caller
+   outside ``tests/``. Code that only tests call belongs in the test
+   that calls it.
 """
 
 from __future__ import annotations
@@ -11,7 +16,24 @@ from __future__ import annotations
 import ast
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "lookup_transform_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "lookup_transform_spark"
+
+#: Python outside the library that may call it. Test files are not callers.
+_NON_TEST_CALLERS = (
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+    *sorted((ROOT / "scripts").glob("*.py")),
+    *(p for p in sorted((ROOT / "perfbench").rglob("*.py"))
+      if "tests" not in p.relative_to(ROOT).parts),
+)
+
+#: Library entry points that nothing in the repository calls but a user
+#: does. ``run_pipeline`` runs a CDAP pipeline config, the paper's own
+#: interface; ``test_docs_example_runs_unchanged`` drives it.
+_USER_ENTRY_POINTS = {("plans/cdap_compat.py", "run_pipeline")}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _unused_imports(tree: ast.Module) -> list[str]:
@@ -29,12 +51,73 @@ def _unused_imports(tree: ast.Module) -> list[str]:
                   if name not in used)
 
 
-def test_library_modules_use_every_import():
-    modules = [p for p in sorted(PKG.rglob("*.py")) if p.name != "__init__.py"]
-    assert modules
+def _assert_imports_used(files: list[pathlib.Path]) -> None:
     unused = {
-        str(p.relative_to(PKG.parent)): names
-        for p in modules
+        str(p.relative_to(ROOT)): names
+        for p in files
         if (names := _unused_imports(ast.parse(p.read_text())))
     }
     assert not unused, unused
+
+
+def test_library_modules_use_every_import():
+    modules = [p for p in sorted(PKG.rglob("*.py")) if p.name != "__init__.py"]
+    assert modules
+    _assert_imports_used(modules)
+
+
+def test_scripts_entry_points_and_tests_use_every_import():
+    files = [
+        *sorted(ROOT.glob("*.py")),
+        *sorted((ROOT / "scripts").glob("*.py")),
+        *sorted((ROOT / "tests").rglob("*.py")),
+    ]
+    assert ROOT / "bench.py" in files and ROOT / "tests" / "conftest.py" in files
+    _assert_imports_used(files)
+
+
+def _references(tree: ast.Module) -> set[str]:
+    """Names a module reads: ``Name`` ids, ``Attribute`` attrs and
+    imported names. A top-level definition's reads of its own name
+    (recursion) do not count."""
+    refs: set[str] = set()
+    for top in tree.body:
+        found: set[str] = set()
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                found.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                found.add(n.attr)
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                found.update(a.name.rsplit(".", 1)[-1] for a in n.names)
+        if isinstance(top, _DEFS):
+            found.discard(top.name)
+        refs |= found
+    return refs
+
+
+def _is_registered_query(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", ()):
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(fn, ast.Name) and fn.id == "_q":
+            return True
+    return False
+
+
+def test_library_definitions_have_a_non_test_caller():
+    lib = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+    refs: set[str] = set()
+    for tree in lib.values():
+        refs |= _references(tree)
+    for p in _NON_TEST_CALLERS:
+        refs |= _references(ast.parse(p.read_text()))
+    orphans = sorted(
+        f"{p.relative_to(PKG)}:{node.name}"
+        for p, tree in lib.items()
+        for node in tree.body
+        if isinstance(node, _DEFS)
+        and node.name not in refs
+        and not _is_registered_query(node)
+        and (str(p.relative_to(PKG)), node.name) not in _USER_ENTRY_POINTS
+    )
+    assert not orphans, orphans

@@ -183,6 +183,50 @@ def test_bucketed_reattach_validates_written_spec(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS nat_spec_test")
 
 
+def test_bucketed_attach_quotes_struct_field_names(spark, tmp_path):
+    """The attach DDL spells every column type out: a struct field name
+    with a space (or a backtick in the bucket column's name) must be
+    quoted, not spliced raw into ``CREATE TABLE``."""
+    from lookup_transform_spark.operators.bucketing import (
+        attach_external_bucketed,
+        write_bucketed,
+    )
+
+    df = spark.createDataFrame(
+        [(1, (0.5,)), (2, (1.5,))], "`k``ey` long, s struct<`my val`:double>"
+    )
+    path = str(tmp_path / "struct_b")
+    spark.sql("DROP TABLE IF EXISTS struct_attach_test")
+    write_bucketed(df, "struct_attach_test", "k`ey", 2, path=path)
+    spark.sql("DROP TABLE IF EXISTS struct_attach_test")
+    attach_external_bucketed(
+        spark, "struct_attach_test", path, "k`ey", 2, df.schema
+    )
+    back = spark.table("struct_attach_test")
+    assert sorted((r[0], r[1][0]) for r in back.collect()) == [(1, 0.5), (2, 1.5)]
+    spark.sql("DROP TABLE IF EXISTS struct_attach_test")
+
+
+def test_bucketed_attach_quotes_location_path(spark, tmp_path):
+    """A path carrying a quote must reach ``LOCATION`` as an escaped
+    string literal, not end the literal early."""
+    from lookup_transform_spark.operators.bucketing import (
+        attach_external_bucketed,
+        write_bucketed,
+    )
+
+    df = spark.read.parquet(f"{SF}/nation.parquet")
+    path = str(tmp_path / "it's_b")
+    spark.sql("DROP TABLE IF EXISTS path_attach_test")
+    write_bucketed(df, "path_attach_test", "n_nationkey", 4, path=path)
+    spark.sql("DROP TABLE IF EXISTS path_attach_test")
+    attach_external_bucketed(
+        spark, "path_attach_test", path, "n_nationkey", 4, df.schema
+    )
+    assert spark.table("path_attach_test").count() == df.count()
+    spark.sql("DROP TABLE IF EXISTS path_attach_test")
+
+
 def test_incremental_probe_standing_side_not_reshuffled(spark, tmp_path):
     """The at-rest fingerprint index contract (B50 incremental, 100 TB
     story): per-ingest cost is O(batch). The probe's anti-join must read
@@ -275,36 +319,6 @@ def test_anomaly_zscore_broadcasts_stats(spark):
     plan = explain_str(df, "simple")
     assert "BroadcastHashJoin" in plan
     assert plan.count("HashAggregate") >= 2
-
-
-def test_zorder_write_files_have_disjoint_z_ranges(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.operators.layout import zorder_code, zorder_write
-
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    a = F.pmod(F.col("o_custkey"), F.lit(256))
-    b = F.pmod(
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date")),
-        F.lit(256),
-    )
-    path = str(tmp_path / "orders_z")
-    zorder_write(orders, path, a, b, num_files=8)
-
-    import glob
-
-    ranges = []
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        part = spark.read.parquet(f)
-        lo, hi = part.select(
-            F.min(zorder_code(a, b)), F.max(zorder_code(a, b))
-        ).first()
-        ranges.append((lo, hi))
-    ranges.sort()
-    # range partitioning on the z-code ⇒ every file covers a contiguous,
-    # non-overlapping z interval — the data-skipping envelope
-    for (lo1, hi1), (lo2, _) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
 
 
 def test_decontaminate_never_shuffles_corpus(spark):

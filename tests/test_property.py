@@ -153,36 +153,6 @@ def test_asof_matches_reference(spark, left_rows, right_rows):
     assert got == reference_asof(left_rows, right_rows)
 
 
-def test_grouped_median_udaf_equals_builtin(spark):
-    """The UDAF surface demo (applyInPandas grouped median) must agree
-    with the built-in F.median on every group — the equality that lets
-    `agg_median` be the registered production path while `udaf_median`
-    stays the documented-toll UDAF twin."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.functions.udfs import grouped_median
-
-    rows = [
-        (g, float(v))
-        for g in range(7)
-        for v in range((g * 13) % 9 + 1)  # ragged group sizes, odd+even
-    ]
-    df = spark.createDataFrame(rows, "g long, value double")
-    udaf = {
-        r["g"]: r["median_value"]
-        for r in grouped_median(df, ["g"], "value").collect()
-    }
-    builtin = {
-        r["g"]: r["m"]
-        for r in df.groupBy("g").agg(F.median("value").alias("m")).collect()
-    }
-    assert udaf == builtin
-    # bad string param must fail loudly, not repartition by a column
-    with pytest.raises(ValueError, match="pre_partitions"):
-        grouped_median(df, ["g"], "value", pre_partitions="al")
-
-
 def test_grouped_median_vectorized_equals_builtin(spark):
     """The partition-vectorized formulation (repartition-on-key +
     per-partition pandas groupby — the registered `udaf_median` path)

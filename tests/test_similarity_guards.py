@@ -1,7 +1,7 @@
 """Guards added in round 4:
 
 - NaN poisoning (VERDICT r3 "what's wrong" #3): a zero-norm vector makes
-  ``cosine_pairs`` emit NaN, and NaN sorts ABOVE every real value under
+  a cosine score NaN, and NaN sorts ABOVE every real value under
   ``desc()`` — without the filter one degenerate vector displaces a real
   neighbor from every top-k list it collides with.
 - ``explode_tokens`` vectorization (#1): bit-identical output to the
@@ -14,7 +14,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lookup_transform_spark.operators.similarity import (
@@ -240,58 +239,6 @@ def test_ann_recall_floors(spark):
     assert ivf_recall >= 0.8, f"IVF recall@10 regressed: {ivf_recall:.3f}"
 
 
-def test_cosine_pairs_null_path_propagates_null_numeric_dtype(spark):
-    """ADVICE r6: the null-propagating path of cosine_pairs must return
-    numeric (float64 + NaN sentinel), not an object-dtype Series that
-    leans on Arrow coercion — and NULL inputs must come back as SQL
-    NULL, valid pairs as finite floats, zero-norm pairs as NULL (the
-    fast path's 0/0 behavior)."""
-    from lookup_transform_spark.functions.udfs import cosine_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0], [1.0, 0.0]),   # valid: sim 1.0
-            (2, None, [1.0, 0.0]),          # NULL left
-            (3, [0.0, 1.0], None),          # NULL right
-            (4, [0.0, 0.0], [1.0, 0.0]),    # zero norm: 0/0 -> NULL
-            (5, [1.0, 0.0], [0.0, 1.0]),    # valid: sim 0.0
-        ],
-        "id long, a array<double>, b array<double>",
-    )
-    got = {
-        r["id"]: r["sim"]
-        for r in df.select("id", cosine_pairs("a", "b").alias("sim")).collect()
-    }
-    assert got[1] == pytest.approx(1.0)
-    assert got[5] == pytest.approx(0.0)
-    assert got[2] is None and got[3] is None
-    assert got[4] is None  # NaN -> SQL NULL via Arrow, same as fast path
-
-
-def test_cosine_pairs_underflow_inf_folds_to_null(spark):
-    """r8 review: when the norm PRODUCT underflows to 0 while the dot
-    product stays finite nonzero, num/den is +Inf — Arrow ships Inf as
-    a real double (unlike NaN→NULL), and Inf outranks every genuine
-    similarity in any top-k re-scoring. Must fold to NULL like the JVM
-    try_divide twin."""
-    from lookup_transform_spark.functions.udfs import cosine_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, [1e-200], [1e150]),     # den underflows to 0, num=1e-50
-            (2, [-1e-200], [1e150]),    # same, negative: -Inf
-            (3, [1.0, 0.0], [1.0, 0.0]),
-        ],
-        "id long, a array<double>, b array<double>",
-    )
-    got = {
-        r["id"]: r["sim"]
-        for r in df.select("id", cosine_pairs("a", "b").alias("sim")).collect()
-    }
-    assert got[1] is None and got[2] is None
-    assert got[3] == pytest.approx(1.0)
-
-
 def test_embedding_near_dup_guards_quadratic_corpus(spark):
     # r8 VERDICT #4: the exact all-pairs tier is O(n²) BY DESIGN; above
     # max_rows it must refuse with a pointer to the sub-quadratic
@@ -425,35 +372,6 @@ def test_approx_topk_exclude_self_escape_hatch(spark):
         }
         assert 7 in with_self
         assert 7 not in without
-
-
-def test_cosine_pairs_ragged_and_empty_batches(spark):
-    """r8 review: a batch mixing vector dimensionalities (or one ragged
-    row) crashed np.array with 'inhomogeneous shape'; now every
-    length-consistent row computes and mismatched/zero-length rows are
-    NULL. (Empty Arrow batches — einsum on a 1-D empty — are guarded in
-    the UDF body directly.)"""
-    from lookup_transform_spark.functions.udfs import cosine_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0], [1.0, 0.0]),          # same 2-dim: 1.0
-            (2, [1.0, 0.0, 0.0], [0.0, 1.0, 0.0]),  # same 3-dim: 0.0
-            (3, [1.0, 0.0], [1.0, 0.0, 0.0]),     # length mismatch: NULL
-            (4, [], []),                           # zero-length: NULL
-            (5, None, [1.0]),                      # NULL side: NULL
-        ],
-        "id long, a array<double>, b array<double>",
-    )
-    got = {
-        r["id"]: r["sim"]
-        for r in df.select(
-            "id", cosine_pairs("a", "b").alias("sim")
-        ).collect()
-    }
-    assert got[1] == pytest.approx(1.0)
-    assert got[2] == pytest.approx(0.0)
-    assert got[3] is None and got[4] is None and got[5] is None
 
 
 def test_cosine_similarity_zero_vector_is_null_not_error(spark):

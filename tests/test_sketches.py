@@ -8,6 +8,10 @@
 3. Bucket order == value order (negatives mirrored), so cumulative
    reads are correct across sign changes.
 4. The registered rollup runs and emits one row per event_type.
+
+The layered portable-HLL builders below (leaf sketch, per-bucket MAX
+merge, estimate) are test references: the library's fused leaf build,
+leaf estimate and single-query distinct count are pinned against them.
 """
 
 from __future__ import annotations
@@ -15,15 +19,18 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lookup_transform_spark.operators.sketches import (
+    _hll_bucket_rank,
     bucket_value,
     log_bucket,
     qsketch,
     qsketch_merge,
     qsketch_quantiles,
 )
+from lookup_transform_spark.operators.sketches_oracle import HLL_ALPHA, HLL_M
 
 BASE, LO = 1.04, 0.01
 
@@ -34,6 +41,110 @@ def ev(spark, sf_dir):
 
     return registry._events(spark, sf_dir).select(
         "event_type", (F.col("user_id") % 4).alias("shard"), "value"
+    )
+
+
+def hll_portable_sketch(
+    df: DataFrame, group_cols: list[str], key_col: str
+) -> DataFrame:
+    """One sketch row per group: ``sketch map<int,int>`` (bucket → max
+    rank over the group's keys) + ``n_rows``. NULL keys reach no
+    register and don't count, but the group survives (the family's
+    shared null contract)."""
+    bucket, rank = _hll_bucket_rank(F.col(key_col))
+    per_bucket = (
+        df.select(
+            *group_cols,
+            F.when(F.col(key_col).isNotNull(), bucket).alias("__b__"),
+            F.when(F.col(key_col).isNotNull(), rank).alias("__r__"),
+            F.col(key_col).isNotNull().alias("__k__"),
+        )
+        .groupBy(*group_cols, "__b__")
+        .agg(
+            F.max("__r__").alias("__r__"),
+            F.sum(F.col("__k__").cast("long")).alias("__n__"),
+        )
+    )
+    return per_bucket.groupBy(*group_cols).agg(
+        F.map_from_entries(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("__b__").isNotNull(),
+                        F.struct("__b__", "__r__"),
+                    )
+                )
+            )
+        ).alias("sketch"),
+        F.sum("__n__").alias("n_rows"),
+    )
+
+
+def hll_portable_merge(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Roll leaf sketches up by per-bucket MAX — sketch rows only, and
+    exactly what ``hll_portable_sketch`` would emit on the raw union
+    (max is associative; pinned in tests).
+
+    Leaves are ``localCheckpoint``-ed first — the same two-consumer
+    shape as ``topk_merge`` (register rollup + n_rows totals), which
+    would otherwise re-evaluate the whole leaf lineage twice; summary
+    rows are O(groups·m) bounded at any input scale."""
+    df = df.localCheckpoint()
+    exploded = df.select(
+        *group_cols, "n_rows",
+        F.explode_outer("sketch").alias("__b__", "__r__"),
+    )
+    # n_rows repeats once per exploded entry of its leaf row — divide
+    # back out by each leaf's entry count? No: aggregate n_rows from
+    # the LEAF rows (one per leaf) separately to stay exact.
+    totals = df.groupBy(*group_cols).agg(F.sum("n_rows").alias("n_rows"))
+    per_bucket = (
+        exploded.filter(F.col("__b__").isNotNull())
+        .groupBy(*group_cols, "__b__")
+        .agg(F.max("__r__").alias("__r__"))
+    )
+    rebuilt = per_bucket.groupBy(*group_cols).agg(
+        F.map_from_entries(
+            F.array_sort(F.collect_list(F.struct("__b__", "__r__")))
+        ).alias("sketch")
+    )
+    # left join FROM totals (which holds every group) keeps
+    # all-empty-sketch groups alive with an empty map
+    return totals.join(rebuilt, group_cols, "left").select(
+        *group_cols,
+        F.coalesce(
+            "sketch", F.map_from_entries(F.array().cast("array<struct<__b__:int,__r__:int>>"))
+        ).alias("sketch"),
+        "n_rows",
+    )
+
+
+def hll_portable_estimate(
+    df: DataFrame, group_cols: list[str]
+) -> DataFrame:
+    """Distinct-count estimate per sketch row: classic HLL harmonic
+    mean with the linear-counting small-range correction, 3-dp rounded
+    (the cross-engine comparability trick — see module section
+    comment). An EMPTY sketch estimates 0.0 via linear counting
+    (V0 = m → m·ln(1) = 0)."""
+    m = float(HLL_M)
+    s_present = F.aggregate(
+        F.map_values("sketch"),
+        F.lit(0.0),
+        lambda acc, r: acc + F.pow(F.lit(0.5), r.cast("double")),
+    )
+    present = F.size("sketch")
+    s = s_present + (F.lit(m) - present.cast("double"))
+    e_raw = F.lit(HLL_ALPHA * m * m) / s
+    v0 = (F.lit(HLL_M) - present).cast("double")
+    est = F.when(
+        (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
+        F.lit(m) * F.log(F.lit(m) / v0),
+    ).otherwise(e_raw)
+    return df.select(
+        *group_cols,
+        F.round(est, 3).alias("approx_distinct"),
+        "n_rows",
     )
 
 
@@ -185,15 +296,12 @@ def test_at_rest_rollup_equals_direct(spark, ev, tmp_path):
     import io
     from contextlib import redirect_stdout
 
-    from lookup_transform_spark.operators.sketches import (
-        qsketch_quantiles_at_rest,
-        write_qsketch_leaves,
-    )
-
     path = str(tmp_path / "qsketch_leaves")
-    write_qsketch_leaves(ev, ["event_type", "shard"], "value", path)
-    at_rest = qsketch_quantiles_at_rest(
-        spark, path, ["event_type"], [0.5, 0.95]
+    qsketch(ev, ["event_type", "shard"], "value").write.parquet(path)
+    at_rest = qsketch_quantiles(
+        qsketch_merge(spark.read.parquet(path), ["event_type"]),
+        ["event_type"],
+        [0.5, 0.95],
     )
     direct = qsketch_quantiles(
         qsketch(ev, ["event_type"], "value"), ["event_type"], [0.5, 0.95]
@@ -304,10 +412,8 @@ def test_topk_at_rest_equals_direct(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from lookup_transform_spark.operators.sketches import (
-        topk_at_rest,
         topk_merge,
         topk_sketch,
-        write_topk_leaves,
     )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -318,12 +424,14 @@ def test_topk_at_rest_equals_direct(spark, sf_dir, tmp_path):
         ).alias("tok"),
     )
     path = str(tmp_path / "topk_leaves")
-    write_topk_leaves(toks, ["lang"], "tok", F.col("doc_id") % 16, path, m=200)
+    topk_sketch(toks, ["lang"], "tok", F.col("doc_id") % 16, m=200).write.parquet(
+        path
+    )
     direct = topk_merge(
         topk_sketch(toks, ["lang"], "tok", F.col("doc_id") % 16, m=200),
         ["lang"], k=10,
     )
-    at_rest = topk_at_rest(spark, path, ["lang"], k=10)
+    at_rest = topk_merge(spark.read.parquet(path), ["lang"], k=10)
     assert sorted(map(tuple, direct.collect())) == sorted(
         map(tuple, at_rest.collect())
     )
@@ -382,11 +490,6 @@ def test_hll_portable_merge_equals_rebuild(spark, sf_dir):
     """r9 portable HLL: merging per-(source, lang) leaves by per-bucket
     MAX must equal sketching the raw union directly — the mergeability
     contract that makes the at-rest leaf table usable."""
-    from lookup_transform_spark.operators.sketches import (
-        hll_portable_merge,
-        hll_portable_sketch,
-    )
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     leaves = hll_portable_sketch(d, ["source", "lang"], "doc_id")
     merged = hll_portable_merge(leaves, ["source"])
@@ -401,11 +504,6 @@ def test_hll_portable_accuracy_and_nulls(spark, sf_dir):
     linear-counting regime), and the family's null contract: NULL keys
     reach no register / don't count, but the group survives."""
     from pyspark.sql import functions as F
-
-    from lookup_transform_spark.operators.sketches import (
-        hll_portable_estimate,
-        hll_portable_sketch,
-    )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     est = {
@@ -440,10 +538,7 @@ def test_hll_portable_layered_equals_direct(spark, sf_dir):
     per-bucket MAX collapses across grains."""
     from lookup_transform_spark.operators.sketches import (
         hll_portable_distinct,
-        hll_portable_estimate,
         hll_portable_estimate_from_leaves,
-        hll_portable_merge,
-        hll_portable_sketch,
     )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -478,8 +573,6 @@ def test_fused_hll_qsketch_leaves_equal_separate_builders(spark):
 
     from lookup_transform_spark.operators.sketches import (
         fused_hll_qsketch_leaves,
-        hll_portable_sketch,
-        qsketch,
     )
 
     df = spark.createDataFrame(

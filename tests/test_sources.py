@@ -1,10 +1,35 @@
-"""Source robustness (B2): malformed-record handling modes."""
+"""Source robustness (B2): malformed-record handling modes, the
+synthetic generator source against its scalar spec, the manifest sink,
+binary-file ingest and parquet compaction."""
 
 from __future__ import annotations
 
 import pytest
 
 from lookup_transform_spark.sources import read_csv, read_json
+from lookup_transform_spark.sources.synthetic_oracle import LANGS, WORDS
+
+
+def _mix(x: int) -> int:
+    """splitmix64 finalizer — a deterministic, well-distributed int hash."""
+    x = (x + 0x9E3779B97F4A7C15) & (1 << 64) - 1
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & (1 << 64) - 1
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & (1 << 64) - 1
+    return x ^ (x >> 31)
+
+
+def make_doc(seed: int, doc_id: int) -> tuple[int, str, str, str, int]:
+    """Scalar row function — the SPEC the synthdocs source's vectorized
+    batch path and its DuckDB oracle must reproduce bit-for-bit."""
+    h = _mix(seed * 1_000_003 + doc_id)
+    lang = LANGS[h % len(LANGS)]
+    source = f"src{(h >> 8) % 20}"
+    n_words = 5 + (h >> 16) % 40
+    words = [
+        WORDS[_mix(h + i) % len(WORDS)] for i in range(n_words)
+    ]
+    text = " ".join(words)
+    return doc_id, lang, source, text, len(text)
 
 
 @pytest.fixture()
@@ -54,45 +79,8 @@ def test_json_corrupt_record_column(spark, tmp_path):
     assert len(bad) == 1 and "not json" in bad[0]._corrupt_record
 
 
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    from lookup_transform_spark.sources.readers import read_parquet_evolving
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.mode(
-        "append"
-    ).parquet(path)
-    # a later ingest batch added a column
-    spark.createDataFrame(
-        [(2, "b", 0.5)], "id long, name string, score double"
-    ).write.mode("append").parquet(path)
-
-    df = read_parquet_evolving(spark, path)
-    assert set(df.columns) == {"id", "name", "score"}
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].score is None  # pre-evolution file yields null
-    assert rows[2].score == 0.5
-
-
-def test_compact_to_target_size(spark, tmp_path):
-    import glob
-
-    from lookup_transform_spark.operators.compaction import compact_parquet_to_size
-
-    src = str(tmp_path / "frag")
-    orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
-    orders.repartition(40).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 40
-
-    dst = str(tmp_path / "sized")
-    # ~1.5 MB of data at a 1 MB target → a couple of files, not 40
-    back = compact_parquet_to_size(spark, src, dst, target_mb=1)
-    n = len(glob.glob(f"{dst}/part-*.parquet"))
-    assert 1 <= n <= 4
-    assert back.count() == orders.count()
-
-
 def test_synthetic_datasource_deterministic_and_parallel(spark):
-    from lookup_transform_spark.sources.synthetic import make_doc, register
+    from lookup_transform_spark.sources.synthetic import register
 
     register(spark)
     df = (
@@ -119,7 +107,6 @@ def test_generator_oracle_sql_matches_scalar_spec():
     value-exact oracle for a zero-I/O source."""
     import duckdb
 
-    from lookup_transform_spark.sources.synthetic import _mix, make_doc
     from lookup_transform_spark.sources.synthetic_oracle import (
         _sql_mix,
         generator_oracle_sql,
@@ -355,19 +342,6 @@ def test_manifest_sink_zero_task_job_publishes_empty_manifest(spark, tmp_path):
     assert on_disk == {s["shard"] for s in man["shards"]}
 
 
-def test_compact_to_size_refuses_empty_probe(spark, tmp_path):
-    import pytest as _pytest
-
-    from lookup_transform_spark.operators.compaction import (
-        compact_parquet_to_size,
-    )
-
-    with _pytest.raises(ValueError, match="glob"):
-        compact_parquet_to_size(
-            spark, str(tmp_path / "nonexistent"), str(tmp_path / "out")
-        )
-
-
 def test_compact_partitioned_bounds_files_per_directory(spark, tmp_path):
     """r8 review: coalesce(N) with partition_by multiplies files (every
     task writes into every directory it holds rows for, N x |values|);
@@ -410,46 +384,3 @@ def test_compact_partitioned_no_target_clusters_by_partition(spark, tmp_path):
         assert len(_glob.glob(f"{d}/part-*.parquet")) == 1, d
 
 
-def test_compact_to_size_partitioned_resplits_oversized_values(spark, tmp_path):
-    """r8 review: the size-targeted wrapper never passed
-    max_records_per_file for partitioned rewrites, so one huge partition
-    value came out as one huge file regardless of target_mb; the
-    bytes/row-derived records cap must re-split it."""
-    import glob as _glob
-
-    from lookup_transform_spark.operators.compaction import (
-        compact_parquet_to_size,
-    )
-
-    src = str(tmp_path / "src_big")
-    # one dominant partition value, ~2MB of INCOMPRESSIBLE data (md5
-    # hex defeats dictionary/RLE; a constant pad compresses to nothing
-    # and the bytes/row-derived cap would rightly not split it)
-    spark.range(60_000).selectExpr(
-        "id", "0 AS dt", "md5(cast(id AS string)) AS pad"
-    ).repartition(4).write.parquet(src)
-    dst = str(tmp_path / "dst_big")
-    out = compact_parquet_to_size(
-        spark, src, dst, target_mb=1, partition_by=["dt"]
-    )
-    assert out.count() == 60_000
-    files = _glob.glob(f"{dst}/dt=0/part-*.parquet")
-    assert len(files) > 1, "oversized partition value must be re-split"
-
-
-def test_zorder_write_preserves_user_z_column(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.operators.layout import zorder_write
-
-    df = spark.range(100).select(
-        "id",
-        (F.col("id") % 7).alias("a"),
-        (F.col("id") % 5).alias("b"),
-        F.lit("keep-me").alias("__z__"),
-    )
-    path = str(tmp_path / "zout")
-    zorder_write(df, path, F.col("a"), F.col("b"), num_files=2, bits=4)
-    back = spark.read.parquet(path)
-    assert "__z__" in back.columns
-    assert back.filter(F.col("__z__") == "keep-me").count() == 100

@@ -311,33 +311,6 @@ def test_stream_stream_interval_join_equals_batch(spark):
     assert got.count() > 0
 
 
-def test_foreach_batch_gold_table(spark, tmp_path):
-    """foreachBatch gold-table upsert: after an availableNow drain the
-    parquet gold table holds the same per-type totals as a batch
-    aggregation, and only key= partitions exist (dynamic overwrite)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.streaming import read_events_stream
-    from lookup_transform_spark.streaming.gold import maintain_gold_counts
-
-    gold = str(tmp_path / "gold")
-    ckpt = str(tmp_path / "ckpt")
-    ev = read_events_stream(spark, SF)
-    q = maintain_gold_counts(ev, gold, ckpt)
-    q.awaitTermination()
-
-    got = spark.read.parquet(gold).select("event_type", "n_events", "sum_value")
-    want = registry._events(spark, SF).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    parts = [d for d in os.listdir(gold) if d.startswith("event_type=")]
-    assert len(parts) == want.count()
-
-
 def test_lifetime_stats_equals_batch(spark):
     """The applyInPandasWithState running totals equal a batch
     aggregate over the same events."""
