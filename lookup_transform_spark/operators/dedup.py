@@ -30,6 +30,7 @@ from pyspark.sql.functions import pandas_udf
 # review). text.py imports dedup only inside functions, so this
 # module-level import creates no cycle.
 from lookup_transform_spark.operators.text import tokens as _tokens
+from lookup_transform_spark.sqltext import sql_string
 
 # Mersenne prime for universal-hash permutations h_i(x) = (a_i*x + b_i) mod p.
 # 31-bit so that a*h + b stays < 2^63 (Spark 4 runs ANSI mode: long overflow
@@ -1522,7 +1523,7 @@ def compact_lsh_index(spark, table_prefix: str) -> None:
                        path=next_loc)
         # single metadata op: the swap. Readers never see a partial
         # table — old location until here, new complete one after.
-        spark.sql(f"ALTER TABLE {table} SET LOCATION '{next_loc}'")
+        spark.sql(f"ALTER TABLE {table} SET LOCATION {sql_string(next_loc)}")
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")  # entry only: external
         # sweep the previous generation's data files (best-effort: an
         # orphan dir from a crash here is storage, not correctness —

@@ -5,10 +5,13 @@ citations into /root/reference):
 
 - left-outer: lookup stage not required (Lookup.java:207); misses keep
   the input row with a null output column (LookupTest.java:171-172).
-- broadcast of the lookup side (Lookup.java:208) — here size-gated:
-  unconditional broadcast is wrong at 100 TB, so ``broadcast=False``
-  (or a lookup side above ``broadcast_threshold_rows``) falls back to
-  a plain join and lets AQE pick shuffled-hash / sort-merge.
+- broadcast of the lookup side (Lookup.java:208) — here a three-state
+  policy, because unconditional broadcast is wrong at 100 TB:
+  ``broadcast=False`` binds (a ``merge`` hint: sort-merge join at any
+  ``autoBroadcastJoinThreshold``, which spills where a hashed side
+  cannot); a lookup side the size gate puts above
+  ``broadcast_threshold_rows`` gets no hint, so Spark and AQE pick the
+  strategy from the sizes; otherwise the side broadcasts.
 - null-unsafe key equality (setNullSafe(false), Lookup.java:224): SQL
   ``=``, null keys never match.
 - duplicate lookup keys multiply rows (it is a true join, nothing in
@@ -295,7 +298,7 @@ class LookupSpec:
     default_value: Any = None          # B12: widget's unshipped defaultValue
     how: str = "left"                  # B16: "inner" = required-lookup
     null_safe: bool = False            # B17: <=> instead of =
-    broadcast: bool = True             # B18: False → shuffle join fallback
+    broadcast: bool = True             # B18: False → sort-merge join, always
     # B18 size gate, ON BY DEFAULT since r10: the reference broadcasts
     # unconditionally (Lookup.java:208) — wrong at 100 TB, where a
     # quietly-grown dimension OOMs every executor. 4M rows ≈ low
@@ -737,7 +740,19 @@ class LookupSpec:
                 # before the executors OOM, while stats-carrying parquet
                 # (the 100 TB case) never warns.
                 _warn_unsizable_broadcast_once(self.lookup_dataset)
-        right = F.broadcast(pruned) if use_broadcast else pruned
+        if use_broadcast:
+            right = F.broadcast(pruned)
+        elif not self.broadcast:
+            # the author's opt-out binds: without a hint Spark's own
+            # size rule (autoBroadcastJoinThreshold, 32MB under
+            # stats.enable_cbo) broadcasted fact-sized sides anyway.
+            # Sort-merge, not shuffle_hash: a hinted shuffled hash join
+            # builds one in-memory table per partition and cannot spill.
+            right = pruned.hint("merge")
+        else:
+            # the size gate only advises: no hint, AQE may still
+            # promote the side to a broadcast at runtime
+            right = pruned
 
         eq = (
             (lambda a, b: a.eqNullSafe(b))

@@ -83,8 +83,9 @@ FROM lineitem a LEFT JOIN lineitem b
 ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber""",
 )
 def q_lookup_multi_key(spark, sf):
-    """B13: composite join key (fact-fact, so no broadcast — the B18
-    policy in the same plan)."""
+    """B13: composite join key (fact-fact, so ``broadcast=False`` — the
+    B18 policy in the same plan: a sort-merge join even where Spark's
+    own size rule would broadcast the side)."""
     li = _t(spark, sf, "lineitem")
     spec = LookupSpec(
         "lineitem_lkp",
@@ -177,8 +178,9 @@ def q_lookup_null_safe(spark, sf):
 FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey""",
 )
 def q_lookup_big(spark, sf):
-    """B18: lookup side too big to broadcast → plain join, AQE decides
-    (the 100 TB correction of the reference's unconditional broadcast,
+    """B18: lookup side too big to broadcast → ``broadcast=False``, a
+    sort-merge join whatever the session's broadcast threshold (the
+    100 TB correction of the reference's unconditional broadcast,
     Lookup.java:208)."""
     spec = LookupSpec(
         "lineitem", "o_orderkey", "l_orderkey",

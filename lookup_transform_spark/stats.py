@@ -26,14 +26,15 @@ has no case for ``TimestampNTZType`` and throws ``scala.MatchError``
 when estimating a filter over an NTZ column that HAS column stats
 (hit via tpch_q8's o_orderdate predicate). Two layers of defense:
 
-- the catalog tables are CREATED with NTZ inference off
-  (``spark.sql.parquet.inferTimestampNTZ.enabled=false``), so µs
-  timestamp-without-timezone parquet columns are declared
-  ``TimestampType`` in the catalog — value-identical under the pinned
-  UTC session timezone, but fully ANALYZE-able and fully supported by
-  FilterEstimation. This is what lets a date-window predicate
-  (``o_orderdate`` quarter filters across the TPC-H tier) reduce the
-  estimated row count: measured in round 8, without it the quarter
+- the catalog tables are CREATED with an explicit column list that
+  declares µs timestamp-without-timezone parquet columns as
+  ``TimestampType`` (inference would not: the fixtures' footers embed
+  a Spark schema, which wins over
+  ``spark.sql.parquet.inferTimestampNTZ.enabled``) — value-identical
+  under the pinned UTC session timezone, but fully ANALYZE-able and
+  fully supported by FilterEstimation. This is what lets a date-window
+  predicate (``o_orderdate`` quarter filters across the TPC-H tier)
+  reduce the estimated row count: measured in round 8, without it the quarter
   filter kept orders at its full 4.8M-row estimate and every
   fact-side join in the q3/q4/q5/q8/q10/q12 family planned as a
   both-sides-shuffled SortMergeJoin where a broadcast was free.
@@ -47,11 +48,14 @@ from __future__ import annotations
 
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from lookup_transform_spark.session import set_confs
+from lookup_transform_spark.sqltext import ddl, quote_ident, sql_string
 
 # tables worth cataloguing: the relational tier the CBO acts on, plus
 # documents/embeddings at TABLE level only (rowCount + sizeInBytes, no
@@ -113,54 +117,69 @@ def register_stats_tables(
     database and compute table + column statistics (NTZ-safe). Returns
     the database name; idempotent per session. Cost: one column-pruned
     scan per table — the ingest-time cost a warehouse pays once, NOT
-    part of any query's time."""
+    part of any query's time. The tables are registered concurrently,
+    at most ``defaultParallelism`` at a time: each ``ANALYZE`` is a
+    small job that leaves most cores idle. The database is recorded
+    only once every table has succeeded; a failure re-raises."""
     sf_dir = os.path.abspath(sf_dir)
     reg = _registry(spark)
     if sf_dir in reg:
         return reg[sf_dir]
     db = _db_name(sf_dir)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if not os.path.exists(path):
-            continue
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-        # Declare µs timestamp-without-timezone columns as TimestampType
-        # in the CATALOG schema (module doc: NTZ is estimation-dead AND
-        # its stats crash FilterEstimation; under the pinned UTC session
-        # tz the two types are value-identical — verified bit-exact on
-        # the fixtures). The explicit column list is required: the
-        # fixtures embed a Spark schema in the parquet footer, which
-        # inference prefers over ``inferTimestampNTZ`` — a bare CREATE
-        # would come back NTZ regardless of that conf. Plain parquet
-        # reads (the correctness path) keep Spark's default inference.
-        inferred = spark.read.parquet(path).schema
-        ddl = ", ".join(
-            f"`{f.name}` "
-            + (
-                "TIMESTAMP"
-                if isinstance(f.dataType, T.TimestampNTZType)
-                else f.dataType.simpleString()
-            )
-            for f in inferred.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {db}.{t} ({ddl}) USING parquet LOCATION '{path}'"
-        )
-        cols = [
-            f.name for f in spark.table(f"{db}.{t}").schema.fields
-            if isinstance(f.dataType, _STATS_TYPES)
-            and not isinstance(f.dataType, T.TimestampNTZType)
-        ] if t not in _TABLE_LEVEL_ONLY else []
-        if cols:
-            spark.sql(
-                f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR COLUMNS "
-                + ", ".join(cols)
-            )
-        else:
-            spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(db)}")
+    todo = [
+        t for t in tables
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
+    ]
+    if todo:
+        workers = min(len(todo), spark.sparkContext.defaultParallelism)
+        register = inheritable_thread_target(spark)(_register_table)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            list(pool.map(lambda t: register(spark, sf_dir, db, t), todo))
     reg[sf_dir] = db
     return db
+
+
+def _register_table(spark: SparkSession, sf_dir: str, db: str, t: str) -> None:
+    """(Re)create ``db.t`` over ``sf_dir/t.parquet`` and ANALYZE it."""
+    path = os.path.join(sf_dir, f"{t}.parquet")
+    name = f"{quote_ident(db)}.{quote_ident(t)}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    # Declare µs timestamp-without-timezone columns as TimestampType
+    # in the CATALOG schema (module doc: NTZ is estimation-dead AND
+    # its stats crash FilterEstimation; under the pinned UTC session
+    # tz the two types are value-identical — verified bit-exact on
+    # the fixtures). The explicit column list is required: the
+    # fixtures embed a Spark schema in the parquet footer, which
+    # inference prefers over ``inferTimestampNTZ`` — a bare CREATE
+    # would come back NTZ regardless of that conf. Plain parquet
+    # reads (the correctness path) keep Spark's default inference.
+    inferred = spark.read.parquet(path).schema
+    cols_ddl = ", ".join(
+        f"{quote_ident(f.name)} "
+        + (
+            "TIMESTAMP"
+            if isinstance(f.dataType, T.TimestampNTZType)
+            else ddl(f.dataType)
+        )
+        for f in inferred.fields
+    )
+    spark.sql(
+        f"CREATE TABLE {name} ({cols_ddl}) USING parquet "
+        f"LOCATION {sql_string(path)}"
+    )
+    cols = [
+        quote_ident(f.name) for f in spark.table(name).schema.fields
+        if isinstance(f.dataType, _STATS_TYPES)
+        and not isinstance(f.dataType, T.TimestampNTZType)
+    ] if t not in _TABLE_LEVEL_ONLY else []
+    if cols:
+        spark.sql(
+            f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS "
+            + ", ".join(cols)
+        )
+    else:
+        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
 
 
 def stats_db_for(spark: SparkSession, sf_dir: str) -> str | None:

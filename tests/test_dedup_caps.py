@@ -648,6 +648,35 @@ def test_lsh_compaction_generation_swap_and_catalog_recovery(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_lsh_compaction_quotes_location_path(spark, tmp_path):
+    """An index under a path carrying a quote must reach the swap's
+    ``SET LOCATION`` as an escaped string literal: unquoted, the ALTER
+    failed to parse after the ``__g1`` copy was already written."""
+    from pyspark.sql import functions as F
+
+    from lookup_transform_spark.operators.dedup import (
+        append_to_lsh_index,
+        compact_lsh_index,
+        write_lsh_index,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    standing = docs.filter(F.pmod("doc_id", F.lit(10)) < 8).limit(100)
+    prefix = "lshquote_test"
+    path = str(tmp_path / "it's_lsh")
+    for t in (f"{prefix}_bands", f"{prefix}_docs"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        write_lsh_index(spark, standing, prefix, path)
+        clean = spark.table(f"{prefix}_docs").count()
+        append_to_lsh_index(spark, standing.limit(20), prefix)
+        compact_lsh_index(spark, prefix)
+        assert spark.table(f"{prefix}_docs").count() == clean
+    finally:
+        for t in (f"{prefix}_bands", f"{prefix}_docs"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_dedup_exact_deterministic_on_tiebreak_ties(spark):
     """r8 review: rows TIED on the tiebreak resolved to whichever row a
     task scanned first (min_by keeps an arbitrary tied row) — the

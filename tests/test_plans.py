@@ -65,13 +65,20 @@ def test_q1_partial_aggregation(spark):
     assert "Exchange" in plan
 
 
-def test_lookup_big_has_no_broadcast_hint(spark):
-    # B18: no user hint — AQE may still convert at runtime when the
-    # pruned side happens to be small (correct: the decision is
-    # size-based, not hardcoded like the reference's Lookup.java:208)
-    df = registry.QUERIES["lookup_big"](spark, SF)
-    logical = df._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in logical and "UnresolvedHint" not in logical
+def test_broadcast_false_lookups_run_sort_merge(spark):
+    """B18: ``broadcast=False`` binds. Without a hint Spark's own size
+    rule broadcast these fact-sized sides anyway (10MB default, 32MB
+    under ``enable_cbo``); the executed plan must be a sort-merge join,
+    while a default spec still broadcasts."""
+    for name, want, banned in (
+        ("lookup_big", "SortMergeJoin", "BroadcastHashJoin"),
+        ("lookup_multi_key", "SortMergeJoin", "BroadcastHashJoin"),
+        ("lookup", "BroadcastHashJoin", "SortMergeJoin"),
+    ):
+        df = registry.QUERIES[name](spark, SF)
+        df.collect()  # explain then shows the executed (final) plan
+        plan = explain_str(df)
+        assert want in plan and banned not in plan, (name, plan)
 
 
 def test_lookup_has_broadcast_hint(spark):
