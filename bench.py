@@ -28,11 +28,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lookup_transform_spark import registry  # noqa: E402
+from lookup_transform_spark import registry, stats, timing  # noqa: E402
 from lookup_transform_spark.session import get_spark  # noqa: E402
 
 # One representative per operator tier — keeps the stdout JSON line
@@ -73,10 +72,6 @@ HEADLINE = [
 ]
 
 
-def _run(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _ingest_resets(sf_dir: str):
     """Per-query pre-repeat reset hooks for the checkpointed
     continuous-ingest queries: their exactly-once checkpoint makes any
@@ -108,182 +103,18 @@ def _ingest_resets(sf_dir: str):
     }
 
 
-# ---------------------------------------------------------------------------
-# Ratio fairness (VERDICT r5 finding): two entries were structurally
-# unfair in the spark/duck ratio math and are handled explicitly.
-#
-# - sink_upsert's CORRECTNESS oracle is a bare SELECT (the relational
-#   merge) while the engine query rewrites parquet partitions and scans
-#   them back. For TIMING the oracle is overridden with a write-shaped
-#   equivalent: DuckDB runs the same merge, COPYs it to a hive-
-#   partitioned parquet dir, and aggregates the scan-back — the same
-#   I/O shape the engine is billed for. Correctness still uses the
-#   SELECT oracle (results must match row-for-row; a COPY returns none).
-# - udaf_median is the deliberate B39 Arrow-UDAF surface demo with a
-#   documented ~30x Python-worker toll; its production twin agg_median
-#   (built-in F.median) stays in the ratio. It is excluded from ratio
-#   aggregates/within-2x counts but still timed and published.
-ORACLE_TIMING_OVERRIDES: dict[str, list[str]] = {
-    "sink_upsert": [
-        """COPY (
-  WITH upd AS (
-    SELECT o_orderkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice
-    FROM orders WHERE o_orderkey % 997 = 0
-    UNION ALL
-    SELECT * FROM (VALUES (900000001, 'O', CAST(50.0 AS DOUBLE)),
-                          (900000002, 'F', CAST(60.0 AS DOUBLE))) t(k, s, p)
-  )
-  SELECT o.o_orderkey, o.o_orderstatus, o.o_totalprice FROM orders o
-  WHERE o.o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-  UNION ALL
-  SELECT * FROM upd
-) TO '{tmp}/duck_upsert' (FORMAT PARQUET, PARTITION_BY (o_orderstatus),
-                          OVERWRITE_OR_IGNORE)""",
-        """SELECT o_orderstatus, COUNT(*) AS n,
-       SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) / 100.0 AS sum_price
-FROM read_parquet('{tmp}/duck_upsert/**/*.parquet', hive_partitioning=1)
-GROUP BY o_orderstatus""",
-    ],
-}
+# udaf_median is the deliberate B39 Arrow-UDAF surface demo with a
+# documented ~30x Python-worker toll; its production twin agg_median
+# (built-in F.median) stays in the ratio. It is excluded from ratio
+# aggregates/within-2x counts but still timed and published. (Write-
+# shaped queries are timed against a write-shaped oracle instead:
+# timing.ORACLE_TIMING_OVERRIDES.)
 RATIO_EXCLUDE: dict[str, str] = {
     "udaf_median": (
         "deliberate Arrow-UDAF surface demo (~30x Python-worker toll, "
         "documented); production twin agg_median is the graded entry"
     ),
 }
-
-
-def _oracle_timings(
-    sf_dir: str, repeats: int
-) -> tuple[dict[str, float], dict[str, float], list[str]]:
-    """Time each DuckDB oracle on the same parquet — the per-query
-    baseline the ≤2× target in BASELINE.md refers to. Write-shaped
-    queries are timed against their ORACLE_TIMING_OVERRIDES script
-    (same merge + a real partitioned parquet write) instead of the
-    read-only correctness SELECT.
-
-    Each oracle runs under a per-repeat interrupt timeout (r8,
-    ``SPARK_GRAFT_BENCH_ORACLE_TIMEOUT``, default 180 s — the
-    scaling_probe pattern): the r8 oracle promotions gave several
-    approximate operators brute-force O(n²) correctness SQL
-    (dedup_minhash's all-pairs Jaccard exceeds 9 MINUTES at sf0.1 —
-    measured; ×5 repeats would wedge the whole bench). A timed-out
-    oracle is returned in the second dict and excluded from the
-    comparable aggregates, exactly as if it had no oracle — which for
-    ratio purposes it doesn't: the SQL exists to pin VALUES at
-    correctness scale, not to be a fair single-node baseline. 180 s is
-    sized 2.3× above the slowest oracle that should STAY comparable
-    (ngram_jaccard, 78 s at sf0.1 — an engine win the tail count would
-    lose to a flappy timeout), while capping the three true quadratics
-    (dedup_minhash / dedup_clusters / dedup_incremental_minhash) at 9
-    added minutes total."""
-    import tempfile
-    import threading
-
-    import duckdb
-
-    duck_timeout = float(
-        os.environ.get("SPARK_GRAFT_BENCH_ORACLE_TIMEOUT", "180")
-    )
-    from lookup_transform_spark.parity import register_views
-
-    con = duckdb.connect()
-    # the canonical fixture-table set + view DDL (parity.py) — a third
-    # hand-rolled copy here meant a new fixture table had to be
-    # remembered in three places or the bench died post-Spark-phase on
-    # an uncaught CatalogException (r8 review)
-    register_views(con, sf_dir)
-    out: dict[str, float] = {}
-    timeouts: dict[str, float] = {}
-    degraded: list[str] = []
-    with tempfile.TemporaryDirectory() as tmp:
-        for name, sql in sorted(registry.ORACLES.items()):
-            stmts = [
-                s.format(tmp=tmp) for s in ORACLE_TIMING_OVERRIDES[name]
-            ] if name in ORACLE_TIMING_OVERRIDES else [sql]
-            samples = []
-            for _ in range(repeats):
-                # Timers are armed PER STATEMENT with the repeat's
-                # REMAINING budget: duckdb's interrupt() only cancels a
-                # currently-running query, so a single whole-repeat
-                # timer firing in the Python-side gap between the
-                # statements of a multi-statement override would no-op
-                # and the next statement would run unbounded. The
-                # remaining-budget check before each statement converts
-                # that no-op fire into a detected timeout. The
-                # lock-guarded arm flag keeps a fire racing cancel()
-                # from interrupting the SHARED connection mid-next-query.
-                t0 = time.perf_counter()
-                timed_out = False
-                for s in stmts:
-                    while True:
-                        remaining = duck_timeout - (time.perf_counter() - t0)
-                        if remaining <= 0:
-                            timed_out = True
-                            break
-                        lock = threading.Lock()
-                        state = {"armed": True}
-
-                        def _interrupt(lock=lock, state=state):
-                            with lock:
-                                if state["armed"]:
-                                    con.interrupt()
-
-                        timer = threading.Timer(remaining, _interrupt)
-                        timer.start()
-                        try:
-                            con.execute(s).fetchall()
-                            break  # statement done
-                        except duckdb.InterruptException:
-                            # ELAPSED TIME is the arbiter, not the
-                            # exception: a timer whose statement just
-                            # finished can lose the disarm race and
-                            # interrupt the idle shared connection,
-                            # poisoning the NEXT execute — an under-
-                            # budget interrupt is that spurious case
-                            # (drained by this exception) and the
-                            # statement simply re-runs under a fresh
-                            # remaining-budget timer
-                            if time.perf_counter() - t0 >= duck_timeout - 0.05:
-                                timed_out = True
-                                break
-                        finally:
-                            with lock:
-                                state["armed"] = False
-                            timer.cancel()
-                    if timed_out:
-                        break
-                if timed_out:
-                    # stop burning repeats, but KEEP any under-budget
-                    # samples already in hand — "a query that ran, ran"
-                    # (probe_common's policy): a load spike on repeat 3
-                    # must not discard repeat 1's valid measurement and
-                    # flap a borderline oracle out of every comparable
-                    # aggregate (r8 review)
-                    if not samples:
-                        timeouts[name] = duck_timeout
-                    else:
-                        # a load spike truncated sampling AFTER valid
-                        # samples landed — the min is still honest, but
-                        # the degraded protocol must be visible in the
-                        # artifact, matching probe_common's treatment of
-                        # the analogous case (ADVICE r8)
-                        degraded.append(name)
-                    break
-                samples.append(time.perf_counter() - t0)
-                # slow-oracle rule (r9): a >30 s oracle stops at
-                # min-of-2 — the min estimator exists to shave
-                # scheduler noise off sub-second queries, and five
-                # repeats of an 85 s brute-force SQL (the promoted
-                # stream_ingest_neardedup oracle) would add ~6 idle
-                # minutes per bench run for a third decimal; the same
-                # argument as the engine-side min-of-2 ingest resets
-                if len(samples) >= 2 and min(samples) > 30:
-                    break
-            if samples:
-                out[name] = round(min(samples), 4)
-    con.close()
-    return out, timeouts, degraded
 
 
 def main() -> None:
@@ -298,37 +129,32 @@ def main() -> None:
     # any query's timed window, as a warehouse computes them at write
     # time. Injection threshold scaled to fixture size (default 10GB
     # means "never" on a sub-GB fixture; a real cluster keeps it).
-    with_stats = os.environ.get("SPARK_GRAFT_BENCH_STATS", "1") != "0"
-    if with_stats:
-        from lookup_transform_spark import stats
-
-        stats.register_stats_tables(spark, sf_dir)
-        stats.enable_cbo(spark, application_side_threshold="10MB")
+    stats.register_stats_tables(spark, sf_dir)
+    stats.enable_cbo(spark, application_side_threshold="10MB")
 
     # warmup: spin up executors / codegen paths once
-    _run(registry.QUERIES["lookup"](spark, sf_dir))
+    timing.drain(registry.QUERIES["lookup"](spark, sf_dir))
 
     timings: dict[str, float] = {}
     first_shot: dict[str, float] = {}  # repeat #1 wall time (r3 protocol)
     spreads: dict[str, float] = {}  # max-min per query: load visibility
     resets = _ingest_resets(sf_dir)
     for name in sorted(registry.QUERIES):
-        fn = registry.QUERIES[name]
-        samples = []
         # reset queries re-run the FULL multi-batch ingest per repeat —
         # min-of-2 fresh runs, not min-of-5: the estimator exists to
         # shave scheduler noise off sub-second queries, and five
         # from-scratch ingests would quintuple the honest cost of the
         # slowest bench entries for a third decimal of noise reduction
-        reps = min(2, repeats) if name in resets else repeats
-        for _ in range(reps):
-            if name in resets:
-                resets[name](spark)  # outside the timed window
-            t0 = time.perf_counter()
-            _run(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(min(samples), 4)
-        first_shot[name] = round(samples[0], 4)
+        rec = timing.time_query(
+            spark, registry.QUERIES[name], sf_dir,
+            min(2, repeats) if name in resets else repeats,
+            reset=resets.get(name),
+        )
+        if "err" in rec:
+            raise RuntimeError(f"{name}: {rec['err']}")
+        samples = rec["samples"]
+        timings[name] = rec["sec"]
+        first_shot[name] = samples[0]
         spreads[name] = round(max(samples) - min(samples), 4)
 
     total = round(sum(timings.values()), 4)
@@ -361,16 +187,40 @@ def main() -> None:
         # visibility (r8 review)
     }
     if with_oracle:
-        oracle, oracle_timeouts, oracle_degraded = _oracle_timings(
-            sf_dir, repeats
-        )
-        detail["oracle_duckdb_sec"] = oracle
+        # each DuckDB oracle on the same parquet: the per-query baseline
+        # the ≤2× target in BASELINE.md refers to
+        import tempfile
+
+        import duckdb
+
+        from lookup_transform_spark.parity import register_views
+
+        oracle: dict[str, float] = {}
         # oracles whose brute-force SQL exceeded the per-repeat timeout
         # at this sf (excluded from every comparable aggregate below —
         # same treatment as a query with no oracle)
-        detail["oracle_timeout_sec"] = oracle_timeouts
+        oracle_timeouts: dict[str, float] = {}
         # oracles that kept their min-of-earlier-samples but lost later
         # repeats to a timeout: valid numbers, degraded protocol
+        oracle_degraded: list[str] = []
+        con = duckdb.connect()
+        register_views(con, sf_dir)
+        with tempfile.TemporaryDirectory() as tmp:
+            for name in sorted(registry.ORACLES):
+                rec = timing.time_oracle(
+                    con, timing.oracle_statements(name, tmp), repeats
+                )
+                if "err" in rec:
+                    raise RuntimeError(f"oracle {name}: {rec['err']}")
+                if "sec" not in rec:
+                    oracle_timeouts[name] = rec["timeout"]
+                    continue
+                oracle[name] = rec["sec"]
+                if rec.get("partial"):
+                    oracle_degraded.append(name)
+        con.close()
+        detail["oracle_duckdb_sec"] = oracle
+        detail["oracle_timeout_sec"] = oracle_timeouts
         detail["oracle_degraded"] = oracle_degraded
         detail["oracle_total_sec"] = round(sum(oracle.values()), 4)
         # Engine total restricted to the queries that HAVE an oracle —

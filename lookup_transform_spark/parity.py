@@ -10,7 +10,10 @@ artifact at the driver's sf0.01).
 from __future__ import annotations
 
 import math
+import os
 from typing import Any
+
+from lookup_transform_spark.sqltext import duck_string
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -18,17 +21,18 @@ TABLES = (
 ).split()
 
 
-def register_views(con, sf_dir: str, glob: bool = False) -> None:
+def register_views(con, sf_dir: str) -> None:
     """Create one DuckDB view per fixture table, like the driver does.
 
-    ``glob=True`` reads ``{t}.parquet/**/*.parquet`` for directory-shaped
-    (Spark-written) tables instead of single files.
+    A table is a single parquet file, or a directory of them (a
+    Spark-written table), read as ``{t}.parquet/**/*.parquet``.
     """
     for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
         src = (
-            f"read_parquet('{sf_dir}/{t}.parquet/**/*.parquet')"
-            if glob
-            else f"'{sf_dir}/{t}.parquet'"
+            f"read_parquet({duck_string(path + '/**/*.parquet')})"
+            if os.path.isdir(path)
+            else duck_string(path)
         )
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM {src}")
 

@@ -109,7 +109,7 @@ def _q(name: str, oracle: str | None = None):
     return deco
 
 
-# (applicationId, stats-db-or-None, sf_dir, table) -> DataFrame.
+# (applicationId, stats-table-or-None, sf_dir, table) -> DataFrame.
 # A DataFrame is an immutable logical plan; re-creating it per query
 # re-reads the parquet footer for schema inference (~70 ms measured,
 # FLOOR_PROFILE.json schema_read_sec) — pure plan-build waste that the
@@ -121,19 +121,20 @@ _TABLE_CACHE: dict[tuple[str, str | None, str, str], DataFrame] = {}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a fixture table; when ``stats.register_stats_tables`` has
-    catalogued this sf_dir (bench/scaling runs), serve the stats-backed
-    catalog table instead so CBO join reordering and runtime Bloom
-    filters can engage — same files, same rows, better plans. The
-    correctness path never registers stats, so oracle comparisons run
-    on plain parquet reads."""
+    catalogued this table of sf_dir (bench/scaling runs), serve the
+    stats-backed catalog table instead so CBO join reordering and
+    runtime Bloom filters can engage — same files, same rows, better
+    plans. A table the registration left out reads its parquet file.
+    The correctness path never registers stats, so oracle comparisons
+    run on plain parquet reads."""
     from lookup_transform_spark import stats
 
-    db = stats.stats_db_for(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, db, os.path.abspath(sf_dir), name)
+    table = stats.stats_table(spark, sf_dir, name)
+    key = (spark.sparkContext.applicationId, table, os.path.abspath(sf_dir), name)
     df = _TABLE_CACHE.get(key)
     if df is None:
-        if db is not None and name in stats.STATS_TABLES:
-            df = spark.table(f"{db}.{name}")
+        if table is not None:
+            df = spark.table(table)
         else:
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _TABLE_CACHE[key] = df

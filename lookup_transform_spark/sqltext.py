@@ -1,4 +1,4 @@
-"""Quoting for values spliced into Spark SQL text.
+"""Quoting for values spliced into Spark SQL and DuckDB SQL text.
 
 ``selectExpr`` and ``spark.sql`` parse whatever string they get, so a
 column name, struct field name or path that carries a quote, a
@@ -23,6 +23,13 @@ def sql_string(value: str) -> str:
     ``spark.sql.parser.escapedStringLiterals=false``, so backslashes and
     quotes are backslash-escaped."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def duck_string(value: str) -> str:
+    """``value`` as a single-quoted DuckDB string literal. DuckDB has no
+    backslash escapes, so only the quote is escaped, by doubling it;
+    ``sql_string``'s escaping would corrupt a path for DuckDB."""
+    return "'" + value.replace("'", "''") + "'"
 
 
 def ddl(dt: T.DataType) -> str:

@@ -82,12 +82,13 @@ _STATS_TYPES = (
     T.BooleanType,
 )
 
-def _registry(spark: SparkSession) -> dict[str, str]:
-    """Per-SESSION registry (sf_dir -> database name), stamped on the
-    session object: the catalog the registry describes is session-
-    scoped, so a process-global map would keep serving a database that
-    died with a stopped session (TABLE_OR_VIEW_NOT_FOUND downstream);
-    the attribute's lifetime matches the catalog's exactly. A fresh
+def _registry(spark: SparkSession) -> dict[str, dict[str, str]]:
+    """Per-SESSION registry (sf_dir -> {table: qualified catalog name})
+    of the tables actually registered, stamped on the session object:
+    the catalog the registry describes is session-scoped, so a
+    process-global map would keep serving a database that died with a
+    stopped session (TABLE_OR_VIEW_NOT_FOUND downstream); the
+    attribute's lifetime matches the catalog's exactly. A fresh
     session re-ANALYZEs, so regenerated fixtures never serve stale
     stats either."""
     reg = getattr(spark, "_lt_stats_registered", None)
@@ -119,13 +120,15 @@ def register_stats_tables(
     scan per table — the ingest-time cost a warehouse pays once, NOT
     part of any query's time. The tables are registered concurrently,
     at most ``defaultParallelism`` at a time: each ``ANALYZE`` is a
-    small job that leaves most cores idle. The database is recorded
-    only once every table has succeeded; a failure re-raises."""
+    small job that leaves most cores idle. The registered tables are
+    recorded only once every table has succeeded; a failure
+    re-raises. A table missing from ``sf_dir`` or left out of
+    ``tables`` is not registered, and ``stats_table`` reports it so."""
     sf_dir = os.path.abspath(sf_dir)
     reg = _registry(spark)
-    if sf_dir in reg:
-        return reg[sf_dir]
     db = _db_name(sf_dir)
+    if sf_dir in reg:
+        return db
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(db)}")
     todo = [
         t for t in tables
@@ -136,14 +139,18 @@ def register_stats_tables(
         register = inheritable_thread_target(spark)(_register_table)
         with ThreadPoolExecutor(max_workers=workers) as pool:
             list(pool.map(lambda t: register(spark, sf_dir, db, t), todo))
-    reg[sf_dir] = db
+    reg[sf_dir] = {t: _qualified(db, t) for t in todo}
     return db
+
+
+def _qualified(db: str, t: str) -> str:
+    return f"{quote_ident(db)}.{quote_ident(t)}"
 
 
 def _register_table(spark: SparkSession, sf_dir: str, db: str, t: str) -> None:
     """(Re)create ``db.t`` over ``sf_dir/t.parquet`` and ANALYZE it."""
     path = os.path.join(sf_dir, f"{t}.parquet")
-    name = f"{quote_ident(db)}.{quote_ident(t)}"
+    name = _qualified(db, t)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     # Declare µs timestamp-without-timezone columns as TimestampType
     # in the CATALOG schema (module doc: NTZ is estimation-dead AND
@@ -182,16 +189,10 @@ def _register_table(spark: SparkSession, sf_dir: str, db: str, t: str) -> None:
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
 
 
-def stats_db_for(spark: SparkSession, sf_dir: str) -> str | None:
-    """Database holding stats-backed tables for sf_dir in THIS session,
-    if registered."""
-    return _registry(spark).get(os.path.abspath(sf_dir))
-
-
-def unregister(spark: SparkSession, sf_dir: str) -> None:
-    """Forget the registration for sf_dir (tests restoring a pristine
-    planner regime; the catalog objects themselves are left in place)."""
-    _registry(spark).pop(os.path.abspath(sf_dir), None)
+def stats_table(spark: SparkSession, sf_dir: str, table: str) -> str | None:
+    """Qualified catalog name of ``table``'s stats-backed table for
+    sf_dir in THIS session, or None when it was not registered."""
+    return _registry(spark).get(os.path.abspath(sf_dir), {}).get(table)
 
 
 def enable_cbo(

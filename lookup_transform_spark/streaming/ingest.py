@@ -45,7 +45,6 @@ from lookup_transform_spark.session import scoped_confs
 #: must not crash the listing, and ``batch_00001_old`` must not
 #: misorder it — only exact matches participate in state reads.
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
-_BASE_RE = re.compile(r"^base_(\d+)$")
 _SEG_RE = re.compile(r"^seg_(\d+)_(\d+)$")
 
 
@@ -81,12 +80,11 @@ def _segments(
     path: str, before: int | None = None
 ) -> list[tuple[int, int, str]]:
     """Committed fold segments under ``path``: ``seg_LO_HI`` dirs each
-    covering the batch-id range [LO, HI), plus legacy ``base_N`` dirs
-    read as (0, N). ``_SUCCESS``-gated (a crashed fold is invisible);
-    only segments fully inside the visibility window (hi <= before)
-    participate, so a retried batch never sees state folded at or after
-    itself. Sorted (lo asc, hi desc) — the widest segment at each
-    boundary comes first."""
+    covering the batch-id range [LO, HI). ``_SUCCESS``-gated (a crashed
+    fold is invisible); only segments fully inside the visibility window
+    (hi <= before) participate, so a retried batch never sees state
+    folded at or after itself. Sorted (lo asc, hi desc) — the widest
+    segment at each boundary comes first."""
     if not os.path.isdir(path):
         return []
     out = []
@@ -97,13 +95,9 @@ def _segments(
         if not os.path.exists(os.path.join(full, "_SUCCESS")):
             continue
         m = _SEG_RE.match(d)
-        if m:
-            lo, hi = int(m.group(1)), int(m.group(2))
-        else:
-            mb = _BASE_RE.match(d)
-            if not mb:
-                continue
-            lo, hi = 0, int(mb.group(1))
+        if not m:
+            continue
+        lo, hi = int(m.group(1)), int(m.group(2))
         if hi <= lo:
             continue
         if before is not None and hi > before:
@@ -230,9 +224,7 @@ def compact_ingest_state(
             shutil.rmtree(full, ignore_errors=True)
             continue
         ms = _SEG_RE.match(d)
-        mg = _BASE_RE.match(d)
-        hi = int(ms.group(2)) if ms else (int(mg.group(1)) if mg else None)
-        if hi is not None and hi <= covered and d not in keep:
+        if ms and int(ms.group(2)) <= covered and d not in keep:
             shutil.rmtree(full, ignore_errors=True)
 
 

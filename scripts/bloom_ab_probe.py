@@ -39,13 +39,13 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from lookup_transform_spark import timing
 from lookup_transform_spark.operators.bloomjoin import (
     bloom_semi_join,
     semi_join_auto,
@@ -55,7 +55,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIX32 = f"{REPO}/.scratch/scale32"
 FIX128 = f"{REPO}/.scratch/bloom128"
 EVDIR = f"{REPO}/.scratch/bloom_eventlogs"
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def fresh_session(app: str) -> SparkSession:
@@ -169,21 +168,19 @@ def run_arm(shape: str, sf_dir: str, force: str, repeats: int = 2) -> dict:
         if shape in ("B", "C"):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        samples = []
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            arm_df(spark, shape, sf_dir, force).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.perf_counter() - t0)
+        rec = timing.time_query(
+            spark, lambda s, d: arm_df(s, shape, d, force), sf_dir, repeats
+        )
         app_id = spark.sparkContext.applicationId
     finally:
         spark.stop()
+    if "err" in rec:
+        raise RuntimeError(f"{shape}/{force}: {rec['err']}")
     # the event log is finalized on stop; every repeat shuffles the
     # same bytes, so per-run bytes = total / repeats (build-side
     # aggregates included — they ARE part of the bloom arm's cost)
     return {
-        "sec": round(min(samples), 3),
+        "sec": round(rec["sec"], 3),
         "shuffle_mb_per_run": round(
             shuffle_bytes_of_app(app_id) / repeats / 1e6, 1
         ),

@@ -35,7 +35,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lookup_transform_spark import registry
+from lookup_transform_spark import registry, stats, timing
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -53,23 +53,16 @@ MIX = [
 ]
 
 
-def run_one(spark, name: str) -> float:
-    t0 = time.perf_counter()
-    registry.QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.perf_counter() - t0
+def run_one(spark, name: str) -> None:
+    timing.drain(registry.QUERIES[name](spark, SF_DIR))
 
 
 def main() -> None:
     spark = get_spark("concurrency-probe", extra_confs={
         "spark.scheduler.mode": "FAIR",
     })
-    if os.environ.get("SPARK_GRAFT_BENCH_STATS", "1") != "0":
-        from lookup_transform_spark import stats
-
-        stats.register_stats_tables(spark, SF_DIR)
-        stats.enable_cbo(spark, application_side_threshold="10MB")
+    stats.register_stats_tables(spark, SF_DIR)
+    stats.enable_cbo(spark, application_side_threshold="10MB")
     # warm: plans + codegen once so both protocols run warm
     for name in MIX:
         run_one(spark, name)
@@ -79,12 +72,15 @@ def main() -> None:
     per_query = {}
     for _ in range(WORKERS):
         for name in MIX:
-            per_query[name] = round(run_one(spark, name), 3)
+            rec = timing.time_query(spark, registry.QUERIES[name], SF_DIR, 1)
+            if "err" in rec:
+                raise RuntimeError(f"{name}: {rec['err']}")
+            per_query[name] = round(rec["sec"], 3)
     serial_sec = time.perf_counter() - t0
 
     # concurrent: WORKERS threads, each runs the full mix in a rotated
     # order (InheritableThread carries the session thread-locals so
-    # AQE/CBO flags hold — see probe_common)
+    # AQE/CBO flags hold — see timing.time_query)
     from pyspark import InheritableThread
 
     errs: list = []

@@ -46,7 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lookup_transform_spark import registry
+from lookup_transform_spark import registry, stats, timing
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -199,15 +199,6 @@ def build_relational(spark) -> None:
             shutil.copyfile(f"{BASE32}/{t}.parquet", dst)
 
 
-def time_spark(spark, name: str, sf_dir: str) -> dict:
-    from probe_common import time_spark as _ts
-
-    return _ts(
-        spark, registry.QUERIES[name], name, sf_dir,
-        SPARK_TIMEOUT, REPEATS, "probe128",
-    )
-
-
 def main() -> None:
     spark = get_spark("scaling128-probe")
     if "--skip-build" not in sys.argv:
@@ -216,13 +207,10 @@ def main() -> None:
     # same protocol as bench.py / scaling_probe.py: ingest-time catalog
     # stats + CBO, registered outside every timed window — without this
     # the two probes measure different planner regimes
-    if os.environ.get("SPARK_GRAFT_BENCH_STATS", "1") != "0":
-        from lookup_transform_spark import stats
-
-        stats.register_stats_tables(spark, BASE32)
-        stats.register_stats_tables(spark, OUT)
-        stats.register_stats_tables(spark, FIX128)
-        stats.enable_cbo(spark, application_side_threshold="10MB")
+    stats.register_stats_tables(spark, BASE32)
+    stats.register_stats_tables(spark, OUT)
+    stats.register_stats_tables(spark, FIX128)
+    stats.enable_cbo(spark, application_side_threshold="10MB")
     names = list(HEAVY)
     rel_names = list(RELATIONAL)
     results: dict[str, dict] = {}
@@ -239,25 +227,21 @@ def main() -> None:
         rel_names = [q for q in rel_names if q in only]
         with open(f"{REPO}/SCALING128.json") as f:
             results = json.load(f)["queries"]
-    for label, sf_dir in (("32x", BASE32), ("128x", OUT)):
-        for name in names:
-            rec = results.setdefault(name, {})
-            rec[f"spark_{label}"] = time_spark(spark, name, sf_dir)
-            print(
-                f"[{label}] {name:28s} "
-                f"spark={rec[f'spark_{label}'].get('sec', rec[f'spark_{label}'])}",
-                flush=True,
-            )
+    runs = [
+        (label, name, sf_dir)
+        for label, sf_dir in (("32x", BASE32), ("128x", OUT))
+        for name in names
+    ]
     for name in rel_names:
-        dirs32, dirs128 = RELATIONAL_DIRS.get(name, (BASE32, FIX128))
-        rec = results.setdefault(name, {})
-        for label, sf_dir in (("32x", dirs32), ("128x", dirs128)):
-            rec[f"spark_{label}"] = time_spark(spark, name, sf_dir)
-            print(
-                f"[{label}] {name:28s} "
-                f"spark={rec[f'spark_{label}'].get('sec', rec[f'spark_{label}'])}",
-                flush=True,
-            )
+        dirs = RELATIONAL_DIRS.get(name, (BASE32, FIX128))
+        runs += [(label, name, d) for label, d in zip(("32x", "128x"), dirs)]
+    for label, name, sf_dir in runs:
+        rec = timing.time_query(
+            spark, registry.QUERIES[name], sf_dir, REPEATS,
+            timeout=SPARK_TIMEOUT,
+        )
+        results.setdefault(name, {})[f"spark_{label}"] = rec
+        print(f"[{label}] {name:28s} spark={rec.get('sec', rec)}", flush=True)
     # expected asymptotics, so a growth ratio is read against the
     # operator's actual complexity class: exact all-pairs cosine is
     # O(n²) BY DESIGN (its scale path is the LSH/IVF tier), so ~16x

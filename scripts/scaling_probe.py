@@ -31,16 +31,15 @@ import json
 import os
 import shutil
 import sys
-import threading
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import functions as F
 
-from lookup_transform_spark import registry
-from lookup_transform_spark.parity import TABLES
+from lookup_transform_spark import registry, stats, timing
+from lookup_transform_spark.parity import register_views
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,7 +47,6 @@ SF_DIR = "/root/testdata/sf0.1"
 SCALE = 32
 OUT = f"{REPO}/.scratch/scale{SCALE}"
 SPARK_TIMEOUT = float(os.environ.get("SPARK_GRAFT_PROBE_TIMEOUT", "240"))
-DUCK_TIMEOUT = float(os.environ.get("SPARK_GRAFT_PROBE_DUCK_TIMEOUT", "180"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_PROBE_REPEATS", "2"))
 
 EXCLUDE = {
@@ -123,78 +121,6 @@ def build_scaled(spark) -> None:
     open(f"{OUT}/_done", "w").write("ok")
 
 
-def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        src = (
-            f"read_parquet('{path}/**/*.parquet')"
-            if os.path.isdir(path)
-            else f"'{path}'"
-        )
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM {src}")
-    return con
-
-
-def time_spark(spark, name: str, sf_dir: str) -> dict:
-    from probe_common import time_spark as _ts
-
-    return _ts(
-        spark, registry.QUERIES[name], name, sf_dir,
-        SPARK_TIMEOUT, REPEATS, "probe",
-    )
-
-
-def duck_timing_sqls(name: str, tmp: str) -> list[str]:
-    """The SQL statements DuckDB is timed on for ``name`` — the
-    correctness oracle, except where bench.py's
-    ORACLE_TIMING_OVERRIDES substitutes a write-shaped equivalent
-    (sink_upsert: the bare-SELECT oracle would bill the engine for a
-    partitioned parquet rewrite DuckDB never pays; same fairness rule
-    here so SCALING32.json and BENCH ratios agree)."""
-    import bench
-
-    if name in bench.ORACLE_TIMING_OVERRIDES:
-        return [s.format(tmp=tmp) for s in bench.ORACLE_TIMING_OVERRIDES[name]]
-    return [registry.ORACLES[name]]
-
-
-def time_duck(con, sqls: str | list[str]) -> dict:
-    if isinstance(sqls, str):
-        sqls = [sqls]
-    best = None
-    for _ in range(REPEATS):
-        # The interrupt is gated by a lock-guarded flag: a Timer that
-        # fires in the window between execute() returning and cancel()
-        # would otherwise land the interrupt on the SHARED connection and
-        # abort the NEXT timed query, recording a spurious timeout.
-        lock = threading.Lock()
-        state = {"armed": True}
-
-        def _interrupt():
-            with lock:
-                if state["armed"]:
-                    con.interrupt()
-
-        timer = threading.Timer(DUCK_TIMEOUT, _interrupt)
-        timer.start()
-        t0 = time.perf_counter()
-        try:
-            for sql in sqls:
-                con.execute(sql).fetchall()
-            sec = time.perf_counter() - t0
-        except duckdb.InterruptException:
-            return {"timeout": DUCK_TIMEOUT}
-        except Exception as e:  # noqa: BLE001
-            return {"err": f"{type(e).__name__}: {e}"[:200]}
-        finally:
-            with lock:
-                state["armed"] = False
-            timer.cancel()
-        best = sec if best is None else min(best, sec)
-    return {"sec": round(best, 3)}
-
-
 def fmt(r: dict) -> str:
     if "sec" in r:
         return f"{r['sec']:.2f}"
@@ -209,12 +135,9 @@ def main() -> None:
         build_scaled(spark)
     # same protocol as bench.py: ingest-time catalog stats + CBO,
     # registered outside every timed window (stats.py rationale)
-    if os.environ.get("SPARK_GRAFT_BENCH_STATS", "1") != "0":
-        from lookup_transform_spark import stats
-
-        stats.register_stats_tables(spark, SF_DIR)
-        stats.register_stats_tables(spark, OUT)
-        stats.enable_cbo(spark, application_side_threshold="10MB")
+    stats.register_stats_tables(spark, SF_DIR)
+    stats.register_stats_tables(spark, OUT)
+    stats.enable_cbo(spark, application_side_threshold="10MB")
     names = [q for q in sorted(registry.QUERIES) if q not in EXCLUDE]
     results: dict[str, dict] = {}
     if "--only" in sys.argv:
@@ -225,25 +148,21 @@ def main() -> None:
         names = [q for q in names if q in only]
         with open(f"{REPO}/SCALING32.json") as f:
             results = json.load(f)["queries"]
-    import contextlib
-    import tempfile
-
     for sf_label, sf_dir in (("1x", SF_DIR), ("32x", OUT)):
-        con = make_duck(sf_dir)
-        # fresh per-tier dir for write-shaped oracle overrides:
-        # OVERWRITE_OR_IGNORE only replaces name-colliding files, so
-        # reusing one dir would union the 1x tier's leftovers into the
-        # 32x scan-back; ExitStack cleans it up after the tier
-        with contextlib.ExitStack() as stack:
-            duck_tmp = stack.enter_context(
-                tempfile.TemporaryDirectory(prefix="probe_duck_")
-            )
+        con = duckdb.connect()
+        register_views(con, sf_dir)
+        # fresh per-tier dir for write-shaped oracle overrides
+        # (timing.oracle_statements)
+        with tempfile.TemporaryDirectory(prefix="probe_duck_") as duck_tmp:
             for name in names:
                 rec = results.setdefault(name, {})
-                rec[f"spark_{sf_label}"] = time_spark(spark, name, sf_dir)
+                rec[f"spark_{sf_label}"] = timing.time_query(
+                    spark, registry.QUERIES[name], sf_dir, REPEATS,
+                    timeout=SPARK_TIMEOUT,
+                )
                 if name in registry.ORACLES:
-                    rec[f"duck_{sf_label}"] = time_duck(
-                        con, duck_timing_sqls(name, duck_tmp)
+                    rec[f"duck_{sf_label}"] = timing.time_oracle(
+                        con, timing.oracle_statements(name, duck_tmp), REPEATS
                     )
                 print(
                     f"[{sf_label}] {name:32s} "
@@ -262,7 +181,7 @@ def main() -> None:
         "rows_1x": {"lineitem": 600_000},
         "rows_32x": {"lineitem": 600_000 * SCALE},
         "spark_timeout_sec": SPARK_TIMEOUT,
-        "duck_timeout_sec": DUCK_TIMEOUT,
+        "duck_timeout_sec": timing.ORACLE_TIMEOUT_S,
         "repeats": REPEATS,
         "estimator": "min",
         "loadavg": list(os.getloadavg()),

@@ -16,9 +16,10 @@ derived from scale32 by key-shifted copies, and records
       join at 512x (hot partitions ~1 GB > the 256 MB skew threshold;
       at 32x they sit under it), read from the executed FINAL plan.
 
-Static plans are captured per run (the broadcast gate is a plan-time
-decision); the skew evidence is captured from the executed
-QueryExecution of a collect()-ed aggregate over the join.
+Static plans are captured once per (query, scale), outside the timed
+window (the broadcast gate is a plan-time decision); the skew evidence
+is captured from the executed QueryExecution of a collect()-ed
+aggregate over the join.
 
 Writes ULTRASCALE.json. Run:
   python scripts/ultra_scale_probe.py [--skip-build]
@@ -36,14 +37,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lookup_transform_spark import registry
+from lookup_transform_spark import registry, timing
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE32 = f"{REPO}/.scratch/scale32"
 OUT512 = f"{REPO}/.scratch/scale512"
 OUT1024 = f"{REPO}/.scratch/scale1024"
-REPEATS = int(os.environ.get("ULTRA_REPEATS", "2"))
+REPEATS = int(os.environ.get("SPARK_GRAFT_PROBE_REPEATS", "2"))
 
 #: key offset between copies — far above any key in the 32x fixture
 SHIFT = 1_000_000_000
@@ -102,10 +103,6 @@ def build(spark, out: str, copies: dict[str, int]) -> None:
         print(f"built {table} x32x{n_copies}", flush=True)
 
 
-def _run(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _static_join_nodes(df) -> list[str]:
     plan = df._jdf.queryExecution().sparkPlan().toString()
     return sorted(set(re.findall(
@@ -114,18 +111,16 @@ def _static_join_nodes(df) -> list[str]:
     )))
 
 
-def time_query(spark, name: str, sf_dir: str) -> dict:
+def time_with_plan(spark, name: str, sf_dir: str) -> dict:
+    """Min-of-REPEATS seconds, plus the join nodes of the static plan,
+    read once outside the timed window."""
     fn = registry.QUERIES[name]
-    ss, joins = [], []
-    for _ in range(REPEATS):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        joins = _static_join_nodes(df)
-        _run(df)
-        ss.append(time.perf_counter() - t0)
-    return {"min_sec": round(min(ss), 2),
-            "samples": [round(s, 2) for s in ss],
-            "static_join_nodes": joins}
+    rec = timing.time_query(spark, fn, sf_dir, REPEATS)
+    if "err" in rec:
+        raise RuntimeError(f"{name}: {rec['err']}")
+    return {"min_sec": rec["sec"],
+            "samples": rec["samples"],
+            "static_join_nodes": _static_join_nodes(fn(spark, sf_dir))}
 
 
 def skew_probe(spark, sf_dir: str) -> dict:
@@ -198,7 +193,7 @@ def main() -> None:
     ):
         out["queries"][name] = {}
         for label, sf_dir in scales:
-            rec = time_query(spark, name, sf_dir)
+            rec = time_with_plan(spark, name, sf_dir)
             out["queries"][name][label] = rec
             print(name, label, rec, flush=True)
     for label, sf_dir in (("32x", BASE32), ("512x", OUT512)):

@@ -8,13 +8,23 @@
    for the query tiers, hides which operator a query really runs).
 2. Every top-level ``def`` / ``class`` in the library has a caller
    outside ``tests/``. Code that only tests call belongs in the test
-   that calls it.
+   that calls it. The guard matches names, not objects: a library
+   function named like a method that a non-test caller calls on some
+   other object slips past it (a test-only ``stats.unregister`` did,
+   named like DuckDB's ``con.unregister`` in ``perfbench/check.py``).
+3. Every import in ``bench.py``, ``__spark_entry__.py`` and
+   ``scripts/``, nested ones included, resolves to a module with the
+   repository root and ``scripts/`` on the path, and ``from M import
+   a`` finds ``a`` in ``M``. No test runs the scripts, so this is what
+   catches one left importing a deleted module or name.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
 import pathlib
+from importlib.machinery import PathFinder
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "lookup_transform_spark"
@@ -121,3 +131,88 @@ def test_library_definitions_have_a_non_test_caller():
         and (str(p.relative_to(PKG)), node.name) not in _USER_ENTRY_POINTS
     )
     assert not orphans, orphans
+
+
+#: Where the entry points and scripts import from: ``bench.py`` puts the
+#: root on ``sys.path`` and each script puts the root beside its own dir.
+_IMPORT_PATH = [str(ROOT), str(ROOT / "scripts")]
+
+
+def _find_spec(name: str):
+    """Spec of module ``name``, found without importing it or its
+    parents: repository modules first, then the installed ones."""
+    top, *rest = name.split(".")
+    spec = PathFinder.find_spec(top, _IMPORT_PATH) or importlib.util.find_spec(top)
+    for i in range(1, len(rest) + 1):
+        if spec is None or not spec.submodule_search_locations:
+            return None
+        spec = PathFinder.find_spec(
+            ".".join([top, *rest[:i]]), list(spec.submodule_search_locations)
+        )
+    return spec
+
+
+def _top_level_names(tree: ast.Module) -> set[str] | None:
+    """Names a module binds at top level, through ``if`` / ``try``
+    blocks too; None when they cannot be known statically (a star
+    import or a module ``__getattr__``)."""
+    names: set[str] = set()
+    todo = list(tree.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, _DEFS):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                if a.name == "*":
+                    return None
+                names.add(a.asname or a.name.split(".")[0])
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            todo += [
+                n for block in ("body", "orelse", "finalbody", "handlers")
+                for n in getattr(node, block, [])
+            ]
+        elif isinstance(node, ast.ExceptHandler):
+            todo += node.body
+    return None if "__getattr__" in names else names
+
+
+def _defines(spec, name: str) -> bool:
+    if spec.submodule_search_locations and PathFinder.find_spec(
+        f"{spec.name}.{name}", list(spec.submodule_search_locations)
+    ):
+        return True
+    if not (spec.origin or "").endswith(".py"):
+        return True  # compiled or built-in: nothing to parse
+    names = _top_level_names(ast.parse(pathlib.Path(spec.origin).read_bytes()))
+    return names is None or name in names
+
+
+def test_scripts_and_entry_points_imports_resolve():
+    files = [
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        *sorted((ROOT / "scripts").glob("*.py")),
+    ]
+    broken = []
+    for p in files:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Import):
+                wanted = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                assert node.level == 0, f"{p.name}: relative import"
+                wanted = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in wanted:
+                where = f"{p.relative_to(ROOT)}:{node.lineno}"
+                spec = _find_spec(module)
+                if spec is None:
+                    broken.append(f"{where} {module}")
+                elif name not in (None, "*") and not _defines(spec, name):
+                    broken.append(f"{where} {module}.{name}")
+    assert not broken, broken

@@ -56,3 +56,41 @@ def test_rows_only_queries_run(spark, name):
     df = registry.QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_register_views_quotes_paths_and_reads_table_dirs(tmp_path):
+    """A fixture dir whose name carries a quote gets valid DuckDB view
+    SQL, and a table stored as a directory of parquet files (the shape
+    Spark writes) is read through its files."""
+    import shutil
+
+    from lookup_transform_spark.parity import TABLES
+
+    sf_dir = tmp_path / "it's_sf"
+    sf_dir.mkdir()
+    for t in TABLES:
+        src = os.path.join(SF_DIR, f"{t}.parquet")
+        if t == "orders":
+            (sf_dir / "orders.parquet").mkdir()
+            shutil.copy(src, sf_dir / "orders.parquet" / "part-0.parquet")
+        else:
+            shutil.copy(src, sf_dir / f"{t}.parquet")
+    con = duckdb.connect()
+    register_views(con, str(sf_dir))
+    for t in TABLES:
+        want = con.execute(
+            "SELECT count(*) FROM read_parquet(?)",
+            [os.path.join(SF_DIR, f"{t}.parquet")],
+        ).fetchone()
+        assert con.execute(f"SELECT count(*) FROM {t}").fetchone() == want, t
+    con.close()
+
+
+@pytest.mark.parametrize("value", ["plain", "it's", "a\\b'c''"])
+def test_duck_string_round_trips(value):
+    """DuckDB reads back exactly the value: a backslash stays literal."""
+    from lookup_transform_spark.sqltext import duck_string
+
+    con = duckdb.connect()
+    assert con.execute(f"SELECT {duck_string(value)}").fetchone()[0] == value
+    con.close()

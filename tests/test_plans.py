@@ -559,7 +559,7 @@ def test_incremental_minhash_standing_tables_read_bucketed(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lshplan_docs")
 
 
-def test_stats_cbo_runtime_bloom_filters_fact_scan(spark):
+def test_stats_cbo_runtime_bloom_filters_fact_scan(spark, forget_stats):
     """VERDICT r5 #1 pin: with ingest-time catalog statistics
     (stats.register_stats_tables) + CBO enabled, Spark's own
     InjectRuntimeFilter pushes dimension selectivity across the join as
@@ -620,7 +620,7 @@ def test_stats_cbo_runtime_bloom_filters_fact_scan(spark):
                 f"innermost: {innermost}"
             )
     finally:
-        stats.unregister(spark, SF)
+        forget_stats(SF)
 
 
 def test_substring_dup_rate_single_explode_pass_no_join(spark):

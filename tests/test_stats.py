@@ -37,12 +37,11 @@ def _analyzable(schema: T.StructType) -> list[str]:
     ]
 
 
-def test_concurrent_registration_analyzes_every_table(spark):
+def test_concurrent_registration_analyzes_every_table(spark, forget_stats):
     """The tables are ANALYZEd concurrently: a race that dropped one
     table's statistics would leave its rowCount or a column's stats
     missing, and the CBO would silently plan that table blind."""
-    before = stats.stats_db_for(spark, SF)
-    stats.unregister(spark, SF)
+    before = forget_stats(SF)
     try:
         db = stats.register_stats_tables(spark, SF)
         for t in stats.STATS_TABLES:
@@ -57,10 +56,10 @@ def test_concurrent_registration_analyzes_every_table(spark):
                 assert _col_stats(spark, name, c)["num_nulls"] != "NULL", (t, c)
     finally:
         if before is None:
-            stats.unregister(spark, SF)
+            forget_stats(SF)
 
 
-def test_registration_quotes_location_path(spark, tmp_path):
+def test_registration_quotes_location_path(spark, tmp_path, forget_stats):
     """A fixture dir carrying a quote must reach ``LOCATION`` as an
     escaped string literal."""
     sf_dir = str(tmp_path / "it's_sf")
@@ -71,10 +70,10 @@ def test_registration_quotes_location_path(spark, tmp_path):
         assert spark.table(f"{db}.nation").count() == df.count()
         assert _row_count(spark, f"{db}.nation") == df.count()
     finally:
-        stats.unregister(spark, sf_dir)
+        forget_stats(sf_dir)
 
 
-def test_registration_quotes_column_names(spark, tmp_path):
+def test_registration_quotes_column_names(spark, tmp_path, forget_stats):
     """A column named ``my col`` must be quoted in the CREATE TABLE
     column list and in ``ANALYZE ... FOR COLUMNS``."""
     sf_dir = str(tmp_path / "spaced_sf")
@@ -88,4 +87,32 @@ def test_registration_quotes_column_names(spark, tmp_path):
         assert spark.table(name).columns == ["k", "my col"]
         assert _col_stats(spark, name, "my col")["num_nulls"] == "1"
     finally:
-        stats.unregister(spark, sf_dir)
+        forget_stats(sf_dir)
+
+
+def test_unregistered_table_reads_parquet(spark, tmp_path, forget_stats):
+    """A fixture dir registered with a subset of its tables serves the
+    rest from their parquet files: ``lookup`` reads orders and customer
+    beside the one registered table and returns the unregistered
+    read's rows."""
+    import shutil
+
+    from lookup_transform_spark import registry
+
+    sf_dir = str(tmp_path / "subset_sf")
+    os.makedirs(sf_dir)
+    for t in ("nation", "orders", "customer"):
+        src = os.path.join(SF, f"{t}.parquet")
+        shutil.copy(src, os.path.join(sf_dir, f"{t}.parquet"))
+
+    def rows():
+        return sorted(map(tuple, registry.QUERIES["lookup"](spark, sf_dir).collect()))
+
+    want = rows()
+    try:
+        stats.register_stats_tables(spark, sf_dir, tables=("nation",))
+        assert stats.stats_table(spark, sf_dir, "nation") is not None
+        assert stats.stats_table(spark, sf_dir, "orders") is None
+        assert rows() == want
+    finally:
+        forget_stats(sf_dir)

@@ -670,7 +670,7 @@ def test_batch_dirs_ignore_stray_entries(tmp_path):
     os.makedirs(os.path.join(root, "batch_00001_old"))
     open(os.path.join(root, "batch_00002"), "w").write("not a dir")
     # crashed fold: no _SUCCESS -> invisible
-    os.makedirs(os.path.join(root, "base_00003"))
+    os.makedirs(os.path.join(root, "seg_00000_00003"))
 
     got = [os.path.basename(d) for d in _batch_dirs(root)]
     assert got == ["batch_00001", "batch_00003"]
@@ -680,9 +680,9 @@ def test_batch_dirs_ignore_stray_entries(tmp_path):
         "batch_00003",
     ]
     # committed fold shadows older batches
-    open(os.path.join(root, "base_00003", "_SUCCESS"), "w").write("")
+    open(os.path.join(root, "seg_00000_00003", "_SUCCESS"), "w").write("")
     assert [os.path.basename(d) for d in _state_dirs(root)] == [
-        "base_00003",
+        "seg_00000_00003",
         "batch_00003",
     ]
 
