@@ -283,88 +283,43 @@ def range_join(
     lo_col: str,
     hi_col: str,
     band_fields: list[str],
-    how: str = "left",
-    strategy: str = "case",
 ) -> DataFrame:
-    """Half-open range lookup: input.value ∈ [band.lo, band.hi).
+    """Half-open range lookup, left-join shaped: input.value ∈
+    [band.lo, band.hi) attaches that band's fields, and a value in no
+    band keeps its row with NULL fields.
 
     ``bands`` may be a DataFrame or a plain list of dicts (keys
     ``lo_col``/``hi_col``/each band field) — the literal form compiles
     with zero Spark jobs, which matters when the banding is defined in
     application code rather than stored as a table.
 
-    strategy="case" (default): collect the band table (a dimension by
-    construction — if it doesn't fit on the driver it isn't a banding)
-    and compile it into a chained CASE expression — a pure projection,
-    whole-stage codegen, zero join. First matching band wins, so bands
-    must be disjoint (asserted).
-
-    strategy="bnlj": broadcast nested-loop join — keeps multiplicity on
-    overlapping bands, at interpreted-predicate cost (DataFrame bands
-    only).
+    The band table is collected (a dimension by construction — if it
+    doesn't fit on the driver it isn't a banding) and compiled into a
+    chained CASE expression — a pure projection, whole-stage codegen,
+    zero join. First matching band wins, so bands must be disjoint
+    (asserted).
     """
-    if strategy not in ("case", "bnlj"):
-        raise ValueError(
-            f"strategy must be 'case' or 'bnlj', got {strategy!r}"
-        )
-    if strategy == "case":
-        if how not in ("left", "inner"):
-            raise ValueError(
-                f"case strategy supports how='left'/'inner', got {how!r}"
-            )
-        if isinstance(bands, list):
-            rows = list(bands)
-        else:
-            rows = [r.asDict() for r in
-                    bands.select(lo_col, hi_col, *band_fields).collect()]
-        rows.sort(key=lambda r: r[lo_col])
-        for prev, cur in zip(rows, rows[1:]):
-            if cur[lo_col] < prev[hi_col]:
-                raise ValueError(
-                    "case strategy requires disjoint bands; use strategy='bnlj'"
-                )
-        v = input_df[value_col]
-        # `matched` is its own CASE, NOT "band value is non-null": a
-        # band whose payload field is NULL still MATCHES — an inner
-        # range join keeps that row (the join predicate held; only the
-        # payload is null), exactly as the bnlj strategy does.
-        matched = F.lit(False)
-        outs = []
-        for b in band_fields:
-            expr = None
-            for r in rows:
-                clause = (v >= F.lit(r[lo_col])) & (v < F.lit(r[hi_col]))
-                expr = (
-                    F.when(clause, F.lit(r[b]))
-                    if expr is None
-                    else expr.when(clause, F.lit(r[b]))
-                )
-            # no bands at all → every field is a typeless null, the
-            # left shape survives, inner yields zero rows
-            outs.append(
-                (F.lit(None) if expr is None else expr).alias(b)
-            )
-        for r in rows:
-            matched = matched | (
-                (v >= F.lit(r[lo_col])) & (v < F.lit(r[hi_col]))
-            )
-        base = input_df.filter(matched) if how == "inner" else input_df
-        return base.select(*[input_df[c] for c in input_df.columns], *outs)
     if isinstance(bands, list):
-        raise TypeError(
-            "strategy='bnlj' needs a DataFrame band table; literal "
-            "list bands compile only under strategy='case'"
-        )
-    pruned = bands.select(
-        F.col(lo_col).alias("__lo__"),
-        F.col(hi_col).alias("__hi__"),
-        *[F.col(b) for b in band_fields],
-    )
-    cond = (input_df[value_col] >= F.col("__lo__")) & (
-        input_df[value_col] < F.col("__hi__")
-    )
-    joined = input_df.join(F.broadcast(pruned), cond, how)
-    return joined.select(
-        *[input_df[c] for c in input_df.columns],
-        *[F.col(b) for b in band_fields],
-    )
+        rows = list(bands)
+    else:
+        rows = [r.asDict() for r in
+                bands.select(lo_col, hi_col, *band_fields).collect()]
+    rows.sort(key=lambda r: r[lo_col])
+    for prev, cur in zip(rows, rows[1:]):
+        if cur[lo_col] < prev[hi_col]:
+            raise ValueError("range_join requires disjoint bands")
+    v = input_df[value_col]
+    outs = []
+    for b in band_fields:
+        expr = None
+        for r in rows:
+            clause = (v >= F.lit(r[lo_col])) & (v < F.lit(r[hi_col]))
+            expr = (
+                F.when(clause, F.lit(r[b]))
+                if expr is None
+                else expr.when(clause, F.lit(r[b]))
+            )
+        # no bands at all → every field is a typeless null and the
+        # left shape survives
+        outs.append((F.lit(None) if expr is None else expr).alias(b))
+    return input_df.select(*[input_df[c] for c in input_df.columns], *outs)

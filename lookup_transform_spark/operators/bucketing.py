@@ -31,15 +31,12 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 8,
     path: str | None = None,
-    sort_by: str | None = None,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) table. Bucketed
-    layout requires the table catalog (saveAsTable), not a bare path.
-    Path-backed writes record a ``_BUCKET_SPEC.json`` sidecar so
-    re-attachment can validate its declared layout."""
+    """Persist as a bucketed table. Bucketed layout requires the table
+    catalog (saveAsTable), not a bare path. Path-backed writes record a
+    ``_BUCKET_SPEC.json`` sidecar so re-attachment can validate its
+    declared layout."""
     w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_by:
-        w = w.sortBy(sort_by)
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from lookup_transform_spark.hadoopfs import fs_exists
+
 # THE tokenization expression (split(lower(text), '\\s+')) — one copy,
 # shared with every text stat: its byte-identical DuckDB
 # string_split_regex contract is pinned in operators/text.py, and four
@@ -397,7 +399,7 @@ def _cap_group_size(
 
 
 def _exact_precluster(
-    docs: DataFrame, id_col: str, text_col: str, pin_width: bool = True
+    docs: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse exact-duplicate texts to one representative per group
     BEFORE candidate generation.
@@ -431,9 +433,8 @@ def _exact_precluster(
     core — measured 5.1 s vs 1.0 s for the whole minhash query at sf0.1
     (the round-4 dedup_minhash regression), and 2.44 s vs 2.65 s for
     simhash (interleaved min-of-4; the lighter its downstream UDF, the
-    smaller the pin's margin). ``pin_width=False`` opts out for callers
-    whose downstream is trivially cheap. At cluster scale the shuffle is
-    corpus-sized either way and AQE won't coalesce it — the knob only
+    smaller the pin's margin). At cluster scale the shuffle is
+    corpus-sized either way and AQE won't coalesce it — the pin only
     matters where the corpus is small relative to the executor count.
     """
     # NULL text gets a NULL fingerprint, never the hash seed: Spark's
@@ -446,16 +447,15 @@ def _exact_precluster(
         "__fp__",
         F.when(F.col(text_col).isNotNull(), F.xxhash64(F.col(text_col))),
     )
-    if pin_width:
-        try:
-            n = docs.sparkSession.sparkContext.defaultParallelism
-        except Exception:
-            # Spark Connect exposes no sparkContext — same fallback as
-            # _ensure_parallel: keep the planner's width rather than
-            # crash the operator before it does any work
-            n = None
-        if n:
-            fp = fp.repartition(n, F.col("__fp__"))
+    try:
+        n = docs.sparkSession.sparkContext.defaultParallelism
+    except Exception:
+        # Spark Connect exposes no sparkContext — same fallback as
+        # _ensure_parallel: keep the planner's width rather than
+        # crash the operator before it does any work
+        n = None
+    if n:
+        fp = fp.repartition(n, F.col("__fp__"))
     w = Window.partitionBy("__fp__")
     tagged = fp.withColumn(
         "__rep__",
@@ -722,21 +722,16 @@ def _md5_token_hash(tok: F.Column) -> F.Column:
     return F.when(u >= two63, u - two64).otherwise(u).cast("long")
 
 
-def simhash_signature_text_pandas(
-    text_col: str, bits: int = 64, hash_family: str = "xxhash64"
-) -> F.Column:
+def simhash_signature_text_pandas(text_col: str, bits: int = 64) -> F.Column:
     """SimHash over distinct word tokens: bit j of the signature is set
     when Σ_tokens (±1 by bit j of the token hash) >= 0. Token hashing
     runs JVM-side; the bit-vote accumulation is vectorized in numpy.
 
-    ``hash_family``: ``"xxhash64"`` (default — fastest, engine-native)
-    or ``"md5"`` (first 64 md5 bits via ``_md5_token_hash`` — portable
-    across engines, so an external SQL oracle can reproduce the exact
-    signature; same 2⁻⁶⁴ collision class, ~same vote statistics)."""
+    Tokens hash to the first 64 md5 bits (``_md5_token_hash``) — the
+    family an external SQL oracle can reproduce, so the exact
+    signature, and every hamming distance, is oracle-checkable."""
     if bits % 8:
         raise ValueError(f"bits must be a multiple of 8, got {bits}")
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
 
     @pandas_udf("long")
     def _sig(hashes: pd.Series) -> pd.Series:
@@ -793,11 +788,7 @@ def simhash_signature_text_pandas(
         return pd.Series(out, dtype="int64")
 
     tokens = F.array_distinct(_tokens(text_col))
-    if hash_family == "md5":
-        hashes = F.transform(tokens, _md5_token_hash)
-    else:
-        hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    return _sig(hashes)
+    return _sig(F.transform(tokens, _md5_token_hash))
 
 
 def simhash_pairs(
@@ -809,14 +800,11 @@ def simhash_pairs(
     chunks: int = 4,
     max_bucket_size: int | None = 1000,
     precluster_exact: bool = True,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with simhash hamming distance <= max_hamming.
-
-    ``hash_family="md5"`` switches token hashing to the portable
-    md5-derived family (``_md5_token_hash``) so an independent SQL
-    engine can recompute the identical signatures and hamming
-    distances — the oracle-checkable configuration.
+    Signatures come from ``simhash_signature_text_pandas`` (md5 token
+    hashes), so an independent SQL engine can recompute the identical
+    signatures and hamming distances.
 
     Pigeonhole blocking: split the signature into ``chunks`` pieces; any
     pair within distance < chunks must agree on >= 1 chunk, so candidates
@@ -858,7 +846,7 @@ def simhash_pairs(
     # token hash and stays comparable.)
     sig = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id__"),
-        simhash_signature_text_pandas(text_col, bits, hash_family).alias("__sig__"),
+        simhash_signature_text_pandas(text_col, bits).alias("__sig__"),
     )
     # 64-bit chunk (chunks=1): (1 << 64) - 1 exceeds Long.MaxValue and
     # fails lit() conversion — the all-ones long is -1 in two's
@@ -1276,16 +1264,6 @@ def _lsh_bands_and_store(
     return banded, store
 
 
-def _fs_exists(spark, path_str: str) -> bool:
-    """Existence check through the path's OWN Hadoop FileSystem — a
-    driver-local ``os.path.exists`` is False for every hdfs://s3a://
-    location (and for ``file:`` URIs), which here would read as
-    "no index" and silently skip the near-dup probe."""
-    from lookup_transform_spark.hadoopfs import fs_exists
-
-    return fs_exists(spark, path_str)
-
-
 def _lsh_current_location(spark, default_path: str) -> str:
     """Resolve a standing-table location to its newest committed
     generation.
@@ -1355,7 +1333,7 @@ def lsh_index_ready(
         if spark.catalog.tableExists(table):
             continue
         loc = _lsh_current_location(spark, f"{path}/{sub}")
-        if not _fs_exists(spark, loc + "/_SUCCESS"):
+        if not fs_exists(spark, loc + "/_SUCCESS"):
             ok = False
             continue
         schema = spark.read.parquet(loc).schema

@@ -18,10 +18,9 @@ Decode is REAL on two tiers:
    lossless containers.
 
 An unrecognized format with no library present raises a clear
-``NotImplementedError``; ``fake=True`` always selects the deterministic
-stand-in (byte-tiling / byte-PCM) that the oracle checks pin. The
-Spark-side contract — schemas, batch iteration, partitioning, binary
-transport through joins — is identical on every path.
+``NotImplementedError``. The Spark-side contract — schemas, batch
+iteration, partitioning, binary transport through joins — is identical
+on every path.
 """
 
 from __future__ import annotations
@@ -337,64 +336,53 @@ def attach_payload(
     )
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """Decode an image payload to an HxWx3 uint8 RGB array.
 
-    Real path: the built-in pure-numpy decoders for PPM/BMP (sniffed by
-    magic bytes — byte-exact, no dependency), Pillow for everything
-    else (PNG/JPEG/..., lazily imported on the executor). ``fake=True``
-    selects the deterministic byte-tiling stand-in regardless of
-    payload content or codec presence."""
-    if not fake:
-        if payload[:2] == b"P6":
-            return _decode_ppm(payload)
-        if payload[:2] == b"BM":
-            return _decode_bmp(payload)
-        Image = _pillow()
-        if Image is None and payload[:8] == b"\x89PNG\r\n\x1a\n":
-            # PNG is lossless: the built-in decoder returns the same
-            # pixels Pillow would; Pillow (C) is preferred when present
-            return _decode_png(payload)
-        if Image is None:
-            raise NotImplementedError(
-                "image decode of this format requires Pillow (pip install "
-                "pillow) on the executors; PPM/BMP/PNG decode is built "
-                "in; pass fake=True for the deterministic stand-in"
-            )
-        import io  # noqa: PLC0415
+    The built-in pure-numpy decoders for PPM/BMP (sniffed by magic
+    bytes — byte-exact, no dependency), Pillow for everything else
+    (PNG/JPEG/..., lazily imported on the executor)."""
+    if payload[:2] == b"P6":
+        return _decode_ppm(payload)
+    if payload[:2] == b"BM":
+        return _decode_bmp(payload)
+    Image = _pillow()
+    if Image is None and payload[:8] == b"\x89PNG\r\n\x1a\n":
+        # PNG is lossless: the built-in decoder returns the same
+        # pixels Pillow would; Pillow (C) is preferred when present
+        return _decode_png(payload)
+    if Image is None:
+        raise NotImplementedError(
+            "image decode of this format requires Pillow (pip install "
+            "pillow) on the executors; PPM/BMP/PNG decode is built in"
+        )
+    import io  # noqa: PLC0415
 
-        with Image.open(io.BytesIO(payload)) as img:
-            return np.asarray(img.convert("RGB"))
-    # deterministic fake: tile the bytes into a fixed 8x8 "image"
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    out = np.resize(arr, (8, 8, 3))
-    return out
+    with Image.open(io.BytesIO(payload)) as img:
+        return np.asarray(img.convert("RGB"))
 
 
-def decode_audio(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_audio(payload: bytes) -> np.ndarray:
     """Decode an audio payload to a 1-D float32 PCM array (mono-mixed).
 
-    Real path: the built-in pure-numpy WAV/PCM decoder (sniffed by the
-    RIFF magic — no dependency), soundfile for everything else
-    (FLAC/OGG/..., lazily imported on the executor). ``fake=True``
-    selects the byte-PCM stand-in."""
-    if not fake:
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            return _decode_wav(payload)
-        sf = _soundfile()
-        if sf is None:
-            raise NotImplementedError(
-                "audio decode of this format requires soundfile (pip "
-                "install soundfile) on the executors; WAV/PCM decode is "
-                "built in; pass fake=True for the deterministic stand-in"
-            )
-        import io  # noqa: PLC0415
+    The built-in pure-numpy WAV/PCM decoder (sniffed by the RIFF magic —
+    no dependency), soundfile for everything else (FLAC/OGG/..., lazily
+    imported on the executor)."""
+    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+        return _decode_wav(payload)
+    sf = _soundfile()
+    if sf is None:
+        raise NotImplementedError(
+            "audio decode of this format requires soundfile (pip "
+            "install soundfile) on the executors; WAV/PCM decode is "
+            "built in"
+        )
+    import io  # noqa: PLC0415
 
-        data, _rate = sf.read(io.BytesIO(payload), dtype="float32")
-        if data.ndim > 1:  # mix channels down to mono
-            data = data.mean(axis=1)
-        return data
-    return np.frombuffer(payload, dtype=np.uint8).astype(np.float32) / 255.0
+    data, _rate = sf.read(io.BytesIO(payload), dtype="float32")
+    if data.ndim > 1:  # mix channels down to mono
+        data = data.mean(axis=1)
+    return data
 
 
 def resize_image(
@@ -418,7 +406,7 @@ def extract_features(
     input columns (same contract as ``decode_stats`` — hardcoding them
     surfaced as an opaque executor KeyError on renamed frames).
 
-    Features here are the deterministic fake: payload length, mean byte
+    Features here are raw-byte statistics: payload length, mean byte
     value, byte entropy, and an 8-bin byte histogram as array<float>.
     """
 
@@ -445,8 +433,8 @@ def extract_features(
                 # every emitted feature derives from the RAW bytes — no
                 # decode step here (a decode call whose result feeds
                 # nothing would waste a per-row conversion and, on
-                # non-audio payloads with fake=False, crash a stage
-                # whose features never needed the samples)
+                # non-audio payloads, crash a stage whose features
+                # never needed the samples)
                 byts = np.frombuffer(bytes(payload), dtype=np.uint8)
                 hist = np.histogram(byts, bins=8, range=(0, 256))[0]
                 p = hist / max(1, byts.size)
@@ -485,7 +473,7 @@ def decode_stats(
     This is the executable form of the B54 claim: actual container
     parsing (PPM/BMP/WAV via the built-in codecs, PNG/JPEG/FLAC/... via
     Pillow/soundfile when installed) runs on the executors inside an
-    Arrow-batched ``mapInPandas`` — not the ``fake=True`` stand-in.
+    Arrow-batched ``mapInPandas``.
     Audio reports (1, n_samples); images report (height, width).
     """
 

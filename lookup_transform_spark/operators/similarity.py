@@ -33,7 +33,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str | None = None,
     exclude_self: bool = True,
     max_query_rows: int = 100_000,
 ) -> DataFrame:
@@ -56,7 +55,6 @@ def cosine_topk(
     """
     from lookup_transform_spark.plans.lookup import _estimated_rows
 
-    qid = query_id_col or id_col
     # unknown size must CONFIRM, never allow (same polarity as the
     # broadcast gate and embedding_near_dup's guard): when statistics
     # are unavailable (Spark Connect, stats outage) est is None and the
@@ -83,7 +81,7 @@ def cosine_topk(
     # row must not kill the job — np.array over a ragged list raises)
     q_rows = (
         queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec__"))
+        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec__"))
         .collect()
     )
     if not q_rows:

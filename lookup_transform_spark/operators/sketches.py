@@ -368,6 +368,8 @@ def topk_merge(leaves: DataFrame, group_cols: list[str], k: int = 10) -> DataFra
 # parameters owned by the dependency-free oracle module so engine and
 # oracle can never drift (the synthetic.py convention)
 from lookup_transform_spark.operators.sketches_oracle import (  # noqa: E402
+    HLL_ALPHA as _HLL_ALPHA,
+    HLL_M as _HLL_M,
     HLL_WBITS as _HLL_WBITS,
 )
 
@@ -468,6 +470,23 @@ def fused_hll_qsketch_leaves(
     )
 
 
+def _hll_estimate() -> Column:
+    """``approx_distinct`` from a group's register columns: ``__s__`` is
+    Σ 2^-r over its ``__p__`` non-empty registers. Raw estimate
+    α·m² / (__s__ + empty registers), switching to linear counting
+    m·ln(m / empty) at or below 2.5·m while any register is empty."""
+    m = float(_HLL_M)
+    e_raw = F.lit(_HLL_ALPHA * m * m) / (
+        F.col("__s__") + (F.lit(m) - F.col("__p__"))
+    )
+    v0 = F.lit(m) - F.col("__p__")
+    est = F.when(
+        (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
+        F.lit(m) * F.log(F.lit(m) / v0),
+    ).otherwise(e_raw)
+    return F.round(est, 3).alias("approx_distinct")
+
+
 def hll_portable_estimate_from_leaves(
     leaves: DataFrame, group_cols: list[str]
 ) -> DataFrame:
@@ -477,11 +496,6 @@ def hll_portable_estimate_from_leaves(
     explodes the leaves once, MAXes per (group, bucket), and reads the
     harmonic mean off those rows. Equal to the layered merge-then-
     estimate reference in tests/test_sketches.py (pinned there)."""
-    from lookup_transform_spark.operators.sketches_oracle import (
-        HLL_ALPHA,
-        HLL_M,
-    )
-
     leaves = leaves.localCheckpoint()  # two consumers, bounded rows
     totals = leaves.groupBy(*group_cols).agg(F.sum("n_rows").alias("n_rows"))
     regs = (
@@ -492,7 +506,6 @@ def hll_portable_estimate_from_leaves(
         .groupBy(*group_cols, "__b__")
         .agg(F.max("__r__").alias("__r__"))
     )
-    m = float(HLL_M)
     agg = regs.groupBy(*group_cols).agg(
         F.sum(F.pow(F.lit(0.5), F.col("__r__").cast("double"))).alias("__s__"),
         F.count(F.lit(1)).cast("double").alias("__p__"),
@@ -503,19 +516,7 @@ def hll_portable_estimate_from_leaves(
         F.coalesce("__p__", F.lit(0.0)).alias("__p__"),
         "n_rows",
     )
-    e_raw = F.lit(HLL_ALPHA * m * m) / (
-        F.col("__s__") + (F.lit(m) - F.col("__p__"))
-    )
-    v0 = F.lit(m) - F.col("__p__")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
-        F.lit(m) * F.log(F.lit(m) / v0),
-    ).otherwise(e_raw)
-    return joined.select(
-        *group_cols,
-        F.round(est, 3).alias("approx_distinct"),
-        "n_rows",
-    )
+    return joined.select(*group_cols, _hll_estimate(), "n_rows")
 
 
 def hll_portable_distinct(
@@ -530,11 +531,6 @@ def hll_portable_distinct(
     ``hll_portable_estimate_from_leaves``. Direct ≡ leaves ≡ the
     layered sketch/merge/estimate reference is pinned in
     tests/test_sketches.py."""
-    from lookup_transform_spark.operators.sketches_oracle import (
-        HLL_ALPHA,
-        HLL_M,
-    )
-
     bucket, rank = _hll_bucket_rank(F.col(key_col))
     notnull = F.col(key_col).isNotNull()
     regs = (
@@ -547,7 +543,6 @@ def hll_portable_distinct(
         .groupBy(*group_cols, "__b__")
         .agg(F.max("__r__").alias("__r__"), F.sum("__k__").alias("__n__"))
     )
-    m = float(HLL_M)
     agg = regs.groupBy(*group_cols).agg(
         F.coalesce(
             F.sum(
@@ -563,16 +558,4 @@ def hll_portable_distinct(
         .alias("__p__"),
         F.sum("__n__").alias("n_rows"),
     )
-    e_raw = F.lit(HLL_ALPHA * m * m) / (
-        F.col("__s__") + (F.lit(m) - F.col("__p__"))
-    )
-    v0 = F.lit(m) - F.col("__p__")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
-        F.lit(m) * F.log(F.lit(m) / v0),
-    ).otherwise(e_raw)
-    return agg.select(
-        *group_cols,
-        F.round(est, 3).alias("approx_distinct"),
-        "n_rows",
-    )
+    return agg.select(*group_cols, _hll_estimate(), "n_rows")

@@ -130,16 +130,12 @@ def content_fingerprint(text_col: str | Column) -> Column:
     return F.md5(normalized)
 
 
-def rolling_fingerprint(
-    text_col: str, window: int = 5, hash_family: str = "xxhash64"
-) -> Column:
+def rolling_fingerprint(text_col: str, window: int = 5) -> Column:
     """Rolling-hash-style robust fingerprint: min hash over word
     ``window``-grams — stable under small insertions/deletions
-    (winnowing-lite). JVM-side either way. ``hash_family``:
-    ``"xxhash64"`` (fastest; engine-specific, so rows-only checks) or
-    ``"md5"`` (first 64 md5 bits via the dedup module's signed fold —
-    the portable family, reproducible by an ANSI-SQL oracle
-    bit-for-bit; same min-over-window semantics, ~2-3× the hash cost)."""
+    (winnowing-lite), JVM-side. Each shingle hashes to its first 64 md5
+    bits via the dedup module's signed fold — the portable family, so
+    an ANSI-SQL oracle reproduces the fingerprint bit-for-bit."""
     from lookup_transform_spark.operators.dedup import (
         _md5_token_hash,
         shingles,
@@ -149,12 +145,7 @@ def rolling_fingerprint(
         # dedup.shingles takes a column NAME (annotation says so too);
         # accepting Column here would diverge from the oracle's shape
         raise TypeError("rolling_fingerprint requires a column name")
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    sh = shingles(text_col, window)
-    if hash_family == "md5":
-        return F.array_min(F.transform(sh, _md5_token_hash))
-    return F.array_min(F.transform(sh, lambda s: F.xxhash64(s)))
+    return F.array_min(F.transform(shingles(text_col, window), _md5_token_hash))
 
 
 def gopher_quality(

@@ -397,15 +397,13 @@ WHERE bit_count(xor(a.sig, b.sig)) <= {max_hamming}"""
 def q_dedup_simhash(spark, sf):
     """B51: SimHash near-dup with pigeonhole banding (hamming <= 3).
 
-    Runs the portable md5 hash family (``hash_family="md5"``) so the
-    DuckDB oracle can recompute the IDENTICAL 64-bit signatures and
-    hamming distances from the raw text — signature equality is pinned
-    bit-for-bit in test_dedup. The oracle is the brute-force all-pairs
+    Token hashes are the portable md5 family, so the DuckDB oracle can
+    recompute the IDENTICAL 64-bit signatures and hamming distances
+    from the raw text — signature equality is pinned bit-for-bit in
+    test_dedup_caps. The oracle is the brute-force all-pairs
     formulation; the engine only ever joins within pigeonhole chunk
     buckets (lossless for hamming < chunks), which is the scale path."""
-    return DD.simhash_pairs(
-        _t(spark, sf, "documents"), max_hamming=3, hash_family="md5"
-    )
+    return DD.simhash_pairs(_t(spark, sf, "documents"), max_hamming=3)
 
 
 @_q(
@@ -478,16 +476,13 @@ def q_fingerprint_rolling(spark, sf):
     (``operators/dedup._md5_token_hash``'s signed fold — the one 64-bit
     family both engines share, already pinned bit-equal for simhash),
     so the min-over-windows fingerprint is recomputed independently by
-    the DuckDB oracle. The xxhash64 family remains available on the
-    operator for speed-first pipelines (rows-only there by nature)."""
+    the DuckDB oracle."""
     from lookup_transform_spark.operators.dedup import _ensure_parallel
 
     d = _ensure_parallel(_t(spark, sf, "documents"), "doc_id")
     return d.select(
         "doc_id",
-        TX.rolling_fingerprint("text", window=5, hash_family="md5").alias(
-            "rfp"
-        ),
+        TX.rolling_fingerprint("text", window=5).alias("rfp"),
     )
 
 

@@ -29,8 +29,8 @@ from lookup_transform_spark.registry import (
 
 @_q("multimodal_features")
 def q_multimodal_features(spark, sf):
-    """B54: binary payload → mapInPandas feature extraction (decode step
-    stubbed with a deterministic fake; plumbing is real)."""
+    """B54: binary payload → mapInPandas feature extraction (features
+    derive from the raw bytes, no decode step)."""
     from lookup_transform_spark.operators.multimodal import (
         attach_payload,
         extract_features,
@@ -160,12 +160,11 @@ def q_stream_lookup(spark, sf):
     from lookup_transform_spark.streaming import (
         read_events_stream,
         run_to_memory,
-        stream_static_lookup,
     )
 
     ev = read_events_stream(spark, sf).select("event_id", "user_id")
     spec = LookupSpec("customer", "user_id", "c_custkey", "c_mktsegment", "segment")
-    out = stream_static_lookup(ev, _t(spark, sf, "customer"), spec)
+    out = spec.apply(ev, _t(spark, sf, "customer"))
     return run_to_memory(out, f"mem_stream_lookup_{_vtag(sf)}")
 
 

@@ -2,8 +2,7 @@
 
 Partition-aware writes are the scale contract: a 100 TB table written
 ``partitionBy`` on its natural pruning key turns downstream scans into
-partition-pruned reads. ``max_records_per_file`` guards against the
-small-files problem on high-cardinality partition keys.
+partition-pruned reads.
 """
 
 from __future__ import annotations
@@ -16,11 +15,8 @@ def write_parquet_partitioned(
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-    max_records_per_file: int | None = None,
 ) -> None:
     w = df.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)

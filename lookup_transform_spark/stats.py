@@ -198,7 +198,6 @@ def stats_table(spark: SparkSession, sf_dir: str, table: str) -> str | None:
 def enable_cbo(
     spark: SparkSession,
     application_side_threshold: str | None = None,
-    broadcast_threshold: str | None = "32MB",
 ) -> None:
     """Switch on the statistics-consuming optimizations.
 
@@ -211,24 +210,22 @@ def enable_cbo(
     creation-side stats either way, and Bloom false positives only
     cost shuffle bytes — the closing join keeps results exact.
 
-    ``broadcast_threshold`` raises ``autoBroadcastJoinThreshold`` from
-    Spark's 10MB default: with accurate post-filter estimates (the NTZ
-    fix above), the date-windowed fact-join family sits at 10-30MB
-    estimated build size, and 10MB leaves it in both-sides-shuffled
+    ``autoBroadcastJoinThreshold`` goes from Spark's 10MB default to
+    32MB: with accurate post-filter estimates (the NTZ fix above), the
+    date-windowed fact-join family sits at 10-30MB estimated build size, and 10MB leaves it in both-sides-shuffled
     SortMergeJoin. The r8 A/B at the 32x probe (.scratch/ntz_ab.json,
     PLANS.md): 32MB turns the whole tail into broadcast joins — e.g.
     tpch_q10 1.47→0.64 s, tpch_q16 1.22→0.55 s, tpch_q21 5.3→1.8 s —
     and 64MB adds nothing further. A 32MB hashed relation is ~100MB of
     executor memory: routine for the 4GB+ executors this targets, and
     only reachable when statistics EXIST (no stats → Spark's default
-    conservative path). Pass None to leave the session default."""
+    conservative path)."""
     confs = {
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": "32MB",
     }
-    if broadcast_threshold is not None:
-        confs["spark.sql.autoBroadcastJoinThreshold"] = broadcast_threshold
     if application_side_threshold is not None:
         confs[
             "spark.sql.optimizer.runtime.bloomFilter."

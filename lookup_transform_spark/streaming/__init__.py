@@ -1,7 +1,6 @@
 from lookup_transform_spark.streaming.lookup_stream import (
     read_events_stream,
     run_to_memory,
-    stream_static_lookup,
 )
 from lookup_transform_spark.streaming.windows import (
     stream_dedup_within_watermark,
@@ -12,7 +11,6 @@ from lookup_transform_spark.streaming.windows import (
 __all__ = [
     "read_events_stream",
     "run_to_memory",
-    "stream_static_lookup",
     "stream_dedup_within_watermark",
     "stream_session_window",
     "stream_tumbling_window",

@@ -3,9 +3,11 @@
 The reference registers the Lookup plugin for streaming pipelines
 (pom.xml:30) but implements batch only; this module supplies the
 natural streaming reading — a Structured Streaming source enriched by
-a static dimension with the same LookupSpec semantics. The static side
-of a stream-static join is effectively broadcast per micro-batch,
-mirroring the reference's broadcast flag (Lookup.java:208).
+a static dimension through ``LookupSpec.apply`` itself: stream-static
+joins are stateless, each micro-batch joins against the static
+snapshot, and left-outer is supported for stream-on-the-left. The
+static side is effectively broadcast per micro-batch, mirroring the
+reference's broadcast flag (Lookup.java:208).
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lookup_transform_spark.plans.lookup import LookupSpec
 from lookup_transform_spark.session import (
     NANOS_AS_LONG,
     scoped_confs,
@@ -58,15 +59,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = spark.readStream.schema(batch.schema).parquet(stage)
     return normalize_events_ts(stream)
-
-
-def stream_static_lookup(
-    stream_df: DataFrame, static_lookup: DataFrame, spec: LookupSpec
-) -> DataFrame:
-    """B60: LookupSpec applied with a streaming input side. Stream-static
-    joins are stateless — each micro-batch joins against the static
-    snapshot; left-outer is supported for stream-on-the-left."""
-    return spec.apply(stream_df, static_lookup)
 
 
 def run_to_memory(

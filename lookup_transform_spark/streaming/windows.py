@@ -17,16 +17,12 @@ def stream_tumbling_window(
     key: str = "event_type",
     window: str = "10 minutes",
     watermark: str = "1 hour",
-    slide: str | None = None,
 ) -> DataFrame:
-    """B61/B62: tumbling (or sliding) window counts with late-data
-    watermark. Streaming state is bounded by the watermark horizon."""
-    win = (
-        F.window(ts, window, slide) if slide else F.window(ts, window)
-    )
+    """B61/B62: tumbling window counts with late-data watermark.
+    Streaming state is bounded by the watermark horizon."""
     return (
         stream_df.withWatermark(ts, watermark)
-        .groupBy(win.alias("w"), key)
+        .groupBy(F.window(ts, window).alias("w"), key)
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").cast("long").alias("w_start"),

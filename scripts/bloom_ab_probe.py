@@ -57,20 +57,24 @@ FIX128 = f"{REPO}/.scratch/bloom128"
 EVDIR = f"{REPO}/.scratch/bloom_eventlogs"
 
 
-def fresh_session(app: str) -> SparkSession:
+def fresh_session(
+    app: str, extra_confs: dict[str, str] | None = None
+) -> SparkSession:
     """The shared session builder (session.get_spark) + event logging:
     the A/B's wall numbers must be measured under the SAME confs the
     bench uses — the previous hand-built session ran a 48g heap
     (documented in session.py as 2.4x slower past the CompressedOops
     boundary) and no UTC pin (shifting the NTZ date-window key sets
     with the host timezone), making its numbers incomparable (r8
-    review)."""
+    review). ``extra_confs`` are an arm's own settings, applied at
+    build time with the rest."""
     from lookup_transform_spark.session import get_spark
 
     s = get_spark(app, extra_confs={
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": f"file://{EVDIR}",
         "spark.eventLog.compress": "false",
+        **(extra_confs or {}),
     })
     s.sparkContext.setLogLevel("ERROR")
     return s
@@ -163,11 +167,16 @@ def shuffle_bytes_of_app(app_id: str) -> int:
 def run_arm(shape: str, sf_dir: str, force: str, repeats: int = 2) -> dict:
     """Fresh session per arm: warm repeats for wall clock, event log for
     shuffled bytes (divided by the number of executions)."""
-    spark = fresh_session(f"bloomab-{shape}-{force}")
+    # shapes B and C measure the shuffled join: broadcast off
+    no_broadcast = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    spark = fresh_session(
+        f"bloomab-{shape}-{force}",
+        no_broadcast if shape in ("B", "C") else None,
+    )
     try:
-        if shape in ("B", "C"):
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         rec = timing.time_query(
             spark, lambda s, d: arm_df(s, shape, d, force), sf_dir, repeats
         )

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lookup_transform_spark import registry, timing
+from lookup_transform_spark import registry, stats, timing
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -168,6 +168,11 @@ def main() -> None:
               {"customer": 512, "orders": 16, "lineitem": 16,
                "documents": 16, "embeddings": 16})
         build(spark, OUT1024, {"customer": 1024, "orders": 32})
+    # same protocol as bench.py and the scaling probes: ingest-time
+    # catalog stats + CBO, registered outside every timed window
+    for sf_dir in (BASE32, OUT512, OUT1024):
+        stats.register_stats_tables(spark, sf_dir)
+    stats.enable_cbo(spark, application_side_threshold="10MB")
 
     out = {
         "fixture": {"512x": OUT512, "1024x": OUT1024},

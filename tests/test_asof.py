@@ -333,13 +333,10 @@ def test_value_field_collision_with_left_column_refused(spark):
 
 
 def test_range_join_case_edge_semantics(spark):
-    """r8 review pins for strategy='case': (a) a matching band whose
-    payload is NULL is still a MATCH — inner keeps the row, same as
-    bnlj; (b) an empty band table yields all-null payloads (left) /
-    zero rows (inner) instead of crashing; (c) unknown strategies and
-    unsupported how are refused; (d) bnlj refuses literal list bands."""
-    import pytest as _pytest
-
+    """r8 review pins for the CASE compilation: (a) a matching band
+    whose payload is NULL and a value in no band both keep their row
+    with a NULL payload; (b) an empty band table yields all-null
+    payloads instead of crashing."""
     from lookup_transform_spark.operators.asof import range_join
 
     df = spark.createDataFrame([(10,), (75,), (200,)], "value long")
@@ -347,26 +344,11 @@ def test_range_join_case_edge_semantics(spark):
         {"lo": 0, "hi": 50, "band": None},   # matching but null payload
         {"lo": 50, "hi": 100, "band": "mid"},
     ]
-    inner = range_join(df, bands, "value", "lo", "hi", ["band"], how="inner")
-    assert _rows(inner) == [(10, None), (75, "mid")]  # 10 kept, 200 dropped
-    left = range_join(df, bands, "value", "lo", "hi", ["band"], how="left")
+    left = range_join(df, bands, "value", "lo", "hi", ["band"])
     assert _rows(left) == [(10, None), (200, None), (75, "mid")]
 
     empty_left = range_join(df, [], "value", "lo", "hi", ["band"])
     assert _rows(empty_left) == [(10, None), (200, None), (75, None)]
-    empty_inner = range_join(
-        df, [], "value", "lo", "hi", ["band"], how="inner"
-    )
-    assert empty_inner.count() == 0
-
-    with _pytest.raises(ValueError, match="strategy"):
-        range_join(df, bands, "value", "lo", "hi", ["band"],
-                   strategy="broadcast")
-    with _pytest.raises(ValueError, match="how"):
-        range_join(df, bands, "value", "lo", "hi", ["band"], how="full")
-    with _pytest.raises(TypeError, match="bnlj"):
-        range_join(df, bands, "value", "lo", "hi", ["band"],
-                   strategy="bnlj")
 
 
 def test_salted_join_validates_invariance_breakers(spark):

@@ -334,11 +334,12 @@ def test_simhash_pigeonhole_is_complete_vs_brute_force(spark):
     """Pigeonhole blocking is lossless by construction for
     hamming <= max_hamming < chunks: a pair within distance 3 must agree
     on at least one of the 4 signature chunks. Pin the whole pipeline
-    against the brute-force cross-join ground truth — 1148/1148 pairs at
-    sf0.001, no missing, no extra. (Exact set equality holds because
-    this fixture has no exact-duplicate text group of size >= 3; such
-    groups would legitimately return as star edges rather than cliques,
-    preserving connected components but not the raw pair set.)"""
+    (the registry's md5 token hashes) against the brute-force cross-join
+    ground truth on the same signatures — no missing, no extra pairs.
+    (Exact set equality holds because this fixture has no exact-duplicate
+    text group of size >= 3; such groups would legitimately return as
+    star edges rather than cliques, preserving connected components but
+    not the raw pair set.)"""
     from pyspark.sql import functions as F
 
     from lookup_transform_spark.operators.dedup import (
@@ -506,7 +507,7 @@ def test_simhash_md5_family_matches_duckdb_bit_for_bit(spark):
         r["doc_id"]: r["sig"] & ((1 << 64) - 1)
         for r in docs.select(
             "doc_id",
-            simhash_signature_text_pandas("text", 64, "md5").alias("sig"),
+            simhash_signature_text_pandas("text").alias("sig"),
         ).collect()
     }
 
@@ -534,38 +535,6 @@ def test_simhash_md5_family_matches_duckdb_bit_for_bit(spark):
     assert len(got) == len(want) and got.keys() == want.keys()
     mismatched = [k for k in got if got[k] != int(want[k])]
     assert not mismatched, f"{len(mismatched)} signature mismatches: {mismatched[:5]}"
-
-
-def test_simhash_pairs_md5_pigeonhole_complete(spark):
-    """Pigeonhole completeness must hold in the md5 family too (the
-    registry configuration): simhash_pairs(hash_family='md5') equals the
-    brute-force hamming <= 3 cross-join on the md5 signatures."""
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.operators.dedup import (
-        simhash_signature_text_pandas,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sig = docs.select(
-        F.col("doc_id").alias("id"),
-        simhash_signature_text_pandas("text", 64, "md5").alias("s"),
-    )
-    truth = {
-        (r["ida"], r["idb"])
-        for r in sig.selectExpr("id AS ida", "s AS sa")
-        .crossJoin(sig.selectExpr("id AS idb", "s AS sb"))
-        .filter("ida < idb")
-        .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 3)
-        .collect()
-    }
-    got = {
-        (r["doc_id_a"], r["doc_id_b"])
-        for r in simhash_pairs(docs, max_hamming=3, hash_family="md5").collect()
-    }
-    assert truth and got == truth, (
-        f"missing={len(truth - got)} extra={len(got - truth)}"
-    )
 
 
 def test_lsh_compaction_generation_swap_and_catalog_recovery(spark, tmp_path):

@@ -340,47 +340,3 @@ def test_manifest_sink_zero_task_job_publishes_empty_manifest(spark, tmp_path):
     assert man["total_rows"] == 0
     on_disk = {f for f in os.listdir(path) if f.endswith(".jsonl")}
     assert on_disk == {s["shard"] for s in man["shards"]}
-
-
-def test_compact_partitioned_bounds_files_per_directory(spark, tmp_path):
-    """r8 review: coalesce(N) with partition_by multiplies files (every
-    task writes into every directory it holds rows for, N x |values|);
-    the hash repartition bounds it to ~one file per partition dir."""
-    import glob as _glob
-
-    from lookup_transform_spark.operators.compaction import compact_parquet
-
-    src = str(tmp_path / "src")
-    spark.range(10_000).selectExpr(
-        "id", "id % 10 AS dt"
-    ).repartition(16).write.parquet(src)
-    dst = str(tmp_path / "dst")
-    out = compact_parquet(
-        spark, src, dst, target_files=8, partition_by=["dt"]
-    )
-    assert out.count() == 10_000
-    for d in _glob.glob(f"{dst}/dt=*"):
-        files = _glob.glob(f"{d}/part-*.parquet")
-        assert len(files) == 1, d
-
-
-def test_compact_partitioned_no_target_clusters_by_partition(spark, tmp_path):
-    """r8 review: partition_by WITHOUT target_files kept the source's
-    fragmented task layout, multiplying files (N tasks x |values| dirs)
-    from a function whose purpose is to bound them; it must cluster by
-    the partition columns instead."""
-    import glob as _glob
-
-    from lookup_transform_spark.operators.compaction import compact_parquet
-
-    src = str(tmp_path / "src_nt")
-    spark.range(5_000).selectExpr("id", "id % 5 AS dt").repartition(
-        16
-    ).write.parquet(src)
-    dst = str(tmp_path / "dst_nt")
-    out = compact_parquet(spark, src, dst, partition_by=["dt"])
-    assert out.count() == 5_000
-    for d in _glob.glob(f"{dst}/dt=*"):
-        assert len(_glob.glob(f"{d}/part-*.parquet")) == 1, d
-
-

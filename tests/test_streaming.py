@@ -11,7 +11,6 @@ from lookup_transform_spark.streaming import (
     read_events_stream,
     run_to_memory,
     stream_dedup_within_watermark,
-    stream_static_lookup,
     stream_tumbling_window,
 )
 
@@ -22,7 +21,7 @@ def test_stream_static_lookup_equals_batch(spark):
     ev = read_events_stream(spark, SF).select("event_id", "user_id")
     cust = spark.read.parquet(f"{SF}/customer.parquet")
     spec = LookupSpec("customer", "user_id", "c_custkey", "c_mktsegment", "segment")
-    got = run_to_memory(stream_static_lookup(ev, cust, spec), "t_sl")
+    got = run_to_memory(spec.apply(ev, cust), "t_sl")
 
     batch_ev = registry._events(spark, SF).select("event_id", "user_id")
     want = spec.apply(batch_ev, cust)
