@@ -537,6 +537,41 @@ def test_simhash_md5_family_matches_duckdb_bit_for_bit(spark):
     assert not mismatched, f"{len(mismatched)} signature mismatches: {mismatched[:5]}"
 
 
+def test_simhash_pairs_md5_pigeonhole_complete(spark):
+    """Pigeonhole completeness on the md5 signatures must hold for any
+    chunking, not only the default 4 chunks / distance 3: with 8 chunks
+    of 8 bits, simhash_pairs(max_hamming=5) equals the brute-force
+    hamming <= 5 cross-join on the same signatures."""
+    from pyspark.sql import functions as F
+
+    from lookup_transform_spark.operators.dedup import (
+        simhash_signature_text_pandas,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sig = docs.select(
+        F.col("doc_id").alias("id"),
+        simhash_signature_text_pandas("text").alias("s"),
+    )
+    truth = {
+        (r["ida"], r["idb"])
+        for r in sig.selectExpr("id AS ida", "s AS sa")
+        .crossJoin(sig.selectExpr("id AS idb", "s AS sb"))
+        .filter("ida < idb")
+        .filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 5)
+        .collect()
+    }
+    got = {
+        (r["doc_id_a"], r["doc_id_b"])
+        for r in simhash_pairs(
+            docs, max_hamming=5, chunks=8, max_bucket_size=None
+        ).collect()
+    }
+    assert truth and got == truth, (
+        f"missing={len(truth - got)} extra={len(got - truth)}"
+    )
+
+
 def test_lsh_compaction_generation_swap_and_catalog_recovery(spark, tmp_path):
     """r8 review hardening of compact_lsh_index, pinned end-to-end:
     (a) compaction dedupes a retry-inflated index back to exactly-once
