@@ -196,10 +196,7 @@ def q_scan_binary_files(spark, sf):
     against the source-of-truth table. Staleness-guarded like the IVF
     at-rest layout: the export is rebuilt when the fixture parquet is
     newer than its _SUCCESS sentinel."""
-    from lookup_transform_spark.sources import (
-        read_binary_files,
-        write_binary_files,
-    )
+    from lookup_transform_spark.sources.writers import write_binary_files
 
     path = scratch_path("bin_assets", sf)
     if _stale_guard(spark, path, os.path.join(sf, "documents.parquet")):
@@ -212,7 +209,11 @@ def q_scan_binary_files(spark, sf):
             .select("doc_id", F.encode("text", "UTF-8").alias("payload"))
         )
         write_binary_files(docs, path)
-    bf = read_binary_files(spark, path, glob="*.bin")
+    bf = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(path)
+    )
     return bf.select(
         F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1)
         .cast("bigint")

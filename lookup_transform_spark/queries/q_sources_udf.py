@@ -63,11 +63,13 @@ def q_multimodal_payload(spark, sf):
 )
 def q_scan_csv_roundtrip(spark, sf):
     """B2: CSV sink+scan with explicit schema (no inference)."""
-    from lookup_transform_spark.sources import read_csv, write_csv
-
     path = scratch_path("nation_csv", sf)
-    write_csv(_t(spark, sf, "nation"), path)
-    return read_csv(spark, path, "n_nationkey int, n_name string, n_regionkey int")
+    _t(spark, sf, "nation").write.mode("overwrite").option("header", True).csv(path)
+    return (
+        spark.read.schema("n_nationkey int, n_name string, n_regionkey int")
+        .option("header", True)
+        .csv(path)
+    )
 
 
 @_q(
@@ -76,13 +78,15 @@ def q_scan_csv_roundtrip(spark, sf):
 )
 def q_scan_json_roundtrip(spark, sf):
     """B2: JSON-lines sink+scan with explicit schema."""
-    from lookup_transform_spark.sources import read_json, write_json
-
     path = scratch_path("supplier_json", sf)
-    write_json(_t(spark, sf, "supplier"), path)
-    return read_json(
-        spark, path, "s_suppkey long, s_name string, s_nationkey int, s_acctbal double"
-    ).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    _t(spark, sf, "supplier").write.mode("overwrite").json(path)
+    return (
+        spark.read.schema(
+            "s_suppkey long, s_name string, s_nationkey int, s_acctbal double"
+        )
+        .json(path)
+        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    )
 
 
 @_q(
@@ -92,14 +96,11 @@ def q_scan_json_roundtrip(spark, sf):
 def q_scan_orc_roundtrip(spark, sf):
     """B2: ORC sink+scan — the second self-describing columnar format;
     pushdown/pruning reach the reader exactly as with parquet."""
-    from lookup_transform_spark.sources import read_orc, write_orc
-
     path = scratch_path("part_orc", sf)
-    write_orc(
-        _t(spark, sf, "part").select("p_partkey", "p_name", "p_brand", "p_retailprice"),
-        path,
-    )
-    return read_orc(spark, path)
+    _t(spark, sf, "part").select(
+        "p_partkey", "p_name", "p_brand", "p_retailprice"
+    ).write.mode("overwrite").orc(path)
+    return spark.read.orc(path)
 
 
 # oracle SQL only — pure-stdlib module, so importing the registry does
@@ -145,13 +146,11 @@ def q_sink_partitioned(spark, sf):
     scan path. First run (and ``tests/test_sources.py``) still exercise
     the write; a regenerated fixture invalidates the cached sink.
     """
-    from lookup_transform_spark.sources import write_parquet_partitioned
-
     path = scratch_path("orders_part", sf)
     if _stale_guard(spark, path, os.path.join(sf, "orders.parquet")):
-        write_parquet_partitioned(
-            _t(spark, sf, "orders"), path, partition_by=["o_orderstatus"]
-        )
+        _t(spark, sf, "orders").write.mode("overwrite").partitionBy(
+            "o_orderstatus"
+        ).parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
 
@@ -185,14 +184,13 @@ def q_sink_upsert(spark, sf):
     same merge relationally. Scan-back aggregates count + price sum per
     partition, so both the surviving and replaced rows are value-checked.
     """
-    from lookup_transform_spark.sources import write_parquet_partitioned
     from lookup_transform_spark.sources.writers import upsert_partitioned
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     src = _t(spark, sf, "orders").select(*cols)
     path = scratch_path("orders_upsert", sf)
     if _stale_guard(spark, path, os.path.join(sf, "orders.parquet")):
-        write_parquet_partitioned(src, path, partition_by=["o_orderstatus"])
+        src.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
 
     updates = src.filter(F.col("o_orderkey") % 997 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000.0

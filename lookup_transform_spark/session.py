@@ -102,6 +102,12 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # The session that launches the JVM hands its confs over as --conf
+    # flags, which become JVM system properties that every later
+    # SparkContext in the process loads as defaults: drop the per-call
+    # ones so a later session does not inherit them.
+    for k in extra_confs or {}:
+        spark._jvm.java.lang.System.clearProperty(k)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -10,7 +10,7 @@ comparable across engines/sessions.
 
 This also demonstrates the modern way to add a *source* to Spark from
 Python (``pyspark.sql.datasource.DataSource``), complementing the
-built-in parquet/CSV/JSON/ORC readers in ``sources/readers.py``.
+built-in parquet/CSV/JSON/ORC readers of ``spark.read``.
 
 Fast path: ``read()`` yields **pyarrow RecordBatches** (the DataSource
 API's Arrow protocol) built from vectorized numpy hashing — one batch

@@ -1,5 +1,7 @@
-"""Sinks (SURVEY.md §2.2 B3): parquet (partitioned) / CSV / JSON.
+"""Sinks (SURVEY.md §2.2 B3) that ``df.write`` lacks: one raw file per
+row, and a partition-level upsert into a partitioned parquet table.
 
+Plain parquet / CSV / JSON / ORC writes call ``df.write`` directly.
 Partition-aware writes are the scale contract: a 100 TB table written
 ``partitionBy`` on its natural pruning key turns downstream scans into
 partition-pruned reads.
@@ -8,30 +10,6 @@ partition-pruned reads.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    df.write.mode(mode).option("header", header).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
 
 
 def write_binary_files(
@@ -121,9 +99,9 @@ def upsert_partitioned(
        is pending: the next call ROLLS THE PENDING COMMIT FORWARD from
        staging before doing anything else (the swap is idempotent), so
        a retry converges to the fully-committed state instead of losing
-       the partitions whose old directory was already removed. Jobs
-       that need an atomic multi-partition publish should write through
-       the two-phase manifest sink instead.
+       the partitions whose old directory was already removed. The
+       library has no atomic multi-partition publish; a job that needs
+       one should write through a table format's commit protocol.
 
     Job waves per call: the batch checkpoint (one bounded job) + the
     staging write (read-back + merge + encode, one pass) + the

@@ -180,7 +180,11 @@ def compact_ingest_state(
     that outlive a crash between fold and cleanup are excluded by
     ``_segment_chain`` (widest-segment-wins) and swept here next time.
     """
-    from lookup_transform_spark.operators.compaction import compact_parquet
+    def _fold(srcs: list[str], seg: str, files: int) -> None:
+        # coalesce (no shuffle) bounds the segment's file count
+        spark.read.parquet(*srcs).coalesce(files).write.mode(
+            "overwrite"
+        ).parquet(seg)
 
     def _seg_path(lo: int, hi: int) -> str:
         return os.path.join(path, f"seg_{lo:05d}_{hi:05d}")
@@ -198,7 +202,7 @@ def compact_ingest_state(
     if fresh:
         seg = _seg_path(end, upto)
         if not _committed(seg):
-            compact_parquet(spark, fresh, seg, target_files=target_files)
+            _fold(fresh, seg, target_files)
         chain.append((end, upto, seg))
     # binary-counter merge: fold the two newest segments while the
     # newer is at least as wide (in batches — the size proxy) as the
@@ -209,9 +213,9 @@ def compact_ingest_state(
         lo, hi = chain[-2][0], chain[-1][1]
         seg = _seg_path(lo, hi)
         if not _committed(seg):
-            tf = max(target_files, (hi - lo) // 16)
-            compact_parquet(
-                spark, [chain[-2][2], chain[-1][2]], seg, target_files=tf
+            _fold(
+                [chain[-2][2], chain[-1][2]], seg,
+                max(target_files, (hi - lo) // 16),
             )
         chain[-2:] = [(lo, hi, seg)]
     # cleanup: batch dirs and segments the chain shadows
@@ -267,21 +271,6 @@ def _materialize_batch(df: DataFrame, input_parts: int = 32) -> tuple[DataFrame,
         1 + n // _ROWS_PER_OUTPUT_FILE,
     ))
     return out, files
-
-
-def _invalidate_pre_batchdir_layout(work_dir: str, corpus: str) -> None:
-    """Wipe a work dir written by the pre-r7 APPEND layout (loose
-    parquet files directly under corpus/ instead of batch_N dirs): its
-    checkpoint marks every arrival processed, so a rerun would skip
-    handle_batch and the new reader would find zero committed batch
-    dirs — fail loud-and-rebuild instead of returning nothing."""
-    if not os.path.isdir(corpus):
-        return
-    entries = os.listdir(corpus)
-    has_loose = any(e.endswith(".parquet") for e in entries)
-    has_batches = any(e.startswith("batch_") for e in entries)
-    if has_loose and not has_batches:
-        shutil.rmtree(work_dir, ignore_errors=True)
 
 
 def stage_document_batches(
@@ -452,7 +441,6 @@ def stream_ingest_dedup(
     corpus = os.path.join(work_dir, "corpus")
     ckpt = os.path.join(work_dir, "ckpt")
     _reset_if_fixture_newer(spark, work_dir, stage, sf_dir)
-    _invalidate_pre_batchdir_layout(work_dir, corpus)
     os.makedirs(corpus, exist_ok=True)
     stage_document_batches(spark, sf_dir, stage, n_files)
 
@@ -643,7 +631,6 @@ def stream_ingest_neardedup(
     ckpt = os.path.join(work_dir, "ckpt")
     lsh_table = _lsh_table_prefix(work_dir)
     _reset_if_fixture_newer(spark, work_dir, stage, sf_dir)
-    _invalidate_pre_batchdir_layout(work_dir, corpus)
     os.makedirs(corpus, exist_ok=True)
     stage_document_batches(
         spark, sf_dir, stage, n_files, dup_per_file=10, near_per_file=10

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from lookup_transform_spark import registry, stats, timing
+from lookup_transform_spark import registry, scale_profile, stats, timing
 from lookup_transform_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -133,7 +133,10 @@ def skew_probe(spark, sf_dir: str) -> dict:
     (isFinalPlan=true) is readable; ``skew=true`` on the join node is
     the engagement evidence. (A 3-value hot key against a tiny dim —
     the first cut — gets BROADCAST and never shuffles at all; AQE skew
-    handling only exists for shuffled joins.)"""
+    handling only exists for shuffled joins.) It plans outside the
+    registry, so it writes the size regime for ``sf_dir`` itself rather
+    than run under whichever registry query ran last."""
+    scale_profile.apply_scale_profile(spark, sf_dir)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     # carry a realistic row payload: a bare 8-byte key column would
     # keep even a 69M-row hot partition under AQE's 256 MB compressed

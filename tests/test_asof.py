@@ -368,16 +368,3 @@ def test_salted_join_validates_invariance_breakers(spark):
         salted_join(left, right, "k", "k", salt=0, salt_source="id")
     ok = salted_join(left, right, "k", "k", salt=4, salt_source="id")
     assert _rows(ok) == [(1, 100, 5.0)]
-
-
-def test_reader_empty_projection_refused(spark, tmp_path):
-    import pytest as _pytest
-
-    from lookup_transform_spark.sources.readers import read_parquet
-
-    p = str(tmp_path / "t")
-    spark.range(3).write.parquet(p)
-    with _pytest.raises(ValueError, match="columns"):
-        read_parquet(spark, p, columns=[])
-    assert read_parquet(spark, p, columns=None).count() == 3
-    assert read_parquet(spark, p, columns=["id"]).columns == ["id"]

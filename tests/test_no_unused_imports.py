@@ -8,10 +8,12 @@
    for the query tiers, hides which operator a query really runs).
 2. Every top-level ``def`` / ``class`` in the library has a caller
    outside ``tests/``. Code that only tests call belongs in the test
-   that calls it. The guard matches names, not objects: a library
-   function named like a method that a non-test caller calls on some
-   other object slips past it (a test-only ``stats.unregister`` did,
-   named like DuckDB's ``con.unregister`` in ``perfbench/check.py``).
+   that calls it. A definition is used when a non-test root reaches
+   it, with names resolved as Python does: to a definition in the same
+   module, to a ``from lookup_transform_spark.X import n`` binding, or
+   to ``alias.attr`` on an imported library module. A re-export alone
+   uses nothing, and a call from an unreachable definition does not
+   count.
 3. Every import in ``bench.py``, ``__spark_entry__.py`` and
    ``scripts/``, nested ones included, resolves to a module with the
    repository root and ``scripts/`` on the path, and ``from M import
@@ -86,24 +88,9 @@ def test_scripts_entry_points_and_tests_use_every_import():
     _assert_imports_used(files)
 
 
-def _references(tree: ast.Module) -> set[str]:
-    """Names a module reads: ``Name`` ids, ``Attribute`` attrs and
-    imported names. A top-level definition's reads of its own name
-    (recursion) do not count."""
-    refs: set[str] = set()
-    for top in tree.body:
-        found: set[str] = set()
-        for n in ast.walk(top):
-            if isinstance(n, ast.Name):
-                found.add(n.id)
-            elif isinstance(n, ast.Attribute):
-                found.add(n.attr)
-            elif isinstance(n, (ast.Import, ast.ImportFrom)):
-                found.update(a.name.rsplit(".", 1)[-1] for a in n.names)
-        if isinstance(top, _DEFS):
-            found.discard(top.name)
-        refs |= found
-    return refs
+def _module_name(path: pathlib.Path, base: pathlib.Path) -> str:
+    parts = path.relative_to(base).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
 def _is_registered_query(node: ast.AST) -> bool:
@@ -114,23 +101,152 @@ def _is_registered_query(node: ast.AST) -> bool:
     return False
 
 
-def test_library_definitions_have_a_non_test_caller():
-    lib = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
-    refs: set[str] = set()
-    for tree in lib.values():
-        refs |= _references(tree)
-    for p in _NON_TEST_CALLERS:
-        refs |= _references(ast.parse(p.read_text()))
-    orphans = sorted(
-        f"{p.relative_to(PKG)}:{node.name}"
-        for p, tree in lib.items()
-        for node in tree.body
-        if isinstance(node, _DEFS)
-        and node.name not in refs
-        and not _is_registered_query(node)
-        and (str(p.relative_to(PKG)), node.name) not in _USER_ENTRY_POINTS
+class _Library:
+    """The library's modules with what each top-level name is bound to:
+    a top-level definition, or an import of a library module or name."""
+
+    def __init__(self, pkg: pathlib.Path):
+        self.pkg = pkg.name
+        self.trees = {
+            _module_name(p, pkg.parent): (p, ast.parse(p.read_text()))
+            for p in sorted(pkg.rglob("*.py"))
+        }
+        # packages without an __init__.py are modules too
+        self.modules = {
+            ".".join(m.split(".")[:i])
+            for m in self.trees for i in range(1, m.count(".") + 2)
+        }
+        self.bindings = {
+            mod: {
+                **self.imports([n for n in tree.body if not isinstance(n, _DEFS)]),
+                **{n.name: ("def", mod, n.name) for n in tree.body if isinstance(n, _DEFS)},
+            }
+            for mod, (_, tree) in self.trees.items()
+        }
+
+    def imports(self, nodes: list[ast.AST]) -> dict[str, tuple]:
+        """Names the imports anywhere in ``nodes`` bind to the library."""
+        out: dict[str, tuple] = {}
+        for node in (n for top in nodes for n in ast.walk(top)):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == self.pkg:
+                        out[a.asname or self.pkg] = (
+                            "mod", a.name if a.asname else self.pkg)
+            elif isinstance(node, ast.ImportFrom) and not node.level and (
+                node.module.split(".")[0] == self.pkg
+            ):
+                for a in node.names:
+                    out[a.asname or a.name] = ("from", node.module, a.name)
+        return out
+
+    def resolve(self, binding: tuple | None, seen: frozenset = frozenset()):
+        """A binding followed through re-exports to ``("mod", m)`` or
+        ``("def", m, name)``; None when it leaves the library."""
+        if binding is None or binding[0] != "from":
+            return binding
+        _, mod, name = binding
+        if f"{mod}.{name}" in self.modules:
+            return ("mod", f"{mod}.{name}")
+        if (mod, name) in seen:
+            return None
+        return self.resolve(
+            self.bindings.get(mod, {}).get(name), seen | {(mod, name)})
+
+    def references(self, node: ast.AST, scope: dict[str, tuple]) -> set[tuple]:
+        """Library definitions ``node`` reads: names bound in ``scope``
+        or by an import inside ``node``, and attributes of library
+        modules."""
+        scope = {**scope, **self.imports([node])}
+
+        def target(expr: ast.AST):
+            if isinstance(expr, ast.Name):
+                return self.resolve(scope.get(expr.id))
+            if isinstance(expr, ast.Attribute):
+                owner = target(expr.value)
+                if owner and owner[0] == "mod":
+                    return self.resolve(("from", owner[1], expr.attr))
+            return None
+
+        return {
+            t for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+            and (t := target(n)) and t[0] == "def"
+        }
+
+
+def _unreachable_definitions(
+    pkg: pathlib.Path,
+    callers: tuple[pathlib.Path, ...],
+    entry_points: set[tuple[str, str]],
+) -> list[str]:
+    """Top-level definitions of the package at ``pkg`` that no root
+    reaches. The roots are ``callers`` (whole files), the library's
+    module-level statements other than imports and definitions,
+    ``@_q`` queries and ``entry_points`` (``(relative path, name)``).
+    A definition reaches what it reads; a re-export reaches nothing."""
+    lib = _Library(pkg)
+    edges: dict[tuple, set[tuple]] = {}
+    todo: set[tuple] = set()
+    for p in callers:
+        todo |= lib.references(ast.parse(p.read_text()), {})
+    for mod, (p, tree) in lib.trees.items():
+        scope = lib.bindings[mod]
+        for node in tree.body:
+            if isinstance(node, _DEFS):
+                edges[("def", mod, node.name)] = lib.references(node, scope)
+                if _is_registered_query(node) or (
+                    str(p.relative_to(pkg)), node.name) in entry_points:
+                    todo.add(("def", mod, node.name))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                todo |= lib.references(node, scope)
+    reached: set[tuple] = set()
+    while todo:
+        d = todo.pop()
+        if d not in reached:
+            reached.add(d)
+            todo |= edges.get(d, set())
+    return sorted(
+        f"{lib.trees[mod][0].relative_to(pkg)}:{name}"
+        for (_, mod, name) in edges.keys() - reached
     )
+
+
+def test_library_definitions_have_a_non_test_caller():
+    orphans = _unreachable_definitions(PKG, _NON_TEST_CALLERS, _USER_ENTRY_POINTS)
     assert not orphans, orphans
+
+
+def test_unreachable_definitions_resolves_names_by_module(tmp_path):
+    """The three ways a name-pooling guard lets dead code through: a
+    definition only a package ``__init__`` re-exports, a same-module
+    cluster nothing outside calls, and a definition named like a live
+    one in another module. Each is reported; the live paths are not."""
+    pkg = tmp_path / "toy"
+    files = {
+        "__init__.py": "from toy.exported import only_reexported, via_package\n",
+        "exported.py": "def only_reexported(): pass\ndef via_package(): pass\n",
+        "cluster.py": "def helper(): pass\ndef entry(): return helper()\n",
+        "live.py": (
+            "from toy import exported\n"
+            "def register(): return exported.via_package()\n"
+            "@_q('x')\ndef q_x(): return _local()\n"
+            "def _local(): pass\n"
+        ),
+        "other.py": "def register(): pass\ndef api(): pass\n",
+    }
+    pkg.mkdir()
+    for name, text in files.items():
+        (pkg / name).write_text(text)
+    caller = tmp_path / "caller.py"
+    caller.write_text("import toy.live as lv\nlv.register()\n")
+    got = _unreachable_definitions(pkg, (caller,), {("other.py", "api")})
+    assert got == [
+        "cluster.py:entry",
+        "cluster.py:helper",
+        "exported.py:only_reexported",
+        "other.py:register",
+    ]
 
 
 #: Where the entry points and scripts import from: ``bench.py`` puts the

@@ -281,11 +281,9 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_partitioned_sink_scan_prunes_partitions(spark, tmp_path):
-    from lookup_transform_spark.sources import write_parquet_partitioned
-
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     path = str(tmp_path / "orders_part")
-    write_parquet_partitioned(orders, path, partition_by=["o_orderstatus"])
+    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path).filter("o_orderstatus = 'O'")
     plan = explain_str(back)
     pf = [line for line in plan.splitlines() if "PartitionFilters" in line][0]
@@ -296,17 +294,17 @@ def test_partitioned_sink_scan_prunes_partitions(spark, tmp_path):
 def test_compaction_bounds_file_count(spark, tmp_path):
     import glob
 
-    from lookup_transform_spark.operators.compaction import compact_parquet
+    from lookup_transform_spark.streaming.ingest import compact_ingest_state
 
     orders = spark.read.parquet(f"{SF}/orders.parquet")
-    fragmented = str(tmp_path / "fragmented")
+    fragmented = str(tmp_path / "batch_00000")
     orders.repartition(50).write.mode("overwrite").parquet(fragmented)
     assert len(glob.glob(f"{fragmented}/part-*.parquet")) == 50
 
-    compacted = str(tmp_path / "compacted")
-    back = compact_parquet(spark, fragmented, compacted, target_files=4)
+    compact_ingest_state(spark, str(tmp_path), 1, target_files=4)
+    compacted = str(tmp_path / "seg_00000_00001")
     assert len(glob.glob(f"{compacted}/part-*.parquet")) == 4
-    assert back.count() == orders.count()
+    assert spark.read.parquet(compacted).count() == orders.count()
 
 
 def test_corpus_mix_is_pure_narrow_filter(spark):

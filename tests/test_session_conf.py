@@ -9,6 +9,8 @@ touches is itself restored through ``scoped_confs``.
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -108,3 +110,33 @@ def test_events_readers_accept_ns_parquet_on_a_plain_session(spark, tmp_path):
         assert dict(read_events_stream(spark, str(tmp_path)).dtypes)[
             "ts"
         ] == "timestamp"
+
+
+_FIRST_SESSION_CONFS_DO_NOT_LEAK = """
+from lookup_transform_spark.session import get_spark
+
+KEY = "spark.sql.autoBroadcastJoinThreshold"
+first = get_spark(extra_confs={KEY: "-1"})
+assert first.conf.get(KEY) == "-1"
+first.stop()
+plain = get_spark()
+print(plain.conf.get(KEY), plain._jvm.java.lang.System.getProperty(KEY))
+"""
+
+
+def test_extra_confs_do_not_outlive_their_session():
+    """The first session of a process launches the JVM with its confs
+    as ``--conf`` flags, which become JVM system properties that every
+    later SparkContext in the process loads as defaults. A second
+    ``get_spark`` without ``extra_confs`` must read Spark's default."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "-c", _FIRST_SESSION_CONFS_DO_NOT_LEAK],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["10485760b", "None"], out.stdout

@@ -372,24 +372,3 @@ def test_approx_topk_exclude_self_escape_hatch(spark):
         }
         assert 7 in with_self
         assert 7 not in without
-
-
-def test_cosine_similarity_zero_vector_is_null_not_error(spark):
-    """r8 review: under ANSI mode (Spark 4 default) a plain Divide
-    raises DIVIDE_BY_ZERO on the first all-zeros embedding; the
-    exported JVM-side cosine must return NULL for that undefined
-    similarity instead of killing the job."""
-    from lookup_transform_spark.functions import cosine_similarity
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], [1.0, 0.0]), (2, [0.0, 0.0], [1.0, 0.0])],
-        "id long, a array<double>, b array<double>",
-    )
-    got = {
-        r["id"]: r["sim"]
-        for r in df.select(
-            "id", cosine_similarity(F.col("a"), F.col("b")).alias("sim")
-        ).collect()
-    }
-    assert got[1] == pytest.approx(1.0)
-    assert got[2] is None

@@ -1,12 +1,11 @@
 """Source robustness (B2): malformed-record handling modes, the
-synthetic generator source against its scalar spec, the manifest sink,
-binary-file ingest and parquet compaction."""
+synthetic generator source against its scalar spec and binary-file
+ingest."""
 
 from __future__ import annotations
 
 import pytest
 
-from lookup_transform_spark.sources import read_csv, read_json
 from lookup_transform_spark.sources.synthetic_oracle import LANGS, WORDS
 
 
@@ -39,26 +38,29 @@ def bad_csv(tmp_path):
     return str(p)
 
 
-def test_csv_permissive_nulls_bad_fields(spark, bad_csv):
-    df = read_csv(
-        spark, bad_csv, "id int, name string, score double", mode="PERMISSIVE"
+def _read_bad_csv(spark, path: str, mode: str):
+    return (
+        spark.read.schema("id int, name string, score double")
+        .option("header", True)
+        .option("mode", mode)
+        .csv(path)
     )
+
+
+def test_csv_permissive_nulls_bad_fields(spark, bad_csv):
+    df = _read_bad_csv(spark, bad_csv, "PERMISSIVE")
     rows = {r.id: r.score for r in df.collect()}
     assert rows[1] == 3.5 and rows[3] == 9.9
     assert rows[2] is None  # malformed field → null, row survives
 
 
 def test_csv_dropmalformed(spark, bad_csv):
-    df = read_csv(
-        spark, bad_csv, "id int, name string, score double", mode="DROPMALFORMED"
-    )
+    df = _read_bad_csv(spark, bad_csv, "DROPMALFORMED")
     assert sorted(r.id for r in df.collect()) == [1, 3]
 
 
 def test_csv_failfast_raises(spark, bad_csv):
-    df = read_csv(
-        spark, bad_csv, "id int, name string, score double", mode="FAILFAST"
-    )
+    df = _read_bad_csv(spark, bad_csv, "FAILFAST")
     with pytest.raises(Exception, match="(?i)malformed"):
         df.collect()
 
@@ -66,11 +68,10 @@ def test_csv_failfast_raises(spark, bad_csv):
 def test_json_corrupt_record_column(spark, tmp_path):
     p = tmp_path / "bad.jsonl"
     p.write_text('{"id": 1, "v": 2.0}\n{not json at all}\n{"id": 3, "v": 4.0}\n')
-    df = read_json(
-        spark,
-        str(p),
-        "id int, v double, _corrupt_record string",
-        columnNameOfCorruptRecord="_corrupt_record",
+    df = (
+        spark.read.schema("id int, v double, _corrupt_record string")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(str(p))
     )
     rows = df.collect()
     good = [r for r in rows if r._corrupt_record is None]
@@ -137,73 +138,12 @@ def test_generator_oracle_sql_matches_scalar_spec():
         assert [tuple(r) for r in rows] == exp
 
 
-def test_manifest_sink_two_phase_commit(spark, tmp_path):
-    import json
-
-    from lookup_transform_spark.sources.audit_sink import read_manifest, register
-
-    register(spark)
-    path = str(tmp_path / "mout")
-    nat = spark.read.parquet("/root/testdata/sf0.001/nation.parquet").select(
-        "n_nationkey", "n_name"
-    )
-    nat.repartition(4).write.format("manifestjson").option("path", path).mode(
-        "append"
-    ).save()
-
-    man = read_manifest(path)
-    assert man["total_rows"] == nat.count()
-    assert len(man["shards"]) == 4
-    # every shard named by the manifest exists and row counts agree
-    for s in man["shards"]:
-        with open(f"{path}/{s['shard']}") as f:
-            assert sum(1 for _ in f) == s["rows"]
-    # only manifest-listed shards are present (no partial/stray output)
-    import os
-
-    files = {f for f in os.listdir(path) if not f.startswith("_")}
-    assert files == {s["shard"] for s in man["shards"]}
-    # rows round-trip
-    got = sorted(
-        json.loads(line)["n_name"]
-        for s in man["shards"]
-        for line in open(f"{path}/{s['shard']}")
-    )
-    assert got == sorted(r["n_name"] for r in nat.collect())
-
-
-def test_manifest_sink_failed_job_publishes_nothing(spark, tmp_path):
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from lookup_transform_spark.sources.audit_sink import MANIFEST, register
-
-    register(spark)
-    path = str(tmp_path / "mfail")
-    df = spark.range(100).withColumn(
-        "boom", F.when(F.col("id") == 57, F.lit(1) / F.lit(0)).otherwise(F.lit(0.0))
-    )
-    with pytest.raises(Exception):
-        # ANSI division-by-zero fails one task mid-write; the job aborts
-        df.repartition(4).write.format("manifestjson").option("path", path).mode(
-            "append"
-        ).save()
-    # no manifest ⇒ the failed write is invisible to manifest-trusting
-    # readers, whatever shard fragments tasks left behind
-    assert not os.path.exists(os.path.join(path, MANIFEST))
-
-
 def test_binary_files_roundtrip(spark, tmp_path):
     """write_binary_files → binaryFile scan: byte-exact payloads, one
     file per row, pathGlobFilter prunes non-matching junk."""
     from pyspark.sql import functions as F
 
-    from lookup_transform_spark.sources import (
-        read_binary_files,
-        write_binary_files,
-    )
+    from lookup_transform_spark.sources.writers import write_binary_files
 
     payloads = {7: b"\x00\x01binary\xff", 11: b"", 23: b"plain text"}
     nonempty = {k: v for k, v in payloads.items() if v}
@@ -215,7 +155,9 @@ def test_binary_files_roundtrip(spark, tmp_path):
     write_binary_files(df, out)
     (tmp_path / "assets" / "junk.txt").write_text("not an asset")
 
-    got = read_binary_files(spark, out, glob="*.bin").select(
+    got = spark.read.format("binaryFile").option(
+        "pathGlobFilter", "*.bin"
+    ).load(out).select(
         F.regexp_extract("path", r"(\d+)\.bin$", 1).cast("long").alias("doc_id"),
         "content",
         "length",
@@ -223,7 +165,7 @@ def test_binary_files_roundtrip(spark, tmp_path):
     rows = {r.doc_id: r for r in got.collect()}
     # junk.txt and _SUCCESS are pruned by the glob; the ZERO-LENGTH
     # asset is silently dropped by Spark's split planner — pinned here
-    # as the documented caveat in read_binary_files.
+    # as the caveat scan_binary_files' export filter guards against.
     assert set(rows) == set(nonempty)
     for k, v in nonempty.items():
         assert bytes(rows[k].content) == v
@@ -255,88 +197,3 @@ def test_gopher_quality_rule_attribution(spark):
     assert not out[3].r_mean_word_len and not out[3].r_max_word_len
     assert not out[4].r_stopwords and not out[4].keep
     assert not out[5].r_digit_ratio and not out[5].keep
-
-
-def test_manifest_sink_overwrite_sweeps_stale_shards(spark, tmp_path):
-    """r8 review: shards are written under dotted temp names and
-    promoted at commit; a second write to the same path must leave the
-    directory holding EXACTLY the new manifest's shard set (stale
-    *.jsonl from the first write violated the module's own
-    no-stray-output invariant)."""
-    import os
-
-    from lookup_transform_spark.sources.audit_sink import (
-        read_manifest,
-        register,
-    )
-
-    register(spark)
-    path = str(tmp_path / "manifest_overwrite")
-    nat = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    nat.repartition(4).write.format("manifestjson").option(
-        "path", path
-    ).mode("overwrite").save()
-    first = {f for f in os.listdir(path) if f.endswith(".jsonl")}
-    nat.repartition(2).write.format("manifestjson").option(
-        "path", path
-    ).mode("overwrite").save()
-    man = read_manifest(path)
-    on_disk = {f for f in os.listdir(path) if f.endswith(".jsonl")}
-    assert on_disk == {s["shard"] for s in man["shards"]}
-    assert not (on_disk & first)  # stale shards swept
-    assert not any(f.startswith(".tmp-") for f in os.listdir(path))
-    assert man["total_rows"] == nat.count()
-
-
-def test_manifest_sink_append_merges_previous_snapshot(spark, tmp_path):
-    """r8 review: the writer ignored the overwrite flag, so
-    .mode('append') silently destroyed the previous write's committed
-    shards. Append must carry the old manifest's shard entries forward
-    — files intact, totals summed — while overwrite still sweeps."""
-    import os
-
-    from lookup_transform_spark.sources.audit_sink import (
-        read_manifest,
-        register,
-    )
-
-    register(spark)
-    path = str(tmp_path / "manifest_append")
-    nat = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    nat.repartition(3).write.format("manifestjson").option(
-        "path", path
-    ).mode("append").save()
-    first = {f for f in os.listdir(path) if f.endswith(".jsonl")}
-    nat.repartition(2).write.format("manifestjson").option(
-        "path", path
-    ).mode("append").save()
-    man = read_manifest(path)
-    on_disk = {f for f in os.listdir(path) if f.endswith(".jsonl")}
-    assert first <= on_disk  # previous snapshot's files retained
-    assert on_disk == {s["shard"] for s in man["shards"]}
-    assert len(man["shards"]) == 5
-    assert man["total_rows"] == 2 * nat.count()
-
-
-def test_manifest_sink_zero_task_job_publishes_empty_manifest(spark, tmp_path):
-    import os
-
-    from lookup_transform_spark.sources.audit_sink import (
-        read_manifest,
-        register,
-    )
-
-    register(spark)
-    path = str(tmp_path / "manifest_empty")
-    empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD(), "n_nationkey long, n_name string"
-    )
-    empty.write.format("manifestjson").option("path", path).mode(
-        "append"
-    ).save()
-    man = read_manifest(path)
-    # whether Spark schedules zero write tasks or one empty task, the
-    # manifest publishes, counts zero rows, and matches the directory
-    assert man["total_rows"] == 0
-    on_disk = {f for f in os.listdir(path) if f.endswith(".jsonl")}
-    assert on_disk == {s["shard"] for s in man["shards"]}

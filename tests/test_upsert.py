@@ -16,10 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from lookup_transform_spark.sources.writers import (
-    upsert_partitioned,
-    write_parquet_partitioned,
-)
+from lookup_transform_spark.sources.writers import upsert_partitioned
 
 
 @pytest.fixture()
@@ -28,7 +25,7 @@ def table(spark, sf_dir, tmp_path):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    write_parquet_partitioned(orders, path, partition_by=["o_orderstatus"])
+    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     return path, orders
 
 
@@ -337,13 +334,9 @@ def test_upsert_matches_dict_merge_property(spark, tmp_path):
         }
         path = str(tmp_path / f"prop_{next(counter)}")
         schema = "k long, part string, val double"
-        write_parquet_partitioned(
-            spark.createDataFrame(
-                [(k, p, v) for k, (p, v) in existing.items()], schema
-            ),
-            path,
-            partition_by=["part"],
-        )
+        spark.createDataFrame(
+            [(k, p, v) for k, (p, v) in existing.items()], schema
+        ).write.mode("overwrite").partitionBy("part").parquet(path)
         upd_df = spark.createDataFrame(
             [(k, p, v) for k, (p, v) in updates.items()], schema
         )
