@@ -215,19 +215,3 @@ def attach_external_bucketed(
         f"CLUSTERED BY ({quote_ident(bucket_col)}) INTO {n_buckets} BUCKETS "
         f"LOCATION {sql_string(path)}"
     )
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    left_on: str,
-    right_on: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket columns; with
-    matching bucket counts the plan contains no shuffle Exchange on
-    either side (asserted in tests/test_plans.py)."""
-    lf = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lf.join(rt, lf[left_on] == rt[right_on], how=how)

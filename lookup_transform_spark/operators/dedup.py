@@ -39,6 +39,19 @@ from lookup_transform_spark.sqltext import sql_string
 # is an error, so the modular arithmetic must provably fit in a long).
 _PRIME = (1 << 31) - 1
 
+#: The one MinHash-LSH parameter set. The in-plan operator, the at-rest
+#: LSH index and its probe all shingle, sign and band with these, so an
+#: index and the probe that reads it cannot disagree.
+NUM_HASHES = 32
+BANDS = 8
+SHINGLE_N = 3
+SEED = 42
+#: verified near-dup cut on the 6-dp-rounded shingle Jaccard
+JACCARD_THRESHOLD = 0.5
+#: bucket count of the at-rest fingerprint and LSH tables; the catalog
+#: re-attach after a session restart declares the same count
+INDEX_BUCKETS = 16
+
 
 def _validate_banding(num_hashes: int, bands: int) -> int:
     """rows-per-band, validated: ``bands`` must divide ``num_hashes``
@@ -197,9 +210,10 @@ def with_shingle_hashes(
     return step.withColumn(out_col, arr).drop("__tokh__")
 
 
-def _perm_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod PRIME."""
-    params, state = [], seed
+def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod PRIME,
+    drawn from ``SEED``."""
+    params, state = [], SEED
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         a = state % (_PRIME - 1) + 1
@@ -231,10 +245,10 @@ def _ragged_chunks(lens: np.ndarray, max_elems: int, max_rows: int):
         lo = hi
 
 
-def _make_perm_min(num_hashes: int, seed: int):
+def _make_perm_min(num_hashes: int):
     """Build the k-permutation-min pandas UDF behind
     ``minhash_signature_from_hashes``."""
-    params = np.array(_perm_params(num_hashes, seed), dtype=np.int64)
+    params = np.array(_perm_params(num_hashes), dtype=np.int64)
     a_vec, b_vec = params[:, 0], params[:, 1]
 
     @pandas_udf("array<long>")
@@ -277,7 +291,7 @@ def _make_perm_min(num_hashes: int, seed: int):
 
 
 def minhash_signature_from_hashes(
-    arr_col: str | F.Column, num_hashes: int = 32, seed: int = 42
+    arr_col: str | F.Column, num_hashes: int = NUM_HASHES
 ) -> F.Column:
     """Minhash signature over a precomputed shingle-hash array column
     (``with_shingle_hashes``): element i = min over shingles of
@@ -286,7 +300,7 @@ def minhash_signature_from_hashes(
     Jaccard-verify stage share ONE shingle computation."""
     c = F.col(arr_col) if isinstance(arr_col, str) else arr_col
     base = F.transform(c, lambda h: F.pmod(h, F.lit(_PRIME)))
-    return _make_perm_min(num_hashes, seed)(base)
+    return _make_perm_min(num_hashes)(base)
 
 
 _ROW_GROUP_CACHE: dict[tuple[str, int, int], int] = {}
@@ -499,11 +513,9 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    seed: int = 42,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
+    threshold: float = JACCARD_THRESHOLD,
     max_bucket_size: int | None = 1000,
     precluster_exact: bool = True,
 ) -> DataFrame:
@@ -547,7 +559,7 @@ def minhash_lsh_pairs(
     # stage (they are the two scans of the corpus this operator makes);
     # the numeric combine is ~5× the string-shingle formulation
     # (with_shingle_hashes docstring has the measurements)
-    base_df = with_shingle_hashes(docs, text_col, shingle_n)
+    base_df = with_shingle_hashes(docs, text_col, SHINGLE_N)
     # empty shingle sets (NULL text) never band: their signature would
     # be the same constant for every such doc — one degenerate bucket —
     # and the verify's 0/0 Jaccard is NaN, which Spark sorts ABOVE the
@@ -556,7 +568,7 @@ def minhash_lsh_pairs(
     sig = base_df.filter(F.size("__sh_arr__") > 0).select(
         F.col(id_col).alias("__id__"),
         minhash_signature_from_hashes(
-            F.col("__sh_arr__"), num_hashes, seed
+            F.col("__sh_arr__"), num_hashes
         ).alias("__sig__"),
     )
     # band on (id, bucket) ONLY — never carry document text through the
@@ -1152,13 +1164,7 @@ def substring_dup_rate(
 
 
 def write_fingerprint_index(
-    spark,
-    docs: DataFrame,
-    table: str,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 16,
+    spark, docs: DataFrame, table: str, path: str
 ) -> None:
     """Materialize the standing corpus's normalized-content fingerprints
     as a BUCKETED table (bucketed + sorted by fingerprint) — the at-rest
@@ -1175,20 +1181,11 @@ def write_fingerprint_index(
     from lookup_transform_spark.operators.bucketing import ensure_bucketed
     from lookup_transform_spark.operators.text import content_fingerprint
 
-    fp = docs.select(
-        F.col(id_col).alias("doc_id"),
-        content_fingerprint(text_col).alias("f"),
-    )
-    ensure_bucketed(spark, fp, table, "f", n_buckets, path)
+    fp = docs.select("doc_id", content_fingerprint("text").alias("f"))
+    ensure_bucketed(spark, fp, table, "f", INDEX_BUCKETS, path)
 
 
-def incremental_probe(
-    spark,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_probe(spark, new_docs: DataFrame, table: str) -> DataFrame:
     """Surviving doc ids of a new ingest batch: anti-join the batch's
     fingerprints against the standing ``write_fingerprint_index`` table.
 
@@ -1203,65 +1200,55 @@ def incremental_probe(
     from lookup_transform_spark.operators.text import content_fingerprint
 
     idx = spark.table(table).select("f")
-    new = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        content_fingerprint(text_col).alias("f"),
-    )
+    new = new_docs.select("doc_id", content_fingerprint("text").alias("f"))
     return new.join(idx, "f", "left_anti").select("doc_id")
 
 
-def _lsh_bands_and_store(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    seed: int,
-) -> tuple[DataFrame, DataFrame]:
-    """The shared shingle → signature → banding pipeline behind BOTH
-    ``write_lsh_index`` and ``append_to_lsh_index``: the
-    probe-after-append ≡ re-band-from-scratch invariant requires the
-    two write paths to band byte-identically, so there is exactly one
-    copy of the expression. Returns ``(banded, store)``:
-
-    - ``banded`` (doc_id, __bb__): one row per band, keyed by the ONE
-      column ``__bb__`` = xxhash64(band, bucket). Storing band/bucket
-      separately and joining on the pair would make Spark hash-partition
-      on the triple (re-shuffling the index); the single-column key
-      keeps probes co-located with the bucketed layout. A cross-
-      (band,bucket) __bb__ collision is the same 2^-64 class as every
-      fingerprint here, and harmless anyway: candidates only ever ADD
-      pairs, and the exact Jaccard verify removes them.
-    - ``store`` (doc_id, sorted shingle-hash array): the verify stage's
-      side of the Jaccard check.
-    """
-    rows_per_band = _validate_banding(num_hashes, bands)
+def _lsh_signatures(docs: DataFrame, id_alias: str) -> DataFrame:
+    """(``id_alias``, ``__sh_arr__``, ``__sig__``): each doc's id, its
+    shingle-hash array and its MinHash signature. With ``_lsh_band_keys``
+    this is the ONE shingle → signature → band chain behind the index
+    writes and the probe, so a probe bands exactly as the index did."""
     base = with_shingle_hashes(
-        _ensure_parallel(docs, id_col), text_col, shingle_n
+        _ensure_parallel(docs, "doc_id"), "text", SHINGLE_N
     )
-    sig = base.select(
-        F.col(id_col).alias("doc_id"),
+    return base.select(
+        F.col("doc_id").alias(id_alias),
         F.col("__sh_arr__"),
-        minhash_signature_from_hashes(
-            F.col("__sh_arr__"), num_hashes, seed
-        ).alias("__sig__"),
+        minhash_signature_from_hashes(F.col("__sh_arr__")).alias("__sig__"),
     )
+
+
+def _lsh_band_keys(sig: DataFrame, id_col: str) -> DataFrame:
+    """(``id_col``, ``__bb__``): one row per band of each signature,
+    keyed by the ONE column ``__bb__`` = xxhash64(band, bucket).
+    Storing band/bucket separately and joining on the pair would make
+    Spark hash-partition on the triple (re-shuffling the index); the
+    single-column key keeps probes co-located with the bucketed layout.
+    A cross-(band,bucket) __bb__ collision is the same 2^-64 class as
+    every fingerprint here, and harmless anyway: candidates only ever
+    ADD pairs, and the exact Jaccard verify removes them."""
+    return sig.select(
+        id_col, _band_explode("__sig__", BANDS, NUM_HASHES // BANDS)
+    ).select(
+        id_col,
+        F.xxhash64("__band__.band", "__band__.bucket").alias("__bb__"),
+    )
+
+
+def _lsh_bands_and_store(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(banded, store)`` for ``write_lsh_index`` and
+    ``append_to_lsh_index``: the band keys (doc_id, __bb__) and the
+    verify stage's side of the Jaccard check (doc_id, sorted
+    shingle-hash array)."""
     # materialize ONCE: the caller writes banded and store as two
     # separate actions, and without this each write re-runs the whole
     # shingle+minhash UDF pipeline — the dominant cost — doubling every
     # index build and every ingest append (r8 review). Lazy checkpoint:
     # computed on the first write, reused by the second.
-    sig = sig.localCheckpoint(eager=False)
-    banded = (
-        sig.select("doc_id", _band_explode("__sig__", bands, rows_per_band))
-        .select(
-            "doc_id",
-            F.xxhash64("__band__.band", "__band__.bucket").alias("__bb__"),
-        )
-    )
+    sig = _lsh_signatures(docs, "doc_id").localCheckpoint(eager=False)
     store = sig.select("doc_id", F.array_sort("__sh_arr__").alias("__sh__"))
-    return banded, store
+    return _lsh_band_keys(sig, "doc_id"), store
 
 
 def _lsh_current_location(spark, default_path: str) -> str:
@@ -1307,22 +1294,16 @@ def _lsh_current_location(spark, default_path: str) -> str:
     return best
 
 
-def lsh_index_ready(
-    spark, table_prefix: str, path: str, n_buckets: int = 16
-) -> bool:
+def lsh_index_ready(spark, table_prefix: str, path: str) -> bool:
     """True when the standing LSH index exists and its catalog entries
     are usable (re-attaching external DDL from disk when a fresh
     session's in-memory catalog lost them); False when no index has
     been written yet. The ingest's has-index probe: a bare
     directory-exists check breaks after compaction moves the tables to
     a new generation location, and treating a momentarily-unattached
-    index as absent would silently skip the near-dup probe.
-
-    ``n_buckets`` MUST match the value the index was written with
-    (the same parameter-consistency contract the probe/append path
-    already has for ``num_hashes``/``bands``/``shingle_n``): bucket
-    metadata lives only in the catalog, and re-declaring a different
-    count would silently mis-colocate the probe join."""
+    index as absent would silently skip the near-dup probe. Bucket
+    metadata lives only in the catalog, so the re-attach declares
+    ``INDEX_BUCKETS``, the count every index is written with."""
     from lookup_transform_spark.operators.bucketing import (
         attach_external_bucketed,
     )
@@ -1338,23 +1319,13 @@ def lsh_index_ready(
             continue
         schema = spark.read.parquet(loc).schema
         attach_external_bucketed(
-            spark, table, loc, bucket_col, n_buckets, schema
+            spark, table, loc, bucket_col, INDEX_BUCKETS, schema
         )
     return ok
 
 
 def write_lsh_index(
-    spark,
-    docs: DataFrame,
-    table_prefix: str,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    n_buckets: int = 16,
+    spark, docs: DataFrame, table_prefix: str, path: str
 ) -> None:
     """At-rest LSH index: the NEAR-dup analog of ``write_fingerprint_index``
     — the missing half of continuous ingest (exact incremental dedup
@@ -1375,37 +1346,27 @@ def write_lsh_index(
     """
     from lookup_transform_spark.operators.bucketing import ensure_bucketed
 
-    banded, store = _lsh_bands_and_store(
-        docs, id_col, text_col, num_hashes, bands, shingle_n, seed
-    )
+    banded, store = _lsh_bands_and_store(docs)
     # locations resolve to the newest committed generation so a
     # re-create after compaction moved the tables attaches the LIVE one
     ensure_bucketed(
-        spark, banded, f"{table_prefix}_bands", "__bb__", n_buckets,
+        spark, banded, f"{table_prefix}_bands", "__bb__", INDEX_BUCKETS,
         _lsh_current_location(spark, f"{path}/bands"),
     )
     ensure_bucketed(
-        spark, store, f"{table_prefix}_docs", "doc_id", n_buckets,
+        spark, store, f"{table_prefix}_docs", "doc_id", INDEX_BUCKETS,
         _lsh_current_location(spark, f"{path}/docs"),
     )
 
 
 def append_to_lsh_index(
-    spark,
-    accepted_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
+    spark, accepted_docs: DataFrame, table_prefix: str
 ) -> None:
     """Append an accepted batch to the standing LSH index — the write
     half of continuous NEAR-dup ingest (VERDICT r5 #2: without it,
     batch N+1 could not near-dup against batch N's survivors).
 
-    The batch is shingled/signed/banded with the index's own parameters
+    The batch is shingled/signed/banded by the same chain as the index
     (byte-identical hashing, shared helpers) and ``insertInto`` both
     bucketed tables: each append writes its own bucket files under the
     same spec, so the layout property the probe relies on (co-located
@@ -1420,9 +1381,7 @@ def append_to_lsh_index(
     corpus. Probe-after-append equivalence with a from-scratch re-band
     is pinned in tests/test_dedup_caps.py.
     """
-    banded, store = _lsh_bands_and_store(
-        accepted_docs, id_col, text_col, num_hashes, bands, shingle_n, seed
-    )
+    banded, store = _lsh_bands_and_store(accepted_docs)
     banded.write.insertInto(f"{table_prefix}_bands")
     store.write.insertInto(f"{table_prefix}_docs")
 
@@ -1511,16 +1470,7 @@ def compact_lsh_index(spark, table_prefix: str) -> None:
 
 
 def incremental_minhash_probe(
-    spark,
-    new_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    threshold: float = 0.5,
+    spark, new_docs: DataFrame, table_prefix: str
 ) -> DataFrame:
     """Ids of new-batch docs with NO verified near-dup in the standing
     LSH index (the novel docs an ingest should accept).
@@ -1529,25 +1479,11 @@ def incremental_minhash_probe(
     index's bucket layout for the banding probe, then by candidate
     doc_id for the verify join; both standing tables are read bucketed,
     co-located, never re-shuffled or recomputed. Per-ingest cost is
-    O(batch + collisions), not O(corpus).
+    O(batch + collisions), not O(corpus). Unlike the index writes, the
+    probe's signatures are not checkpointed: they feed one plan.
     """
-    rows_per_band = _validate_banding(num_hashes, bands)
-    base = with_shingle_hashes(
-        _ensure_parallel(new_docs, id_col), text_col, shingle_n
-    )
-    sig = base.select(
-        F.col(id_col).alias("__nid__"),
-        F.col("__sh_arr__"),
-        minhash_signature_from_hashes(
-            F.col("__sh_arr__"), num_hashes, seed
-        ).alias("__sig__"),
-    )
-    new_banded = sig.select(
-        "__nid__", _band_explode("__sig__", bands, rows_per_band)
-    ).select(
-        "__nid__",
-        F.xxhash64("__band__.band", "__band__.bucket").alias("__bb__"),
-    )
+    sig = _lsh_signatures(new_docs, "__nid__")
+    new_banded = _lsh_band_keys(sig, "__nid__")
     idx = spark.table(f"{table_prefix}_bands")
     # single-key join on __bb__ — matches the index's bucket layout, so
     # the standing side is read co-located (see write_lsh_index)
@@ -1578,11 +1514,11 @@ def incremental_minhash_probe(
     # jaccard 0.4999996 vs threshold 0.5) gets the same accept/reject
     # decision on the ingest path as on the in-plan operator
     dup_ids = (
-        verified.filter(F.round(inter / union, 6) >= threshold)
-        .select(F.col("__nid__").alias(id_col))
+        verified.filter(F.round(inter / union, 6) >= JACCARD_THRESHOLD)
+        .select(F.col("__nid__").alias("doc_id"))
         .distinct()
     )
     return (
-        new_docs.select(F.col(id_col))
-        .join(dup_ids, on=id_col, how="left_anti")
+        new_docs.select(F.col("doc_id"))
+        .join(dup_ids, on="doc_id", how="left_anti")
     )

@@ -199,10 +199,7 @@ GROUP BY o.o_orderkey, o.o_totalprice""",
 def q_bucketed_join(spark, sf):
     """Bucketed co-located fact-fact join: both sides pre-bucketed by the
     join key -> no Exchange in the join (the 100 TB shuffle killer)."""
-    from lookup_transform_spark.operators.bucketing import (
-        bucketed_join,
-        ensure_bucketed,
-    )
+    from lookup_transform_spark.operators.bucketing import ensure_bucketed
 
     tag = _vtag(sf)
     ot, lt = f"orders_b_{tag}", f"lineitem_b_{tag}"
@@ -226,7 +223,9 @@ def q_bucketed_join(spark, sf):
         _t(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice"),
         lt, "l_orderkey", 8, path=f"{SCRATCH}/{lt}",
     )
-    j = bucketed_join(spark, ot, lt, "o_orderkey", "l_orderkey", how="inner")
+    # same bucket count on the join keys: no Exchange on either side
+    o, li = spark.table(ot), spark.table(lt)
+    j = o.join(li, o["o_orderkey"] == li["l_orderkey"])
     return j.groupBy("o_orderkey", "o_totalprice").agg(
         fp_sum("l_extendedprice", 2).alias("lineitem_total")
     )

@@ -426,7 +426,7 @@ def q_stream_sketch_rollup(spark, sf):
     )
 
     work = scratch_path("stream_sketchpair", sf)
-    out = stream_sketch_rollup(spark, sf, work, group_col="lang")
+    out = stream_sketch_rollup(spark, sf, work)
     return out.orderBy("lang")
 
 

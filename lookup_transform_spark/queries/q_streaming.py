@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from lookup_transform_spark.operators.dedup import JACCARD_THRESHOLD
 from lookup_transform_spark.plans.lookup import LookupSpec
 from lookup_transform_spark.registry import (
     _events,
@@ -21,6 +22,11 @@ from lookup_transform_spark.registry import (
     _t,
     _vtag,
     scratch_path,
+)
+from lookup_transform_spark.streaming.ingest import (
+    EXACT_RESENDS,
+    N_FILES,
+    NEAR_RESENDS,
 )
 
 # ---------------------------------------------------------------------------
@@ -473,16 +479,15 @@ def q_dedup_incremental_minhash(spark, sf):
     return incremental_minhash_probe(spark, new, table)
 
 
-def _ingest_neardedup_oracle(
-    n_files: int = 4, dup: int = 10, near: int = 10, threshold: float = 0.5
-) -> str:
+def _ingest_neardedup_oracle() -> str:
     """DuckDB oracle for the BOTH-tier continuous ingest (r9, VERDICT
     r8 #5 extended): the batches unroll like the kmeans iterations.
-    Staged arrivals are a pure function of the fixture
-    (``stage_document_batches``: batch b = doc_id % n_files; batches
-    1+ re-send the ``dup`` smallest batch-0 docs verbatim at
-    id + 10M·b and ranks dup+1..dup+near with a ``' tailb'`` suffix at
-    id + 100M·b). Per batch, in the engine's order: (1) exact tier —
+    Staged arrivals are a pure function of the fixture and the
+    engine's staging constants (``stage_document_batches``: batch b =
+    doc_id % N_FILES; batches 1+ re-send the ``dup`` smallest batch-0
+    docs verbatim at id + 10M·b and ranks dup+1..dup+near with a
+    ``' tailb'`` suffix at id + 100M·b, (dup, near) = NEAR_RESENDS).
+    Per batch, in the engine's order: (1) exact tier —
     min-id per fingerprint, minus fingerprints already ACCEPTED;
     (2) near tier — drop a doc iff a verified (6-dp-rounded 3-shingle
     Jaccard ≥ t) smaller-id doc exists in the same batch's exact-tier
@@ -493,6 +498,8 @@ def _ingest_neardedup_oracle(
     length band (J ≥ 0.5 ⇒ |larger| ≤ 2·|smaller|, +1 slack for the
     rounding boundary) keeps the correlated NOT EXISTS from scanning
     every pair."""
+    n_files, threshold = N_FILES, JACCARD_THRESHOLD
+    dup, near = NEAR_RESENDS
     jac = (
         "ROUND(len(list_intersect({x}.shg, {y}.shg))::DOUBLE"
         " / len(list_distinct(list_concat({x}.shg, {y}.shg))), 6)"
@@ -591,24 +598,25 @@ def q_stream_ingest_neardedup(spark, sf):
     "stream_ingest_dedup",
     # Oracle-exact since r9 (VERDICT r8 #5, extended): the multi-batch
     # side effect has a deterministic closed form. The staged arrivals
-    # are a pure function of the fixture (batch b = doc_id % 4; batches
-    # 1-3 re-send the 20 smallest batch-0 docs verbatim under
-    # id + 10M·b), and the ingest's survivor rule is FIRST-ACCEPTED:
+    # are a pure function of the fixture and the staging constants
+    # (batch b = doc_id % N_FILES; batches 1+ re-send the EXACT_RESENDS
+    # smallest batch-0 docs verbatim under id + 10M·b), and the
+    # ingest's survivor rule is FIRST-ACCEPTED:
     # earliest batch containing the fingerprint wins, min doc_id within
     # that batch — i.e. ROW_NUMBER over (batch, doc_id) per
     # fingerprint. (NOT plain global min-id: a duplicate text whose
     # smaller id arrives in a LATER batch loses to the standing index —
     # the oracle models the actual rule, so the monotonic-id
     # precondition the module docstring discusses is not assumed here.)
-    """WITH dup_src AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
-  ORDER BY doc_id LIMIT 20
+    f"""WITH dup_src AS (
+  SELECT doc_id, text FROM documents WHERE doc_id % {N_FILES} = 0
+  ORDER BY doc_id LIMIT {EXACT_RESENDS}
 ),
 staged AS (
-  SELECT (doc_id % 4)::BIGINT AS b, doc_id, text FROM documents
+  SELECT (doc_id % {N_FILES})::BIGINT AS b, doc_id, text FROM documents
   UNION ALL
   SELECT i.range AS b, d.doc_id + 10000000 * i.range AS doc_id, d.text
-  FROM dup_src d, range(1, 4) i
+  FROM dup_src d, range(1, {N_FILES}) i
 ),
 fp AS (
   SELECT b, doc_id,

@@ -59,19 +59,17 @@ def get_spark(
         )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle = shuffle_partitions or int(cpus)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # Pin ANSI mode explicitly: fixedpoint.py's fail-loud-on-overflow
         # contract for long accumulators must not depend on the Spark 4.x
         # default (Spark 3.x defaults ANSI off, which would silently wrap).
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.ansi.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # local mode runs executor tasks INSIDE the driver JVM: this is
         # the heap all 32 task threads share, and 8g is the measured
         # sweet spot on this box, not an oversight. Measured on the
@@ -84,10 +82,10 @@ def get_spark(
         # heap. Override with SPARK_GRAFT_DRIVER_MEM; on a real cluster
         # this setting stays driver-only and executor memory is its own
         # knob.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(map=NANOS_AS_LONG)
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        **NANOS_AS_LONG,
         # PySpark 4 wraps EVERY DataFrame/Column API call to capture the
         # Python call site and push it to the JVM (PySparkCurrentOrigin)
         # for error enrichment — one extra py4j round-trip per call.
@@ -97,16 +95,19 @@ def get_spark(
         # floor sample ~2.5x (1.9->0.8 s, interleaved A/B, r11). The
         # flag is read once per Python process and cached, so it must
         # be set at session-build time, not per query.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    )
-    for k, v in (extra_confs or {}).items():
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        **(extra_confs or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # The session that launches the JVM hands its confs over as --conf
     # flags, which become JVM system properties that every later
-    # SparkContext in the process loads as defaults: drop the per-call
-    # ones so a later session does not inherit them.
-    for k in extra_confs or {}:
+    # SparkContext in the process loads as defaults: drop them all so a
+    # later session, get_spark's or a plain builder's, starts from
+    # Spark's defaults.
+    for k in confs:
         spark._jvm.java.lang.System.clearProperty(k)
     spark.sparkContext.setLogLevel("WARN")
     return spark

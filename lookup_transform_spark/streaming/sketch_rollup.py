@@ -33,6 +33,12 @@ Retry contract: same as the ingest corpus — per-batch-directory
 OVERWRITE keyed by batch_id, so at-least-once redelivery rewrites the
 identical leaf rows instead of double-counting.
 
+The loop is ``ingest._drive`` with this module's per-batch leaf step,
+over arrivals staged by ``ingest._stage_arrivals`` (the same staleness
+gate) and folded on ``ingest._compact_due``'s cadence. The rollup is
+fixed: ``GROUP_COL`` = lang, ``VALUE_COL`` = n_chars, ``PROBS`` =
+p50/p95/p99, which the DuckDB oracles spell out.
+
 Steady-state reads: the loop stamps a maintenance marker (the staged
 batch-file set) after the trigger drains. A later call over unchanged
 arrivals — the second member of the query pair, or a monitoring read —
@@ -50,13 +56,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lookup_transform_spark.session import scoped_confs
 from lookup_transform_spark.streaming.ingest import (
+    N_FILES,
+    _compact_due,
+    _drive,
     _read_batches,
-    _reset_if_fixture_newer,
-    compact_ingest_state,
-    stage_document_batches,
+    _stage_arrivals,
 )
+
+#: the rollup's group key, its quantile value, and the percentiles read
+GROUP_COL = "lang"
+VALUE_COL = "n_chars"
+PROBS = (0.5, 0.95, 0.99)
 
 
 def _staged_files(stage: str) -> list[str]:
@@ -69,9 +80,7 @@ def _maintain_sketch_state(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
-    group_col: str = "lang",
-    value_col: str = "n_chars",
-    n_files: int = 4,
+    n_files: int = N_FILES,
     compact_every: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage the arrival batches (once) and drive BOTH sketch families
@@ -83,24 +92,18 @@ def _maintain_sketch_state(
         fused_hll_qsketch_leaves,
     )
 
-    stage = os.path.join(work_dir, "arrivals")
     state = os.path.join(work_dir, "leaves")
     ckpt = os.path.join(work_dir, "ckpt")
     marker = os.path.join(work_dir, "_maintained.json")
-    _reset_if_fixture_newer(spark, work_dir, stage, sf_dir)
-    os.makedirs(state, exist_ok=True)
     # no injected duplicates: the union of the staged batches must BE
     # the fixture so the oracles can group the raw table directly
-    stage_document_batches(
-        spark, sf_dir, stage, n_files, dup_per_file=0,
-        extra_cols=(group_col, value_col),
+    stage = _stage_arrivals(
+        spark, sf_dir, work_dir, n_files, dup_per_file=0,
+        extra_cols=(GROUP_COL, VALUE_COL),
     )
+    os.makedirs(state, exist_ok=True)
 
-    spec = {
-        "staged": _staged_files(stage),
-        "group_col": group_col,
-        "value_col": value_col,
-    }
+    spec = {"staged": _staged_files(stage)}
     done = None
     if os.path.exists(marker) and os.path.isdir(ckpt):
         try:
@@ -109,20 +112,13 @@ def _maintain_sketch_state(
         except (OSError, ValueError):
             done = None
     if done != spec:
-        schema = (
-            f"doc_id long, text string, {group_col} string, "
-            f"{value_col} long"
-        )
 
-        def handle_batch(batch: DataFrame, batch_id: int) -> None:
-            if compact_every and batch_id and batch_id % compact_every == 0:
-                # leaf rows are ROW-PRESERVING under each family's fold
-                # (merge happens at read: per-bucket MAX / SUM within
-                # each family tag), so the ingest corpus's leveled
-                # compaction applies verbatim to the tagged union: a
-                # state read opens O(log batches + compact_every) dirs
-                # over an unbounded stream instead of one per trigger
-                compact_ingest_state(batch.sparkSession, state, batch_id)
+        def step(batch: DataFrame, batch_id: int) -> None:
+            # leaf rows are ROW-PRESERVING under each family's fold
+            # (merge happens at read: per-bucket MAX / SUM within each
+            # family tag), so the ingest corpus's leveled compaction
+            # applies verbatim to the tagged union
+            _compact_due(batch.sparkSession, state, batch_id, compact_every)
             # ONE pass builds both families' leaf rows (family-tagged;
             # see fused_hll_qsketch_leaves for the stage-count math —
             # two independent builds + two writes measured ~2× the
@@ -130,8 +126,8 @@ def _maintain_sketch_state(
             # log_bucket needs a double (isnan); the cast is mirrored
             # in the oracle's value expression.
             fused = fused_hll_qsketch_leaves(
-                batch, [group_col], "doc_id",
-                F.col(value_col).cast("double"),
+                batch, [GROUP_COL], "doc_id",
+                F.col(VALUE_COL).cast("double"),
             )
             # tiny frame (two rows per group): single-file overwrite
             # keyed by batch id — the ingest corpus retry contract
@@ -142,19 +138,13 @@ def _maintain_sketch_state(
         # the per-trigger leaf jobs shuffle O(groups × buckets) rows —
         # shuffle width above 1 is pure task-scheduling overhead at any
         # micro-batch size (state writes are coalesce(1) single-file
-        # regardless). Scoped to the loop: foreachBatch runs on the
-        # session whose conf outlives the stream.
-        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "1"}):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(stage, "batch_*"))
-                .writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        # regardless)
+        _drive(
+            spark, work_dir, step,
+            f"doc_id long, text string, {GROUP_COL} string, "
+            f"{VALUE_COL} long",
+            {"spark.sql.shuffle.partitions": "1"},
+        )
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(spec, fh)
@@ -165,12 +155,12 @@ def _maintain_sketch_state(
         "sketch maintenance produced no committed leaves"
     )
     hll = leaves.filter(F.col("family") == "hll").select(
-        group_col,
+        GROUP_COL,
         F.col("sketch").cast("map<int,int>").alias("sketch"),
         "n_rows",
     )
     qleaves = leaves.filter(F.col("family") == "q").select(
-        group_col, "sketch", "n_rows"
+        GROUP_COL, "sketch", "n_rows"
     )
     return hll, qleaves
 
@@ -179,35 +169,30 @@ def stream_sketch_rollup(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
-    group_col: str = "lang",
-    n_files: int = 4,
+    n_files: int = N_FILES,
     compact_every: int = 8,
 ) -> DataFrame:
     """Distinct-count read over the maintained HLL leaves. Returns
-    (group, approx_distinct, n_rows)."""
+    (lang, approx_distinct, n_rows)."""
     from lookup_transform_spark.operators.sketches import (
         hll_portable_estimate_from_leaves,
     )
 
     hll, _ = _maintain_sketch_state(
-        spark, sf_dir, work_dir, group_col=group_col,
-        n_files=n_files, compact_every=compact_every,
+        spark, sf_dir, work_dir, n_files=n_files, compact_every=compact_every,
     )
-    return hll_portable_estimate_from_leaves(hll, [group_col])
+    return hll_portable_estimate_from_leaves(hll, [GROUP_COL])
 
 
 def stream_quantile_rollup(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
-    group_col: str = "lang",
-    value_col: str = "n_chars",
-    probs: tuple[float, ...] = (0.5, 0.95, 0.99),
-    n_files: int = 4,
+    n_files: int = N_FILES,
     compact_every: int = 8,
 ) -> DataFrame:
     """Percentile read over the maintained histogram leaves. Returns
-    (group, n_rows, p50, p95, p99) for the default ``probs``."""
+    (lang, n_rows, p50, p95, p99)."""
     from pyspark.sql import functions as F
 
     from lookup_transform_spark.operators.sketches import (
@@ -216,18 +201,17 @@ def stream_quantile_rollup(
     )
 
     _, qleaves = _maintain_sketch_state(
-        spark, sf_dir, work_dir, group_col=group_col, value_col=value_col,
-        n_files=n_files, compact_every=compact_every,
+        spark, sf_dir, work_dir, n_files=n_files, compact_every=compact_every,
     )
-    rolled = qsketch_merge(qleaves, [group_col])
-    out = qsketch_quantiles(rolled, [group_col], list(probs))
-    # quantile column names re-derived from probs via the ONE shared
+    rolled = qsketch_merge(qleaves, [GROUP_COL])
+    out = qsketch_quantiles(rolled, [GROUP_COL], list(PROBS))
+    # quantile column names re-derived from PROBS via the ONE shared
     # formula (ADVICE r10: prefix-matching out.columns grabbed any
-    # group_col starting with 'p')
+    # group column starting with 'p')
     from lookup_transform_spark.operators.sketches import quantile_col_name
 
-    qcols = [quantile_col_name(p) for p in probs]
+    qcols = [quantile_col_name(p) for p in PROBS]
     return out.select(
-        group_col, "n_rows",
+        GROUP_COL, "n_rows",
         *[F.round(c, 6).alias(c) for c in qcols],
     )

@@ -113,14 +113,26 @@ def test_events_readers_accept_ns_parquet_on_a_plain_session(spark, tmp_path):
 
 
 _FIRST_SESSION_CONFS_DO_NOT_LEAK = """
+from pyspark.sql import SparkSession
+
 from lookup_transform_spark.session import get_spark
 
 KEY = "spark.sql.autoBroadcastJoinThreshold"
+BASE = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.execution.arrow.pyspark.enabled",
+)
 first = get_spark(extra_confs={KEY: "-1"})
 assert first.conf.get(KEY) == "-1"
+assert [first.conf.get(k) for k in BASE] == ["true", "2", "true"]
 first.stop()
-plain = get_spark()
-print(plain.conf.get(KEY), plain._jvm.java.lang.System.getProperty(KEY))
+second = get_spark()
+print(second.conf.get(KEY), second._jvm.java.lang.System.getProperty(KEY))
+second.stop()
+plain = SparkSession.builder.master("local[1]").getOrCreate()
+print(*[plain.conf.get(k) for k in BASE])
+print(*[plain._jvm.java.lang.System.getProperty(k) for k in BASE])
 """
 
 
@@ -128,7 +140,9 @@ def test_extra_confs_do_not_outlive_their_session():
     """The first session of a process launches the JVM with its confs
     as ``--conf`` flags, which become JVM system properties that every
     later SparkContext in the process loads as defaults. A second
-    ``get_spark`` without ``extra_confs`` must read Spark's default."""
+    ``get_spark`` without ``extra_confs`` must read Spark's default, and
+    a plain builder session must read Spark's defaults for the base
+    confs ``get_spark`` sets too, with no system property left behind."""
     import subprocess
     import sys
 
@@ -139,4 +153,8 @@ def test_extra_confs_do_not_outlive_their_session():
         env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.split() == ["10485760b", "None"], out.stdout
+    assert out.stdout.split("\n")[:3] == [
+        "10485760b None",
+        "false 200 false",
+        "None None None",
+    ], out.stdout

@@ -4,6 +4,7 @@ can't be DuckDB-checked)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lookup_transform_spark import LookupSpec, registry
@@ -370,17 +371,29 @@ def test_stream_ingest_dedup_matches_batch_replay(spark, sf_dir, tmp_path):
     assert {(r["f"], r["doc_id"]) for r in again.collect()} == got
 
 
+@pytest.mark.parametrize(
+    "entry",
+    ["stream_ingest_dedup", "stream_ingest_neardedup", "stream_sketch_rollup"],
+)
 def test_stream_ingest_invalidates_on_fixture_regeneration(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, entry
 ):
     """A regenerated fixture (newer mtime than the staging marker) must
-    wipe the ingest work dir — staged arrivals, corpus, index, AND the
-    stream checkpoint — so the stream re-processes instead of silently
-    returning the stale corpus."""
+    wipe the work dir of every continuous-ingest entry point — staged
+    arrivals, corpus or leaves, the LSH catalog tables AND the stream
+    checkpoint — so the stream re-processes instead of silently
+    returning the stale result."""
     import os
     import shutil
 
-    from lookup_transform_spark.streaming.ingest import stream_ingest_dedup
+    from lookup_transform_spark.streaming.ingest import (
+        _lsh_tables,
+        stream_ingest_dedup,
+        stream_ingest_neardedup,
+    )
+    from lookup_transform_spark.streaming.sketch_rollup import (
+        stream_sketch_rollup,
+    )
 
     # copy the fixture so its mtime can be touched without writing to
     # the read-only testdata tree
@@ -390,14 +403,29 @@ def test_stream_ingest_invalidates_on_fixture_regeneration(
         f"{sf_dir}/documents.parquet", fx / "documents.parquet"
     )
     work = str(tmp_path / "work")
-    first = stream_ingest_dedup(spark, str(fx), work, n_files=2).count()
+    run = {
+        f.__name__: f
+        for f in (stream_ingest_dedup, stream_ingest_neardedup,
+                  stream_sketch_rollup)
+    }[entry]
+    first = sorted(run(spark, str(fx), work, n_files=2).collect())
     ckpt_before = os.path.getmtime(f"{work}/ckpt")
+    spec = f"{work}/lsh_index/bands/_BUCKET_SPEC.json"
+    spec_before = os.path.getmtime(spec) if os.path.exists(spec) else None
 
     os.utime(fx / "documents.parquet")  # "regenerate" the fixture
-    second = stream_ingest_dedup(spark, str(fx), work, n_files=2).count()
-    assert second == first  # same data → same corpus
+    second = sorted(run(spark, str(fx), work, n_files=2).collect())
+    assert second == first  # same data → same result
     # but the run really started over: fresh checkpoint dir
     assert os.path.getmtime(f"{work}/ckpt") > ckpt_before
+    if entry == "stream_ingest_neardedup":
+        # only write_lsh_index writes the spec sidecar, and batch 0 only
+        # calls it when the catalog no longer holds the tables: a fresh
+        # sidecar means the tables were dropped and rebuilt
+        assert os.path.getmtime(spec) > spec_before
+        assert all(spark.catalog.tableExists(t) for t in _lsh_tables(work))
+    for t in _lsh_tables(work):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_reset_ingest_state_forces_full_replay(spark, sf_dir, tmp_path):
