@@ -142,25 +142,12 @@ def dedup_exact(
     return out.select(*df.columns)  # restore original column order
 
 
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of a text column (JVM-side)."""
-    tokens = _tokens(text_col)
-    if n == 1:
-        return F.array_distinct(tokens)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
-        )
-    )
-
-
-def with_shingle_hashes(
-    df: DataFrame, text_col: str, n: int = 3, out_col: str = "__sh_arr__"
-) -> DataFrame:
-    """Distinct word-n-gram shingle HASHES as an int64 array column —
-    the fast formulation of ``transform(shingles(text), xxhash64)``.
+def with_shingle_hashes(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
+    """Distinct word-n-gram shingle HASHES as the int64 array column
+    ``__sh_arr__`` — the fast formulation of
+    ``transform(text.shingles(text), xxhash64)`` and the ONE shingle
+    builder of the MinHash signature, its Jaccard verify, the at-rest
+    LSH index and the n-gram similarity join.
 
     Instead of building every n-gram as a STRING (slice + concat_ws per
     shingle — measured 5.7 s for the 32× corpus) each token is hashed
@@ -178,7 +165,17 @@ def with_shingle_hashes(
     shingles and minhash signatures built from them estimate the same
     similarity. ``F.get`` (0-based, null on out-of-range) keeps short
     documents ANSI-safe; nulls hash as skipped args, mirroring the
-    string path's truncated final shingle.
+    string path's truncated final shingle; per document the two sets
+    have equal sizes (pinned on the sf fixtures).
+
+    The array is empty exactly when the text is NULL (``""`` still
+    yields one shingle). Callers that drop empty sets filter
+    ``text IS NOT NULL`` on the input, never ``size(arr) > 0`` on the
+    output: Spark pushes a size filter (explicit, or inferred under a
+    plain ``explode``) below the projection that built the array with
+    the whole token-hash chain inlined, so every shingle is built
+    twice, the first time in an uncompiled Filter in the scan stage,
+    below any parallelizing repartition.
     """
     tokens = _tokens(text_col)
     step = df.withColumn(
@@ -207,7 +204,7 @@ def with_shingle_hashes(
     arr = F.when(
         F.col("__tokh__").isNull(), F.array().cast("array<bigint>")
     ).otherwise(arr)
-    return step.withColumn(out_col, arr).drop("__tokh__")
+    return step.withColumn("__sh_arr__", arr).drop("__tokh__")
 
 
 def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
@@ -555,17 +552,19 @@ def minhash_lsh_pairs(
         # arrives row-bearing in one task, but the per-doc hashing is
         # the expensive part. Gated — wide inputs pass through.
         docs = _ensure_parallel(docs, id_col)
+    # empty shingle sets (NULL text) never band: their signature would
+    # be the same constant for every such doc — one degenerate bucket —
+    # and the verify's 0/0 Jaccard is NaN, which Spark sorts ABOVE the
+    # threshold (NaN ≥ x is true), so unfiltered they'd all pair with
+    # jaccard NaN (r8 review). Filtered on the text, not on the set's
+    # size (with_shingle_hashes docstring says why).
+    docs = docs.filter(F.col(text_col).isNotNull())
     # ONE shingle computation feeds both the signature and the verify
     # stage (they are the two scans of the corpus this operator makes);
     # the numeric combine is ~5× the string-shingle formulation
     # (with_shingle_hashes docstring has the measurements)
     base_df = with_shingle_hashes(docs, text_col, SHINGLE_N)
-    # empty shingle sets (NULL text) never band: their signature would
-    # be the same constant for every such doc — one degenerate bucket —
-    # and the verify's 0/0 Jaccard is NaN, which Spark sorts ABOVE the
-    # threshold (NaN ≥ x is true), so unfiltered they'd all pair with
-    # jaccard NaN (r8 review)
-    sig = base_df.filter(F.size("__sh_arr__") > 0).select(
+    sig = base_df.select(
         F.col(id_col).alias("__id__"),
         minhash_signature_from_hashes(
             F.col("__sh_arr__"), num_hashes
@@ -651,11 +650,21 @@ def ngram_jaccard_pairs(
       metric.
 
     Formulated as explode → shingle equi-join → pair count aggregate
-    (|A∩B| from matches, |A∪B| = |A|+|B|-|A∩B|), which stays entirely
-    in whole-stage codegen and shuffles on (block, shingle) — never
-    materializing pairwise arrays. Pairs sharing zero shingles have
-    jaccard 0 and are below any positive threshold, so the equi-join
-    losing them is exact.
+    (|A∩B| from matches, |A∪B| = |A|+|B|-|A∩B|), whose explode, join
+    and aggregate run in whole-stage codegen and which shuffles on
+    (block, shingle) — never materializing pairwise arrays. Pairs
+    sharing zero shingles have jaccard 0 and are below any positive
+    threshold, so the equi-join losing them is exact.
+
+    Shingles are the int64 hashes of ``with_shingle_hashes`` (the
+    MinHash verify's sets), so the join key is a long, not a string.
+    Two distinct shingles merge only on an xxhash64 collision — the
+    same 2⁻⁶⁴ class as the MinHash verify and the exact-duplicate
+    precluster. The explode is an OUTER one plus a null filter on its
+    output, because Spark infers ``size(arr) > 0`` under a plain
+    ``explode`` and pushes it below the shingle projection with the
+    chain inlined. Shingle hashes are never NULL, so exactly the plain
+    explode's rows survive (NULL text's one NULL row is dropped).
 
     ``max_shingle_df`` excludes shingles whose document frequency within
     a block exceeds the cap from the INTERSECTION join only (denominators
@@ -671,15 +680,12 @@ def ngram_jaccard_pairs(
     # parallelize shingle building when the scan arrives narrow (gated)
     docs = _ensure_parallel(docs, id_col)
     blk = F.col(block_col) if block_col else F.lit(1)
-    sel = docs.select(
+    sel = with_shingle_hashes(docs, text_col, shingle_n).select(
         F.col(id_col).alias("__id__"),
         blk.alias("__blk__"),
-        shingles(text_col, shingle_n).alias("__sh__"),
-    ).select(
-        "__id__", "__blk__",
-        F.size("__sh__").alias("__n__"),
-        F.explode("__sh__").alias("__s__"),
-    )
+        F.size("__sh_arr__").alias("__n__"),
+        F.explode_outer("__sh_arr__").alias("__s__"),
+    ).filter(F.col("__s__").isNotNull())
     # shingles are distinct per doc, so rows per (block, shingle) = DF
     sel = _cap_group_size(sel, ["__blk__", "__s__"], max_shingle_df)
     a = sel.select(

@@ -40,6 +40,20 @@ def tokens(text_col: str | Column) -> Column:
     return F.split(F.lower(c), r"\s+")
 
 
+def shingles(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a text column (JVM-side)."""
+    toks = tokens(text_col)
+    if n == 1:
+        return F.array_distinct(toks)
+    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
+    return F.array_distinct(
+        F.transform(
+            idx,
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+    )
+
+
 def token_count(text_col: str | Column) -> Column:
     return F.size(tokens(text_col))
 
@@ -136,13 +150,10 @@ def rolling_fingerprint(text_col: str, window: int = 5) -> Column:
     (winnowing-lite), JVM-side. Each shingle hashes to its first 64 md5
     bits via the dedup module's signed fold — the portable family, so
     an ANSI-SQL oracle reproduces the fingerprint bit-for-bit."""
-    from lookup_transform_spark.operators.dedup import (
-        _md5_token_hash,
-        shingles,
-    )
+    from lookup_transform_spark.operators.dedup import _md5_token_hash
 
     if not isinstance(text_col, str):
-        # dedup.shingles takes a column NAME (annotation says so too);
+        # shingles takes a column NAME (annotation says so too);
         # accepting Column here would diverge from the oracle's shape
         raise TypeError("rolling_fingerprint requires a column name")
     return F.array_min(F.transform(shingles(text_col, window), _md5_token_hash))

@@ -29,8 +29,9 @@ from lookup_transform_spark.session import NANOS_AS_LONG, set_confs
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-                       if "__file__" in globals() else "/root/repo", ".scratch")
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
 
 def _stale_guard(

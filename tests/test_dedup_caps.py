@@ -5,6 +5,11 @@ into O(k²) candidates, so these caps are what keep the operators from
 going quadratic on boilerplate-heavy corpora.
 """
 
+import os
+import re
+
+import pytest
+
 from lookup_transform_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -14,6 +19,34 @@ from lookup_transform_spark.operators.dedup import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def _py_shingles(text, n=3):
+    """Distinct word n-gram strings with ``text.tokens``' exact split:
+    ``split(lower(text), '\\s+')`` keeps the '' a leading/trailing
+    whitespace run leaves, and short texts give one truncated shingle.
+    ASCII whitespace only (Java's and Python's \\s agree there)."""
+    t = re.split(r"\s+", text.lower())
+    return {" ".join(t[i:i + n]) for i in range(max(len(t) - n, 0) + 1)}
+
+
+def _py_pairs(rows, metric, threshold):
+    """{(a, b): score} over same-block non-NULL-text pairs a < b."""
+    sets = {i: _py_shingles(t) for i, t, _ in rows if t is not None}
+    block = {i: s for i, _, s in rows}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a >= b or block[a] != block[b]:
+                continue
+            inter = len(sets[a] & sets[b])
+            if metric == "containment":
+                score = inter / min(len(sets[a]), len(sets[b]))
+            else:
+                score = inter / len(sets[a] | sets[b])
+            if inter and round(score, 6) >= threshold:
+                out[(a, b)] = round(score, 6)
+    return out
 
 
 def test_ngram_cap_above_df_is_exact(spark):
@@ -99,6 +132,70 @@ def test_ngram_containment_matches_python_reference(spark):
         ).collect()
     }
     assert jac[(1, 2)] < 0.5  # ...where jaccard dilutes by length ratio
+
+
+@pytest.mark.parametrize("metric", ["jaccard", "containment"])
+def test_ngram_pairs_edge_texts_match_python_reference(spark, metric):
+    """Both metrics over int64 shingle hashes equal the string-shingle
+    set computation on the texts where the two could part: NULL text
+    (no shingles, never pairs), "" and whitespace-only text (one
+    shingle of '' tokens), texts under 3 tokens (one truncated
+    shingle, which must not match a full 3-gram), leading/trailing
+    whitespace (edge shingles carrying a '' token), case, and a
+    second block that must not pair across."""
+    rows = [
+        (1, None, "s"),
+        (2, "", "s"),
+        (3, "   ", "s"),
+        (4, "alpha beta", "s"),
+        (5, "alpha beta gamma", "s"),
+        (6, "  alpha beta gamma delta  ", "s"),
+        (7, "Alpha BETA", "s"),
+        (8, "", "s"),
+        (9, "alpha", "s"),
+        (10, "alpha beta gamma delta epsilon", "s"),
+        (11, None, "s"),
+        (12, "alpha beta", "t"),
+        (13, "alpha beta gamma delta ", "s"),
+    ]
+    got = {
+        (r.doc_id_a, r.doc_id_b): r[metric]
+        for r in ngram_jaccard_pairs(
+            _docs(spark, rows), threshold=0.05, metric=metric
+        ).collect()
+    }
+    expect = _py_pairs(rows, metric, 0.05)
+    assert got == expect
+    assert got[(2, 8)] == 1.0 and got[(4, 7)] == 1.0
+    assert not any({1, 11} & set(p) for p in got)
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_shingle_hashes_size_equals_string_shingles(spark, sf_dir, sf):
+    """Per document, the int64 shingle-hash set is exactly as large as
+    the string shingle set: no two distinct n-grams of one fixture
+    document share a hash, and the truncated short-text shingle is
+    built the same way on both paths."""
+    from pyspark.sql import functions as F
+
+    from lookup_transform_spark.operators.dedup import (
+        SHINGLE_N,
+        with_shingle_hashes,
+    )
+    from lookup_transform_spark.operators.text import shingles
+
+    path = os.path.join(os.path.dirname(sf_dir), sf, "documents.parquet")
+    docs = spark.read.parquet(path)
+    sizes = with_shingle_hashes(docs, "text", SHINGLE_N).select(
+        F.size("__sh_arr__").alias("h"),
+        F.size(shingles("text", SHINGLE_N)).alias("s"),
+    )
+    row = sizes.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("h") != F.col("s")).cast("int")).alias("diff"),
+    ).first()
+    assert row["n"] == docs.count() > 0
+    assert row["diff"] == 0
 
 
 def test_minhash_exact_dups_survive_any_bucket_cap(spark):
@@ -310,14 +407,12 @@ def test_minhash_recall_vs_exact_jaccard_ground_truth(spark):
     The exact-verify stage guarantees precision (no spurious pairs);
     this pins RECALL — that banding doesn't silently drop true pairs.
     Measured 25/25 at sf0.01; floor at 0.9 since banding is
-    probabilistic in general."""
+    probabilistic in general. The truth comes from Python string
+    shingle sets, not ``ngram_jaccard_pairs``, which shares
+    ``with_shingle_hashes`` with the code under test."""
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    truth = {
-        (r["doc_id_a"], r["doc_id_b"])
-        for r in ngram_jaccard_pairs(
-            docs, block_col=None, threshold=0.5
-        ).collect()
-    }
+    rows = [(r["doc_id"], r["text"], None) for r in docs.collect()]
+    truth = set(_py_pairs(rows, "jaccard", 0.5))
     got = {
         (r["doc_id_a"], r["doc_id_b"])
         for r in minhash_lsh_pairs(
