@@ -187,16 +187,7 @@ def q_stream_stream_join(spark, sf):
         purchases, clicks, key="user_id", left_ts="p_ts", right_ts="c_ts",
         lookback="1 hour",
     ).select("p_id", "c_id")
-    # state_partitions=4 (r11): a stream-stream join keeps FOUR state
-    # stores per shuffle partition (keyed left/right x key-with-index),
-    # so per-trigger store open/commit bookkeeping scales 4x faster in
-    # partition count than the single-store aggregations the default 8
-    # was sized for. Per-query A/B (min-of-3, availableNow, sf0.1):
-    # 8 -> 2.99 s, 4 -> 2.08 s, 2 -> 2.23 s, 1 -> 2.31 s. Sized to
-    # state volume per run_to_memory's contract, not to the bench box.
-    return run_to_memory(
-        joined, f"mem_stream_stream_{_vtag(sf)}", state_partitions=4
-    )
+    return run_to_memory(joined, f"mem_stream_stream_{_vtag(sf)}")
 
 
 @_q(

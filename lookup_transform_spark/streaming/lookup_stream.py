@@ -12,9 +12,11 @@ reference's broadcast flag (Lookup.java:208).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from lookup_transform_spark.session import (
     NANOS_AS_LONG,
@@ -22,21 +24,29 @@ from lookup_transform_spark.session import (
     set_confs,
 )
 
+# events schema by (path, size, mtime), as dedup._ROW_GROUP_CACHE keys
+# footer reads: inferring it is one Spark job per call, and a
+# regenerated fixture gets a new key
+_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (ns parquet → µs ts,
     same normalization as registry._events). The file source requires a
     directory, so the single fixture file is staged via symlink."""
     import hashlib
-    import os
 
     from lookup_transform_spark.sources.readers import normalize_events_ts
 
     set_confs(spark, NANOS_AS_LONG)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    target = os.path.abspath(f"{sf_dir}/events.parquet")
+    st = os.stat(target)
+    key = (target, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(target).schema
 
     repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    target = os.path.abspath(f"{sf_dir}/events.parquet")
     # stage dir keyed by the FULL fixture path, not its basename — two
     # sf_dirs sharing a basename must not share a stage (the second
     # caller would silently stream the first one's data)
@@ -57,37 +67,79 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.lexists(link):
         os.symlink(target, link)
 
-    stream = spark.readStream.schema(batch.schema).parquet(stage)
+    stream = spark.readStream.schema(schema).parquet(stage)
     return normalize_events_ts(stream)
+
+
+def _source_bytes(path: str) -> int | None:
+    """Bytes of the non-hidden files under ``path`` (a file or a
+    directory, links followed), or None when it cannot be sized."""
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path)
+        if not os.path.isdir(path):
+            return None
+        total = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files if not f.startswith(("_", "."))
+            )
+        return total
+    except OSError:
+        return None
+
+
+def _state_width(df: DataFrame) -> int | None:
+    """``run_to_memory``'s shuffle width for ``df``, or None to keep
+    the session's."""
+    spark = df.sparkSession
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    total = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        path = leaf.dataSource().options().get("path")
+        size = None if path.isEmpty() else _source_bytes(path.get())
+        if size is None:
+            return None
+        total += size
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(-(-total // split), width))
 
 
 def run_to_memory(
     df: DataFrame,
     name: str | None = None,
     output_mode: str = "append",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Execute a streaming plan to completion (availableNow trigger) into
     a memory sink; returns the result as a batch DataFrame. This is how
     the rows-only streaming queries execute under the driver harness.
 
-    ``state_partitions`` bounds the state-store count for the run:
-    stateful operators allocate one store per shuffle partition, and an
-    oversized default (tuned for batch scans) turns micro-batch commits
-    into pure store-bookkeeping overhead. The partition count of a
-    stateful streaming query is FIXED at its first run by the
-    checkpoint, so this is a per-query deployment decision, not a
-    session conf — size it to expected state volume, not batch width.
-    Pass ``None`` to inherit the session default. The override is
-    scoped to the drain (see ``session.scoped_confs`` for what that
-    means under concurrent use of one session).
+    Stateful operators allocate one state store per shuffle partition,
+    and each store is opened and committed on every trigger, so a width
+    tuned for batch scans turns small micro-batch commits into store
+    bookkeeping. The run's ``spark.sql.shuffle.partitions`` is therefore
+    ``ceil(source_bytes / spark.sql.files.maxPartitionBytes)`` clamped
+    to [1, the session's width]: the split count Spark's own file scan
+    would plan, where ``source_bytes`` sums the non-hidden files under
+    the ``path`` of every file-source stream leaf. A plan with any other
+    leaf (a static side, a non-file source) or a path that cannot be
+    sized keeps the session's width. Deriving the count per run is safe
+    because no checkpoint location is set: every run starts on a fresh
+    temporary checkpoint, so no earlier run has fixed the state's
+    partition count. The override is scoped to the drain (see
+    ``session.scoped_confs`` for what that means under concurrent use
+    of one session).
     """
     spark = df.sparkSession
     table = name or f"mem_{uuid.uuid4().hex[:8]}"
-    confs = (
-        {} if state_partitions is None
-        else {"spark.sql.shuffle.partitions": str(state_partitions)}
-    )
+    width = _state_width(df)
+    confs = {} if width is None else {"spark.sql.shuffle.partitions": str(width)}
     with scoped_confs(spark, confs):
         q = (
             df.writeStream.format("memory")

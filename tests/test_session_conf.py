@@ -75,9 +75,7 @@ def test_streaming_scopes_leave_shuffle_width_as_found(spark, tmp_path):
 
     with scoped_confs(spark, {SHUFFLE: "3"}):
         ev = read_events_stream(spark, SF).groupBy("user_id").count()
-        got = run_to_memory(
-            ev, "t_conf_scope", output_mode="complete", state_partitions=2
-        )
+        got = run_to_memory(ev, "t_conf_scope", output_mode="complete")
         assert got.count() > 0
         assert spark.conf.get(SHUFFLE) == "3"
         stream_sketch_rollup(spark, SF, str(tmp_path / "sketch"), n_files=2)

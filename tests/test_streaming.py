@@ -4,10 +4,15 @@ can't be DuckDB-checked)."""
 
 from __future__ import annotations
 
+import contextlib
+import threading
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from lookup_transform_spark import LookupSpec, registry
+from lookup_transform_spark.session import scoped_confs
 from lookup_transform_spark.streaming import (
     read_events_stream,
     run_to_memory,
@@ -876,6 +881,118 @@ def test_stream_stage_not_keyed_by_basename(spark, tmp_path):
     n1 = run_to_memory(read_events_stream(spark, str(d1))).count()
     n2 = run_to_memory(read_events_stream(spark, str(d2))).count()
     assert n2 == 100 and n1 > n2  # same-basename dirs stream their OWN data
+
+
+class _StateWidths(StreamingQueryListener):
+    """The ``numShufflePartitions`` of every stateful operator in the
+    progress of the streams run while it listens: what the run executed
+    with, not what a helper computed."""
+
+    def __init__(self):
+        self.widths: list[int] = []
+        self.ended = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.widths += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.ended.set()
+
+
+@contextlib.contextmanager
+def _state_widths(spark):
+    rec = _StateWidths()
+    spark.streams.addListener(rec)
+    try:
+        yield rec.widths
+    finally:
+        # listener events arrive asynchronously, progress before the end
+        rec.ended.wait(30)
+        spark.streams.removeListener(rec)
+
+
+def _tumbling_state_widths(spark, confs: dict[str, str]) -> list[int]:
+    with scoped_confs(spark, confs), _state_widths(spark) as widths:
+        run_to_memory(
+            stream_tumbling_window(read_events_stream(spark, SF)),
+            output_mode="complete",
+        ).count()
+    return widths
+
+
+def test_events_stream_runs_with_one_state_partition(spark):
+    """The sf0.001 events file is far below one file split, so the
+    stream's state lives in one store whatever the session's width."""
+    assert _tumbling_state_widths(
+        spark, {"spark.sql.shuffle.partitions": "5"}
+    ) == [1]
+
+
+@pytest.mark.parametrize("splits, want", [(3, 3), (27, 5)])
+def test_state_width_is_split_count_capped_at_session_width(
+    spark, splits, want
+):
+    import os
+
+    size = os.path.getsize(f"{SF}/events.parquet")
+    split_bytes = -(-size // splits)
+    assert -(-size // split_bytes) == splits
+    assert _tumbling_state_widths(spark, {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.files.maxPartitionBytes": str(split_bytes),
+    }) == [want]
+
+
+def test_non_file_source_keeps_session_width(spark):
+    src = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 20)
+        .load()
+    )
+    counts = src.groupBy((F.col("value") % 3).alias("k")).count()
+    with (
+        scoped_confs(spark, {"spark.sql.shuffle.partitions": "3"}),
+        _state_widths(spark) as widths,
+    ):
+        assert run_to_memory(counts, output_mode="complete").count() == 3
+    assert widths and set(widths) == {3}
+
+
+def test_events_schema_is_inferred_once_per_file_version(spark, tmp_path):
+    """Building the events stream runs no Spark job while its fixture
+    file is unchanged; a rewritten file is read again."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    d = tmp_path / "data"
+    d.mkdir()
+    shutil.copy(f"{SF}/events.parquet", d / "events.parquet")
+
+    def build_jobs(group: str) -> tuple[int, list]:
+        sc.setJobGroup(group, group)
+        try:
+            dtypes = read_events_stream(spark, str(d)).dtypes
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), dtypes
+
+    first, dtypes = build_jobs("t_schema_first")
+    assert first >= 1
+    assert build_jobs("t_schema_again") == (0, dtypes)
+    pq.write_table(
+        pq.read_table(f"{SF}/events.parquet").slice(0, 100),
+        str(d / "events.parquet"),
+    )
+    rewritten, rewritten_dtypes = build_jobs("t_schema_rewritten")
+    assert rewritten >= 1 and rewritten_dtypes == dtypes
 
 
 def test_lsh_table_prefix_no_suffix_collision(tmp_path):
