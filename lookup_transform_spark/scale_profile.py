@@ -60,12 +60,13 @@ FULL = {
 
 
 def fixture_bytes(sf_dir: str) -> int:
-    """Total on-disk bytes under ``sf_dir`` (recursive), cached."""
+    """Total on-disk bytes under ``sf_dir`` (recursive, links
+    followed), cached."""
     norm = os.path.abspath(sf_dir)
     total = _dir_bytes.get(norm)
     if total is None:
         total = 0
-        for root, _dirs, files in os.walk(norm):
+        for root, _dirs, files in os.walk(norm, followlinks=True):
             for f in files:
                 try:
                     total += os.path.getsize(os.path.join(root, f))

@@ -18,6 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from lookup_transform_spark.scale_profile import fixture_bytes
 from lookup_transform_spark.session import (
     NANOS_AS_LONG,
     scoped_confs,
@@ -33,7 +34,8 @@ _SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (ns parquet → µs ts,
     same normalization as registry._events). The file source requires a
-    directory, so the single fixture file is staged via symlink."""
+    directory, so a single fixture file is staged via symlink; a fixture
+    directory is streamed as it is."""
     import hashlib
 
     from lookup_transform_spark.sources.readers import normalize_events_ts
@@ -45,6 +47,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = _SCHEMA_CACHE[key] = spark.read.parquet(target).schema
+    if os.path.isdir(target):
+        # a fixture directory (the derived scale fixtures) is streamed in
+        # place: the source does not list through a linked directory, so
+        # a staged link to it streams no rows
+        return normalize_events_ts(
+            spark.readStream.schema(schema).parquet(target)
+        )
 
     repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     # stage dir keyed by the FULL fixture path, not its basename — two
@@ -71,30 +80,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(stream)
 
 
-def _source_bytes(path: str) -> int | None:
-    """Bytes of the non-hidden files under ``path`` (a file or a
-    directory, links followed), or None when it cannot be sized."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        if not os.path.isdir(path):
-            return None
-        total = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files if not f.startswith(("_", "."))
-            )
-        return total
-    except OSError:
-        return None
-
-
 def _state_width(df: DataFrame) -> int | None:
     """``run_to_memory``'s shuffle width for ``df``, or None to keep
     the session's."""
     spark = df.sparkSession
+    jspark = spark._jsparkSession
     leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     total = 0
     while leaves.hasNext():
@@ -102,11 +92,21 @@ def _state_width(df: DataFrame) -> int | None:
         if leaf.nodeName() != "StreamingRelation":
             return None
         path = leaf.dataSource().options().get("path")
-        size = None if path.isEmpty() else _source_bytes(path.get())
-        if size is None:
+        if path.isEmpty() or not os.path.isdir(path.get()):
             return None
-        total += size
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        total += fixture_bytes(path.get())
+    # FilePartition.maxSplitBytes, the source counted as one file
+    conf = jspark.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    cores = (
+        min_parts.get() if min_parts.isDefined()
+        else jspark.leafNodeDefaultParallelism()
+    )
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(open_cost, (total + open_cost) // cores),
+    )
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(-(-total // split), width))
 
@@ -124,17 +124,26 @@ def run_to_memory(
     and each store is opened and committed on every trigger, so a width
     tuned for batch scans turns small micro-batch commits into store
     bookkeeping. The run's ``spark.sql.shuffle.partitions`` is therefore
-    ``ceil(source_bytes / spark.sql.files.maxPartitionBytes)`` clamped
-    to [1, the session's width]: the split count Spark's own file scan
-    would plan, where ``source_bytes`` sums the non-hidden files under
-    the ``path`` of every file-source stream leaf. A plan with any other
-    leaf (a static side, a non-file source) or a path that cannot be
-    sized keeps the session's width. Deriving the count per run is safe
-    because no checkpoint location is set: every run starts on a fresh
-    temporary checkpoint, so no earlier run has fixed the state's
-    partition count. The override is scoped to the drain (see
-    ``session.scoped_confs`` for what that means under concurrent use
-    of one session).
+    the split count Spark's file scan plans for the source,
+    ``ceil(source_bytes / max_split)`` clamped to [1, the session's
+    width], with ``FilePartition.maxSplitBytes``' rule ``max_split =
+    min(maxPartitionBytes, max(openCostInBytes, (source_bytes +
+    openCostInBytes) / leaf parallelism))``. The leaf parallelism is
+    ``spark.sql.files.minPartitionNum`` if set, else the session's
+    leaf-node default parallelism. ``source_bytes`` sums the files under
+    the ``path`` of every file-source stream leaf
+    (``scale_profile.fixture_bytes``, cached per path), counted as one
+    file: exact for a staged fixture file, within a split or two of the
+    scan for a fixture directory of many files. So a source below one
+    open cost (4 MB by default) runs one store, and a large one about
+    one per leaf core. A plan with any other leaf (a static side, a
+    non-file source) or a path that is not a directory keeps the
+    session's width.
+    Deriving the count per run is safe because no checkpoint location is
+    set: every run starts on a fresh temporary checkpoint, so no earlier
+    run has fixed the state's partition count. The override is scoped to
+    the drain (see ``session.scoped_confs`` for what that means under
+    concurrent use of one session).
     """
     spark = df.sparkSession
     table = name or f"mem_{uuid.uuid4().hex[:8]}"

@@ -883,6 +883,21 @@ def test_stream_stage_not_keyed_by_basename(spark, tmp_path):
     assert n2 == 100 and n1 > n2  # same-basename dirs stream their OWN data
 
 
+def test_events_directory_fixture_streams_every_row(spark, tmp_path):
+    """A fixture whose events.parquet is a directory of part files, as
+    the derived scale fixtures write it, streams all of its rows."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF}/events.parquet")
+    d = tmp_path / "data" / "events.parquet"
+    d.mkdir(parents=True)
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), str(d / "part-0.parquet"))
+    pq.write_table(t.slice(half), str(d / "part-1.parquet"))
+    ev = read_events_stream(spark, str(tmp_path / "data"))
+    assert run_to_memory(ev).count() == t.num_rows
+
+
 class _StateWidths(StreamingQueryListener):
     """The ``numShufflePartitions`` of every stateful operator in the
     progress of the streams run while it listens: what the run executed
@@ -947,6 +962,23 @@ def test_state_width_is_split_count_capped_at_session_width(
         "spark.sql.shuffle.partitions": "5",
         "spark.sql.files.maxPartitionBytes": str(split_bytes),
     }) == [want]
+
+
+def test_state_width_is_file_scan_partition_count(spark):
+    """Spark's scan sizes its splits from the open cost and the leaf
+    parallelism too (``FilePartition.maxSplitBytes``); with a 1-byte
+    open cost the file is cut into about one split per leaf core, and
+    the run's width is the partition count of Spark's own batch scan of
+    the file."""
+    confs = {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.leafNodeDefaultParallelism": "3",
+    }
+    with scoped_confs(spark, confs):
+        scan = spark.read.parquet(f"{SF}/events.parquet").rdd.getNumPartitions()
+    assert 1 < scan < 5
+    assert _tumbling_state_widths(spark, confs) == [scan]
 
 
 def test_non_file_source_keeps_session_width(spark):
