@@ -30,7 +30,6 @@ def grouped_median_vectorized(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    out_col: str = "median_value",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Partition-vectorized grouped-median UDAF: the production shape
@@ -70,7 +69,7 @@ def grouped_median_vectorized(
     group_schema = ", ".join(
         f"{c} {t}" for c, t in df.select(*group_cols).dtypes
     )
-    schema = f"{group_schema}, {out_col} double"
+    schema = f"{group_schema}, median_value double"
 
     def _agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [pdf for pdf in batches if len(pdf)]
@@ -82,7 +81,7 @@ def grouped_median_vectorized(
         out = pdf.groupby(group_cols, as_index=False, sort=False, dropna=False)[
             value_col
         ].median()
-        yield out.rename(columns={value_col: out_col})
+        yield out.rename(columns={value_col: "median_value"})
 
     return df.select(*group_cols, value_col).mapInPandas(_agg, schema)
 

@@ -20,7 +20,7 @@ BLOOM_AB.json / PLANS.md):
   hashing, all whole-stage-codegen expressions), positions reduce to
   ≤ m/64 (word, bits) rows via a map-side-combined ``bit_or``
   aggregate, and the driver assembles the bitmap from that bounded
-  collect (≤ 1 MiB at the default m) regardless of key count or
+  collect (≤ 1 MiB at ``NUM_BITS``) regardless of key count or
   partition count. An m-bit filter is m/8 bytes — 1 MiB summarizes
   tens of millions of keys at ~1e-5 false-positive rate.
 - **probe**: the bitmap is ONE binary Literal (1 MiB rides the task
@@ -43,10 +43,11 @@ BLOOM_AB.json / PLANS.md):
   changes semantics.
 
 
-Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; the default m=2^23
-bits / k=5 gives ~1e-5 at n=200k keys and degrades gracefully — an
-undersized filter costs shuffle volume, never correctness. m must be a
-power of two (the modulo is a bitmask so every step stays in codegen).
+Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; ``NUM_BITS`` m=2^23
+bits / ``NUM_HASHES`` k=5 gives ~1e-5 at n=200k keys and degrades
+gracefully — an undersized filter costs shuffle volume, never
+correctness. m must be a power of two (the modulo is a bitmask so
+every step stays in codegen).
 """
 
 from __future__ import annotations
@@ -62,10 +63,10 @@ from pyspark.sql import types as T
 #: its int64 two's-complement value. 64 elements — safe for lit().
 _POW2 = [1 << i for i in range(63)] + [-(1 << 63)]
 
-
-def _check_bits(num_bits: int) -> None:
-    if num_bits < 64 or num_bits & (num_bits - 1):
-        raise ValueError("num_bits must be a power of two >= 64")
+#: filter size m in bits (a power of two ≥ 64: the position modulo is a
+#: bitmask) and hash count k — the sizing the module docstring derives
+NUM_BITS = 1 << 23
+NUM_HASHES = 5
 
 
 def _hash_input(df: DataFrame, key_col: str) -> Column:
@@ -104,46 +105,35 @@ def _hash_family(df: DataFrame, key_col: str) -> str:
     return type(dt).__name__
 
 
-def _position_cols(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
+def _position_cols(key: Column) -> list[Column]:
     """Kirsch-Mitzenmacher double hashing as codegen expressions: k bit
     positions from one ``xxhash64`` — (h1 + i·h2) & (m-1), h2 forced
     odd. m is a power of two, so the unsigned modulo is a bitmask and
     signedness never matters."""
-    mask = num_bits - 1
+    mask = NUM_BITS - 1
     h = F.xxhash64(key)
     h1 = h.bitwiseAND(F.lit(mask))
     h2 = (F.shiftrightunsigned(h, 33) * F.lit(2) + F.lit(1)).cast("long")
     return [
         (h1 + F.lit(i) * h2).bitwiseAND(F.lit(mask))
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
 
 
-def build_bloom(
-    keys: DataFrame,
-    key_col: str,
-    num_bits: int = 1 << 23,
-    num_hashes: int = 5,
-    merge_fanin: int = 64,
-) -> bytes:
+def build_bloom(keys: DataFrame, key_col: str) -> bytes:
     """One pass over the key side → m-bit Bloom filter as bytes.
 
     Each key's k positions explode to (word, single-bit value) rows and
     reduce via ``bit_or`` — a partial (map-side) aggregate, so every
     input partition contributes at most m/64 rows to the one shuffle,
     and the driver collects at most m/64 (word, bits) rows total
-    (≤ 1 MiB at the default m) no matter how many keys or partitions
+    (≤ 1 MiB at ``NUM_BITS``) no matter how many keys or partitions
     the key scan has. Pure JVM end to end.
-
-    ``merge_fanin`` is kept for API compatibility with the round-6
-    Python tree-merge build; the bit_or aggregate needs no fan-in bound
-    (the parameter is ignored).
     """
-    _check_bits(num_bits)
     pow2 = F.lit(_POW2)
-    pos = F.explode(
-        F.array(*_position_cols(_hash_input(keys, key_col), num_bits, num_hashes))
-    ).alias("__pos__")
+    pos = F.explode(F.array(*_position_cols(_hash_input(keys, key_col)))).alias(
+        "__pos__"
+    )
     words = (
         keys.select(pos)
         .select(
@@ -156,15 +146,13 @@ def build_bloom(
         .agg(F.bit_or("__bitval__").alias("__bits__"))
         .collect()
     )
-    out = np.zeros(num_bits // 64, dtype=np.int64)
+    out = np.zeros(NUM_BITS // 64, dtype=np.int64)
     for row in words:
         out[row["__word__"]] = row["__bits__"]
     return out.astype("<i8").tobytes()
 
 
-def _probe_expr(
-    key: Column, bm: Column, num_bits: int, num_hashes: int
-) -> Column:
+def _probe_expr(key: Column, bm: Column) -> Column:
     """Codegen membership check of ``key`` against a BINARY bitmap
     column/literal: per hash, one 1-byte ``substring`` gather decoded
     via ``ascii(decode(.., ISO-8859-1))`` (latin-1 maps byte ==
@@ -173,7 +161,7 @@ def _probe_expr(
     little-endian words: bit p lives in byte p>>3 at bit p&7."""
     pow8 = F.lit([1, 2, 4, 8, 16, 32, 64, 128])
     cond = F.lit(True)
-    for pos in _position_cols(key, num_bits, num_hashes):
+    for pos in _position_cols(key):
         byte = F.ascii(
             F.decode(
                 F.substring(bm, (F.shiftright(pos, 3) + F.lit(1)).cast("int"), 1),
@@ -187,23 +175,16 @@ def _probe_expr(
     return cond
 
 
-def bloom_might_contain(
-    df: DataFrame,
-    key_col: str,
-    bloom: bytes,
-    num_bits: int = 1 << 23,
-    num_hashes: int = 5,
-) -> Column:
+def bloom_might_contain(df: DataFrame, key_col: str, bloom: bytes) -> Column:
     """Column-valued membership probe, pure JVM: the bitmap is a single
-    binary Literal (1 MiB at the default sizing — rides the task
+    binary Literal (1 MiB at ``NUM_BITS`` — rides the task
     binary, broadcast once per executor) and the check is whole-stage
     codegen (``_probe_expr``). False positives possible (rate set by
-    sizing), false negatives never. ``df`` is unused (kept for API
-    compatibility with the round-6 broadcast-variable pandas probe)."""
-    _check_bits(num_bits)
-    if len(bloom) != num_bits // 8:
-        raise ValueError("bitmap length does not match num_bits")
-    return _probe_expr(_hash_input(df, key_col), F.lit(bloom), num_bits, num_hashes)
+    sizing), false negatives never. ``df``'s schema gives ``key_col``'s
+    type, which ``_hash_input`` widens before hashing."""
+    if len(bloom) != NUM_BITS // 8:
+        raise ValueError("bitmap length does not match NUM_BITS")
+    return _probe_expr(_hash_input(df, key_col), F.lit(bloom))
 
 
 def bloom_semi_join(
@@ -211,8 +192,6 @@ def bloom_semi_join(
     keys: DataFrame,
     fact_key: str,
     keys_key: str,
-    num_bits: int = 1 << 23,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Exact semi join with a pure-JVM Bloom prefilter on the fact side.
 
@@ -224,7 +203,6 @@ def bloom_semi_join(
     a plain Filter on the fact child — below the join, so no optimizer
     rule can hoist it past the exchange (the broadcast-1-row-join
     formulation was hoisted; see the module docstring)."""
-    _check_bits(num_bits)
     ff, kf = _hash_family(fact, fact_key), _hash_family(keys, keys_key)
     if ff != kf:
         raise ValueError(
@@ -233,10 +211,8 @@ def bloom_semi_join(
             "would hash differently and true matches would be DROPPED "
             "(false negatives); cast one side first"
         )
-    bloom = build_bloom(keys, keys_key, num_bits, num_hashes)
-    pre = fact.filter(
-        bloom_might_contain(fact, fact_key, bloom, num_bits, num_hashes)
-    )
+    bloom = build_bloom(keys, keys_key)
+    pre = fact.filter(bloom_might_contain(fact, fact_key, bloom))
     return pre.join(
         keys, pre[fact_key] == keys[keys_key], "left_semi"
     )
@@ -284,8 +260,6 @@ def semi_join_auto(
     keys_key: str,
     broadcast_rows: int = 5_000_000,
     broadcast_bytes: int = 128 << 20,
-    num_bits: int = 1 << 23,
-    num_hashes: int = 5,
     force: str | None = None,
 ) -> DataFrame:
     """Semi join routed by the key-side size estimate (r7, VERDICT r6
@@ -335,4 +309,4 @@ def semi_join_auto(
         return fact.join(
             F.broadcast(kslim), fact[fact_key] == kslim[keys_key], "left_semi"
         )
-    return bloom_semi_join(fact, keys, fact_key, keys_key, num_bits, num_hashes)
+    return bloom_semi_join(fact, keys, fact_key, keys_key)

@@ -27,16 +27,19 @@ count is static so the job DAG is static.
 
 from __future__ import annotations
 
+#: the embeddings fixture both oracles read
+TABLE, ID_COL, VEC_COL = "embeddings", "vec_id", "embedding"
 
-def _clean_points(table: str, id_col: str, vec_col: str) -> str:
+
+def _clean_points() -> str:
     """Rows with a fully-finite vector, cast to DOUBLE (the numpy path
     promotes float32 → float64 exactly; so does ``::DOUBLE[]``)."""
     return f"""
 pts AS MATERIALIZED (
-  SELECT {id_col} AS vec_id, ({vec_col})::DOUBLE[] AS v
-  FROM {table}
-  WHERE {vec_col} IS NOT NULL
-    AND len(list_filter({vec_col},
+  SELECT {ID_COL} AS vec_id, ({VEC_COL})::DOUBLE[] AS v
+  FROM {TABLE}
+  WHERE {VEC_COL} IS NOT NULL
+    AND len(list_filter({VEC_COL},
           x -> x IS NULL OR isnan(x) OR isinf(x))) = 0
 )"""
 
@@ -114,18 +117,11 @@ def _final_assign(iters: int) -> str:
 )"""
 
 
-def kmeans_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 5,
-    dim: int = 64,
-) -> str:
+def kmeans_oracle_sql(k: int = 8, iters: int = 5, dim: int = 64) -> str:
     """Oracle for ``kmeans_embeddings``: per-cluster sizes under the
     final assignment."""
     return f"""
-WITH {_clean_points(table, id_col, vec_col)},
+WITH {_clean_points()},
 {_lloyd_ctes(str(k), iters, dim)},
 {_final_assign(iters)}
 SELECT cid AS cluster_id, COUNT(*) AS n_points
@@ -134,12 +130,7 @@ FROM af GROUP BY cid ORDER BY cluster_id
 
 
 def semantic_dedup_oracle_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 3,
-    threshold: float = 0.4,
-    dim: int = 64,
+    iters: int = 3, threshold: float = 0.4, dim: int = 64
 ) -> str:
     """Oracle for ``dedup_semantic``: the same unrolled Lloyd's with
     the query's data-dependent ``k = max(8, min(256, n // 2000))``,
@@ -156,10 +147,10 @@ def semantic_dedup_oracle_sql(
     # dirty vector makes the two counts straddle a multiple of 2000
     # (latent r9 self-review finding; current fixtures are clean)
     k_expr = (
-        f"(SELECT greatest(8, least(256, COUNT(*) // 2000)) FROM {table})"
+        f"(SELECT greatest(8, least(256, COUNT(*) // 2000)) FROM {TABLE})"
     )
     return f"""
-WITH {_clean_points(table, id_col, vec_col)},
+WITH {_clean_points()},
 {_lloyd_ctes(k_expr, iters, dim)},
 {_final_assign(iters)},
 nrm AS (

@@ -409,9 +409,7 @@ def _cap_group_size(
     )
 
 
-def _exact_precluster(
-    docs: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _exact_precluster(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Collapse exact-duplicate texts to one representative per group
     BEFORE candidate generation.
 
@@ -456,7 +454,7 @@ def _exact_precluster(
     # pairs). NULL-fp rows become their own representatives below.
     fp = docs.withColumn(
         "__fp__",
-        F.when(F.col(text_col).isNotNull(), F.xxhash64(F.col(text_col))),
+        F.when(F.col("text").isNotNull(), F.xxhash64(F.col("text"))),
     )
     try:
         n = docs.sparkSession.sparkContext.defaultParallelism
@@ -471,13 +469,13 @@ def _exact_precluster(
     tagged = fp.withColumn(
         "__rep__",
         F.when(
-            F.col("__fp__").isNotNull(), F.min(F.col(id_col)).over(w)
-        ).otherwise(F.col(id_col)),
+            F.col("__fp__").isNotNull(), F.min(F.col("doc_id")).over(w)
+        ).otherwise(F.col("doc_id")),
     ).drop("__fp__")
-    star = tagged.filter(F.col(id_col) != F.col("__rep__")).select(
-        F.col("__rep__").alias("doc_id_a"), F.col(id_col).alias("doc_id_b")
+    star = tagged.filter(F.col("doc_id") != F.col("__rep__")).select(
+        F.col("__rep__").alias("doc_id_a"), F.col("doc_id").alias("doc_id_b")
     )
-    reps = tagged.filter(F.col(id_col) == F.col("__rep__")).drop("__rep__")
+    reps = tagged.filter(F.col("doc_id") == F.col("__rep__")).drop("__rep__")
     return reps, star
 
 
@@ -508,8 +506,6 @@ def _band_explode(sig_col: str, bands: int, rows_per_band: int) -> F.Column:
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = NUM_HASHES,
     bands: int = BANDS,
     threshold: float = JACCARD_THRESHOLD,
@@ -546,26 +542,26 @@ def minhash_lsh_pairs(
         # spreads everything downstream — an _ensure_parallel exchange
         # in front of it would be a second, redundant shuffle (r12:
         # the row-group-aware narrowness check actually fires now)
-        docs, star = _exact_precluster(docs, id_col, text_col)
+        docs, star = _exact_precluster(docs)
     else:
         # spread signature computation across cores: a small parquet
         # arrives row-bearing in one task, but the per-doc hashing is
         # the expensive part. Gated — wide inputs pass through.
-        docs = _ensure_parallel(docs, id_col)
+        docs = _ensure_parallel(docs, "doc_id")
     # empty shingle sets (NULL text) never band: their signature would
     # be the same constant for every such doc — one degenerate bucket —
     # and the verify's 0/0 Jaccard is NaN, which Spark sorts ABOVE the
     # threshold (NaN ≥ x is true), so unfiltered they'd all pair with
     # jaccard NaN (r8 review). Filtered on the text, not on the set's
     # size (with_shingle_hashes docstring says why).
-    docs = docs.filter(F.col(text_col).isNotNull())
+    docs = docs.filter(F.col("text").isNotNull())
     # ONE shingle computation feeds both the signature and the verify
     # stage (they are the two scans of the corpus this operator makes);
     # the numeric combine is ~5× the string-shingle formulation
     # (with_shingle_hashes docstring has the measurements)
-    base_df = with_shingle_hashes(docs, text_col, SHINGLE_N)
+    base_df = with_shingle_hashes(docs, "text", SHINGLE_N)
     sig = base_df.select(
-        F.col(id_col).alias("__id__"),
+        F.col("doc_id").alias("__id__"),
         minhash_signature_from_hashes(
             F.col("__sh_arr__"), num_hashes
         ).alias("__sig__"),
@@ -604,7 +600,7 @@ def minhash_lsh_pairs(
     # as the banding itself) also makes the per-pair intersect/union a
     # long-array op instead of a string-array op.
     sh_tbl = base_df.select(
-        F.col(id_col).alias("__sid__"),
+        F.col("doc_id").alias("__sid__"),
         F.array_sort(F.col("__sh_arr__")).alias("__sh__"),
     )
     cand = (
@@ -629,8 +625,6 @@ def minhash_lsh_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     block_col: str | None = "source",
     shingle_n: int = 3,
     threshold: float = 0.3,
@@ -678,10 +672,10 @@ def ngram_jaccard_pairs(
     if metric not in ("jaccard", "containment"):
         raise ValueError(f"metric must be jaccard|containment, got {metric!r}")
     # parallelize shingle building when the scan arrives narrow (gated)
-    docs = _ensure_parallel(docs, id_col)
+    docs = _ensure_parallel(docs, "doc_id")
     blk = F.col(block_col) if block_col else F.lit(1)
-    sel = with_shingle_hashes(docs, text_col, shingle_n).select(
-        F.col(id_col).alias("__id__"),
+    sel = with_shingle_hashes(docs, "text", shingle_n).select(
+        F.col("doc_id").alias("__id__"),
         blk.alias("__blk__"),
         F.size("__sh_arr__").alias("__n__"),
         F.explode_outer("__sh_arr__").alias("__s__"),
@@ -811,8 +805,6 @@ def simhash_signature_text_pandas(text_col: str, bits: int = 64) -> F.Column:
 
 def simhash_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     bits: int = 64,
     chunks: int = 4,
@@ -854,17 +846,17 @@ def simhash_pairs(
     if precluster_exact:
         # precluster's width-pinned repartition spreads downstream work;
         # a prior _ensure_parallel exchange would be redundant (r12)
-        docs, star = _exact_precluster(docs, id_col, text_col)
+        docs, star = _exact_precluster(docs)
     else:
-        docs = _ensure_parallel(docs, id_col)
+        docs = _ensure_parallel(docs, "doc_id")
     # NULL text never pairs (r8 review): its tokenless signature is the
     # constant all-ones empty_sig, so every NULL-text doc would collide
     # at hamming 0 with every other — an unverifiable "duplicate" claim
     # about missing content. (Empty STRING text keeps its one real
     # token hash and stays comparable.)
-    sig = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id__"),
-        simhash_signature_text_pandas(text_col, bits).alias("__sig__"),
+    sig = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("__id__"),
+        simhash_signature_text_pandas("text", bits).alias("__sig__"),
     )
     # 64-bit chunk (chunks=1): (1 << 64) - 1 exceeds Long.MaxValue and
     # fails lit() conversion — the all-ones long is -1 in two's
@@ -920,8 +912,6 @@ def simhash_pairs(
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     blocks: int = 8,
     max_rows: int = 2_000_000,
@@ -977,7 +967,7 @@ def embedding_near_dup_pairs(
                 f"minhash_lsh_pairs / semantic_dedup / lsh_bucket_topk "
                 f"(sub-quadratic) or raise max_rows explicitly."
             )
-    sel = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    sel = emb.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("vec"))
     tagged = sel.withColumn(
         "__blk__", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(blocks)).cast("int")
     )
@@ -1034,8 +1024,6 @@ def embedding_near_dup_pairs(
 
 def substring_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_len: int = 40,
     stride: int = 10,
     min_docs: int = 2,
@@ -1061,21 +1049,21 @@ def substring_spans(
     """
     # explode+substring at compute width (gated, r12): a single-row-
     # group input runs the whole window-sampling pass in one scan task
-    docs = _ensure_parallel(docs, id_col)
+    docs = _ensure_parallel(docs, "doc_id")
     pos = F.explode(
         F.sequence(
             F.lit(1),
-            F.greatest(F.length(F.col(text_col)) - (span_len - 1), F.lit(1)),
+            F.greatest(F.length(F.col("text")) - (span_len - 1), F.lit(1)),
             F.lit(stride),
         )
     ).alias("__pos__")
-    spans = docs.select(F.col(id_col), F.col(text_col), pos).select(
-        F.col(id_col),
-        F.expr(f"substring({text_col}, __pos__, {span_len})").alias("__span__"),
+    spans = docs.select(F.col("doc_id"), F.col("text"), pos).select(
+        F.col("doc_id"),
+        F.expr(f"substring(text, __pos__, {span_len})").alias("__span__"),
     )
     return (
         spans.groupBy("__span__")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select(F.md5("__span__").alias("span_md5"), "n_docs")
     )
@@ -1083,8 +1071,6 @@ def substring_spans(
 
 def substring_dup_rate(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_len: int = 40,
     stride: int = 10,
     min_docs: int = 2,
@@ -1112,18 +1098,18 @@ def substring_dup_rate(
     """
     # explode+substring+hash at compute width (gated, r12 — same
     # single-row-group argument as substring_spans)
-    docs = _ensure_parallel(docs, id_col)
+    docs = _ensure_parallel(docs, "doc_id")
     pos = F.explode(
         F.sequence(
             F.lit(1),
-            F.greatest(F.length(F.col(text_col)) - (span_len - 1), F.lit(1)),
+            F.greatest(F.length(F.col("text")) - (span_len - 1), F.lit(1)),
             F.lit(stride),
         )
     ).alias("__pos__")
     pairs = (
-        docs.select(F.col(id_col), F.col(text_col), pos)
+        docs.select(F.col("doc_id"), F.col("text"), pos)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             # the span hash is INTERNAL here (never output, unlike
             # substring_spans' span_md5): xxhash64 is both cheaper per
             # window and an 8-byte shuffle key where the md5 hex string
@@ -1131,10 +1117,10 @@ def substring_dup_rate(
             # collision would merge two spans' counts — ~n²/2⁶⁵,
             # negligible against the dup-rate's own sampling noise.
             F.xxhash64(
-                F.expr(f"substring({text_col}, __pos__, {span_len})")
+                F.expr(f"substring(text, __pos__, {span_len})")
             ).alias("__h__"),
         )
-        .groupBy(id_col, "__h__")
+        .groupBy("doc_id", "__h__")
         .agg(F.count(F.lit(1)).alias("__w__"))
     )
     # rows are distinct (doc, span): a plain COUNT per span == the
@@ -1142,11 +1128,11 @@ def substring_dup_rate(
     n_docs_w = F.count(F.lit(1)).over(Window.partitionBy("__h__"))
     return (
         pairs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__w__"),
             (n_docs_w >= F.lit(min_docs)).alias("__hot__"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("__w__").alias("n_windows"),
             F.sum(
@@ -1154,7 +1140,7 @@ def substring_dup_rate(
             ).alias("n_dup_windows"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_windows",
             "n_dup_windows",
             F.round(

@@ -43,6 +43,10 @@ from pyspark.sql import functions as F
 #: headline cut.
 _DRIVER_UNION_FIND_MAX_EDGES = 2_000_000
 
+#: Round budget of the iterative loop; pointer doubling converges in
+#: O(log n) rounds, so 20 covers any real graph.
+MAX_ITERATIONS = 20
+
 
 def _collect_edge_pairs(sym: DataFrame) -> "zip":
     """Collect the 2-column edge frame as an iterator of (a, b) tuples
@@ -83,7 +87,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Return (node, component) where component = min node id reachable.
 
@@ -129,7 +132,7 @@ def connected_components(
     labels = nodes.select("node", F.col("node").alias("component"))
 
     prev_sum = None
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         # propagate: each node takes min(own label, neighbors' labels)
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
@@ -193,15 +196,11 @@ def connected_components(
     return labels
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "doc_id_a",
-    id_b: str = "doc_id_b",
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Collapse near-dup pairs into clusters; output one row per member
     with its cluster id (min doc id in the component) and a keep flag
     for the canonical representative."""
-    comps = connected_components(pairs, src=id_a, dst=id_b)
+    comps = connected_components(pairs, src="doc_id_a", dst="doc_id_b")
     return comps.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),

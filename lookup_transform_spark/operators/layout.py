@@ -17,17 +17,21 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: bits per key in the code; both builders loop over the same count, so
+#: the Spark column and the SQL expression cannot disagree
+BITS = 8
 
-def zorder_code(bucket_a: Column, bucket_b: Column, bits: int = 8) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative bucket
+
+def zorder_code(bucket_a: Column, bucket_b: Column) -> Column:
+    """Interleave the low ``BITS`` bits of two non-negative bucket
     columns into a Morton code: bit j of ``bucket_a`` lands at position
     2j+1, bit j of ``bucket_b`` at 2j. Buckets must already lie in
-    [0, 2**bits); derive them with pmod / fixed-range scaling so the
+    [0, 2**BITS); derive them with pmod / fixed-range scaling so the
     code is reproducible across engines."""
     a = bucket_a.cast("long")
     b = bucket_b.cast("long")
     code = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(BITS):
         code = code.bitwiseOR(
             F.shiftleft(F.shiftright(a, j).bitwiseAND(F.lit(1)), 2 * j + 1)
         ).bitwiseOR(
@@ -36,12 +40,12 @@ def zorder_code(bucket_a: Column, bucket_b: Column, bits: int = 8) -> Column:
     return code
 
 
-def zorder_code_sql(expr_a: str, expr_b: str, bits: int = 8) -> str:
+def zorder_code_sql(expr_a: str, expr_b: str) -> str:
     """The identical Morton interleave as ANSI-ish SQL (DuckDB bit
     operators), generated from the same loop so both engines compute
     the same code bit-for-bit."""
     terms = []
-    for j in range(bits):
+    for j in range(BITS):
         terms.append(f"((({expr_a} >> {j}) & 1) << {2 * j + 1})")
         terms.append(f"((({expr_b} >> {j}) & 1) << {2 * j})")
     return " | ".join(terms)

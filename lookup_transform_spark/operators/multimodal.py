@@ -232,12 +232,11 @@ def _mulaw_expand(u8: np.ndarray) -> np.ndarray:
     return np.where(sign, -mag, mag).astype(np.int16)
 
 
-def encode_wav(
-    pcm: np.ndarray, rate: int = 8000, subtype: str = "PCM_16"
-) -> bytes:
-    """RIFF/WAVE from a 1-D float array in [-1, 1]. Subtypes: PCM_16,
-    PCM_8 (unsigned), FLOAT (IEEE 32-bit), ULAW (G.711 µ-law — a real
-    COMPRESSED audio format, 2:1 companded, stdlib/numpy only)."""
+def encode_wav(pcm: np.ndarray, subtype: str = "PCM_16") -> bytes:
+    """8 kHz RIFF/WAVE from a 1-D float array in [-1, 1]. Subtypes:
+    PCM_16, PCM_8 (unsigned), FLOAT (IEEE 32-bit), ULAW (G.711 µ-law —
+    a real COMPRESSED audio format, 2:1 companded, stdlib/numpy
+    only)."""
     import struct  # noqa: PLC0415
 
     pcm = np.asarray(pcm, dtype=np.float64).clip(-1.0, 1.0)
@@ -258,9 +257,7 @@ def encode_wav(
     else:
         raise ValueError(f"unknown subtype {subtype!r}")
     block = bits // 8
-    fmt = struct.pack(
-        "<HHIIHH", fmt_tag, 1, rate, rate * block, block, bits
-    )
+    fmt = struct.pack("<HHIIHH", fmt_tag, 1, 8000, 8000 * block, block, bits)
     return (
         b"RIFF"
         + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(body))
@@ -403,8 +400,8 @@ def extract_features(
     """Feature extraction over binary payloads via mapInPandas — the
     Arrow-batched shape a real decoder plugs into (one numpy pass per
     batch, no per-row Python). ``id_col``/``payload_col`` name the
-    input columns (same contract as ``decode_stats`` — hardcoding them
-    surfaced as an opaque executor KeyError on renamed frames).
+    input columns (hardcoding them surfaced as an opaque executor
+    KeyError on renamed frames).
 
     Features here are raw-byte statistics: payload length, mean byte
     value, byte entropy, and an 8-bin byte histogram as array<float>.
@@ -460,15 +457,10 @@ DECODE_SCHEMA = (
 )
 
 
-def decode_stats(
-    frame: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    modality_col: str = "modality",
-) -> DataFrame:
+def decode_stats(frame: DataFrame) -> DataFrame:
     """REAL-decode statistics over mixed-modality payloads: dispatch
-    each payload to the image or audio decoder by its modality tag and
-    emit shape + mean statistics.
+    each ``payload`` to the image or audio decoder by its ``modality``
+    tag and emit shape + mean statistics per ``doc_id``.
 
     This is the executable form of the B54 claim: actual container
     parsing (PPM/BMP/WAV via the built-in codecs, PNG/JPEG/FLAC/... via
@@ -491,9 +483,7 @@ def decode_stats(
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for i, p, m in zip(
-                pdf[id_col], pdf[payload_col], pdf[modality_col]
-            ):
+            for i, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["modality"]):
                 if p is None or m not in ("image", "audio"):
                     rows.append(_null_stats(i, m))
                     continue

@@ -88,11 +88,10 @@ def weighted_topk_sample(
     key_col: str,
     weight_col: str | Column,
     k: int,
-    seed: int = 42,
 ) -> DataFrame:
     """EXACT-size weighted sample without replacement (r9) —
     Efraimidis–Spirakis A-ES: each row draws a deterministic uniform
-    ``u`` from md5(key, seed) and the k smallest ``-ln(u)/w`` scores
+    ``u`` from md5(key || '#42') and the k smallest ``-ln(u)/w`` scores
     win, which selects each row with probability proportional to its
     weight among the survivors. Complements ``weighted_sample``
     (per-stratum Bernoulli RATES, approximate output size): a curation
@@ -116,7 +115,7 @@ def weighted_topk_sample(
     ).cast("double")
     u52 = F.conv(
         F.substring(
-            F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f"#{seed}"))),
+            F.md5(F.concat(F.col(key_col).cast("string"), F.lit("#42"))),
             1, 13,
         ),
         16, 10,

@@ -27,12 +27,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+#: salted sub-groups per IVF/LSH cell (``_score_cells``)
+CELL_SPLITS = 4
+#: rows the IVF Lloyd refinement trains on (``_refine_centroids``)
+TRAIN_ROWS = 4096
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_self: bool = True,
     max_query_rows: int = 100_000,
 ) -> DataFrame:
@@ -80,8 +84,8 @@ def cosine_topk(
     # NULL vectors carry no geometry: excluded on both sides (one dirty
     # row must not kill the job — np.array over a ragged list raises)
     q_rows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec__"))
+        queries.filter(F.col("embedding").isNotNull())
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec__"))
         .collect()
     )
     if not q_rows:
@@ -92,8 +96,8 @@ def cosine_topk(
     with np.errstate(divide="ignore", invalid="ignore"):
         q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
 
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec__")
+    c = corpus.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec__")
     )
 
     def score_partition(batches):
@@ -140,11 +144,12 @@ def cosine_topk(
     return _ranked_topk(scored, k)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit-free hyperplanes (LCG — no numpy
-    RNG state, reproducible across runs/workers)."""
+def _hyperplanes(dim: int, n_planes: int, band: int) -> list[list[float]]:
+    """Deterministic pseudo-random unit-free hyperplanes of one LSH band
+    (LCG seeded ``42 + band`` — no numpy RNG state, reproducible across
+    runs/workers)."""
     planes = []
-    state = seed
+    state = 42 + band
     for _ in range(n_planes):
         row = []
         for _ in range(dim):
@@ -159,13 +164,9 @@ def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 12,
-    seed: int = 42,
     n_bands: int = 8,
-    cell_splits: int = 4,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket with the query
@@ -174,7 +175,7 @@ def lsh_bucket_topk(
     Single-signature LSH requires agreement on all ``n_planes`` bits at
     once — measured recall@10 on the embeddings fixture was 0.04, i.e.
     the operator was decorative. Multi-band (band b uses hyperplanes
-    seeded ``seed+b``) is the standard amplification: a near pair
+    seeded ``42+b``) is the standard amplification: a near pair
     missing one band almost surely collides in another, the same OR
     construction as MinHash banding. Measured recall@10 on the sf0.01
     embeddings fixture: 0.84 at the registered config (4 planes × 16
@@ -201,7 +202,7 @@ def lsh_bucket_topk(
     the ranking window so one neighbor can't occupy two top-k slots.
 
     Corpus vector traffic is O(corpus · n_bands) (vectors ride into the
-    cells instead of re-joining); ``cell_splits`` salts hot buckets
+    cells instead of re-joining); ``CELL_SPLITS`` salts hot buckets
     losslessly, same as IVF. Deterministic (fixed hyperplanes);
     approximate recall tuned by (n_planes, n_bands): more planes →
     finer buckets / higher precision, more bands → higher recall.
@@ -212,7 +213,7 @@ def lsh_bucket_topk(
     # (F.aggregate dot per plane per band = bands·planes interpreted
     # folds per row) measured 8× slower at 1× for the same buckets.
     planes = np.array(
-        [_hyperplanes(dim, n_planes, seed + b) for b in range(n_bands)],
+        [_hyperplanes(dim, n_planes, b) for b in range(n_bands)],
         dtype=np.float64,
     )  # (B, P, dim)
     flat_planes = planes.reshape(n_bands * n_planes, dim)
@@ -231,15 +232,15 @@ def lsh_bucket_topk(
         # NULL vectors carry no geometry to hash — drop them before the
         # UDF (np.array over a None would crash the task; a zero-vector
         # substitute would pollute one bucket with every null row)
-        df = df.filter(F.col(vec_col).isNotNull())
+        df = df.filter(F.col("embedding").isNotNull())
         # cell id packs (band, bucket) into one long — bucket < 2^n_planes
         return df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode(_band_sigs(F.col(vec_col))).alias("band", "bucket"),
+            F.col("vec_id"),
+            F.col("embedding"),
+            F.posexplode(_band_sigs(F.col("embedding"))).alias("band", "bucket"),
         ).select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             (F.col("band") * F.lit(1 << n_planes) + F.col("bucket"))
             .cast("long")
             .alias("__cell__"),
@@ -249,9 +250,6 @@ def lsh_bucket_topk(
         banded(corpus),
         banded(queries),
         k,
-        id_col,
-        vec_col,
-        cell_splits,
         cell_col="__cell__",
         dedup_pairs=True,
         exclude_self=exclude_self,
@@ -285,11 +283,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 4,
-    cell_splits: int = 4,
     refine_iters: int = 0,
     exclude_self: bool = True,
 ) -> DataFrame:
@@ -300,14 +295,14 @@ def ivf_topk(
 
     Scoring is a per-cell dense matmul in ``applyInPandas`` (the
     ``embedding_near_dup`` tile shape): corpus vectors shuffle ONCE to
-    their cell, queries replicate nprobe × cell_splits times (tiny side),
+    their cell, queries replicate nprobe × CELL_SPLITS times (tiny side),
     and each cell task emits only its local top-k rows. The earlier
     formulation — an equi-join materializing every (query, cell-member)
     pair row with both vectors — moved |cell|×|probing queries| full
     vectors through Arrow and went superlinear in the 32× probe; flops
     are identical here but pair-row materialization is gone.
 
-    ``cell_splits`` salts each cell into sub-groups (corpus side hashed,
+    ``CELL_SPLITS`` salts each cell into sub-groups (corpus side hashed,
     query side replicated) so one hot centroid cannot serialize into a
     single task — the same skew bound as the dedup bucket caps, but
     lossless: every (query, vector) pair still meets exactly once.
@@ -319,26 +314,18 @@ def ivf_topk(
     single-partition window (the ``count()`` is one dimension-sized
     scan, same class as a broadcast-side size check).
     """
-    cent_ids, cent_unit = _sample_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters
-    )
-    nearest = _centroid_assigner(cent_ids, cent_unit, vec_col)
-    c_assigned = nearest(corpus.select(id_col, vec_col), 1, id_col)
-    q_assigned = nearest(queries.select(id_col, vec_col), nprobe, id_col)
-    return _score_cells(
-        c_assigned, q_assigned, k, id_col, vec_col, cell_splits,
-        exclude_self=exclude_self,
-    )
+    cent_ids, cent_unit = _sample_centroids(corpus, n_centroids, refine_iters)
+    nearest = _centroid_assigner(cent_ids, cent_unit)
+    c_assigned = nearest(corpus.select("vec_id", "embedding"), 1)
+    q_assigned = nearest(queries.select("vec_id", "embedding"), nprobe)
+    return _score_cells(c_assigned, q_assigned, k, exclude_self=exclude_self)
 
 
 def _refine_centroids(
     corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
     cent_unit: np.ndarray,
     iters: int,
     total: int,
-    train_rows: int = 4096,
 ) -> np.ndarray:
     """Lloyd refinement of the sampled centroids — the step that turns a
     modulo sample into real IVF cells (measured on the embeddings
@@ -347,7 +334,7 @@ def _refine_centroids(
     Trains on a BOUNDED deterministic sample (the faiss convention:
     centroid quality saturates at a few hundred vectors per cell, so a
     billion-vector corpus trains on the same few thousand rows) —
-    modulo-sampled by id, collected once (``train_rows`` × d doubles,
+    modulo-sampled by id, collected once (``TRAIN_ROWS`` × d doubles,
     ~2 MB at the defaults — the dimension-collect class), then pure
     numpy Lloyd on the driver. Cost is ONE column-pruned sample scan
     regardless of ``iters``; a distributed-aggregation formulation
@@ -357,25 +344,25 @@ def _refine_centroids(
     bit-equal to the in-plan operator. Empty cells keep their previous
     centroid, mirroring kmeans_assign.
     """
-    step = max(1, total // train_rows)
-    sel = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("__tid__"), F.col(vec_col).alias("__tvec__")
+    step = max(1, total // TRAIN_ROWS)
+    sel = corpus.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("__tid__"), F.col("embedding").alias("__tvec__")
     )
     rows = (
         sel.filter((F.col("__tid__") % step) == 0)
-        # the modulo matches ≥ train_rows rows; the cut must be
+        # the modulo matches ≥ TRAIN_ROWS rows; the cut must be
         # deterministic for the write-time ≡ query-time centroid
         # invariant, and a bare limit() is partition-order dependent —
         # order by id first (TakeOrderedAndProject: O(k) per partition,
         # no global sort)
         .orderBy("__tid__")
-        .limit(train_rows)
+        .limit(TRAIN_ROWS)
         .collect()
     )
     if not rows:
         # dense-0-based-id assumption broken (sparse/offset ids can
         # satisfy the modulo zero times) — deterministic ordered cut
-        rows = sel.orderBy("__tid__").limit(train_rows).collect()
+        rows = sel.orderBy("__tid__").limit(TRAIN_ROWS).collect()
     m = np.array([r["__tvec__"] for r in rows], dtype=np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
         tr = m / np.linalg.norm(m, axis=1, keepdims=True)
@@ -396,8 +383,6 @@ def _refine_centroids(
 
 def _sample_centroids(
     corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
     n_centroids: int,
     refine_iters: int = 0,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -413,15 +398,15 @@ def _sample_centroids(
     shape that survives a billion-vector corpus: O(n·C) flops, corpus
     scanned once, nothing but (id, centroid_id) added).
     """
-    sel = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("centroid_id"),
-        F.col(vec_col).alias("__centvec__"),
+    sel = corpus.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("__centvec__"),
     )
     total = sel.count()
     if total == 0:
         raise ValueError(
             "IVF centroid sampling: corpus has no rows with a non-null "
-            f"'{vec_col}' vector"
+            "'embedding' vector"
         )
     step = max(1, total // n_centroids)
     cent_rows = (
@@ -449,22 +434,20 @@ def _sample_centroids(
         cent_unit = cent_mat / np.linalg.norm(cent_mat, axis=1, keepdims=True)
     if refine_iters > 0:
         cent_unit = _refine_centroids(
-            corpus, id_col, vec_col, cent_unit, refine_iters, total
+            corpus, cent_unit, refine_iters, total
         )
     return cent_ids, cent_unit
 
 
-def _centroid_assigner(
-    cent_ids: np.ndarray, cent_unit: np.ndarray, vec_col: str
-):
-    """Returns ``nearest(df, keep, side_id)`` mapping each vector to its
+def _centroid_assigner(cent_ids: np.ndarray, cent_unit: np.ndarray):
+    """Returns ``nearest(df, keep)`` mapping each vector to its
     ``keep`` nearest centroids (one matmul per Arrow batch)."""
 
-    def nearest(df: DataFrame, keep: int, side_id: str) -> DataFrame:
+    def nearest(df: DataFrame, keep: int) -> DataFrame:
         # NULL vectors have no nearest centroid — excluded, not crashed
         # (np.array over a ragged list raises inside the task)
-        sel = df.filter(F.col(vec_col).isNotNull()).select(
-            F.col(side_id).alias("__sid__"), F.col(vec_col).alias("__vec__")
+        sel = df.filter(F.col("embedding").isNotNull()).select(
+            F.col("vec_id").alias("__sid__"), F.col("embedding").alias("__vec__")
         )
 
         def assign(batches):
@@ -496,8 +479,8 @@ def _centroid_assigner(
         vec_type = sel.schema["__vec__"].dataType.simpleString()
         out_schema = f"__sid__ long, __vec__ {vec_type}, centroid_id long"
         return sel.mapInPandas(assign, out_schema).select(
-            F.col("__sid__").alias(side_id),
-            F.col("__vec__").alias(vec_col),
+            F.col("__sid__").alias("vec_id"),
+            F.col("__vec__").alias("embedding"),
             "centroid_id",
         )
 
@@ -508,9 +491,6 @@ def _score_cells(
     c_assigned: DataFrame,
     q_assigned: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
-    cell_splits: int,
     cell_col: str = "centroid_id",
     dedup_pairs: bool = False,
     exclude_self: bool = True,
@@ -534,25 +514,24 @@ def _score_cells(
     unrelated to query 7 and silently masking it would corrupt top-k
     (mirrors ``cosine_topk``'s flag).
     """
-    splits = max(1, cell_splits)
     c_side = c_assigned.select(
         cell_col,
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(splits)).alias("__salt__"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(CELL_SPLITS)).alias("__salt__"),
         F.lit(0).alias("__side__"),
-        F.col(id_col).alias("__vid__"),
-        F.col(vec_col).alias("__vec__"),
+        F.col("vec_id").alias("__vid__"),
+        F.col("embedding").alias("__vec__"),
     )
     q_side = (
         q_assigned.withColumn(
             "__salt__",
-            F.explode(F.sequence(F.lit(0), F.lit(splits - 1))),
+            F.explode(F.sequence(F.lit(0), F.lit(CELL_SPLITS - 1))),
         )
         .select(
             cell_col,
             F.col("__salt__").cast("long").alias("__salt__"),
             F.lit(1).alias("__side__"),
-            F.col(id_col).alias("__vid__"),
-            F.col(vec_col).alias("__vec__"),
+            F.col("vec_id").alias("__vid__"),
+            F.col("embedding").alias("__vec__"),
         )
     )
 
@@ -618,8 +597,6 @@ def _score_cells(
 def write_ivf_layout(
     corpus: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     refine_iters: int = 0,
 ) -> None:
@@ -636,17 +613,15 @@ def write_ivf_layout(
     ``tests/test_similarity_guards.py``). One extra shuffle at write
     time (the partitionBy exchange), zero per-probe assignment cost.
     """
-    cent_ids, cent_unit = _sample_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters
-    )
+    cent_ids, cent_unit = _sample_centroids(corpus, n_centroids, refine_iters)
     spark = corpus.sparkSession
     spark.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in zip(cent_ids, cent_unit)],
         "centroid_id long, unit_vec array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    nearest = _centroid_assigner(cent_ids, cent_unit, vec_col)
+    nearest = _centroid_assigner(cent_ids, cent_unit)
     (
-        nearest(corpus.select(id_col, vec_col), 1, id_col)
+        nearest(corpus.select("vec_id", "embedding"), 1)
         .repartition("centroid_id")
         .write.mode("overwrite")
         .partitionBy("centroid_id")
@@ -659,10 +634,7 @@ def ivf_probe_topk(
     path: str,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     nprobe: int = 4,
-    cell_splits: int = 4,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Probe a ``write_ivf_layout`` index: assign queries to their
@@ -686,12 +658,12 @@ def ivf_probe_topk(
     order = np.argsort(cent_ids)
     cent_ids = cent_ids[order]
     cent_unit = np.array([r["unit_vec"] for r in cent], dtype=np.float64)[order]
-    nearest = _centroid_assigner(cent_ids, cent_unit, vec_col)
+    nearest = _centroid_assigner(cent_ids, cent_unit)
     # materialize the assignment once — both the pruning-list collect and
     # the scoring union read it, and recomputing means a second pass of
     # the Python assignment stage over the query set
     q_assigned = nearest(
-        queries.select(id_col, vec_col), nprobe, id_col
+        queries.select("vec_id", "embedding"), nprobe
     ).localCheckpoint(eager=False)
     probed = sorted(
         {r["centroid_id"] for r in q_assigned.select("centroid_id").distinct().collect()}
@@ -699,9 +671,6 @@ def ivf_probe_topk(
     c_assigned = (
         spark.read.parquet(f"{path}/data")
         .filter(F.col("centroid_id").isin(probed))
-        .select(id_col, vec_col, "centroid_id")
+        .select("vec_id", "embedding", "centroid_id")
     )
-    return _score_cells(
-        c_assigned, q_assigned, k, id_col, vec_col, cell_splits,
-        exclude_self=exclude_self,
-    )
+    return _score_cells(c_assigned, q_assigned, k, exclude_self=exclude_self)

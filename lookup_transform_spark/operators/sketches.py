@@ -5,7 +5,7 @@ distinct-count rollup (``sketch_hll_rollup``): exact percentiles need
 the raw values (selection), so any per-slice percentile over 100 TB
 either rescans raw data per slice or keeps a MERGEABLE summary. This
 module keeps an HdrHistogram-style summary — counts in geometric
-buckets ``[lo·base^k, lo·base^(k+1))`` — with three properties that
+buckets ``[LO·BASE^k, LO·BASE^(k+1))`` — with three properties that
 make it the right distributed shape:
 
 - **bounded size**: a sketch is ≤ a few hundred (bucket, count) entries
@@ -16,8 +16,8 @@ make it the right distributed shape:
   sketch(A ∪ B) EQUALS merge(sketch(A), sketch(B)), bit-for-bit, which
   ``tests/test_sketches.py`` pins;
 - **bounded relative error**: a quantile read from the geometric bucket
-  midpoint is within ``sqrt(base)`` of the true value (±2% at the
-  default base 1.04) for values above ``lo`` — a VALUE-error bound,
+  midpoint is within ``sqrt(BASE)`` of the true value (±2% at
+  ``BASE`` 1.04) for values above ``LO`` — a VALUE-error bound,
   independent of how many rows or merges produced the sketch.
 
 Everything is built-in expressions (groupBy/map/explode/window) — no
@@ -26,7 +26,7 @@ Python workers; the sketch build is one partial-aggregated shuffle of
 
 Oracle-exact since r9 (`sketch_quantile_rollup` — VERDICT r8 #5): the
 libm exposure turned out narrower than the old rows-only rationale
-claimed. The ``log(base)`` divisor is a Python literal baked into the
+claimed. The ``log(BASE)`` divisor is a Python literal baked into the
 plan (the oracle embeds the same 17-digit float instead of calling
 ``ln``), and the emitted midpoints are 6-dp rounded on both sides,
 absorbing ``pow``'s last-ulp freedom — see
@@ -42,10 +42,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# parameters owned by the dependency-free oracle module so engine and
+# oracle can never drift (the synthetic.py convention)
+from lookup_transform_spark.operators.sketches_oracle import (
+    BASE,
+    HLL_ALPHA as _HLL_ALPHA,
+    HLL_M as _HLL_M,
+    HLL_WBITS as _HLL_WBITS,
+    LO,
+)
 
-def log_bucket(value: str | Column, base: float = 1.04, lo: float = 0.01) -> Column:
-    """Geometric bucket index of a double: 0 for |v| ≤ lo (absolute-
-    error floor), else ``sign(v) · (floor(log(|v|/lo)/log(base)) + 1)``.
+
+def log_bucket(value: str | Column) -> Column:
+    """Geometric bucket index of a double: 0 for |v| ≤ LO (absolute-
+    error floor), else ``sign(v) · (floor(log(|v|/LO)/log(BASE)) + 1)``.
     Negative values get mirrored negative indices, so the bucket order
     is the value order.
 
@@ -58,22 +68,22 @@ def log_bucket(value: str | Column, base: float = 1.04, lo: float = 0.01) -> Col
     error floor."""
     v = F.col(value) if isinstance(value, str) else value
     mag = F.abs(v)
-    k = (F.floor(F.log(mag / F.lit(lo)) / F.lit(math.log(base))) + 1).cast("int")
+    k = (F.floor(F.log(mag / F.lit(LO)) / F.lit(math.log(BASE))) + 1).cast("int")
     return F.when(
         F.isnan(v) | (mag == F.lit(float("inf"))), F.lit(None).cast("int")
     ).otherwise(
-        F.when(mag <= lo, F.lit(0)).otherwise(
+        F.when(mag <= LO, F.lit(0)).otherwise(
             F.when(v < 0, -k).otherwise(k)
         )
     )
 
 
-def bucket_value(bucket: str | Column, base: float = 1.04, lo: float = 0.01) -> Column:
+def bucket_value(bucket: str | Column) -> Column:
     """Representative value of a bucket: the geometric midpoint
-    ``sign · lo·base^(|k|-0.5)`` (0 for bucket 0) — the choice that
-    gives the symmetric ``sqrt(base)`` relative-error bound."""
+    ``sign · LO·BASE^(|k|-0.5)`` (0 for bucket 0) — the choice that
+    gives the symmetric ``sqrt(BASE)`` relative-error bound."""
     k = F.col(bucket) if isinstance(bucket, str) else bucket
-    mid = F.lit(lo) * F.pow(F.lit(base), F.abs(k).cast("double") - 0.5)
+    mid = F.lit(LO) * F.pow(F.lit(BASE), F.abs(k).cast("double") - 0.5)
     return F.when(k == 0, F.lit(0.0)).otherwise(
         F.when(k < 0, -mid).otherwise(mid)
     )
@@ -83,8 +93,6 @@ def qsketch(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    base: float = 1.04,
-    lo: float = 0.01,
 ) -> DataFrame:
     """Build one sketch row per group: ``sketch map<int,long>`` +
     ``n_rows``. One partial-aggregated shuffle of (group, bucket) —
@@ -100,7 +108,7 @@ def qsketch(
     bucket KEY would fail ``map_from_entries``, a null struct entry is
     simply skipped)."""
     per_bucket = (
-        df.select(*group_cols, log_bucket(value_col, base, lo).alias("__b__"))
+        df.select(*group_cols, log_bucket(value_col).alias("__b__"))
         .groupBy(*group_cols, "__b__")
         .agg(F.count(F.lit(1)).alias("__c__"))
     )
@@ -166,12 +174,10 @@ def qsketch_quantiles(
     df: DataFrame,
     group_cols: list[str],
     probs: list[float],
-    base: float = 1.04,
-    lo: float = 0.01,
 ) -> DataFrame:
     """Read quantiles out of sketch rows: per group, the value of the
     first bucket whose running count reaches ``ceil(p · n)`` (the lower
-    exact-quantile convention), each within ``sqrt(base)`` relative
+    exact-quantile convention), each within ``sqrt(BASE)`` relative
     error of the true quantile. Buckets explode to O(groups × buckets)
     rows — trivial — and the cumulative window runs per group in bucket
     order.
@@ -198,7 +204,7 @@ def qsketch_quantiles(
             F.col("__cum__") >= target, F.col("__b__")
         )
         name = quantile_col_name(p)
-        aggs.append(bucket_value(F.min(hit), base, lo).alias(name))
+        aggs.append(bucket_value(F.min(hit)).alias(name))
     return cum.groupBy(*group_cols, "n_rows").agg(*aggs)
 
 
@@ -365,14 +371,6 @@ def topk_merge(leaves: DataFrame, group_cols: list[str], k: int = 10) -> DataFra
 # pinned).
 # ---------------------------------------------------------------------------
 
-# parameters owned by the dependency-free oracle module so engine and
-# oracle can never drift (the synthetic.py convention)
-from lookup_transform_spark.operators.sketches_oracle import (  # noqa: E402
-    HLL_ALPHA as _HLL_ALPHA,
-    HLL_M as _HLL_M,
-    HLL_WBITS as _HLL_WBITS,
-)
-
 
 def _hll_bucket_rank(key: Column) -> tuple[Column, Column]:
     """(bucket, rank) from md5: first 3 hex chars = 12-bit bucket, next
@@ -393,8 +391,6 @@ def fused_hll_qsketch_leaves(
     group_cols: list[str],
     key_col: str,
     value_col: str | Column,
-    base: float = 1.04,
-    lo: float = 0.01,
 ) -> DataFrame:
     """BOTH families' leaf rows from ONE pass over ``df``: per (group,
     family) one sketch row, family ``'hll'`` = the portable HLL
@@ -430,7 +426,7 @@ def fused_hll_qsketch_leaves(
                 ),
                 F.struct(
                     F.lit("q").alias("family"),
-                    log_bucket(value_col, base, lo).alias("b"),
+                    log_bucket(value_col).alias("b"),
                     F.lit(None).cast("int").alias("r"),
                     F.lit(False).alias("k"),
                 ),

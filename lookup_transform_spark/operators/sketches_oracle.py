@@ -5,13 +5,13 @@ primitives: ``log`` in the bucket index and ``pow`` in the bucket
 midpoint. The old rows-only rationale ("libm ulp differences could
 flip a boundary") over-counted the exposure:
 
-- the DIVISOR ``log(base)`` is a Python ``math.log`` literal baked
+- the DIVISOR ``log(BASE)`` is a Python ``math.log`` literal baked
   into the Spark plan — so the oracle embeds the *same 17-digit
-  float literal* instead of calling ``ln(base)`` in DuckDB, removing
+  float literal* instead of calling ``ln(BASE)`` in DuckDB, removing
   that divergence entirely;
-- what remains is ``ln(|v|/lo)`` (JVM ``Math.log`` vs DuckDB libm)
+- what remains is ``ln(|v|/LO)`` (JVM ``Math.log`` vs DuckDB libm)
   flipping ``floor`` only when the ratio sits within ~1 ulp of an
-  exact bucket boundary, and ``pow(base, k-0.5)`` differing in the
+  exact bucket boundary, and ``pow(BASE, k-0.5)`` differing in the
   last ulp of an OUTPUT value. The first is measure-zero per fixture
   (and the comparison is deterministic — a hit would fail loudly);
   the second is squashed by rounding the emitted quantiles to 6 dp on
@@ -28,9 +28,12 @@ from __future__ import annotations
 
 import math
 
-#: portable-HLL parameters — owned here (the dependency-free module)
-#: so the engine and its oracle can never drift; sketches.py imports
-#: them (the synthetic.py/synthetic_oracle.py convention)
+#: sketch parameters — owned here (the dependency-free module) so the
+#: engine and its oracle can never drift; sketches.py imports them (the
+#: synthetic.py/synthetic_oracle.py convention). Quantile buckets are
+#: [LO·BASE^k, LO·BASE^(k+1)); the portable HLL has 2^HLL_P registers.
+BASE = 1.04
+LO = 0.01
 HLL_P = 12
 HLL_M = 1 << HLL_P
 HLL_WBITS = 52
@@ -42,29 +45,27 @@ def qsketch_oracle_sql(
     group_col: str,
     value_col: str,
     probs: list[float],
-    base: float = 1.04,
-    lo: float = 0.01,
 ) -> str:
     """Quantiles of ``value_col`` per ``group_col`` under the sketch's
     lower-exact-quantile convention: the midpoint of the first bucket
     whose running count reaches ``ceil(p · n)``."""
-    logbase = repr(math.log(base))  # the Spark plan's literal, verbatim
+    logbase = repr(math.log(BASE))  # the Spark plan's literal, verbatim
     bucket = f"""CASE
       WHEN isnan({value_col}) OR isinf({value_col}) THEN NULL
-      WHEN abs({value_col}) <= {lo!r} THEN 0
+      WHEN abs({value_col}) <= {LO!r} THEN 0
       WHEN {value_col} < 0 THEN
-        -((floor(ln(abs({value_col}) / {lo!r}) / {logbase})::INT) + 1)
-      ELSE (floor(ln(abs({value_col}) / {lo!r}) / {logbase})::INT) + 1
+        -((floor(ln(abs({value_col}) / {LO!r}) / {logbase})::INT) + 1)
+      ELSE (floor(ln(abs({value_col}) / {LO!r}) / {logbase})::INT) + 1
     END"""
     picks = []
     for p in probs:
         name = "p" + ("%g" % (p * 100)).replace(".", "_").replace("-", "m")
-        # midpoint sign·lo·base^(|k|−0.5), 0 for bucket 0; 6-dp rounded
+        # midpoint sign·LO·BASE^(|k|−0.5), 0 for bucket 0; 6-dp rounded
         # to absorb pow's last-ulp cross-engine freedom
         picks.append(f"""round((
       SELECT CASE WHEN c.bk = 0 THEN 0.0
-                  WHEN c.bk < 0 THEN -({lo!r} * pow({base!r}, (-c.bk)::DOUBLE - 0.5))
-                  ELSE {lo!r} * pow({base!r}, c.bk::DOUBLE - 0.5) END
+                  WHEN c.bk < 0 THEN -({LO!r} * pow({BASE!r}, (-c.bk)::DOUBLE - 0.5))
+                  ELSE {LO!r} * pow({BASE!r}, c.bk::DOUBLE - 0.5) END
       FROM cum c
       WHERE c.{group_col} = n.{group_col}
         AND c.cum >= ceil({p!r} * n.n_rows)::BIGINT

@@ -159,33 +159,21 @@ def rolling_fingerprint(text_col: str, window: int = 5) -> Column:
     return F.array_min(F.transform(shingles(text_col, window), _md5_token_hash))
 
 
-def gopher_quality(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 10,
-    max_words: int = 10_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 10.0,
-    max_word_len: int = 20,
-    min_stop_hits: int = 1,
-    max_digit_ratio: float = 0.2,
-) -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021 §A1.1
     adapted): each rule is a named boolean column so a curation pipeline
     can report WHICH rule dropped a document, plus the combined ``keep``.
 
     Pure codegen expressions — one corpus scan, no shuffle, no Python.
-    The rule thresholds are arguments so a pipeline can tune them per
-    source; defaults are calibrated to the synthetic fixture corpus.
+    The rule thresholds are calibrated to the synthetic fixture corpus.
     """
-    c = F.col(text_col)
-    toks = tokens(text_col)
+    c = F.col("text")
+    toks = tokens("text")
     n_words = F.size(toks)
     nonspace = F.length(F.regexp_replace(c, r"\s", ""))
     mean_len = F.round(nonspace.cast("double") / n_words, 6)
     longest = F.array_max(F.transform(toks, lambda t: F.length(t)))
-    stop_hits = stopword_hits(text_col, "en")
+    stop_hits = stopword_hits("text", "en")
     digits = F.length(c) - F.length(F.regexp_replace(c, "[0-9]", ""))
     digit_ratio = F.round(
         F.when(F.length(c) > 0, digits.cast("double") / F.length(c)).otherwise(
@@ -193,13 +181,13 @@ def gopher_quality(
         ),
         6,
     )
-    r_words = n_words.between(min_words, max_words)
-    r_mean = mean_len.between(min_mean_word_len, max_mean_word_len)
-    r_longest = longest <= max_word_len
-    r_stop = stop_hits >= min_stop_hits
-    r_digit = digit_ratio < max_digit_ratio
+    r_words = n_words.between(10, 10_000)
+    r_mean = mean_len.between(2.0, 10.0)
+    r_longest = longest <= 20
+    r_stop = stop_hits >= 1
+    r_digit = digit_ratio < 0.2
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("word_count"),
         mean_len.alias("mean_word_len"),
         longest.alias("max_word_len"),
@@ -214,16 +202,16 @@ def gopher_quality(
     )
 
 
-def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """Per-document stats frame: the standard text-analysis pass."""
     return docs.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        char_count(text_col).alias("n_chars_actual"),
-        F.round(punct_ratio(text_col), 6).alias("punct_ratio"),
-        quality_score(text_col).alias("quality"),
-        content_fingerprint(text_col).alias("fingerprint"),
+        F.col("doc_id"),
+        token_count("text").alias("n_tokens"),
+        bpe_ish_token_count("text").alias("n_bpe_tokens"),
+        char_count("text").alias("n_chars_actual"),
+        F.round(punct_ratio("text"), 6).alias("punct_ratio"),
+        quality_score("text").alias("quality"),
+        content_fingerprint("text").alias("fingerprint"),
     )
 
 

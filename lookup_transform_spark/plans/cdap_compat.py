@@ -18,7 +18,6 @@ migrating user can keep their stage configs.
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -128,29 +127,6 @@ def avro_record_to_struct(record: dict) -> T.StructType:
     return T.StructType(fields)
 
 
-def parse_cdap_schema(schema_json: str) -> T.StructType:
-    """Parse either a CDAP/Avro record schema or a Spark StructType JSON
-    (the reference parses with Schema.parseJson at Lookup.java:396;
-    failures become config errors on the 'schema' property)."""
-    try:
-        parsed = json.loads(schema_json)
-    except Exception as exc:
-        raise LookupConfigError(
-            [ValidationFailure(f"Unable to parse schema: {exc}",
-                               "Provide valid schema JSON.", "schema")]
-        ) from exc
-    try:
-        if isinstance(parsed, dict) and parsed.get("type") == "record":
-            return avro_record_to_struct(parsed)
-        return T.StructType.fromJson(parsed)
-    except Exception as exc:
-        raise LookupConfigError(
-            [ValidationFailure(f"Unable to parse schema: {exc}",
-                               "Provide an avro record or StructType JSON.",
-                               "schema")]
-        ) from exc
-
-
 def spec_from_cdap_config(config: dict[str, Any]) -> LookupSpec:
     """The reference's config dict → LookupSpec. Unknown properties are
     rejected (the reference's UI would not produce them)."""
@@ -168,7 +144,7 @@ def spec_from_cdap_config(config: dict[str, Any]) -> LookupSpec:
     if schema_json is not None and "${" not in schema_json:
         # normalize avro → StructType JSON once, so LookupSpec's own
         # schema handling (Spark-native) applies downstream
-        schema_json = parse_cdap_schema(schema_json).json()
+        schema_json = LookupSpec.parse_schema_json(schema_json).json()
     # .get, not [..]: a missing required property must surface through
     # LookupSpec.validate()'s "Missing required field" taxonomy
     # (Lookup.java:411-428), not as a raw KeyError

@@ -584,7 +584,8 @@ class LookupSpec:
                 [
                     ValidationFailure(
                         f"Unable to parse schema: {exc}",
-                        "Provide a valid StructType JSON.",
+                        "Provide a Spark StructType JSON or a CDAP/Avro "
+                        "record schema.",
                         "schema",
                     )
                 ]

@@ -12,30 +12,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_binary_files(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    suffix: str = ".bin",
-) -> None:
-    """Write one raw binary file per row, named ``<id><suffix>`` —
-    executor-side via foreachPartition, so a 100 TB export streams at
-    cluster width with nothing driver-collected. ``path`` must be
-    shared storage (object store / DFS) on a real cluster; a local
-    directory serves in local[n] tests. Writes a ``_SUCCESS`` sentinel
-    on completion, mirroring Hadoop committer convention (and giving
-    fixture-staleness checks an mtime anchor)."""
+def write_binary_files(df: DataFrame, path: str) -> None:
+    """Write each row's ``payload`` to its own raw file, named
+    ``<doc_id>.bin`` — executor-side via foreachPartition, so a 100 TB
+    export streams at cluster width with nothing driver-collected.
+    ``path`` must be shared storage (object store / DFS) on a real
+    cluster; a local directory serves in local[n] tests. Writes a
+    ``_SUCCESS`` sentinel on completion, mirroring Hadoop committer
+    convention (and giving fixture-staleness checks an mtime anchor)."""
     import os
 
     os.makedirs(path, exist_ok=True)
 
     def _write(rows) -> None:
         for r in rows:
-            with open(os.path.join(path, f"{r[id_col]}{suffix}"), "wb") as fh:
-                fh.write(bytes(r[payload_col]))
+            with open(os.path.join(path, f"{r['doc_id']}.bin"), "wb") as fh:
+                fh.write(bytes(r["payload"]))
 
-    df.select(id_col, payload_col).foreachPartition(_write)
+    df.select("doc_id", "payload").foreachPartition(_write)
     with open(os.path.join(path, "_SUCCESS"), "w"):
         pass
 

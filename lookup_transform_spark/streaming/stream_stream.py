@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: how late either side's events may arrive before their state evicts
+WATERMARK = "2 hours"
+
 
 def stream_stream_interval_join(
     left: DataFrame,
@@ -22,21 +25,19 @@ def stream_stream_interval_join(
     left_ts: str,
     right_ts: str,
     lookback: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two streams on ``key`` where
+    """Inner-join two streams on ``key`` where
     ``left_ts - lookback <= right_ts <= left_ts``.
 
     Both watermarks plus the closed time-range predicate let Spark evict
     right-side state older than ``left_watermark - lookback`` — state
     stays O(events-per-horizon) per key on an unbounded stream.
     """
-    lf = left.withWatermark(left_ts, watermark)
-    rt = right.withWatermark(right_ts, watermark)
+    lf = left.withWatermark(left_ts, WATERMARK)
+    rt = right.withWatermark(right_ts, WATERMARK)
     cond = (
         (lf[key] == rt[key])
         & (rt[right_ts] >= lf[left_ts] - F.expr(f"INTERVAL {lookback}"))
         & (rt[right_ts] <= lf[left_ts])
     )
-    return lf.join(rt, cond, how)
+    return lf.join(rt, cond)

@@ -11,9 +11,11 @@ only; never a correctness fixture.
 
 Each query runs under a timeout on BOTH engines (Spark: job-group
 cancel; DuckDB: interrupt) so quadratic-by-design operators can't hang
-the probe. Streaming queries are excluded (they measure micro-batch
-trigger floors, not data-size scaling), as is scan_generator_source
-(fixed-size synthetic source independent of sf_dir).
+the probe. The stream queries run like the batch ones: each drains its
+tier's events, so its time grows with the fixture. Two kinds are
+excluded: the checkpointed ingest queries, whose repeat runs are
+exactly-once no-ops, and scan_generator_source (fixed-size synthetic
+source independent of sf_dir).
 
 Results: SCALING32.json at the repo root + the per-query table is
 pasted into SCALING.md.
@@ -50,10 +52,6 @@ SPARK_TIMEOUT = float(os.environ.get("SPARK_GRAFT_PROBE_TIMEOUT", "240"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_PROBE_REPEATS", "2"))
 
 EXCLUDE = {
-    # micro-batch trigger/machinery floors, not data-size scaling
-    "stream_dedup", "stream_lifetime_stats", "stream_lookup",
-    "stream_session", "stream_sessionize_stateful", "stream_stream_join",
-    "stream_tumbling",
     # checkpointed side-effecting ingest: repeat runs are no-ops by
     # design (exactly-once), so repeat timing measures nothing
     "stream_ingest_dedup",

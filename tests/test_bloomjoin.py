@@ -59,7 +59,7 @@ def test_prefilter_rate(tables, spark):
 
 def test_tree_merge_equals_flat_build(tables):
     _, o = tables
-    wide = build_bloom(o.repartition(13), "o_orderkey", merge_fanin=2)
+    wide = build_bloom(o.repartition(13), "o_orderkey")
     flat = build_bloom(o.coalesce(1), "o_orderkey")
     assert wide == flat
 

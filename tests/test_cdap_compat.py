@@ -8,10 +8,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
-from lookup_transform_spark import LookupConfigError
+from lookup_transform_spark import LookupConfigError, LookupSpec
 from lookup_transform_spark.plans.cdap_compat import (
     avro_record_to_struct,
-    parse_cdap_schema,
     run_pipeline,
     spec_from_cdap_config,
 )
@@ -72,7 +71,7 @@ def test_docs_example_runs_unchanged(spark, fixture_tables):
 
 
 def test_avro_schema_parses():
-    st = parse_cdap_schema(AVRO_OUT_SCHEMA)
+    st = LookupSpec.parse_schema_json(AVRO_OUT_SCHEMA)
     assert st.fieldNames() == ["customer_id", "first_name", "last_name", "phone"]
     assert st["phone"].nullable is True and st["customer_id"].nullable is False
     assert isinstance(st["customer_id"].dataType, T.IntegerType)

@@ -19,6 +19,13 @@
    repository root and ``scripts/`` on the path, and ``from M import
    a`` finds ``a`` in ``M``. No test runs the scripts, so this is what
    catches one left importing a deleted module or name.
+4. Every defaulted parameter of a library function (top level or
+   method) is passed by some call in the repository: library,
+   ``tests/``, ``scripts/``, ``perfbench/`` and the two entry points.
+   Calls match by the function's bare name; a call with ``*args`` or
+   ``**kwargs`` passes everything. A parameter no call passes is a
+   setting with one value, which belongs in a module constant.
+   Nested closures are out of scope.
 """
 
 from __future__ import annotations
@@ -332,3 +339,121 @@ def test_scripts_and_entry_points_imports_resolve():
                 elif name not in (None, "*") and not _defines(spec, name):
                     broken.append(f"{where} {module}.{name}")
     assert not broken, broken
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+#: Python whose calls can pass a library function's parameters.
+_ALL_CALLERS = (
+    *sorted(PKG.rglob("*.py")),
+    *sorted((ROOT / "tests").rglob("*.py")),
+    *sorted((ROOT / "scripts").glob("*.py")),
+    *sorted((ROOT / "perfbench").rglob("*.py")),
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+)
+
+_TOPK_FLAG = (
+    "the top-k operators share one exclude_self flag: "
+    "test_approx_topk_exclude_self_escape_hatch passes it to lsh_bucket_topk "
+    "and ivf_topk through a loop variable, test_ivf_probe_exclude_self_flag "
+    "to ivf_probe_topk"
+)
+
+#: Defaulted parameters that no call passes by name, kept on purpose:
+#: (library path, function, parameter) -> the caller that justifies it.
+_KEPT_DEFAULTS = {
+    ("operators/similarity.py", "cosine_topk", "exclude_self"): _TOPK_FLAG,
+    ("operators/similarity.py", "lsh_bucket_topk", "exclude_self"): _TOPK_FLAG,
+    ("operators/similarity.py", "ivf_topk", "exclude_self"): _TOPK_FLAG,
+    ("streaming/ingest.py", "stream_ingest_neardedup", "compact_every"): (
+        "the ingest entry points share one signature; test_streaming.py "
+        "sets compact_every on stream_ingest_dedup and ingest_batch_neardedup"
+    ),
+    ("streaming/sketch_rollup.py", "stream_quantile_rollup", "compact_every"): (
+        "test_streaming.py sets compact_every on its sibling "
+        "stream_sketch_rollup; both forward it to _maintain_sketch_state"
+    ),
+}
+
+
+def _defaulted_parameters(pkg: pathlib.Path) -> list[tuple]:
+    """``(path, function, parameter, positional index)`` for every
+    defaulted parameter of a top-level function or method; the index is
+    None for keyword-only parameters, and a method's ``self`` / ``cls``
+    does not count toward it."""
+    out = []
+    for p in sorted(pkg.rglob("*.py")):
+        body = ast.parse(p.read_text()).body
+        fns = [(n, False) for n in body if isinstance(n, _FUNCS)] + [
+            (m, True) for c in body if isinstance(c, ast.ClassDef)
+            for m in c.body if isinstance(m, _FUNCS)
+        ]
+        for fn, is_method in fns:
+            a, site = fn.args, (str(p.relative_to(pkg)), fn.name)
+            pos = a.posonlyargs + a.args
+            shift = int(is_method and bool(pos) and pos[0].arg in ("self", "cls"))
+            first = len(pos) - len(a.defaults)
+            out += [(*site, arg.arg, i - shift)
+                    for i, arg in enumerate(pos) if i >= first]
+            out += [(*site, arg.arg, None)
+                    for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _passes(call: ast.Call, param: str, index: int | None) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return True
+    return any(k.arg == param for k in call.keywords) or (
+        index is not None and index < len(call.args)
+    )
+
+
+def _unpassed_defaults(
+    pkg: pathlib.Path, callers: tuple[pathlib.Path, ...]
+) -> list[tuple[str, str, str]]:
+    """Defaulted parameters of ``pkg`` that no call in ``callers`` to a
+    function of the same name passes, by keyword or by position."""
+    calls: dict[str, list[ast.Call]] = {}
+    for p in callers:
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    return sorted(
+        (path, fn, param)
+        for path, fn, param, i in _defaulted_parameters(pkg)
+        if not any(_passes(c, param, i) for c in calls.get(fn, ()))
+    )
+
+
+def test_defaulted_parameters_have_a_caller_that_passes_them():
+    unpassed, kept = set(_unpassed_defaults(PKG, _ALL_CALLERS)), set(_KEPT_DEFAULTS)
+    assert not unpassed - kept, sorted(unpassed - kept)
+    # an entry whose parameter gained a caller, or went, is stale
+    assert not kept - unpassed, sorted(kept - unpassed)
+
+
+def test_unpassed_defaults_counts_positions_keywords_and_unpacking(tmp_path):
+    """The scan's matching rules on a toy package: a method's ``self``
+    shifts positions, a keyword or a long enough positional call passes
+    a parameter, ``*args`` / ``**kwargs`` pass everything, and nested
+    closures are not scanned."""
+    pkg = tmp_path / "toy"
+    pkg.mkdir()
+    (pkg / "ops.py").write_text(
+        "def f(a, b=1, c=2, *, d=3): pass\n"
+        "def g(x=0): pass\n"
+        "def h(y=0):\n    def inner(z=0): pass\n"
+        "class K:\n    def m(self, p=0, q=0): pass\n"
+    )
+    caller = tmp_path / "caller.py"
+    caller.write_text("f(0, 1)\nf(0, d=4)\ng(*args)\nK().m(5)\n")
+    assert _unpassed_defaults(pkg, (caller,)) == [
+        ("ops.py", "f", "c"),
+        ("ops.py", "h", "y"),
+        ("ops.py", "m", "q"),
+    ]

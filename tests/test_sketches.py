@@ -2,8 +2,8 @@
 
 1. Lossless merge: sketch(A ∪ B) == merge(sketch(A), sketch(B)) —
    exact map equality, the property GK/KLL-style rank sketches lack.
-2. Quantile accuracy: every read quantile within the sqrt(base)
-   relative bound of Spark's exact F.percentile (plus the `lo`
+2. Quantile accuracy: every read quantile within the sqrt(BASE)
+   relative bound of Spark's exact F.percentile (plus the `LO`
    absolute floor).
 3. Bucket order == value order (negatives mirrored), so cumulative
    reads are correct across sign changes.
@@ -30,9 +30,12 @@ from lookup_transform_spark.operators.sketches import (
     qsketch_merge,
     qsketch_quantiles,
 )
-from lookup_transform_spark.operators.sketches_oracle import HLL_ALPHA, HLL_M
-
-BASE, LO = 1.04, 0.01
+from lookup_transform_spark.operators.sketches_oracle import (
+    BASE,
+    HLL_ALPHA,
+    HLL_M,
+    LO,
+)
 
 
 @pytest.fixture(scope="module")
@@ -204,7 +207,7 @@ def test_bucket_order_matches_value_order(spark):
     rows = (
         df.select(
             "v",
-            log_bucket("v", BASE, LO).alias("b"),
+            log_bucket("v").alias("b"),
         )
         .orderBy("v")
         .collect()
@@ -215,7 +218,7 @@ def test_bucket_order_matches_value_order(spark):
     assert [r["b"] for r in rows if abs(r["v"]) <= LO] == [0, 0, 0]
     # representative value round-trips within the relative bound
     rep = df.select(
-        "v", bucket_value(log_bucket("v", BASE, LO), BASE, LO).alias("r")
+        "v", bucket_value(log_bucket("v")).alias("r")
     ).collect()
     for r in rep:
         if abs(r["v"]) > LO:
@@ -250,7 +253,7 @@ def test_null_values_dropped_groups_survive(spark):
         [("a", 1.0), ("a", None), ("a", 2.0), ("b", None)],
         "g string, v double",
     )
-    leaf = qsketch(df, ["g"], "v", BASE, LO)
+    leaf = qsketch(df, ["g"], "v")
     got = _sketch_maps(leaf, ["g"])
     assert got[("a",)][1] == 2  # n_rows counts only non-null values
     assert None not in got[("a",)][0]
@@ -278,12 +281,12 @@ def test_nonfinite_values_excluded_like_null(spark):
          ("a", 2.0), ("b", inf)],
         "g string, v double",
     )
-    got = _sketch_maps(qsketch(df, ["g"], "v", BASE, LO), ["g"])
+    got = _sketch_maps(qsketch(df, ["g"], "v"), ["g"])
     assert got[("a",)][1] == 2  # only the two finite values counted
     assert got[("b",)] == ({}, 0)  # all-non-finite group kept, empty
     clean = _sketch_maps(
         qsketch(df.filter("v = v AND abs(v) != cast('inf' as double)"),
-                ["g"], "v", BASE, LO),
+                ["g"], "v"),
         ["g"],
     )
     assert got[("a",)] == clean[("a",)]  # dirty rows changed nothing
